@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line.
@@ -28,14 +27,14 @@ object Bench {
     * disables the tiebreak) → `git show HEAD:BENCH_FULL.json` (the
     * official record — the WORKING-TREE file may be a stale local
     * sf0.01 run) → the working-tree file. A baseline recorded at a
-    * DIFFERENT scale factor than this run (the record's `sf` field)
-    * is discarded: comparing an sf1 run against sf0.1 times would
-    * fire the "regression" retry on essentially every query and bury
-    * real regressions in noise. Any failure degrades to an empty map
+    * DIFFERENT scale factor or cpu count than this run (the record's
+    * `sf` and `cpus` fields) is discarded: comparing an sf1 run
+    * against sf0.1 times would fire the "regression" retry on
+    * essentially every query and bury real regressions in noise. Any failure degrades to an empty map
     * (tiebreak off), never an error: the baseline is diagnostic, a
     * bench must run without one.
     */
-  private def baselineTimes(sfDir: String): Map[String, Double] = {
+  private def baselineTimes(sfDir: String, cpus: Int): Map[String, Double] = {
     def readFile(path: String): Option[String] =
       try Some(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(path)), "UTF-8"))
@@ -51,20 +50,25 @@ object Bench {
       case Some(path) => readFile(path)
       case None => gitShow().orElse(readFile("BENCH_FULL.json"))
     }
-    src.map(baselineForScale(_, sfDir)).getOrElse(Map.empty)
+    src.map(baselineForScale(_, sfDir, cpus)).getOrElse(Map.empty)
   }
 
-  /** Baseline accepted only when its record NAMES this run's scale:
-    * `exists`, not `forall` (ADVICE r15) — a record with no `sf`
-    * field at all (legacy/foreign file) was previously accepted
-    * unconditionally, and a cross-scale baseline then fires the
-    * regression tiebreak on essentially every query, adding a wasted
-    * third attempt each.
+  /** Baseline accepted only when its record NAMES this run's scale
+    * and cpu count: `exists`, not `forall` — a record
+    * with no `sf` field at all (legacy/foreign file) was previously
+    * accepted unconditionally, and a cross-scale baseline then fires
+    * the regression tiebreak on essentially every query, adding a
+    * wasted third attempt each. A record from another cpu count (or
+    * with no `cpus` field) is just as foreign: an 8-cpu scaling run
+    * judged against 32-cpu times reports bogus drift rows.
     */
-  private[graft] def baselineForScale(json: String, sfDir: String): Map[String, Double] = {
+  private[graft] def baselineForScale(json: String, sfDir: String,
+      cpus: Int): Map[String, Double] = {
     val sfOk = "\"sf\":\"([^\"]*)\"".r.findFirstMatchIn(json)
       .exists(_.group(1) == sfDir)
-    if (sfOk) parseQueriesMap(json) else Map.empty
+    val cpusOk = "\"cpus\":(-?[0-9]+)".r.findFirstMatchIn(json)
+      .exists(_.group(1) == cpus.toString)
+    if (sfOk && cpusOk) parseQueriesMap(json) else Map.empty
   }
 
   /** The flat `"queries":{...}` map of a BENCH_FULL/BENCH_r JSON line
@@ -185,14 +189,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpusStamp = scala.util.Try(cpus.toInt).getOrElse(-1)
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warmup on the smallest SF so per-query numbers
     // measure the plan, not first-use class generation. dedup_clusters
@@ -217,7 +215,7 @@ object Bench {
                     windowRerun: Boolean = false,
                     driftRerun: Boolean = false,
                     driftConfirmedSlow: Option[Boolean] = None)
-    val baseline = baselineTimes(sfDir)
+    val baseline = baselineTimes(sfDir, cpusStamp)
     // Self-consistency guard (r16): a registry query with no entry in
     // the committed record silently runs without the regression
     // tiebreak — expected for a freshly added query, but after a
@@ -400,7 +398,6 @@ object Bench {
     // and make a broken round read as faster than baseline
     val (medRatio, nOver) =
       ratioStats(results.filter(_.ok).map(r => r.name -> r.sec).toMap, baseline)
-    val cpusStamp = scala.util.Try(cpus.toInt).getOrElse(-1)
     val summary = f""""metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failed,"runs":$runs,"cpus":$cpusStamp,"load_max":$loadMax%.2f,"load_mean":$loadMean%.2f,"median_ratio_vs_baseline":$medRatio%.4f,"n_over_1_5x":$nOver,"sf":"$sfDir""""
     val attempts = jmap(r =>
       r.attempts.map(a => f"$a%.3f").mkString("[", ",", "]"))
@@ -430,7 +427,7 @@ object Bench {
     // A non-32-cpu run now writes a cpus-suffixed sidecar instead, and
     // every record carries "cpus" (r21, the r20 verdict's #2b).
     val recordPath =
-      if (cpusStamp == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+      if (cpusStamp == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpusStamp.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(recordPath),
       (s"""{"queries":$qs,$summary,"diag":$diag}""" + "\n").getBytes("UTF-8"))

@@ -21,4 +21,19 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   def oracleSql: Map[String, String] = Oracles.sql
+
+  /** The local session the mains (Verify, Bench, ProfileQ) run on:
+    * `local[cpus]` with one shuffle partition per core, UTC, no UI,
+    * and nanosecond parquet timestamps read as longs (the testdata has
+    * shipped events.ts both as TIMESTAMP(NANOS) and as µs; see
+    * Queries.eventTsUs).
+    */
+  private[graft] def localSession(cpus: String): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .getOrCreate()
 }

@@ -158,11 +158,17 @@ final class VectorizeEngine(
         baseUrl = param("base_url"), apiKey = param("api_key"))
     }
 
-  // private[graft]: the streaming path (Realtime.processBatch) merges
-  // into the same tables — one naming scheme, not two copies.
+  // private[graft]: Queries reads the engine-written stores by name
+  // (vz_* entries and the oracle dumps).
   private[graft] def embTable(job: String) = s"_embeddings_$job"
   private[graft] def tokTable(job: String) = s"_search_tokens_$job"
   private[graft] def appTable(job: String) = s"_append_$job"
+
+  /** The table a job's vectors are served from, by table method. */
+  private def servedTable(job: VectorizeJob): String = job.tableMethod match {
+    case TableMethod.Append => appTable(job.jobName)
+    case _ => embTable(job.jobName)
+  }
 
   /** The (pkey, embeddings, updated_at) frame for a job regardless of
     * table method: join keeps a separate `_embeddings_<job>` table;
@@ -245,102 +251,79 @@ final class VectorizeEngine(
 
   /** `vectorize.job_execute` / cron target
     * (extension/src/executor.rs:43-96): incremental delta scan →
-    * embed → MERGE. Idempotent — safe under at-least-once retries.
+    * [[upsertRows]]. Idempotent — safe under at-least-once retries.
+    * Both table methods scan for staleness against the table the job
+    * serves from ([[embeddingsOf]]); a job whose table does not exist
+    * yet backfills every source row.
     *
-    * The delta and the embedded rows are persisted for the duration
-    * of the refresh: `embedded` is referenced by the MERGE (twice —
-    * anti-join + union) AND the returned count, and `delta` by both
-    * the embedding and the search-tokens pass. Without the persist
-    * each reference would re-run the whole pipeline INCLUDING the
-    * provider calls — with a paid HTTP provider that multiplies cost
-    * per refresh (the count alone doubled it).
+    * The delta is persisted for the duration of the refresh: the
+    * tokens pass, the embedding pass, the append method's wide join
+    * and the returned count all read it, and without the persist each
+    * would re-run the delta scan.
     */
-  def refreshJob(jobName: String): Long = job(jobName) match {
-    case Some(j) if j.tableMethod == TableMethod.Append => refreshAppend(j)
-    case Some(j) => refreshJoin(j)
-    case None => throw new NoSuchElementException(s"no such job: $jobName")
-  }
-
-  private def refreshJoin(job: VectorizeJob): Long = {
-    val src = sources(job.srcTable)
-    val embName = embTable(job.jobName)
+  def refreshJob(jobName: String): Long = {
+    val j = job(jobName).getOrElse(throw new NoSuchElementException(s"no such job: $jobName"))
+    val src = sources(j.srcTable)
     val delta = (
-      if (store.exists(embName))
-        Pipeline.deltaScanJoin(src, store.read(embName), job.primaryKey, job.updateTimeCol)
+      if (store.exists(servedTable(j)))
+        Pipeline.deltaScanJoin(src, embeddingsOf(j), j.primaryKey, j.updateTimeCol)
       else src
     ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // Tokens FIRST, embeddings second: the retry delta is derived
-      // from embedding staleness, so a crash after the tokens MERGE
-      // re-runs both merges (idempotent), while the reverse order
-      // would lose the tokens of already-embedded rows forever.
-      val tokens = Pipeline.renderSearchTokens(delta, job.primaryKey, job.srcColumns)
-      store.merge(tokTable(job.jobName), tokens, "pkey")
-      val inputs = Pipeline.renderInputs(delta, job.primaryKey, job.srcColumns)
-      val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        store.merge(embName, embedded, "pkey")
-        embedded.count() // served from cache — no provider re-call
-      } finally embedded.unpersist()
+      upsertRows(j, delta)
+      delta.count() // served from cache; one embedding per delta row
     } finally delta.unpersist()
   }
 
-  /** Append method (extension/src/executor.rs:98-133): the reference
-    * keeps embeddings + bookkeeping ON the source table. Spark-side
-    * equivalent: a wide `_append_<job>` table = all source columns +
-    * pkey + embeddings + `__emb_updated_at`, rebuilt by MERGE-ing
-    * freshly embedded rows into the previous bookkeeping and joining
-    * back to the (authoritative) source. Search reads embeddings
-    * straight from the wide table — one fewer join at query time,
-    * which is the method's point.
+  /** The one write path of embedding maintenance, shared by
+    * [[refreshJob]] and the streaming micro-batch
+    * ([[graft.streaming.Realtime.processBatch]]): MERGE the rows'
+    * search tokens, embed the rows, MERGE the vectors into the table
+    * the job serves from, then keep the optional vector index fresh.
+    *
+    * Tokens FIRST, embeddings second: a refresh's retry delta is
+    * derived from embedding staleness, so a crash after the tokens
+    * MERGE re-runs both merges (idempotent), while the reverse order
+    * would lose the tokens of already-embedded rows forever.
+    *
+    * `rows` are source rows with at most one row per key; the caller
+    * owns their persistence. The embedded rows are persisted here so
+    * that the index upsert, which reads them after the vector MERGE,
+    * does not repeat the provider calls.
     */
-  private def refreshAppend(job: VectorizeJob): Long = {
-    val aName = appTable(job.jobName)
-    val src = sources(job.srcTable)
-    val withPkey = src.withColumn("pkey", col(job.primaryKey).cast("string"))
-    val book =
-      if (store.exists(aName))
-        store.read(aName).select(col("pkey"), col("embeddings"), col("__emb_updated_at"))
-          .filter(col("embeddings").isNotNull)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          Pipeline.embeddingSchema.fields.map(f =>
-            if (f.name == "updated_at") f.copy(name = "__emb_updated_at") else f)))
-    val joined = withPkey.join(book, Seq("pkey"), "left_outer")
-    val stale = job.updateTimeCol match {
-      case Some(u) => col("__emb_updated_at").isNull || col(u) > col("__emb_updated_at")
-      case None    => col("__emb_updated_at").isNull
-    }
-    val delta = joined.filter(stale)
-      .select(withPkey.columns.map(col).toIndexedSeq: _*)
+  private[graft] def upsertRows(job: VectorizeJob, rows: DataFrame,
+      indexPath: Option[String] = None): Unit = {
+    mergeTokens(job, rows)
+    val inputs = Pipeline.renderInputs(rows, job.primaryKey, job.srcColumns)
+    val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // tokens first — same crash-retry argument as refreshJoin
-      val tokens = Pipeline.renderSearchTokens(delta, job.primaryKey, job.srcColumns)
-      store.merge(tokTable(job.jobName), tokens, "pkey")
-      val inputs = Pipeline.renderInputs(delta, job.primaryKey, job.srcColumns)
-      val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = embedded.count()
-        if (!store.exists(aName)) {
-          // initial build: the full wide table, including not-yet-
-          // embedded rows with null embeddings (the reference ALTERs
-          // the source table, so every row is present from day one)
-          val newBook = embedded.withColumnRenamed("updated_at", "__emb_updated_at")
-          store.overwrite(aName, withPkey.join(newBook, Seq("pkey"), "left_outer"))
-        } else {
-          // incremental: MERGE only the delta's wide rows — a full
-          // overwrite here would be O(|table|) per refresh, defeating
-          // the bucketed store (the streaming path already merges)
-          val wide = delta.join(
-            embedded.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-          store.merge(aName, wide, "pkey")
-        }
-        n
-      } finally embedded.unpersist()
-    } finally delta.unpersist()
+      mergeVectors(job, rows, embedded)
+      indexPath.foreach(p =>
+        upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
+    } finally embedded.unpersist()
+  }
+
+  private def mergeTokens(job: VectorizeJob, rows: DataFrame): Unit =
+    store.merge(tokTable(job.jobName),
+      Pipeline.renderSearchTokens(rows, job.primaryKey, job.srcColumns), "pkey")
+
+  /** MERGE (pkey, embeddings, updated_at) vectors into the table the
+    * job serves from. Append (extension/src/executor.rs:98-133): the
+    * reference keeps embeddings + bookkeeping ON the source table;
+    * here a wide `_append_<job>` table holds the source columns +
+    * pkey + embeddings + `__emb_updated_at`, so search reads
+    * embeddings without a join — the method's point. The vectors are
+    * joined back to their `rows` (a superset of their keys is fine).
+    */
+  private def mergeVectors(job: VectorizeJob, rows: DataFrame, vectors: DataFrame): Unit = {
+    val served = job.tableMethod match {
+      case TableMethod.Append =>
+        rows.withColumn("pkey", col(job.primaryKey).cast("string"))
+          .join(vectors.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
+      case _ => vectors
+    }
+    store.merge(servedTable(job), served, "pkey")
   }
 
   /** `vectorize.import_embeddings` (extension/src/api.rs:250-326):
@@ -375,35 +358,14 @@ final class VectorizeEngine(
     // Imported rows must be lexically searchable too: the refresh
     // delta skips them (they have embeddings), so their search
     // tokens are rendered here from the source rows.
-    val srcForTokens = sources(j.srcTable).join(incoming.select("pkey"),
-      col(j.primaryKey).cast("string") === col("pkey"), "left_semi")
-    store.merge(tokTable(jobName),
-      Pipeline.renderSearchTokens(srcForTokens, j.primaryKey, j.srcColumns), "pkey")
-    j.tableMethod match {
-      case TableMethod.Append =>
-        // Append jobs serve from the wide `_append_` table — vectors
-        // imported into `_embeddings_` would be dead data AND the
-        // next refresh would re-embed (and re-pay for) every row.
-        val aName = appTable(jobName)
-        val withPkey = sources(j.srcTable)
-          .withColumn("pkey", col(j.primaryKey).cast("string"))
-        val fresh =
-          if (store.exists(aName))
-            incoming.join(store.read(aName)
-              .filter(col("embeddings").isNotNull).select("pkey"),
-              Seq("pkey"), "left_anti")
-          else incoming
-        val wide = withPkey.join(
-          fresh.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-        store.merge(aName, wide, "pkey")
-      case _ =>
-        val embName = embTable(jobName)
-        val fresh =
-          if (store.exists(embName))
-            incoming.join(store.read(embName).select("pkey"), Seq("pkey"), "left_anti")
-          else incoming
-        store.merge(embName, fresh, "pkey")
-    }
+    val src = sources(j.srcTable)
+    mergeTokens(j, src.join(incoming.select("pkey"),
+      col(j.primaryKey).cast("string") === col("pkey"), "left_semi"))
+    // Vectors land where the job serves from: vectors imported into
+    // `_embeddings_` for an append job would be dead data AND the next
+    // refresh would re-embed (and re-pay for) every row.
+    mergeVectors(j, src,
+      incoming.join(embeddingsOf(j).select("pkey"), Seq("pkey"), "left_anti"))
   }
 
   /** `vectorize.table_from` (extension/src/api.rs:328-390). */

@@ -1,8 +1,12 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * the engine-store aux files and oracle_sql.json, for the DuckDB
+  * compare (tools/check_oracle.py).
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query ...] — named
+  * queries restrict the dump (and oracle_sql.json) to those entries.
+  */
 object Verify {
 
   /** Writes one query's result parquet — or, if the query throws, a
@@ -36,18 +40,17 @@ object Verify {
     }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val only = args.drop(2).toSet
+    val unknown = only.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    def selected(name: String) = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       writeQueryResult(spark, name, fn, sfDir, outDir)
     }
     // Engine-store dumps consumed by the vz_* oracles (single parquet
@@ -71,7 +74,7 @@ object Verify {
     // __AUX__ → the absolute out dir, so the engine-path oracles can
     // read_parquet the dumped stores from wherever the driver put them.
     val outAbs = Paths.get(outDir).toAbsolutePath.toString
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__AUX__", outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

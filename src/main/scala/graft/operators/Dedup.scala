@@ -1340,6 +1340,15 @@ object Dedup {
     * race the read). Callers append survivors explicitly via
     * [[buildNearDupStore]] once the batch is final — the streaming
     * ingest does exactly that per micro-batch.
+    *
+    * Id contract: each batch id is either absent from the store
+    * (disjoint) or present with identical content because an earlier
+    * probe of this same batch kept it and its survivors MERGEd (a
+    * crash replay). Both give the same survivors (IncrementalDedupSpec
+    * pins it). An id reused with different content, or a store row for
+    * a batch id that did not survive, is outside the contract: the
+    * store copy then counts as corpus evidence and can drop rows the
+    * within-batch smaller-id rule would keep.
     */
   def incrementalNearDupStored(store: graft.sources.ParquetStore,
       table: String, batch: DataFrame, idCol: String, textCol: String,

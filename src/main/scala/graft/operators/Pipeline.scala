@@ -36,8 +36,9 @@ object Pipeline {
     StructField("updated_at", TimestampType)
   ))
 
-  /** S1 — delta scan, join method (core/src/query.rs:556-596): rows
-    * lacking embeddings or updated since their embedding. One
+  /** S1 — delta scan (core/src/query.rs:556-596): rows lacking
+    * embeddings or updated since their embedding. `emb` is the job's
+    * served (pkey, updated_at) frame under either table method. One
     * left_outer join on pkey + null/watermark filter (Catalyst plans
     * a single shuffle; at scale this is the idiomatic incremental
     * scan — compare Delta CDF).
@@ -56,22 +57,6 @@ object Pipeline {
     }
     joined.filter(stale).select(src.columns.map(src(_)).toIndexedSeq: _*)
   }
-
-  /** S2 — delta scan, append method (extension/src/executor.rs:98-133):
-    * the embedding bookkeeping lives on the source table itself as
-    * `<job>_updated_at`.
-    */
-  def deltaScanAppend(src: DataFrame, updateCol: String, jobUpdatedCol: String): DataFrame =
-    src.filter(
-      col(updateCol) > coalesce(col(jobUpdatedCol), to_timestamp(lit("0001-01-01"))))
-
-  /** S3 — fetch-by-ids (worker/src/executor.rs:100-128): load the rows
-    * named in a queue message. Semi-join keeps it distributed (no
-    * isin() literal explosion for large batches).
-    */
-  def fetchByIds(src: DataFrame, ids: DataFrame, pk: String): DataFrame =
-    src.join(ids.selectExpr(s"cast(value as string) as __id"),
-      src(pk).cast("string") === col("__id"), "left_semi")
 
   /** S4 — render rows into embed inputs: pkey as text + concatenated
     * text columns + token estimate (core/src/query.rs:598-626).

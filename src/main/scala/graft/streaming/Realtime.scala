@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.VectorizeEngine
-import graft.operators.Pipeline
-import graft.types.{TableMethod, VectorizeJob}
+import graft.types.VectorizeJob
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,10 +19,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Realtime {
 
-  /** Process one micro-batch of changed source rows for `job`:
-    * render → embed → MERGE embeddings + search tokens. This is the
-    * exact body of the reference worker's execute_job
-    * (worker/src/executor.rs:60-160) re-expressed on DataFrames.
+  /** Process one micro-batch of changed source rows for `job`: keep
+    * the last writer per key, then the engine's one write path
+    * ([[VectorizeEngine.upsertRows]], the same one `refreshJob` runs)
+    * — MERGE search tokens, embed, MERGE the vectors into the table
+    * the job serves from, upsert the optional vector index. This is
+    * the body of the reference worker's execute_job
+    * (worker/src/executor.rs:60-160), which likewise serves trigger,
+    * queue, cron and manual refreshes alike.
     */
   def processBatch(engine: VectorizeEngine, job: VectorizeJob, batch: DataFrame,
       indexPath: Option[String] = None): Unit = {
@@ -48,39 +51,10 @@ object Realtime {
         // should declare update_time_col.
         batch.dropDuplicates(job.primaryKey)
     }
-    val inputs = Pipeline.renderInputs(deduped, job.primaryKey, job.srcColumns)
-    // persisted: the store MERGE runs two actions (touched-bucket
-    // collect + write), each of which would otherwise re-run the
-    // mapPartitions provider calls — 2x API cost per micro-batch
-    // (same guard refreshJoin documents)
-    val embedded = Pipeline.embed(inputs, engine.provider(job), job.model.apiName)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      job.tableMethod match {
-        case TableMethod.Append =>
-          // Append jobs are served from the wide `_append_<job>` table
-          // (VectorizeEngine.embeddingsOf) — merge the embedded rows
-          // there, joined back to their source columns, or streamed
-          // updates would never become searchable.
-          val withPkey = deduped.withColumn("pkey", col(job.primaryKey).cast("string"))
-          val wide = withPkey.join(
-            embedded.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
-          engine.store.merge(engine.appTable(job.jobName), wide, "pkey")
-        case _ =>
-          engine.store.merge(engine.embTable(job.jobName), embedded, "pkey")
-      }
-      val tokens = Pipeline.renderSearchTokens(deduped, job.primaryKey, job.srcColumns)
-      engine.store.merge(engine.tokTable(job.jobName), tokens, "pkey")
-      // keep the job's ANN index fresh alongside the store (the
-      // reference's pgvector index updates with every upsert): the
-      // partition-granular upsert rebuilds only touched graph
-      // partitions, and replays reproduce byte-identical partitions,
-      // so at-least-once redelivery stays idempotent here too
-      indexPath.foreach { p =>
-        engine.upsertVectorIndex(job.jobName, p,
-          embedded.select(col("pkey"), col("embeddings")))
-      }
-    } finally embedded.unpersist()
+    // the index upsert stays idempotent under at-least-once
+    // redelivery: it rebuilds only touched graph partitions, and a
+    // replay reproduces byte-identical partitions
+    engine.upsertRows(job, deduped, indexPath)
   }
 
   /** Start the realtime pipeline from a streaming DataFrame of source

@@ -187,6 +187,31 @@ class IncrementalDedupSpec extends AnyFunSuite {
       s"verify fetch must not read band keys:\n$plan")
   }
 
+  test("stored near-dup: batch ids already in the store with identical content (a replay) keep the disjoint survivors") {
+    // the nearDup fixtures above: 10 near-duplicates the corpus, 20/21
+    // are a within-batch pair, 30 is fresh
+    val a = "the quick brown fox jumps over the lazy dog near the river " +
+      "while birds sing old songs above tall green trees every single morning"
+    val aNear = "the quick brown fox jumps over the lazy cat near the river " +
+      "while birds sing old songs above tall green trees every single morning"
+    val b1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val b2 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda nu"
+    val batch = df(Seq(10L -> aNear, 20L -> b1, 21L -> b2,
+      30L -> "completely different content with no overlap whatsoever at all ok"))
+    val store = new graft.sources.ParquetStore(spark, TestSpark.tempDir("graft_ndreplay_"))
+    Dedup.buildNearDupStore(store, "sigs", df(Seq(1L -> a)), "doc_id", "text")
+    def survivors(): Set[Long] = Dedup.incrementalNearDupStored(store, "sigs", batch,
+      "doc_id", "text").collect().map(_.getLong(0)).toSet
+    val disjoint = survivors()
+    assert(disjoint == Set(20L, 30L))
+    // a crash after the survivors' MERGE redelivers the whole batch:
+    // ids 20 and 30 are now in the store with the batch's own content
+    Dedup.buildNearDupStore(store, "sigs",
+      batch.filter(col("doc_id").isin(disjoint.toSeq: _*)), "doc_id", "text")
+    assert(survivors() == disjoint,
+      "a replayed id must neither drop against itself nor change which rows drop")
+  }
+
   test("buildNearDupStoreFromSig writes index rows identical to the text path") {
     import spark.implicits._
     // includes a shingle-less doc (empty text): the text path keeps it

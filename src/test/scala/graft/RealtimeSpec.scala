@@ -181,6 +181,61 @@ class RealtimeSpec extends AnyFunSuite {
       "replay must serve the post-update vector for the updated key")
   }
 
+  test("stream ≡ batch: processBatch and refreshJob write identical stores") {
+    import spark.implicits._
+    val base = Seq((1, "pizza", 1L), (2, "pencil", 2L), (3, "airplane", 3L))
+    // an update (1), an insert (4) and two versions of one key (5);
+    // future-stamped so the batch refresh sees them as newer than
+    // their embeddings' wall-clock write time
+    val delta = Seq(
+      (1, "apples and apple trees", Fixtures.futureTs(1)),
+      (4, "a space shuttle carries astronauts to orbit", Fixtures.futureTs(2)),
+      (5, "an early draft of the fifth row", Fixtures.futureTs(3)),
+      (5, "the latest version of the fifth row", Fixtures.futureTs(4)))
+      .toDF("id", "content", "updated_at")
+    val after = Fixtures.contentTable(spark, base.filterNot(_._1 == 1))
+      .unionByName(delta.filter(!(col("id") === 5 && col("content").contains("draft"))))
+    Seq(TableMethod.Join, TableMethod.Append).foreach { method =>
+      val job = VectorizeJob("eq_job", "content", Seq("content"), "id",
+        Some("updated_at"), Model.parseUnsafe("deterministic/hash-64"),
+        tableMethod = method)
+      def newEngine(): VectorizeEngine = {
+        val e = new VectorizeEngine(spark, TestSpark.tempDir("graft_rteq_wh_"),
+          embeddingProviderOverride = Some(new providers.DeterministicHashProvider(64)))
+        e.registerSource("content", Fixtures.contentTable(spark, base))
+        e.createJob(job)
+        e
+      }
+      val streamed = newEngine()
+      Realtime.processBatch(streamed, job, delta)
+      val batched = newEngine()
+      batched.registerSource("content", after)
+      batched.refreshJob(job.jobName)
+
+      def served(e: VectorizeEngine) = e.store.read(
+          if (method == TableMethod.Append) e.appTable(job.jobName) else e.embTable(job.jobName))
+        .collect().map(r => r.getAs[String]("pkey") ->
+          r.getAs[scala.collection.Seq[Float]]("embeddings").toSeq).toMap
+      def tokens(e: VectorizeEngine) = e.store.read(e.tokTable(job.jobName))
+        .collect().map(r => r.getAs[String]("pkey") ->
+          (r.getAs[scala.collection.Seq[String]]("search_tokens").toSeq,
+            r.getAs[scala.collection.Seq[Int]]("search_token_counts").toSeq)).toMap
+      assert(served(streamed).keySet == Set("1", "2", "3", "4", "5"), s"$method")
+      assert(served(streamed) == served(batched), s"$method: served vectors differ")
+      assert(tokens(streamed) == tokens(batched), s"$method: search tokens differ")
+      assert(tokens(streamed)("5")._1.contains("latest") &&
+        !tokens(streamed)("5")._1.contains("draft"),
+        s"$method: the last writer of key 5 must win")
+
+      if (method == TableMethod.Append) {
+        streamed.registerSource("content", after)
+        val hits = streamed.hybridSearch(job.jobName, "astronauts", limit = 5).collect()
+        assert(hits.exists(r => r.getAs[Int]("id") == 4 && !r.isNullAt(r.fieldIndex("fts_rank"))),
+          "the FTS leg must find the streamed append-job row")
+      }
+    }
+  }
+
   test("append-method job: streamed rows land in the wide table and are searchable") {
     val inputDir = TestSpark.tempDir("graft_rta_in_")
     val checkpoint = TestSpark.tempDir("graft_rta_ckpt_")

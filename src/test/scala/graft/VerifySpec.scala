@@ -71,15 +71,23 @@ class VerifySpec extends AnyFunSuite {
 
   test("Bench.baselineForScale: sf field must be PRESENT and equal (ADVICE r15)") {
     val sf01 = "/root/testdata/sf0.1"
-    val withSf = s"""{"queries":{"q":1.5},"sf":"$sf01"}"""
-    assert(Bench.baselineForScale(withSf, sf01) == Map("q" -> 1.5))
+    val withSf = s"""{"queries":{"q":1.5},"cpus":32,"sf":"$sf01"}"""
+    assert(Bench.baselineForScale(withSf, sf01, 32) == Map("q" -> 1.5))
     // a record at another scale is discarded (cross-scale times would
     // fire the regression retry on every query)
-    assert(Bench.baselineForScale(withSf, "/root/testdata/sf0.01").isEmpty)
+    assert(Bench.baselineForScale(withSf, "sf0.01", 32).isEmpty)
     // a record with NO sf field (legacy/foreign file) is discarded
     // too — the old forall accepted it unconditionally, with the same
     // every-query-retries blast radius
-    assert(Bench.baselineForScale("""{"queries":{"q":1.5}}""", sf01).isEmpty)
+    assert(Bench.baselineForScale("""{"queries":{"q":1.5},"cpus":32}""", sf01, 32).isEmpty)
+    // the same gate on cpus: an 8-cpu scaling run must not judge
+    // itself against the 32-cpu record, and a record that names no
+    // cpu count is foreign too
+    assert(Bench.baselineForScale(withSf, sf01, 8).isEmpty)
+    assert(Bench.baselineForScale(s"""{"queries":{"q":1.5},"sf":"$sf01"}""", sf01, 32).isEmpty)
+    val star = s"""{"queries":{"q":2.0},"cpus":-1,"sf":"$sf01"}"""
+    assert(Bench.baselineForScale(star, sf01, -1) == Map("q" -> 2.0))
+    assert(Bench.baselineForScale(star, sf01, 1).isEmpty)
   }
 
   test("Bench.ratioStats: median vs committed baseline, 1.5x count, loud " +
