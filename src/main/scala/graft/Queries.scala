@@ -699,12 +699,12 @@ object Queries {
     val root = spanDfStoreCache.computeIfAbsent(cacheKey(spark, dir), { _ =>
       val p = sessionTempDir("graft_spandf_")
       Dedup.buildSpanDfStore(
-        new graft.sources.ParquetStore(spark, p, nBuckets = 8, filesPerBucket = 1),
+        new graft.sources.ParquetStore(spark, p, nBuckets = 8),
         "span_df", t(spark, dir, "documents"), "doc_id", "text",
         spanTokens = spanDedupTokens)
       p
     })
-    new graft.sources.ParquetStore(spark, root, nBuckets = 8, filesPerBucket = 1)
+    new graft.sources.ParquetStore(spark, root, nBuckets = 8)
   }
 
   /** STORE-BACKED boilerplate removal — [[dedupBoilerplate]] served
@@ -842,27 +842,22 @@ object Queries {
     * overlapping ones. */
   private def fullSigStore(spark: SparkSession, dir: String)
       : graft.sources.ParquetStore = {
-    // bucket knobs sized to the SF-scale index (thousands of rows):
-    // the default 16x4 layout leaves up to 64 tiny files whose
-    // open/footer costs dominate every narrow probe of a store this
-    // small — 8 buckets x 1 file keeps MERGE granularity while the
-    // probes (read by a dozen plan branches across the chain queries)
-    // pay single-digit file opens. At 100 TB the two knobs are sized
-    // together the other way (ParquetStore.bucketedWrite scaladoc).
+    // bucket count sized to the SF-scale index (thousands of rows):
+    // the bucketed write leaves one file per bucket at this size, so
+    // 8 buckets keep MERGE granularity while the probes (read by a
+    // dozen plan branches across the chain queries) pay single-digit
+    // file opens. At 100 TB the count goes to thousands (ParquetStore
+    // class scaladoc).
     val root = fullSigStoreCache.computeIfAbsent(cacheKey(spark, dir), { _ =>
       val p = sessionTempDir("graft_fullsig_")
       Dedup.buildNearDupStore(
-        new graft.sources.ParquetStore(spark, p, nBuckets = 8, filesPerBucket = 1),
+        new graft.sources.ParquetStore(spark, p, nBuckets = 8),
         "sigs", t(spark, dir, "documents"), "doc_id", "text",
         shingleN = minHashShingleN, numHashes = minHashNumHashes,
         bands = minHashBands)
       p
     })
-    // reopen with the SAME knobs: nBuckets self-describes via the
-    // layout's '#n' header, but filesPerBucket does not — a default
-    // (4) handle would silently quadruple small files on any future
-    // MERGE through it
-    new graft.sources.ParquetStore(spark, root, nBuckets = 8, filesPerBucket = 1)
+    new graft.sources.ParquetStore(spark, root, nBuckets = 8)
   }
 
   /** Full-corpus MinHash pair sweep off the persisted signature

@@ -18,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * path scales with the batch, which is the property Delta/Iceberg
   * MERGE gives and a naive copy-on-write-the-world store does not.
   *
+  * Sizing: `nBuckets` is the one layout knob. It sets the MERGE
+  * granularity (thousands of buckets at 100 TB so a merge rewrites a
+  * thin slice; 16 fits the sf-scale stores) and is pinned per table
+  * by the `#n` header. Writer tasks and files per bucket are not
+  * knobs: [[bucketedWrite]] rebalances on the bucket and lets adaptive
+  * execution size the writers from the data being written.
+  *
   * Layout per table:
   *   `_CURRENT`       — monotonic global version pointer (liveness)
   *   `_BUCKETS`       — "bucket version" lines: which snapshot dir
@@ -51,10 +58,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `MERGE INTO` (same call signature); the engine's call sites depend
   * only on `read`/`merge`/`overwrite`.
   */
-final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
-    filesPerBucket: Int = 4) extends Serializable {
-  require(filesPerBucket > 0,
-    s"filesPerBucket must be positive, got $filesPerBucket")
+final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
+    extends Serializable {
 
   /** The session this store reads/writes with — for helpers that
     * build driver-side frames destined for this store (review r19:
@@ -103,33 +108,24 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
 
   private def bucketOf(key: String, nb: Int) = pmod(hash(col(key)), lit(nb))
 
-  /** Writer tasks per bucket dir. Without a pre-write shuffle, every
-    * upstream task writes its own file into every bucket it touches —
-    * a 32-partition merge into 16 buckets leaves up to 512 files, and
-    * on a SMALL table the probe-side read then pays per-file
-    * listing/footer costs far exceeding the data (measured 3× on the
-    * 250-row incremental-dedup index). Repartitioning on
-    * (__bucket, salt) bounds output to `filesPerBucket` files per
-    * bucket while still giving each bucket `filesPerBucket` parallel
-    * writers — the single-writer-per-bucket tail a plain
-    * repartition(__bucket) would create. Write parallelism = touched
-    * buckets × filesPerBucket: both are constructor knobs, and at
-    * 100 TB they are sized TOGETHER (thousands of buckets so a merge
-    * rewrites a thin table slice, filesPerBucket at the executor
-    * count over the touched-bucket count so every writer slot is
-    * busy). The small defaults fit the sf-scale test stores.
+  /** Write `df` as one `__bucket=<b>` dir per bucket it holds, with
+    * the writer count sized by the data. A plain partitionBy write
+    * lets every upstream task write its own file into every bucket it
+    * holds (a 32-partition merge into 16 buckets left up to 512 files,
+    * and on a SMALL table the probe-side read then paid per-file
+    * listing/footer costs far above the data). A rebalance on
+    * `__bucket` shuffles each bucket's rows together first, and
+    * adaptive query execution sizes the writers from the shuffle's
+    * map statistics: small buckets coalesce into a few tasks, so a
+    * 50-row MERGE writes one file per touched bucket, while a bucket
+    * larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes` is
+    * split over several writers (AQE's rebalance skew split), so a
+    * 100 TB merge has no single-writer-per-bucket tail either. With
+    * AQE off the rebalance is a hash shuffle on `__bucket`: one writer
+    * per bucket.
     */
-  private def bucketedWrite(df: DataFrame, key: String, dir: String,
-      nTargetBuckets: Int): Unit =
-    // the salt MUST come from a hash independent of bucketOf's: with
-    // the same murmur hash, pmod(h, filesPerBucket) is fully
-    // determined by __bucket = pmod(h, nBuckets) whenever
-    // filesPerBucket divides nBuckets (the 16/4 default!), collapsing
-    // every bucket back to one writer partition — xxhash64 decorrelates
-    df.repartition(math.max(1, nTargetBuckets * filesPerBucket),
-        col("__bucket"),
-        pmod(org.apache.spark.sql.functions.xxhash64(col(key)),
-          lit(filesPerBucket.toLong)))
+  private def bucketedWrite(df: DataFrame, dir: String): Unit =
+    df.hint("rebalance", col("__bucket"))
       .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(dir)
 
   private def metaPath(table: String) = new Path(s"$root/$table/_META")
@@ -538,8 +534,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
     if (!exists(table)) {
       // first write: bucketed from the start
       val v = 0L
-      bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nb)), key,
-        versionDir(table, v), nb)
+      bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nb)),
+        versionDir(table, v))
       val written = writtenBuckets(table, v)
       if (written.isEmpty) {
         // zero-row first merge: committing an empty bucket map would
@@ -564,14 +560,16 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
       // lacks force a one-time FULL rewrite (the flat path below), so
       // every committed file shares the widened schema — rewriting
       // only touched buckets would leave mixed-schema bucket dirs and
-      // read() projects whichever file's footer it samples. Footer
-      // probe is driver-side and cheap next to the merge itself.
+      // read() projects whichever file's footer it samples. The probe
+      // is a Spark job (parquet schema inference), so it runs once and
+      // its schema serves the touched-bucket read below too: every
+      // committed file shares one schema.
       val allPaths = bucketDataPaths(table, m)
-      val curFields =
-        if (allPaths.isEmpty) updates.columns.toSet
+      val curSchema =
+        if (allPaths.isEmpty) updates.schema
         else spark.read.option("recursiveFileLookup", "true")
-          .parquet(allPaths: _*).schema.fieldNames.toSet
-      val evolving = updates.columns.exists(!curFields.contains(_))
+          .parquet(allPaths: _*).schema
+      val evolving = updates.columns.exists(c => !curSchema.fieldNames.contains(c))
       // current rows of ONLY the touched buckets (a flat snapshot has
       // no bucket dirs yet — filter it by recomputed bucket; a schema
       // evolution rewrites everything like a flat snapshot)
@@ -582,7 +580,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
         if (curPaths.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             updates.schema)
-        else spark.read.option("recursiveFileLookup", "true").parquet(curPaths: _*)
+        else spark.read.schema(curSchema).option("recursiveFileLookup", "true")
+          .parquet(curPaths: _*)
       // flat snapshots are fully re-bucketed on first merge (every row
       // must land in a bucket dir); bucketed snapshots only load and
       // rewrite the touched buckets
@@ -604,8 +603,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
         d.withColumn(c, org.apache.spark.sql.functions.lit(null).cast(upd.schema(c).dataType)))
       val next = keptWide.unionByName(upd)
       val v = currentVersion(table).get + 1L
-      bucketedWrite(next, key, versionDir(table, v),
-        if (flat) nb else touched.size)
+      bucketedWrite(next, versionDir(table, v))
       val written = writtenBuckets(table, v)
       // a flat snapshot must be fully re-bucketed on first merge (its
       // untouched rows were rewritten into v as well)
@@ -646,8 +644,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16,
     val next = scoped.join(keyed.select(col(key).as("__dk")),
       scoped(key) <=> col("__dk"), "left_anti")
     val v = currentVersion(table).get + 1L
-    bucketedWrite(next, key, versionDir(table, v),
-      if (flat) nb else touched.size)
+    bucketedWrite(next, versionDir(table, v))
     val written = writtenBuckets(table, v)
     val base = if (flat) Map.empty[Int, Long] else m
     // touched buckets that became empty simply vanish from the map

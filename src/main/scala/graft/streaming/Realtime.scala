@@ -51,10 +51,14 @@ object Realtime {
         // should declare update_time_col.
         batch.dropDuplicates(job.primaryKey)
     }
-    // the index upsert stays idempotent under at-least-once
+    // persisted like refreshJob's delta: the tokens MERGE and the embed
+    // both read the rows, and each would otherwise re-run the dedup
+    // shuffle. The index upsert stays idempotent under at-least-once
     // redelivery: it rebuilds only touched graph partitions, and a
     // replay reproduces byte-identical partitions
-    engine.upsertRows(job, deduped, indexPath)
+    deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try engine.upsertRows(job, deduped, indexPath)
+    finally deduped.unpersist()
   }
 
   /** Start the realtime pipeline from a streaming DataFrame of source

@@ -28,31 +28,87 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(got("50") == "v2-50" && got("120") == "v2-120")
   }
 
-  test("merge bounds output files per bucket (salted write shuffle)") {
-    // without the pre-write shuffle, every upstream task writes its
+  /** Part files in each `__bucket=<b>` dir the table is served from. */
+  private def partFilesByBucket(store: ParquetStore): Map[String, Int] =
+    store.read("t").inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).getParentFile)
+      .groupBy(_.getName).map { case (b, dirs) =>
+        b -> dirs.flatMap(_.listFiles()).distinct
+          .count(_.getName.endsWith(".parquet"))
+      }
+
+  test("merge bounds output files per bucket (adaptive rebalance write)") {
+    // without the pre-write rebalance, every upstream task writes its
     // own file into every bucket it touches: a 32-partition merge
     // into 16 buckets left up to 512 files, and small-table probes
-    // paid per-file listing/footer costs 3x the data
+    // paid per-file listing/footer costs 3x the data. Below the
+    // advisory partition size, adaptive execution coalesces the
+    // rebalance: one file per bucket
     val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_files_"))
     store.merge("t", rows(1 to 500, "v1").repartition(32), "pkey")
     store.merge("t", rows(200 to 700, "v2").repartition(32), "pkey")
-    val root = store.read("t").inputFiles
-      .map(f => new java.io.File(new java.net.URI(f)).getParentFile)
-    val perBucket = root.groupBy(_.getName).map { case (b, fs) =>
-      b -> fs.flatMap(_.listFiles()).distinct
-        .count(_.getName.endsWith(".parquet"))
+    val small = partFilesByBucket(store)
+    assert(small.size == 16)
+    assert(small.values.forall(_ == 1),
+      s"a sub-advisory merge must write one file per bucket, got ${small.toSeq.sorted}")
+    // and a bucket larger than the advisory size must be SPREAD over
+    // several writers: a one-writer-per-bucket rebalance would be the
+    // 100 TB tail. The advisory size is lowered for this check only:
+    // the shared test session gets its setting back
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(advisory)
+    spark.conf.set(advisory, "1k")
+    try {
+      val big = new ParquetStore(spark, TestSpark.tempDir("graft_ps_files_"))
+      big.merge("t", rows(1 to 2000, "v1").repartition(32), "pkey")
+      big.merge("t", rows(1500 to 2500, "v2").repartition(32), "pkey")
+      val got = big.read("t").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got.size == 2500 && got("10") == "v1-10" && got("2000") == "v2-2000")
+      val spread = partFilesByBucket(big)
+      assert(spread.values.exists(_ > 1),
+        s"expected some bucket with >1 part file, got ${spread.toSeq.sorted}")
+    } finally prev match {
+      case Some(p) => spark.conf.set(advisory, p)
+      case None => spark.conf.unset(advisory)
     }
+  }
+
+  test("a 50-row MERGE infers the table schema once and writes one file per bucket") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = TestSpark.tempDir("graft_ps_jobs_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 800, "v1"), "pkey")
+    val update = rows(1 to 50, "v2")
+    // (call site, runs inside a SQL execution) of every job the merge starts
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add((js.stageInfos.maxBy(_.stageId).name,
+          js.properties.getProperty("spark.sql.execution.id") != null))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      store.merge("t", update, "pkey")
+      org.apache.spark.ListenerDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    // parquet schema inference is the one job a read starts outside
+    // any SQL execution; the merge's collect and write run inside one
+    val seen = jobs.asScala.toSeq
+    val inferences = seen.filter { case (site, inSql) =>
+      site.startsWith("parquet at ParquetStore.scala") && !inSql }
+    assert(inferences.size == 1, s"one schema inference per MERGE, jobs: $seen")
+
+    val v = store.currentVersion("t").get
+    val vDir = new java.io.File(s"$dir/t/v_$v")
+    val perBucket = vDir.listFiles().filter(_.getName.startsWith("__bucket="))
+      .map(b => b.getName -> b.listFiles().count(_.getName.endsWith(".parquet")))
     assert(perBucket.nonEmpty)
-    perBucket.foreach { case (b, n) =>
-      assert(n <= 4, s"bucket $b has $n part files; the salted shuffle " +
-        "must bound files per bucket to filesPerBucket")
-    }
-    // and the salt must actually SPREAD a bucket over several writers —
-    // a salt derived from the same hash as the bucket is arithmetically
-    // inert when filesPerBucket divides nBuckets (every bucket
-    // collapses back to one writer task, the 100 TB tail)
-    assert(perBucket.values.exists(_ > 1),
-      s"expected some bucket with >1 part file, got ${perBucket.toSeq.sorted}")
+    assert(perBucket.forall(_._2 == 1),
+      s"a sub-advisory MERGE writes one file per bucket, got ${perBucket.toSeq.sorted}")
+    assert(store.read("t").count() == 800)
   }
 
   test("merge widens a pre-existing table with new update columns") {

@@ -648,8 +648,7 @@ class ScaleSpec extends AnyFunSuite {
     // same maxBase formula as writeSalted's id remap
     val maxBase = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val root = TestSpark.tempDir("graft_ladder_rung_")
-    val store = new graft.sources.ParquetStore(spark, root,
-      nBuckets = 8, filesPerBucket = 1)
+    val store = new graft.sources.ParquetStore(spark, root, nBuckets = 8)
     graft.operators.Dedup.buildNearDupStore(store, "sigs", d,
       "doc_id", "text", shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands)
