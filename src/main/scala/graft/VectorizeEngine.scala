@@ -1,11 +1,11 @@
 package graft
 
-import graft.operators.{Ann, Hnsw, Pipeline, Search}
+import graft.operators.{Ann, Hnsw, Pipeline, Search, ServingSnapshot}
 import graft.providers.{ChatProvider, DeterministicChatProvider, EmbeddingProvider, Providers}
 import graft.sources.ParquetStore
 import graft.types._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** The reference's default models and prompt task
   * (extension/src/api.rs:159-223), single-sourced: the Scala API
@@ -180,19 +180,111 @@ final class VectorizeEngine(
   // them uncreated): search over such a job returns empty results,
   // matching the reference (a query over an empty embeddings table),
   // instead of throwing "no such table".
-  private def embeddingsOf(job: VectorizeJob): DataFrame = job.tableMethod match {
-    case TableMethod.Append =>
-      if (!store.exists(appTable(job.jobName)))
-        store.readOrEmpty(appTable(job.jobName), Pipeline.embeddingSchema)
-      else store.read(appTable(job.jobName))
-        .select(col("pkey"), col("embeddings"),
-          col("__emb_updated_at").as("updated_at"))
-        .filter(col("embeddings").isNotNull)
-    case _ => store.readOrEmpty(embTable(job.jobName), Pipeline.embeddingSchema)
+  private def embeddingsOf(job: VectorizeJob): DataFrame =
+    embeddingsFrom(job, store.readOption(servedTable(job)))
+
+  /** [[embeddingsOf]] over a handle of the job's served table. */
+  private def embeddingsFrom(job: VectorizeJob, served: Option[DataFrame]): DataFrame =
+    served match {
+      case None => emptyFrame(Pipeline.embeddingSchema)
+      case Some(t) if job.tableMethod == TableMethod.Append =>
+        t.select(col("pkey"), col("embeddings"), col("__emb_updated_at").as("updated_at"))
+          .filter(col("embeddings").isNotNull)
+      case Some(t) => t
+    }
+
+  private def tokensFrom(tokens: Option[DataFrame]): DataFrame =
+    tokens.getOrElse(emptyFrame(Pipeline.tokenSchema))
+
+  // a local relation: its size estimate is 0, so a missing table keeps
+  // a job under the serving gate
+  private def emptyFrame(schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** A job's store writes in flight, and the (served table, tokens
+    * table) handles of the state before them. */
+  private final class Writes {
+    var inFlight = 0
+    var before: (Option[DataFrame], Option[DataFrame]) = (None, None)
+  }
+  private val writes = scala.collection.concurrent.TrieMap.empty[String, Writes]
+
+  private def currentHandles(job: VectorizeJob): (Option[DataFrame], Option[DataFrame]) =
+    (store.readOption(servedTable(job)), store.readOption(tokTable(job.jobName)))
+
+  /** Run a write to a job's stores. A read that overlaps it serves the
+    * handles of the state before it ([[readHandles]]), so a read never
+    * pairs the tokens of one write with the vectors of another:
+    * [[upsertRows]] commits its two tables one after the other. A
+    * write that starts while none is in flight records those handles;
+    * no commit can land while it does, as every write goes through
+    * here first.
+    */
+  private def writing[T](job: VectorizeJob)(body: => T): T = {
+    val w = writes.getOrElseUpdate(job.jobName, new Writes)
+    w.synchronized {
+      if (w.inFlight == 0) w.before = currentHandles(job)
+      w.inFlight += 1
+    }
+    try body finally w.synchronized(w.inFlight -= 1)
   }
 
-  private def tokensOf(jobName: String): DataFrame =
-    store.readOrEmpty(tokTable(jobName), Pipeline.tokenSchema)
+  /** The handles a read serves from: the current ones, or while a
+    * write of the job is in flight those of the state before it.
+    */
+  private def readHandles(job: VectorizeJob): (Option[DataFrame], Option[DataFrame]) = {
+    val w = writes.getOrElseUpdate(job.jobName, new Writes)
+    w.synchronized(if (w.inFlight == 0) currentHandles(job) else w.before)
+  }
+
+  /** The serving tier's state for a job: the frames it serves from
+    * (compared by reference), their largest size estimate, and the
+    * driver-local snapshot, built on first use.
+    */
+  private final class Serving(val job: VectorizeJob, val src: DataFrame,
+      val emb: Option[DataFrame], val tok: Option[DataFrame], val timeZone: String) {
+    def servesFrom(j: VectorizeJob, s: DataFrame, e: Option[DataFrame],
+        t: Option[DataFrame], tz: String): Boolean =
+      j == job && (s eq src) && sameHandle(e, emb) && sameHandle(t, tok) && tz == timeZone
+    private def sameHandle(a: Option[DataFrame], b: Option[DataFrame]) =
+      a.isEmpty && b.isEmpty || a.nonEmpty && b.nonEmpty && (a.get eq b.get)
+    private lazy val (embFrame, tokFrame) = (embeddingsFrom(job, emb), tokensFrom(tok))
+    lazy val size: BigInt = Seq(src, embFrame, tokFrame).map(GraftColumnBridge.sizeInBytes).max
+    // held softly: the collector may reclaim it under memory pressure,
+    // and the next read builds it again
+    private var held = new java.lang.ref.SoftReference[ServingSnapshot](null)
+    def snapshot: ServingSnapshot = synchronized {
+      Option(held.get).getOrElse {
+        val built = ServingSnapshot.build(spark, src, job.primaryKey, embFrame, tokFrame)
+        held = new java.lang.ref.SoftReference(built)
+        built
+      }
+    }
+  }
+  private val serving = scala.collection.mutable.HashMap.empty[String, Serving]
+
+  /** The driver-local snapshot a read over these frames is answered
+    * from, when every frame is small enough that Spark would broadcast
+    * it (`spark.sql.autoBroadcastJoinThreshold`; -1 turns the tier
+    * off). A snapshot lives until the source is re-registered or either
+    * store table commits, or until the collector reclaims it under
+    * memory pressure.
+    */
+  private def localSnapshot(job: VectorizeJob, src: DataFrame,
+      handles: (Option[DataFrame], Option[DataFrame])): Option[ServingSnapshot] = {
+    val threshold = GraftColumnBridge.broadcastThreshold(spark)
+    if (threshold < 0) return None
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    val s = serving.synchronized {
+      serving.get(job.jobName).filter(_.servesFrom(job, src, handles._1, handles._2, tz))
+        .getOrElse {
+          val fresh = new Serving(job, src, handles._1, handles._2, tz)
+          serving.put(job.jobName, fresh)
+          fresh
+        }
+    }
+    if (s.size > threshold) None else Some(s.snapshot)
+  }
 
   /** `vectorize.table(...)` (extension/src/api.rs:80-114 +
     * initialize_job core/src/init.rs:122-269): validate, persist the
@@ -231,11 +323,8 @@ final class VectorizeEngine(
     jobs.get(job.jobName).foreach { old =>
       def embeddingConfig(j: VectorizeJob) =
         (j.model, j.tableMethod, j.srcTable, j.srcColumns, j.primaryKey, j.updateTimeCol)
-      if (embeddingConfig(old) != embeddingConfig(job)) {
-        store.drop(embTable(job.jobName))
-        store.drop(tokTable(job.jobName))
-        store.drop(appTable(job.jobName))
-      }
+      if (embeddingConfig(old) != embeddingConfig(job))
+        writing(old)(dropStores(job.jobName))
     }
 
   def createJob(job: VectorizeJob): VectorizeJob = {
@@ -292,15 +381,16 @@ final class VectorizeEngine(
     * does not repeat the provider calls.
     */
   private[graft] def upsertRows(job: VectorizeJob, rows: DataFrame,
-      indexPath: Option[String] = None): Unit = {
+      indexPath: Option[String] = None): Unit = writing(job) {
     mergeTokens(job, rows)
     val inputs = Pipeline.renderInputs(rows, job.primaryKey, job.srcColumns)
     val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      mergeVectors(job, rows, embedded)
-      indexPath.foreach(p =>
-        upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
+      // an empty batch commits no vectors and leaves the index as it is
+      if (mergeVectors(job, rows, embedded))
+        indexPath.foreach(p =>
+          upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
     } finally embedded.unpersist()
   }
 
@@ -316,7 +406,7 @@ final class VectorizeEngine(
     * embeddings without a join — the method's point. The vectors are
     * joined back to their `rows` (a superset of their keys is fine).
     */
-  private def mergeVectors(job: VectorizeJob, rows: DataFrame, vectors: DataFrame): Unit = {
+  private def mergeVectors(job: VectorizeJob, rows: DataFrame, vectors: DataFrame): Boolean = {
     val served = job.tableMethod match {
       case TableMethod.Append =>
         rows.withColumn("pkey", col(job.primaryKey).cast("string"))
@@ -359,13 +449,15 @@ final class VectorizeEngine(
     // delta skips them (they have embeddings), so their search
     // tokens are rendered here from the source rows.
     val src = sources(j.srcTable)
-    mergeTokens(j, src.join(incoming.select("pkey"),
-      col(j.primaryKey).cast("string") === col("pkey"), "left_semi"))
-    // Vectors land where the job serves from: vectors imported into
-    // `_embeddings_` for an append job would be dead data AND the next
-    // refresh would re-embed (and re-pay for) every row.
-    mergeVectors(j, src,
-      incoming.join(embeddingsOf(j).select("pkey"), Seq("pkey"), "left_anti"))
+    writing(j) {
+      mergeTokens(j, src.join(incoming.select("pkey"),
+        col(j.primaryKey).cast("string") === col("pkey"), "left_semi"))
+      // Vectors land where the job serves from: vectors imported into
+      // `_embeddings_` for an append job would be dead data AND the next
+      // refresh would re-embed (and re-pay for) every row.
+      mergeVectors(j, src,
+        incoming.join(embeddingsOf(j).select("pkey"), Seq("pkey"), "left_anti"))
+    }
   }
 
   /** `vectorize.table_from` (extension/src/api.rs:328-390). */
@@ -390,13 +482,18 @@ final class VectorizeEngine(
     * (core/src/init.rs:317-395). Failure-tolerant like the reference.
     */
   def deleteJob(jobName: String): Unit = {
-    store.drop(embTable(jobName))
-    store.drop(tokTable(jobName))
-    store.drop(appTable(jobName))
+    jobs.get(jobName).fold(dropStores(jobName))(j => writing(j)(dropStores(jobName)))
+    serving.synchronized(serving.remove(jobName))
     catalogLock.synchronized {
       jobs.remove(jobName)
       persistCatalog()
     }
+  }
+
+  private def dropStores(jobName: String): Unit = {
+    store.drop(embTable(jobName))
+    store.drop(tokTable(jobName))
+    store.drop(appTable(jobName))
   }
 
   /** `vectorize.chunk_table` (extension/src/api.rs:17-78): chunk one
@@ -436,7 +533,10 @@ final class VectorizeEngine(
 
   /** `vectorize.search` (extension/src/api.rs:116-134): embed the
     * query on the driver (the reference's network boundary #1), then
-    * exact cosine top-k distributed on executors.
+    * exact cosine top-k — on the driver from the job's serving
+    * snapshot when the job's frames are under the broadcast threshold
+    * (see [[localSnapshot]]), else distributed on executors. `preFilter`
+    * and `whereSql` always take the Spark plan.
     */
   def search(jobName: String, query: String, limit: Int = 10,
       filters: Map[String, FilterValue] = Map.empty,
@@ -445,12 +545,19 @@ final class VectorizeEngine(
       whereSql: Option[String] = None): DataFrame = {
     val job = jobs(jobName)
     val qv = encode(jobName, query)
-    // P5 — raw where_sql predicate: applied post-join over the full
-    // ranking like the typed filters (reference placement,
-    // core/src/query.rs:669-700 WHERE on the joined result).
-    // Caller-supplied SQL, same trust model as the reference.
-    Search.semanticSearch(sources(job.srcTable), embeddingsOf(job),
-      job.primaryKey, qv, limit, filters, returnCols, preFilter, whereSql)
+    val src = sources(job.srcTable)
+    val handles = readHandles(job)
+    val local =
+      if (preFilter || whereSql.nonEmpty || limit < 1 || limit > Int.MaxValue / 5) None
+      else localSnapshot(job, src, handles).filter(_.supports(filters, returnCols))
+    local.fold(
+      // P5 — raw where_sql predicate: applied post-join over the full
+      // ranking like the typed filters (reference placement,
+      // core/src/query.rs:669-700 WHERE on the joined result).
+      // Caller-supplied SQL, same trust model as the reference.
+      Search.semanticSearch(src, embeddingsFrom(job, handles._1),
+        job.primaryKey, qv, limit, filters, returnCols, preFilter, whereSql))(
+      _.semanticSearch(qv, limit, filters, returnCols))
   }
 
   /** P8 — JSON row encoding: the reference returns `SETOF jsonb` from
@@ -476,7 +583,9 @@ final class VectorizeEngine(
   /** `vectorize.hybrid_search` (extension/src/api.rs:136-157).
     * `bm25 = true` swaps the lexical leg's ts_rank_cd scoring for
     * BM25 over the same token store — a capability the reference
-    * lacks; RRF fusion, weights, and windowing are unchanged.
+    * lacks; RRF fusion, weights, and windowing are unchanged. Served
+    * from the job's snapshot like [[search]]; `bm25` and `whereSql`
+    * always take the Spark plan.
     */
   def hybridSearch(jobName: String, query: String, limit: Int = 10,
       windowSize: Option[Int] = None, rrfK: Double = 60.0,
@@ -487,10 +596,19 @@ final class VectorizeEngine(
       whereSql: Option[String] = None): DataFrame = {
     val job = jobs(jobName)
     val qv = encode(jobName, query)
-    Search.hybridSearch(sources(job.srcTable), embeddingsOf(job),
-      tokensOf(jobName), job.primaryKey, qv, query, limit,
-      windowSize, rrfK, semanticWt, ftsWt, filters, returnCols, bm25,
-      whereSql)
+    val src = sources(job.srcTable)
+    val handles = readHandles(job)
+    val window = windowSize.getOrElse(if (limit > Int.MaxValue / 5) 0 else limit * 5)
+    // rrfK > -1 keeps every k + rank positive, as the plan's division needs
+    val local =
+      if (bm25 || whereSql.nonEmpty || limit < 1 || window < 1 || !(rrfK > -1.0)) None
+      else localSnapshot(job, src, handles).filter(_.supports(filters, returnCols))
+    local.fold(
+      Search.hybridSearch(src, embeddingsFrom(job, handles._1),
+        tokensFrom(handles._2), job.primaryKey, qv, query, limit,
+        windowSize, rrfK, semanticWt, ftsWt, filters, returnCols, bm25,
+        whereSql))(
+      _.hybridSearch(qv, query, limit, window, rrfK, semanticWt, ftsWt, filters, returnCols))
   }
 
   /** `vectorize.rag` (extension/src/api.rs:179-205): retrieve top

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Mirrors the reference's generated hybrid query
   * (core/src/query.rs:653-785) with server-mode parameterization
   * (window_size = 5×limit, rrf_k = 60, semantic_wt/fts_wt — SURVEY
-  * §3.2); the extension's percentage mode is a wrapper.
+  * §3.2).
   *
   * Scale notes: both legs end in `orderBy().limit(windowSize)` which
   * Spark plans as TakeOrderedAndProject — an exact distributed top-k
@@ -273,17 +273,6 @@ object Search {
         fused("pkey").as("__pkey")): _*)
     projected.orderBy(col("rrf_score").desc, col("__pkey").asc)
       .limit(limit).drop("__pkey")
-  }
-
-  /** Extension-mode convenience: single `semantic_weight` percentage
-    * (extension/src/search.rs:263-369, GUC 0-100 default 50).
-    */
-  def hybridSearchPct(src: DataFrame, emb: DataFrame, tokens: DataFrame, pk: String,
-      queryVec: Array[Float], queryText: String, limit: Int,
-      semanticWeightPct: Int): DataFrame = {
-    val w = semanticWeightPct.max(0).min(100) / 100.0
-    hybridSearch(src, emb, tokens, pk, queryVec, queryText, limit,
-      semanticWt = w, ftsWt = 1.0 - w)
   }
 
   /** P7: return-column projection, default all source columns. */

@@ -26,9 +26,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the query embedding happens on the driver at analysis time, the
   * reference's network boundary #1, core/src/query.rs:606-615). The
   * builder just delegates to the engine method and returns its
-  * analyzed plan, so the distributed top-k/RRF shapes — broadcast
-  * rank legs, TakeOrderedAndProject — are identical to the Scala API;
-  * PlanSpec's locks cover both surfaces.
+  * analyzed plan, so each surface answers as the Scala API does: a
+  * local relation from the serving snapshot for a job under the
+  * broadcast threshold, else the distributed top-k/RRF shapes —
+  * broadcast rank legs, TakeOrderedAndProject — that PlanSpec locks.
   */
 object SqlTableFunctions {
 

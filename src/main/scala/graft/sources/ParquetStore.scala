@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Snapshot-versioned Parquet table with key-hash-bucketed upsert
@@ -27,10 +28,24 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout per table:
   *   `_CURRENT`       — monotonic global version pointer (liveness)
-  *   `_BUCKETS`       — "bucket version" lines: which snapshot dir
-  *                      holds each bucket's current data (-1 = flat,
-  *                      unbucketed snapshot from overwrite())
+  *   `_BUCKETS`       — header lines, then "bucket version" lines:
+  *                      which snapshot dir holds each bucket's current
+  *                      data (-1 = flat, unbucketed snapshot from
+  *                      overwrite()). Header lines start with `#`:
+  *                      `#n <buckets>` pins the bucket count,
+  *                      `#schema <json>` is the schema the commit wrote
+  *                      (so a read needs no parquet schema inference,
+  *                      which is a Spark job), `#token <uuid>` is unique
+  *                      per commit (a dropped and re-created table that
+  *                      re-commits an identical bucket map at `v_0`
+  *                      still reads as new content)
   *   `v_<n>/__bucket=<b>/` — parquet for the buckets rewritten at n
+  *
+  * [[read]] returns one DataFrame per committed `_BUCKETS` content and
+  * hands the same object back until the next commit: no file listing,
+  * no schema job, and callers may key caches on the handle by
+  * reference. Tables committed before the header existed are read
+  * with schema inference, uncached.
   *
   * Both pointer files flip via overwriting rename (posix/HDFS rename
   * onto an existing path is atomic), so readers never observe a
@@ -60,6 +75,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     extends Serializable {
+  import ParquetStore.BucketsFile
 
   /** The session this store reads/writes with — for helpers that
     * build driver-side frames destined for this store (review r19:
@@ -97,14 +113,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * with a different constructor nBuckets would otherwise hash keys
     * into the wrong buckets and silently duplicate/miss rows on merge.
     */
-  private def tableBuckets(table: String): Int = {
-    val p = bucketsPath(table)
-    if (!fs.exists(p)) nBuckets
-    else new String(readFully(p), "UTF-8").linesIterator
-      .find(_.startsWith("#n "))
-      .map(_.stripPrefix("#n ").trim.toInt)
-      .getOrElse(nBuckets)
-  }
+  private def tableBuckets(table: String): Int =
+    readBucketsFile(table).flatMap(_.nb).getOrElse(nBuckets)
 
   private def bucketOf(key: String, nb: Int) = pmod(hash(col(key)), lit(nb))
 
@@ -245,24 +255,31 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 
   def exists(table: String): Boolean = currentVersion(table).isDefined
 
-  /** bucket → snapshot version holding its current data. Bucket -1
-    * marks a flat (unbucketed) snapshot written by overwrite().
-    */
-  private def readBucketMap(table: String): Map[Int, Long] = {
-    val p = bucketsPath(table)
-    if (!fs.exists(p))
-      // Migration: a pre-bucketing table has _CURRENT but no _BUCKETS
-      // (the old format stored one flat snapshot at the current
-      // version). Synthesize the flat map so legacy warehouses stay
-      // readable; the next merge re-buckets them like any flat
-      // overwrite() snapshot.
-      currentVersion(table).map(v => Map(-1 -> v)).getOrElse(Map.empty)
-    else new String(readFully(p), "UTF-8").linesIterator
-      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
+  private def readBucketsFile(table: String): Option[BucketsFile] = {
+    val raw =
+      try new String(readFully(bucketsPath(table)), "UTF-8")
+      catch { case _: java.io.FileNotFoundException => return None }
+    val lines = raw.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    def header(tag: String) =
+      lines.find(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag ").trim)
+    Some(BucketsFile(raw, header("n").map(_.toInt),
+      header("schema").map(j => DataType.fromJson(j).asInstanceOf[StructType]),
+      header("token"),
+      lines.filterNot(_.startsWith("#")).map { line =>
         val Array(b, v) = line.split("\\s+")
         b.toInt -> v.toLong
-      }.toMap
+      }.toMap))
   }
+
+  private def readBucketMap(table: String): Map[Int, Long] =
+    readBucketsFile(table).map(_.map).getOrElse(legacyBucketMap(table))
+
+  // Migration: a pre-bucketing table has _CURRENT but no _BUCKETS (the
+  // old format stored one flat snapshot at the current version).
+  // Synthesize the flat map so legacy warehouses stay readable; the
+  // next merge re-buckets them like any flat overwrite() snapshot.
+  private def legacyBucketMap(table: String): Map[Int, Long] =
+    currentVersion(table).map(v => Map(-1 -> v)).getOrElse(Map.empty)
 
   private def readFully(p: Path): Array[Byte] = {
     val in = controlFs.open(p)
@@ -278,22 +295,48 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   def read(table: String): DataFrame = {
     if (!exists(table))
       throw new IllegalStateException(s"no such table: $root/$table")
-    val paths = bucketDataPaths(table, readBucketMap(table))
+    readBucketsFile(table) match {
+      case Some(f) if f.schema.isDefined && f.token.isDefined =>
+        val cached = handles.get(table)
+        if (cached != null && cached._1 == f.raw) cached._2
+        else {
+          val df = scan(table, f.map, f.schema)
+          handles.put(table, (f.raw, df))
+          df
+        }
+      case f => scan(table, f.fold(legacyBucketMap(table))(_.map), None)
+    }
+  }
+
+  /** The last committed `_BUCKETS` content read per table, with the
+    * DataFrame [[read]] built for it. */
+  @transient private lazy val handles =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+
+  /** Parquet scan of the buckets in `m`, typed by `schema` when the
+    * commit recorded one and inferred (a Spark job) otherwise.
+    */
+  private def scan(table: String, m: Map[Int, Long], schema: Option[StructType]): DataFrame = {
+    val paths = bucketDataPaths(table, m)
     if (paths.isEmpty)
       throw new IllegalStateException(s"no data for table: $root/$table")
     // recursiveFileLookup disables partition-directory inference — the
     // leaf dirs come from different snapshot versions, which would
     // otherwise trip "conflicting directory structures".
-    spark.read.option("recursiveFileLookup", "true").parquet(paths: _*)
+    val reader = spark.read.option("recursiveFileLookup", "true")
+    schema.fold(reader)(reader.schema).parquet(paths: _*)
   }
+
+  /** read(), or None when the table does not exist. */
+  def readOption(table: String): Option[DataFrame] =
+    if (exists(table)) Some(read(table)) else None
 
   /** read(), or an empty frame of `schema` when the table does not
     * exist (zero-row backfills deliberately leave tables uncreated).
     */
-  def readOrEmpty(table: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (exists(table)) read(table)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  def readOrEmpty(table: String, schema: StructType): DataFrame =
+    readOption(table).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
   /** Atomic pointer write: tmp file + overwriting rename — the
     * pointer is NEVER absent once created; a crash or concurrent
@@ -332,7 +375,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   }
 
   private def commit(table: String, v: Long, bucketMap: Map[Int, Long],
-      nb: Int, prevReferenced: Set[Long] = Set.empty): Unit = {
+      nb: Int, written: StructType, prevReferenced: Set[Long] = Set.empty): Unit = {
     // Pointer-write ORDER is crash-critical, and differs by case:
     // - first commit: _BUCKETS before _CURRENT, so exists() only turns
     //   true once the map it implies is in place (a crash between the
@@ -345,9 +388,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     //   readers serve the pre-merge state and the retry writes a fresh
     //   v+1 directory.
     // The "#n" header pins the table's bucket count (self-describing
-    // layout — see tableBuckets).
+    // layout — see tableBuckets); "#schema" is the written schema less
+    // the bucket partition column, and "#token" makes every commit's
+    // content unique (see the class doc).
+    val schema = StructType(written.filterNot(_.name == "__bucket"))
     val bucketsContent =
-      (s"#n $nb" +:
+      (Seq(s"#n $nb", s"#schema ${schema.json}", s"#token ${java.util.UUID.randomUUID()}") ++
         bucketMap.toSeq.sortBy(_._1).map { case (b, ver) => s"$b $ver" }).mkString("\n")
     if (currentVersion(table).isEmpty) {
       atomicWrite(bucketsPath(table), bucketsContent)
@@ -366,7 +412,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val prev = readBucketMap(table).values.toSet
     val v = currentVersion(table).getOrElse(-1L) + 1L
     df.write.mode(SaveMode.Overwrite).parquet(versionDir(table, v))
-    commit(table, v, Map(-1 -> v), tableBuckets(table), prev)
+    commit(table, v, Map(-1 -> v), tableBuckets(table), df.schema, prev)
   }
 
   /** [[overwrite]] with the snapshot's properties committed
@@ -449,7 +495,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
     atomicWrite(metaVPath(table, v), renderMeta(props))
     checkUnmoved("before the pointer flip")
-    commit(table, v, Map(-1 -> v), tableBuckets(table), prev)
+    commit(table, v, Map(-1 -> v), tableBuckets(table), df.schema, prev)
   }
 
   /** The current snapshot's data and the properties committed WITH it,
@@ -527,10 +573,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * snapshot; new keys are appended. `updates` must contain at most
     * one row per key (enforce upstream), matching the reference's
     * ON CONFLICT upsert semantics. Rewrites ONLY the buckets the
-    * update keys hash into.
+    * update keys hash into. Returns whether it committed a version:
+    * an empty `updates` commits none.
     */
-  def merge(table: String, updates: DataFrame, key: String): Unit = {
-    val nb = tableBuckets(table)
+  def merge(table: String, updates: DataFrame, key: String): Boolean = {
+    val file = readBucketsFile(table)
+    val nb = file.flatMap(_.nb).getOrElse(nBuckets)
     if (!exists(table)) {
       // first write: bucketed from the start
       val v = 0L
@@ -542,12 +590,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         // make exists() true but read() impossible — leave the table
         // nonexistent instead
         fs.delete(new Path(versionDir(table, v)), true)
-        return
+        return false
       }
-      commit(table, v, written, nb)
-      return
+      commit(table, v, written, nb, updates.schema)
+      return true
     }
-    val m = readBucketMap(table)
+    val m = file.map(_.map).getOrElse(legacyBucketMap(table))
     // persisted: merge runs three actions over `updates` (touched-
     // bucket collect, the anti-join probe, the union write) — callers
     // should not have to know to pre-persist to avoid 3x upstream I/O
@@ -555,20 +603,21 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val touched = upd.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) return
+      if (touched.isEmpty) return false
       // additive schema evolution: updates carrying a column the table
       // lacks force a one-time FULL rewrite (the flat path below), so
       // every committed file shares the widened schema — rewriting
       // only touched buckets would leave mixed-schema bucket dirs and
-      // read() projects whichever file's footer it samples. The probe
-      // is a Spark job (parquet schema inference), so it runs once and
-      // its schema serves the touched-bucket read below too: every
-      // committed file shares one schema.
-      val allPaths = bucketDataPaths(table, m)
-      val curSchema =
+      // read() projects whichever file's footer it samples. The current
+      // schema comes from the commit header; only a legacy table
+      // without one pays a schema inference (a Spark job), once, and
+      // its schema serves the touched-bucket read below too.
+      val curSchema = file.flatMap(_.schema).getOrElse {
+        val allPaths = bucketDataPaths(table, m)
         if (allPaths.isEmpty) updates.schema
         else spark.read.option("recursiveFileLookup", "true")
           .parquet(allPaths: _*).schema
+      }
       val evolving = updates.columns.exists(c => !curSchema.fieldNames.contains(c))
       // current rows of ONLY the touched buckets (a flat snapshot has
       // no bucket dirs yet — filter it by recomputed bucket; a schema
@@ -608,7 +657,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // a flat snapshot must be fully re-bucketed on first merge (its
       // untouched rows were rewritten into v as well)
       val base = if (flat) Map.empty[Int, Long] else m
-      commit(table, v, base -- touched ++ written, nb, m.values.toSet)
+      commit(table, v, base -- touched ++ written, nb, next.schema, m.values.toSet)
+      true
     } finally upd.unpersist()
   }
 
@@ -628,8 +678,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     */
   def delete(table: String, keys: DataFrame, key: String): Unit = {
     if (!exists(table)) return
-    val nb = tableBuckets(table)
-    val m = readBucketMap(table)
+    val file = readBucketsFile(table)
+    val nb = file.flatMap(_.nb).getOrElse(nBuckets)
+    val m = file.map(_.map).getOrElse(legacyBucketMap(table))
     val keyed = keys.select(key).withColumn("__bucket", bucketOf(key, nb))
     val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return
@@ -637,7 +688,10 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val curPaths = bucketDataPaths(table,
       if (flat) m else m.filter { case (b, _) => touched.contains(b) })
     if (curPaths.isEmpty) return
-    val cur = spark.read.option("recursiveFileLookup", "true").parquet(curPaths: _*)
+    // the current schema from the commit header, inferred (a Spark
+    // job) only for a legacy table without one
+    val reader = spark.read.option("recursiveFileLookup", "true")
+    val cur = file.flatMap(_.schema).fold(reader)(reader.schema).parquet(curPaths: _*)
       .withColumn("__bucket", bucketOf(key, nb))
     val scoped = if (flat) cur else cur.filter(col("__bucket").isin(touched.toSeq: _*))
     // null-safe like merge: deleting a null key removes the null-key row
@@ -655,12 +709,13 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // committed empty bucket map would make exists() true while
       // read() throws
       drop(table)
-    } else commit(table, v, next2, nb, m.values.toSet)
+    } else commit(table, v, next2, nb, next.schema, m.values.toSet)
   }
 
   def drop(table: String): Unit = {
     val p = new Path(s"$root/$table")
     if (fs.exists(p)) fs.delete(p, true)
+    handles.remove(table)
   }
 
   /** GC snapshot dirs no bucket references. `prevReferenced` — the
@@ -690,4 +745,13 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     metaVersions(table).filter(_ < current - 1)
       .foreach(w => fs.delete(metaVPath(table, w), false))
   }
+}
+
+object ParquetStore {
+  /** One `_BUCKETS` file: its exact text, the header fields and the
+    * bucket → snapshot version map. Bucket -1 marks a flat
+    * (unbucketed) snapshot written by overwrite().
+    */
+  private final case class BucketsFile(raw: String, nb: Option[Int],
+      schema: Option[StructType], token: Option[String], map: Map[Int, Long])
 }

@@ -26,11 +26,12 @@ object Realtime {
     * the job serves from, upsert the optional vector index. This is
     * the body of the reference worker's execute_job
     * (worker/src/executor.rs:60-160), which likewise serves trigger,
-    * queue, cron and manual refreshes alike.
+    * queue, cron and manual refreshes alike. An empty batch commits
+    * nothing and calls no provider: each MERGE returns on an empty
+    * update, and the embedder has no rows to batch.
     */
   def processBatch(engine: VectorizeEngine, job: VectorizeJob, batch: DataFrame,
       indexPath: Option[String] = None): Unit = {
-    if (batch.isEmpty) return
     // A micro-batch may contain several versions of one key (insert
     // then update, or at-least-once redelivery): keep only the last
     // writer per pkey (by update_time_col when present) so the MERGE
@@ -130,7 +131,7 @@ object Realtime {
             val rows = b.join(kept, Seq(idCol), "left_semi")
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             try {
-              if (!rows.isEmpty) store.merge(table, rows, idCol)
+              if (!rows.isEmpty) store.merge(table, rows, idCol): Unit
             } finally rows.unpersist()
           }
         } finally b.unpersist()
@@ -195,7 +196,7 @@ object Realtime {
             if (!b.isEmpty) {
               val cleaned = graft.operators.Dedup.boilerplateRemoveAgainst(
                 boil, b, idCol, textCol, spanTokens)
-              store.merge(outTable, cleaned, idCol)
+              store.merge(outTable, cleaned, idCol): Unit
             }
           } finally b.unpersist()
         }

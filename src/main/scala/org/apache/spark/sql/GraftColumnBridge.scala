@@ -43,4 +43,33 @@ object GraftColumnBridge {
     */
   def logicalPlan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** A DataFrame over `plan` — the Dataset-from-LogicalPlan factory
+    * (`Dataset.ofRows` is `private[sql]`). Over a `LocalRelation` the
+    * frame collects on the driver without a Spark job.
+    */
+  def dataFrame(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Collect `df` as Catalyst rows (copied `UnsafeRow`s) inside a SQL
+    * execution, as `collect()` does, without the conversion to
+    * external `Row`s.
+    */
+  def collectInternal(df: DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes (-1 = off). */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** The optimizer's size estimate of `df`, as broadcast planning reads it. */
+  def sizeInBytes(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The session's name resolver (case-insensitive unless
+    * `spark.sql.caseSensitive`). */
+  def resolver(spark: SparkSession): org.apache.spark.sql.catalyst.analysis.Resolver =
+    spark.sessionState.conf.resolver
 }

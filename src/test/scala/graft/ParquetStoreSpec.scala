@@ -73,14 +73,10 @@ class ParquetStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("a 50-row MERGE infers the table schema once and writes one file per bucket") {
+  /** (stage name, runs inside a SQL execution) of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(String, Boolean)] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
-    val dir = TestSpark.tempDir("graft_ps_jobs_")
-    val store = new ParquetStore(spark, dir)
-    store.merge("t", rows(1 to 800, "v1"), "pkey")
-    val update = rows(1 to 50, "v2")
-    // (call site, runs inside a SQL execution) of every job the merge starts
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -91,15 +87,33 @@ class ParquetStoreSpec extends AnyFunSuite {
     org.apache.spark.ListenerDrain.drain(sc)
     sc.addSparkListener(listener)
     try {
-      store.merge("t", update, "pkey")
+      body
       org.apache.spark.ListenerDrain.drain(sc)
     } finally sc.removeSparkListener(listener)
-    // parquet schema inference is the one job a read starts outside
-    // any SQL execution; the merge's collect and write run inside one
-    val seen = jobs.asScala.toSeq
-    val inferences = seen.filter { case (site, inSql) =>
-      site.startsWith("parquet at ParquetStore.scala") && !inSql }
-    assert(inferences.size == 1, s"one schema inference per MERGE, jobs: $seen")
+    jobs.asScala.toSeq
+  }
+
+  // parquet schema inference is the one job a read starts outside any
+  // SQL execution; a merge's collect and write run inside one
+  private def inferences(jobs: Seq[(String, Boolean)]) = jobs.filter { case (site, inSql) =>
+    site.startsWith("parquet at ParquetStore.scala") && !inSql }
+
+  /** Rewrite a table's `_BUCKETS` as a commit made before the schema
+    * and token header lines existed. */
+  private def stripHeader(dir: String, table: String): Unit = {
+    val p = java.nio.file.Paths.get(dir, table, "_BUCKETS")
+    val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n")
+      .filterNot(l => l.startsWith("#schema ") || l.startsWith("#token "))
+    java.nio.file.Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
+  }
+
+  test("a 50-row MERGE takes its schema from the commit header, one file per bucket") {
+    val dir = TestSpark.tempDir("graft_ps_jobs_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 800, "v1"), "pkey")
+    val update = rows(1 to 50, "v2")
+    val seen = jobsOf(store.merge("t", update, "pkey"))
+    assert(inferences(seen).isEmpty, s"no schema inference for a table with a header, jobs: $seen")
 
     val v = store.currentVersion("t").get
     val vDir = new java.io.File(s"$dir/t/v_$v")
@@ -108,7 +122,50 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(perBucket.nonEmpty)
     assert(perBucket.forall(_._2 == 1),
       s"a sub-advisory MERGE writes one file per bucket, got ${perBucket.toSeq.sorted}")
-    assert(store.read("t").count() == 800)
+    assert(inferences(jobsOf(assert(store.read("t").count() == 800))).isEmpty)
+    val keys = rows(1 to 5, "x").select("pkey")
+    assert(inferences(jobsOf(store.delete("t", keys, "pkey"))).isEmpty)
+    assert(store.read("t").count() == 795)
+  }
+
+  test("a MERGE into a legacy table without a schema header infers the schema once") {
+    val dir = TestSpark.tempDir("graft_ps_legacy_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 300, "v1"), "pkey")
+    stripHeader(dir, "t")
+    val seen = jobsOf(store.merge("t", rows(1 to 50, "v2"), "pkey"))
+    assert(inferences(seen).size == 1, s"one schema inference per legacy MERGE, jobs: $seen")
+    val got = store.read("t").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got.size == 300 && got("7") == "v2-7" && got("70") == "v1-70")
+    // the MERGE's commit writes the header: the next one infers nothing
+    assert(inferences(jobsOf(store.merge("t", rows(2 to 3, "v3"), "pkey"))).isEmpty)
+  }
+
+  test("read: the header schema equals the inferred one, one handle per commit") {
+    val dir = TestSpark.tempDir("graft_ps_handle_")
+    val store = new ParquetStore(spark, dir)
+    val wide = (1 to 40).map(i => (i.toString, Seq(i.toFloat, 0.5f), i.toLong,
+      new java.sql.Timestamp(i * 1000L), if (i % 3 == 0) null else s"t$i"))
+      .toDF("pkey", "embeddings", "n", "updated_at", "note")
+    store.merge("t", wide, "pkey")
+    val inferred = spark.read.option("recursiveFileLookup", "true").parquet(s"$dir/t/v_0").schema
+    assert(store.read("t").schema == inferred)
+    assert(store.read("t") eq store.read("t"), "an unchanged table serves one handle")
+    val before = store.read("t")
+    store.merge("t", wide.limit(3), "pkey")
+    assert(!(store.read("t") eq before), "a commit changes the handle")
+    store.overwrite("f", wide)
+    assert(store.read("f").schema == spark.read.parquet(s"$dir/f/v_0").schema)
+    // drop and re-create: the same bucket map at v_0, a new handle
+    val first = store.read("f")
+    store.drop("f")
+    store.overwrite("f", wide.limit(5))
+    assert(!(store.read("f") eq first))
+    assert(store.read("f").count() == 5)
+    // a legacy table reads by inference, uncached
+    stripHeader(dir, "f")
+    assert(inferences(jobsOf(store.read("f").count())).size == 1)
+    assert(store.read("f").schema == spark.read.parquet(s"$dir/f/v_0").schema)
   }
 
   test("merge widens a pre-existing table with new update columns") {

@@ -181,6 +181,48 @@ class RealtimeSpec extends AnyFunSuite {
       "replay must serve the post-update vector for the updated key")
   }
 
+  test("an empty batch commits no store version, calls no provider and leaves the index alone") {
+    Seq(TableMethod.Join, TableMethod.Append).foreach { method =>
+      val provider = new CallCountingProvider
+      val engine = new VectorizeEngine(spark, TestSpark.tempDir("graft_rt_empty_"),
+        embeddingProviderOverride = Some(provider))
+      val job = VectorizeJob("empty_job", "content", Seq("content"), "id",
+        Some("updated_at"), Model.parseUnsafe("deterministic/hash-64"), tableMethod = method)
+      val empty = Fixtures.contentTable(spark, Seq.empty)
+      def versions = Seq(engine.embTable(job.jobName), engine.tokTable(job.jobName),
+        engine.appTable(job.jobName)).map(engine.store.currentVersion)
+      val idxPath = TestSpark.tempDir("graft_rt_empty_idx_")
+      def indexFiles = {
+        import scala.jdk.CollectionConverters._
+        val root = new java.io.File(idxPath)
+        if (!root.exists) Seq.empty[(String, Long)]
+        else java.nio.file.Files.walk(root.toPath).iterator().asScala
+          .map(p => p.toString -> p.toFile.lastModified).toSeq.sorted
+      }
+      // fresh: the zero-row backfill leaves every table uncreated, and
+      // no index exists yet
+      engine.registerSource("content", empty)
+      engine.createJob(job)
+      val calls0 = CallCountingProvider.calls.get
+      Realtime.processBatch(engine, job, empty, indexPath = Some(idxPath))
+      assert(versions == Seq(None, None, None), s"$method: an empty batch must not create a table")
+      assert(CallCountingProvider.calls.get == calls0, s"$method: an empty batch must not call the provider")
+      // existing tables and index keep their version and files
+      engine.registerSource("content", Fixtures.contentTable(spark))
+      engine.refreshJob(job.jobName)
+      engine.buildVectorIndex(job.jobName, idxPath)
+      val existing = versions
+      val files = indexFiles
+      assert(existing.count(_.isDefined) == 2 && files.nonEmpty)
+      val calls1 = CallCountingProvider.calls.get
+      assert(calls1 > calls0, "the refresh embeds through the counted provider")
+      Realtime.processBatch(engine, job, empty, indexPath = Some(idxPath))
+      assert(versions == existing, s"$method: an empty batch must not commit a version")
+      assert(indexFiles == files, s"$method: an empty batch must not rewrite the index")
+      assert(CallCountingProvider.calls.get == calls1, s"$method: an empty batch must not call the provider")
+    }
+  }
+
   test("stream ≡ batch: processBatch and refreshJob write identical stores") {
     import spark.implicits._
     val base = Seq((1, "pizza", 1L), (2, "pencil", 2L), (3, "airplane", 3L))
@@ -1999,5 +2041,18 @@ class RealtimeSpec extends AnyFunSuite {
       Thread.sleep(100)
     assert(!persisted(cLive),
       "caches must release when OUR run terminates")
+  }
+}
+
+/** Counts provider calls JVM-wide (tasks embed with deserialized copies). */
+object CallCountingProvider {
+  val calls = new java.util.concurrent.atomic.AtomicLong(0)
+}
+final class CallCountingProvider extends providers.EmbeddingProvider {
+  private val inner = new providers.DeterministicHashProvider(64)
+  override def modelDim(model: String): Int = inner.modelDim(model)
+  override def generateEmbeddings(model: String, inputs: Seq[String]): Seq[Array[Float]] = {
+    CallCountingProvider.calls.incrementAndGet()
+    inner.generateEmbeddings(model, inputs)
   }
 }
