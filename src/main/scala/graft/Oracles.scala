@@ -440,7 +440,8 @@ object Oracles {
     * keep-first → corpus anti → blocklist → banded near-dup over
     * minhash_aux restricted to survivors) — shared by the
     * pipeline_ingest and ingest_audit oracles so the two replay ONE
-    * definition of every stage. Mirrors Queries.ingestStages.
+    * definition of every stage. Mirrors the base ("") configuration
+    * of Queries.ingestSpecs.
     */
   /** The ingestion-chain CTEs (exact dedup → blocklist → optional
     * decontamination vs the benchmark id tail → near-dup), ending in

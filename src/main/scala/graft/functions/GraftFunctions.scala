@@ -60,17 +60,22 @@ object GraftFunctions {
 
   /** True iff none of `terms` appears among the text's lowercase
     * alphanumeric tokens — the C4-style blocklist gate (Raffel et al.
-    * 2020 §2.2 "bad words" filter), shared by the batch ingestion
-    * chain (Queries.ingestStages) and the streaming ingest so the two
-    * can never drift. Tokenization matches the DuckDB replay:
+    * 2020 §2.2 "bad words" filter), the blocklist stage the batch
+    * and streaming ingestion chains share
+    * ([[graft.operators.IngestChain.blocklist]]), so the two can never
+    * drift. Tokenization matches the DuckDB replay:
     * regexp_split_to_array(lower(x), '[^a-z0-9]+') with empties
     * dropped. Pure built-ins — per-row, codegen'd, zero shuffle.
     */
   def blocklistClean(text: Column, terms: Seq[String]): Column =
-    size(array_intersect(
-      array_distinct(filter(split(lower(coalesce(text, lit(""))), "[^a-z0-9]+"),
-        x => x =!= "")),
+    size(array_intersect(array_distinct(sqlTokens(text)),
       array(terms.map(lit): _*))) === 0
+
+  /** Built-in tokenization matching DuckDB
+    * `list_filter(regexp_split_to_array(lower(x),'[^a-z0-9]+'), t -> t <> '')`.
+    */
+  private[graft] def sqlTokens(c: Column): Column =
+    filter(split(lower(coalesce(c, lit(""))), "[^a-z0-9]+"), x => x =!= "")
 
   /** BPE-ish token count: GPT-style pre-tokenizer regex (contractions,
     * letter runs, digit runs, punctuation runs). Closer to true BPE

@@ -430,22 +430,6 @@ object Ann {
     emb.withColumn("__cell",
       nearestCentroidUdf(emb, centroids)(col(vecCol)).getField("cell"))
 
-  /** IVF probe: exact cosine top-k over the nProbe cells nearest the
-    * query. The assigned table would be bucketed/partitioned by
-    * __cell at scale so the probe reads only nProbe partitions.
-    */
-  def ivfTopK(assigned: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[(Int, Array[Float])], queryVec: Array[Float],
-      k: Int, nProbe: Int = 2): DataFrame = {
-    val probeCells = nearestCells(centroids, queryVec, nProbe)
-    assigned
-      .filter(col("__cell").isin(probeCells.toIndexedSeq: _*))
-      .select(col(idCol).as("id"),
-        cosineSimilarity(col(vecCol), lit(queryVec)).as("cos"))
-      .orderBy(col("cos").desc, col("id").asc)
-      .limit(k)
-  }
-
   private[graft] def nearestCells(centroids: Array[(Int, Array[Float])],
       queryVec: Array[Float], nProbe: Int): Array[Int] = {
     def dist(a: Array[Float], b: Array[Float]): Double =

@@ -1484,33 +1484,6 @@ object Dedup {
 
   private val ngramSetUdf = udf((text: String, n: Int) => ngramSetScala(text, n))
 
-  /** Exact n-gram Jaccard similarity pairs within a blocking column
-    * (e.g. an LSH band key or IVF cell). This is the in-bucket exact
-    * VERIFIER — the block key must be high-cardinality; do not block
-    * on a low-cardinality attribute (source/label) or the pair stage
-    * goes O(n²/B). Use [[rareGramJaccardPairs]] for standalone
-    * similarity self-join at scale.
-    */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-      blockCol: String, n: Int = 2, threshold: Double = 0.2): DataFrame = {
-    // evalOnce fence (r16): the gram-less drop is a filter over this
-    // computed UDF column — unfenced, pushdown inlines ngramSet into
-    // the scan Filter and every row n-grams twice (the minHashSigOf
-    // shingle trap)
-    val prepped = docs.select(
-      col(blockCol).as("block"), col(idCol).as("id"),
-      graft.functions.GraftFunctions.evalOnce(
-        ngramSet(col(textCol), n)).as("grams"))
-      .filter(size(col("grams")) > 0)
-    val a = prepped.select(col("block"), col("id").as("id_a"), col("grams").as("g_a"))
-    val b = prepped.select(col("block"), col("id").as("id_b"), col("grams").as("g_b"))
-    a.join(b, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("jaccard", jaccard(col("g_a"), col("g_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("block", "id_a", "id_b", "jaccard")
-  }
-
   /** Candidate pairs + exact set-overlap counts (id_a, id_b, ni, na,
     * nb) via the df-capped inverted index — the shared core of
     * [[rareGramJaccardPairs]] and [[containmentPairs]], which differ
@@ -1930,39 +1903,6 @@ object Dedup {
       .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
   }
 
-  /** Embedding-cosine near-dup pairs within a blocking column. The
-    * block key must be high-cardinality (an LSH band key or IVF
-    * cell) — this is the in-bucket exact verifier, not a standalone
-    * blocking scheme. Cosine via the codegen'd native expression.
-    */
-  def embeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
-      blockCol: String, threshold: Double = 0.95): DataFrame = {
-    val prepped = emb.select(
-      col(blockCol).as("block"), col(idCol).as("id"), col(vecCol).as("vec"))
-    val a = prepped.select(col("block"), col("id").as("id_a"), col("vec").as("v_a"))
-    val b = prepped.select(col("block"), col("id").as("id_b"), col("vec").as("v_b"))
-    a.join(b, Seq("block"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", cosineSimilarity(col("v_a"), col("v_b")))
-      .filter(col("cos") >= threshold)
-      .select("block", "id_a", "id_b", "cos")
-  }
-
-  /** Scale-safe embedding near-dup: sign-LSH banded blocking
-    * (Charikar 2002 random hyperplanes, banded like MinHash-LSH) →
-    * exact cosine verification within buckets. Each vector gets
-    * `bands` keys of `bits` sign-bits each from `bands*bits`
-    * deterministic hyperplanes; a pair is a candidate iff it agrees
-    * on ALL bits of at least one band. Candidate generation is a
-    * shuffle on the band key — never an all-pairs join — and bucket
-    * count grows with 2^bits per band, so bucket size (and the
-    * quadratic in-bucket verify) shrinks geometrically as bits rise.
-    *
-    * Returns (id_a, id_b, cos) pairs with exact cosine ≥ threshold,
-    * deduplicated across bands. The hyperplanes come from
-    * [[Ann.hyperplanes]] (seeded xorshift — executor-stable and
-    * reproducible in the DuckDB oracle as literal plane values).
-    */
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) assignment stage:
     * k-means over the embedding column (reusing [[Ann.ivfCentroids]]'
     * deterministic Lloyd's iterations), returning each row with its
@@ -2045,6 +1985,21 @@ object Dedup {
       concat(lit(s"$bnd:"), key)
     }: _*)
 
+  /** Scale-safe embedding near-dup: sign-LSH banded blocking
+    * (Charikar 2002 random hyperplanes, banded like MinHash-LSH) →
+    * exact cosine verification within buckets. Each vector gets
+    * `bands` keys of `bits` sign-bits each from `bands*bits`
+    * deterministic hyperplanes; a pair is a candidate iff it agrees
+    * on ALL bits of at least one band. Candidate generation is a
+    * shuffle on the band key — never an all-pairs join — and bucket
+    * count grows with 2^bits per band, so bucket size (and the
+    * quadratic in-bucket verify) shrinks geometrically as bits rise.
+    *
+    * Returns (id_a, id_b, cos) pairs with exact cosine ≥ threshold,
+    * deduplicated across bands. The hyperplanes come from
+    * [[Ann.hyperplanes]] (seeded xorshift — executor-stable and
+    * reproducible in the DuckDB oracle as literal plane values).
+    */
   def embeddingLshBandedPairs(emb: DataFrame, idCol: String, vecCol: String,
       dim: Int, threshold: Double = 0.95, bits: Int = 8, bands: Int = 4,
       seed: Long = 42L): DataFrame = {

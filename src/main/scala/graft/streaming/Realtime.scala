@@ -239,9 +239,14 @@ object Realtime {
     * anything. Keyed by (batch, stage); see the inline contract for
     * replay semantics.
     *
-    * A single micro-batch is EXACTLY the batch chain over
-    * (store, batch) — stage parity is pinned in RealtimeSpec against
-    * Queries.ingestStages. Across micro-batches the near-dup history
+    * Each micro-batch runs the SAME [[graft.operators.IngestChain]]
+    * the batch chain entries run: the stage list is built once at
+    * START from the options above, every micro-batch evaluates it as
+    * one tagged frame, takes the funnel from ONE aggregate over it,
+    * and MERGEs the survivors. A single micro-batch is EXACTLY the
+    * batch chain over (store, batch) — RealtimeSpec pins the stream
+    * against the batch configurations (Queries.ingestSpecs) stage by
+    * stage. Across micro-batches the near-dup history
     * is the SURVIVOR set (a dropped row's signature never enters the
     * index), i.e. sequential-greedy semantics — the batch form's
     * pair-greedy in-batch rule sees dropped rows too, which an
@@ -401,18 +406,6 @@ object Realtime {
       nShards: Int, seed: String, langCol: String = "lang",
       expectSnapshot: Option[String] = None)
 
-  /** Operational note (r19): with MANY gates enabled, the micro-batch
-    * plan is deep and its batch-lifetime caches are persisted, not
-    * lineage-truncated (truncation would leak checkpoint blocks over
-    * a stream's unbounded lifetime, where persists release at batch
-    * end) — so the EXPLAIN STRING each action's execution-start event
-    * renders repeats the shared subtrees multiplicatively. Semantics
-    * and execution are unaffected (the cache runs once), but an
-    * unbounded `spark.sql.maxPlanStringLength` (the Spark default)
-    * lets that diagnostic render large on a loaded driver; deployments
-    * running the all-gates configuration should bound it (a few MB is
-    * far above any useful explain).
-    */
   def streamIngestPipeline(store: graft.sources.ParquetStore, table: String,
       sigTable: String, docs: DataFrame, idCol: String, textCol: String,
       checkpointDir: String, blocklist: Seq[String] = Nil,
@@ -676,309 +669,143 @@ object Realtime {
           .toDF("audit_key", "batch_id", "stage", "n_docs"),
         "audit_key")
     }
+    // the stage list, built ONCE for the stream's lifetime from the
+    // options above: the same IngestChain the batch chain entries run,
+    // each rule reading the micro-batch through the view it is given
+    val ic = graft.operators.IngestChain
+    val geometry = ic.Geometry(shingleN, nHashes, nBands, threshold)
+    val chain = ic.Chain(idCol, textCol, geometry, Seq(
+      Some(ic.exact(store, sigTable)),
+      Some(ic.blocklist(blocklist)),
+      // truncated: the view's texts, the tag join and (routed) the
+      // detection all read the clean
+      boilerplateGate.map(g => ic.boilerplate(b =>
+        graft.operators.Dedup.boilerplateRemoveAgainst(boilHashes.get, b,
+          idCol, textCol, g.spanTokens).transform(ic.truncate))),
+      // per-language rank lookup against the stream-lifetime CDF
+      // snapshot, keyed on the detected language when the router is on;
+      // a language the snapshot lacks gets a NULL pct and the gate
+      // abstains (see PercentileGate)
+      percentileGate.map(g => ic.percentile({ v =>
+        val lang = v.detected.getOrElse(
+          v.batch.select(col(idCol), col(g.langCol).as("__dl")))
+        // scored once and truncated: the lookup reads its rows twice
+        val scored = v.texts.join(lang, Seq(idCol))
+          .select(col(idCol), col("__dl"), graft.functions.GraftFunctions
+            .qualityScore(col(textCol)).as("__q"))
+          .transform(ic.truncate)
+        graft.operators.QualityCal.withPercentile(scored, pctCdf.get,
+          "__dl", col("__q")).select(col(idCol), col("pct"))
+      }, g.minPct, abstain = true)),
+      minQuality.map(ic.quality),
+      // the decontamination gate has its own threshold knob (default:
+      // the dedup threshold): a missed contaminated doc is the
+      // EXPENSIVE error, so pipelines typically gate stricter than
+      // they dedup
+      benchSigTable.map(bt => ic.decontam(store, bt, geometry,
+        decontamThreshold.getOrElse(threshold))),
+      semanticGate.map(g => ic.semantic(v =>
+        graft.operators.Dedup.contaminatedDocsSemanticBanded(v.batch,
+            semanticBench.get, idCol, g.vecCol, g.dim, g.threshold, g.bits,
+            g.bands)
+          .select(col("id").as(idCol)))),
+      // the near-dup stage reads the view's signatures, which the
+      // decontamination gate and the signature MERGE below share
+      Some(ic.nearDup(4, store, sigTable, geometry,
+        shareSig = true))).flatten,
+      // detection over the text that ships (the cleaned text with the
+      // boil stage on); a pure per-row map over the stream-lifetime
+      // scorer closure, truncated because the percentile lookup and the
+      // tag join both read it
+      langIdGate.map(g => ic.Route(g.langCol, v =>
+        v.texts.select(col(idCol), langIdScorer.get(col(textCol)).as("__dl"))
+          .transform(ic.truncate))))
     val writer = docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // LINEAGE-TRUNCATED, not just persisted (r20, the r19
-        // verdict's #5): every stage below references its
-        // predecessor 2-3 times (gate + join-back + audit count), so
-        // an untruncated chain's LOGICAL plan expands exponentially —
-        // measured 1.8e9-char plan strings by the near-dup stage with
-        // a plain parquet file source (so NOT a MemoryStream-
-        // inlining artifact), each micro-batch paying Catalyst
-        // re-analysis and stringification over that tree. A lazy
-        // localCheckpoint at each multiply-referenced boundary keeps
-        // the plan linear AND persists the delta for reuse (the batch
-        // chains' localCheckpoint(false) convention). The checkpoint
-        // blocks release via the ContextCleaner when the batch's
-        // references drop — delta-sized frames, bounded by one batch
-        // in flight; frames that stay CacheManager-persisted (the
-        // audit-count caches) keep their explicit unpersist below.
-        // Replay note: a lost checkpoint block fails the batch for a
-        // clean redelivery instead of silently recomputing against
-        // the post-MERGE store version — strictly safer than the
-        // cache-loss hazard the audit-capture comment below guards.
-        val b = batch.localCheckpoint(false)
+        // LINEAGE-TRUNCATED, not just persisted (r20): the stages read
+        // the batch in several branches, and every multiply-referenced
+        // frame of the chain is a lazy localCheckpoint, so the plan
+        // stays linear and each frame materializes once. The blocks
+        // release via the ContextCleaner when the batch's references
+        // drop — delta-sized frames, bounded by one batch in flight. A
+        // lost checkpoint block fails the batch for a clean redelivery
+        // instead of silently recomputing against the post-MERGE store.
+        val b = ic.truncate(batch)
         try {
           if (!b.isEmpty) {
-            val haveSigs = store.exists(sigTable)
-            val kept1 =
-              if (haveSigs)
-                graft.operators.Dedup.incrementalExactStored(store, sigTable,
-                  b, idCol, textCol)
-              else // first batch: empty corpus, within-batch rule only
-                graft.operators.Dedup.incrementalExact(b.limit(0), b,
-                  idCol, textCol)
-            val b1 = b.join(kept1.withColumnRenamed("id", idCol),
-              Seq(idCol), "left_semi")
-            val b2 =
-              if (blocklist.isEmpty) b1
-              else b1.filter(graft.functions.GraftFunctions
-                .blocklistClean(col(textCol), blocklist))
-            // every frame cached here lives for this batch's lifetime —
-            // gate survivors and their signature subsets are read by
-            // several downstream branches, and an unpersisted derived
-            // frame would re-execute the whole gate subplan per
-            // reference. `cached` is idempotent by reference so a
-            // frame needed by two reasons persists (and unpersists)
-            // exactly once.
-            val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-            val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-            def cached(df: DataFrame): DataFrame = {
-              if (!caches.exists(_ eq df)) { df.persist(lvl); caches += df }
-              df
-            }
-            // boilerplate-clean stage (r18): swap the blocklist
-            // survivors' text for the store-cleaned form and drop
-            // all-boilerplate docs — the inner join applies both at
-            // once, and every later gate (percentile scoring, decontam
-            // signing, near-dup shingling, the docs MERGE itself)
-            // reads the CLEANED text. The probe's rebuild join reads
-            // its input twice (occurrence rows + doc side), so the
-            // input is cached; the result is cached because three
-            // later branches derive from it.
-            val b2b = boilerplateGate.fold(b2) { g =>
-              val cleaned = graft.operators.Dedup.boilerplateRemoveAgainst(
-                  boilHashes.get, cached(b2), idCol, textCol, g.spanTokens)
-                .filter(col("n_kept") > 0)
-                .select(col(idCol), col("clean_text").as(textCol))
-              // truncated: three later branches reference the cleaned
-              // frame (detection, signing, the audit count)
-              b2.drop(textCol).join(cleaned, Seq(idCol))
-                .select(b2.columns.map(col): _*)
-                .localCheckpoint(false)
-            }
-            // language-ID routing stage (r19): DETECT each survivor's
-            // language before the percentile gate, so the CDF lookup
-            // keys on the detected language of the text that actually
-            // ships (the cleaned form when the boil stage is on) —
-            // production corpora don't arrive labeled. A pure per-row
-            // map over the stream-lifetime scorer closure: no shuffle,
-            // no state, replay-safe like the blocklist filter.
-            // cached unconditionally when the stage is on (review
-            // r19): without the percentile gate's cached(b2l) below,
-            // the per-row detection UDF would re-run in every
-            // downstream persist lineage (bSig, decontam, semantic,
-            // rows) — the gate's-INPUT-is-cached discipline applies to
-            // the router's OUTPUT for the same reason
-            val b2l = langIdGate.fold(b2b)(g =>
-              graft.functions.GraftFunctions.withDetectedLanguage(
-                b2b, textCol, g.langCol, langIdScorer.get)
-                .localCheckpoint(false))
-            // percentile-calibrated quality gate (r15): per-language
-            // rank lookup against the stream-lifetime CDF snapshot —
-            // a bounded distinct-pair probe against a BROADCAST frame,
-            // so like the raw gate it runs before the near-dup stage's
-            // shuffles and the row stream itself never shuffles. The
-            // projection back to the chain's columns keeps the
-            // ingested schema unchanged. Ordered BEFORE the raw gate
-            // so the funnel's lexical stage order (2_, 2b_, 2p_, 2q_)
-            // matches the pipeline's positional order. The gate's
-            // INPUT frame is cached unconditionally: the lookup
-            // references it twice (distinct-pair pass + join-back
-            // pass), and uncached each reference would re-run the
-            // accumulated-index exact probe and blocklist chain — plus
-            // the detection UDF when the routing stage is on (the
-            // two-reference trap qualityPercentiledOf's scaladoc warns
-            // about).
-            val b2p = percentileGate.fold(b2l) { g =>
-              // when a boil/routing stage ran, b2l is already the
-              // truncated (self-persistent) frame — a cached() on top
-              // would double-persist it
-              val gin =
-                if (boilerplateGate.isDefined || langIdGate.isDefined) b2l
-                else cached(b2l)
-              graft.operators.QualityCal.withPercentile(gin, pctCdf.get,
-                  g.langCol, graft.functions.GraftFunctions
-                    .qualityScore(col(textCol)))
-                .filter(col("pct").isNull || col("pct") >= g.minPct)
-                .select(b2l.columns.map(col): _*)
-            }
-            // optional RAW quality gate, the SAME shared expression the
-            // batch pipeline_c4 composition scores with — a per-row
-            // filter, so it runs BEFORE the near-dup stage's shuffles
-            val b2q = minQuality.fold(b2p)(q =>
-              b2p.filter(graft.functions.GraftFunctions
-                .qualityScore(col(textCol)) >= q))
-            // the batch's MinHash signatures, computed ONCE per
-            // micro-batch with a lifetime bounded by this batch —
-            // shared by the decontamination gate and the near-dup
-            // stage via their batchSig parameters (each would
-            // otherwise re-shingle + re-hash the rows internally AND
-            // leave a never-unpersisted cache entry per micro-batch,
-            // unbounded over an always-on stream)
-            // truncated: the decontam gate, the semantic-survivor
-            // restriction, and the index MERGE all read these
-            // signatures
-            val bSig = graft.operators.Dedup
-              .minHashSigOf(b2q, idCol, textCol, shingleN, nHashes)
-              .localCheckpoint(false)
-            // with the audit on, the per-stage frames are counted a
-            // second time after the chain materializes — cache the
-            // distinct ones (delta-sized) so those counts reuse the
-            // chain's execution instead of re-running the exact
-            // probe's accumulated-index scan per count
-            if (auditTable.isDefined) {
-              cached(b1)
-              if (blocklist.nonEmpty) cached(b2)
-              // b2b is already self-persistent (localCheckpoint above)
-              if (percentileGate.isDefined) cached(b2p)
-              if (minQuality.isDefined) cached(b2q)
-            }
-            try {
-              // optional decontamination gate: rows near-duplicating
-              // the PERSISTED benchmark signature index are dropped at
-              // ingest — eval leakage never reaches the corpus. The
-              // benchmark table is static, so the stage is stateless
-              // and replay-idempotent by construction.
-              // the gate gets its own threshold knob (default: the
-              // dedup threshold): a missed contaminated doc is the
-              // EXPENSIVE error here, so pipelines typically gate
-              // STRICTER (lower) than they dedup — one shared knob
-              // made that impossible (ADVICE r13)
-              val b2d = benchSigTable.fold(b2q) { bt =>
-                val contaminated = graft.operators.Dedup
-                  .contaminatedBatchNearDup(store, bt, b2q, idCol, textCol,
-                    shingleN, nHashes, nBands,
-                    decontamThreshold.getOrElse(threshold),
-                    batchSig = Some(bSig))
-                  .select(col("id").as(idCol))
-                b2q.join(contaminated, Seq(idCol), "left_anti")
-                  .localCheckpoint(false)
+            val view = chain.view(b)
+            // the tagged frame lazily reads the store's CURRENT version
+            // and the MERGEs below commit new ones, so it is truncated
+            // and fully materialized by the ONE funnel aggregate
+            // collected here, before the store mutates (a recompute
+            // after the merges would see this batch's own rows)
+            val tagged = ic.truncate(chain.tagged(view))
+            val counts = chain.funnel(tagged).collect()
+              .map(r => r.getString(0) -> r.getLong(1)).toSeq
+            if (counts.exists { case (st, n) =>
+                st == chain.stages.last.label && n > 0 }) {
+              val rows = chain.survivors(tagged)
+              // curriculum staging (r16) MERGEs FIRST, before the
+              // docs/sig merges: the per-row halves of the export
+              // order — shard, snapshot-percentile level, epoch sort
+              // key — keyed by doc id. All pure functions of (row,
+              // snapshot, seed), so a replay rewrites identical rows
+              // (seq is assigned at export time by curriculumOrder —
+              // see CurriculumExport's scaladoc for why seq cannot
+              // stream). The ORDER is the crash-replay contract:
+              // staged-then-docs heals (a crash after staging
+              // redelivers the batch, which re-stages and commits),
+              // whereas docs-then-staged would let the exact gate drop
+              // the redelivery BEFORE re-staging — a committed doc
+              // permanently missing from the curriculum. An orphan
+              // staged row (crash before the docs MERGE) lasts only
+              // until the at-least-once redelivery commits its doc.
+              curriculumExport.foreach { c =>
+                store.merge(c.table,
+                  curriculumStaged(rows, idCol, textCol, curCdf.get, c),
+                  idCol)
               }
-              // SEMANTIC decontamination rung (optional): exact-cosine
-              // hits against the persisted benchmark vectors drop
-              // next, adjacent to the shingle rung so the two ladder
-              // gates compose before the near-dup shuffles. The bench
-              // table is static and the sign-LSH planes are frozen
-              // (seed 42), so the stage is stateless/replay-safe like
-              // the shingle gate.
-              val b2s = semanticGate.fold(b2d) { g =>
-                val flagged = graft.operators.Dedup
-                  .contaminatedDocsSemanticBanded(b2d, semanticBench.get,
-                    idCol, g.vecCol, g.dim, g.threshold, g.bits, g.bands)
-                  .select(col("id").as(idCol))
-                b2d.join(flagged, Seq(idCol), "left_anti")
-                  .localCheckpoint(false)
-              }
-              // the near-dup stage sees only the gates' survivors
-              val sigD =
-                if (benchSigTable.isEmpty && semanticGate.isEmpty) bSig
-                else
-                  bSig.join(b2s.select(col(idCol).as("id")),
-                    Seq("id"), "left_semi").localCheckpoint(false)
-              val kept2 =
-                if (haveSigs)
-                  graft.operators.Dedup.incrementalNearDupStored(store, sigTable,
-                    b2s, idCol, textCol, shingleN, nHashes, nBands, threshold,
-                    batchSig = Some(sigD))
-                else
-                  graft.operators.Dedup.incrementalNearDup(b2s.limit(0), b2s,
-                    idCol, textCol, shingleN, nHashes, nBands, threshold,
-                    batchSig = Some(sigD))
-              val rows = b2s.join(kept2.withColumnRenamed("id", idCol),
-                  Seq(idCol), "left_semi")
-                .persist(lvl)
-              try {
-                // force full materialization BEFORE mutating the store:
-                // `rows` lazily reads the store's current version, and
-                // the MERGEs below commit new ones. Docs FIRST (see the
-                // crash-replay contract above).
-                val nFinal = rows.count()
-                // capture the funnel stage counts into driver-side
-                // longs BEFORE the store mutates (ADVICE r14): the
-                // per-stage frames are cached, but a lost cache block
-                // would lazily RE-READ the store's new post-merge
-                // version — e.g. 1_exact_dedup would re-run the exact
-                // probe against an index that now contains this
-                // batch's own hashes and record a wrong funnel number.
-                // Counts are delta-sized (one job per enabled stage
-                // over the batch-lifetime caches); only the audit
-                // WRITE stays after the merges, so a crash mid-merge
-                // never records a funnel for an uncommitted batch.
-                val auditCounts = auditTable.map { _ => Seq(
-                  Some("0_batch" -> b.count()),
-                  Some("1_exact_dedup" -> b1.count()),
-                  Some("2_blocklist" -> b2.count()),
-                  boilerplateGate.map(_ => "2b_boilerplate" -> b2b.count()),
-                  percentileGate.map(_ => "2p_percentile" -> b2p.count()),
-                  minQuality.map(_ => "2q_quality" -> b2q.count()),
-                  benchSigTable.map(_ => "3_decontam" -> b2d.count()),
-                  semanticGate.map(_ => "3s_semantic" -> b2s.count()),
-                  Some("4_near_dedup" -> nFinal)).flatten }
-                if (nFinal > 0) {
-                  // curriculum staging (r16) MERGEs FIRST, before the
-                  // docs/sig merges: the per-row halves of the export
-                  // order — shard, snapshot-percentile level, epoch
-                  // sort key — keyed by doc id. All pure functions of
-                  // (row, snapshot, seed), so a replay rewrites
-                  // identical rows (seq is assigned at export time by
-                  // curriculumOrder — see CurriculumExport's scaladoc
-                  // for why seq cannot stream). The ORDER is the
-                  // crash-replay contract: staged-then-docs heals
-                  // (a crash after staging redelivers the batch, which
-                  // re-stages and commits), whereas docs-then-staged
-                  // would let the exact gate drop the redelivery
-                  // BEFORE re-staging — a committed doc permanently
-                  // missing from the curriculum. An orphan staged row
-                  // (crash before the docs MERGE) lasts only until the
-                  // at-least-once redelivery commits its doc.
-                  curriculumExport.foreach { c =>
-                    store.merge(c.table,
-                      curriculumStaged(rows, idCol, textCol, curCdf.get, c),
-                      idCol)
-                  }
-                  store.merge(table, rows, idCol)
-                  // survivors' signatures MERGE from the SHARED frame
-                  // (sigD ⊇ rows' sigs; the join restricts) — the
-                  // text path would re-shingle + re-MinHash the very
-                  // rows the per-batch frame already carries
-                  graft.operators.Dedup.buildNearDupStoreFromSig(store,
-                    sigTable, rows, idCol, textCol, sigD, shingleN,
-                    nHashes, nBands,
-                    // planner provenance on a freshly-planned geometry
-                    // (ADVICE r18): a brand-new store has no self-heal
-                    // build to record it, so the first delivery's
-                    // build stamps it; identical re-assertion on later
-                    // deliveries, empty when the geometry came from
-                    // the store or explicit knobs
-                    extraProps = resolvedPlan.fold(
-                      Map.empty[String, String])(
-                      graft.operators.Dedup.plannerProps))
-                }
-                // per-micro-batch funnel audit (the streaming sibling
-                // of the batch ingest_audit_decontam): one row per
-                // (batch, stage) MERGEd on a composite key, so a
-                // crash-replayed batch OVERWRITES its own rows —
-                // last-delivery-wins, matching at-least-once semantics
-                // (a replay that finds its rows already ingested
-                // legitimately records 0 exact-stage survivors while
-                // 0_batch keeps the delivery size; the docs/sig tables
-                // converge identically either way). Stage ids are
-                // pipeline-positional and CONSTANT across gate
-                // configurations (a disabled gate emits no row) so
-                // dashboards never re-key when a gate toggles. The
-                // counts were captured into driver vals above, BEFORE
-                // the merges; only this write runs after them.
-                auditTable.foreach { at =>
-                  writeAudit(at, b.sparkSession, batchId, auditCounts.get)
-                }
-              } finally rows.unpersist()
-            } finally caches.foreach(_.unpersist())
+              store.merge(table, rows, idCol)
+              // survivors' signatures MERGE from the view's shared
+              // frame (a superset of the rows' signatures; the join
+              // restricts) — the text path would re-shingle +
+              // re-MinHash the very rows the batch already signed
+              graft.operators.Dedup.buildNearDupStoreFromSig(store,
+                sigTable, rows, idCol, textCol, view.sig, shingleN,
+                nHashes, nBands,
+                // planner provenance on a freshly-planned geometry
+                // (ADVICE r18): a brand-new store has no self-heal build
+                // to record it, so the first delivery's build stamps
+                // it; identical re-assertion on later deliveries, empty
+                // when the geometry came from the store or explicit
+                // knobs
+                extraProps = resolvedPlan.fold(Map.empty[String, String])(
+                  graft.operators.Dedup.plannerProps))
+            }
+            // per-micro-batch funnel audit (the streaming sibling of the
+            // batch ingest_audit_* entries): one row per (batch, stage)
+            // MERGEd on a composite key, so a crash-replayed batch
+            // OVERWRITES its own rows — last-delivery-wins, matching
+            // at-least-once semantics (a replay that finds its rows
+            // already ingested legitimately records 0 exact-stage
+            // survivors while 0_batch keeps the delivery size). Stage
+            // ids are pipeline-positional and CONSTANT across gate
+            // configurations (a disabled gate emits no row) so
+            // dashboards never re-key when a gate toggles. The counts
+            // were collected BEFORE the merges; only this write runs
+            // after them, so a crash mid-merge never records a funnel
+            // for an uncommitted batch.
+            auditTable.foreach(at =>
+              writeAudit(at, b.sparkSession, batchId, counts))
           } else auditTable.foreach { at =>
             // an EMPTY delivery still writes its funnel rows (all
             // zeros), so a dashboard can tell "batch never ran" from
             // "batch was empty" and batch ids stay gap-free
-            writeAudit(at, b.sparkSession, batchId, Seq(
-              Some("0_batch"), Some("1_exact_dedup"), Some("2_blocklist"),
-              boilerplateGate.map(_ => "2b_boilerplate"),
-              percentileGate.map(_ => "2p_percentile"),
-              minQuality.map(_ => "2q_quality"),
-              benchSigTable.map(_ => "3_decontam"),
-              semanticGate.map(_ => "3s_semantic"),
-              Some("4_near_dedup")).flatten.map(_ -> 0L))
+            writeAudit(at, b.sparkSession, batchId,
+              ("0_batch" +: chain.stages.map(_.label)).map(_ -> 0L))
           }
         } finally b.unpersist() // no-op on the checkpointed frame
         // (its blocks release via the ContextCleaner); kept so the

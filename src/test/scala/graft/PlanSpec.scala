@@ -139,8 +139,8 @@ class PlanSpec extends AnyFunSuite {
 
   test("gated-chain percentile gate probes the persisted calibration " +
       "snapshot — no corpus-wide qualityScore rehistogram (r19)") {
-    // ingestPctPass is the (pre-checkpoint) pass-set frame the gated
-    // chains semi-join on; the chains themselves localCheckpoint it,
+    // ingestPct is the (pre-checkpoint) percentile frame the gated
+    // chains' percentile stage reads; the chains localCheckpoint it,
     // hiding its subtree from their executed plans, so the pin reads
     // the frame directly. Before r19 the gate rebuilt the calibration
     // CDF from the FULL corpus (an unbounded documents scan through
@@ -150,7 +150,7 @@ class PlanSpec extends AnyFunSuite {
     // shape: every documents scan in the gate is batch-bounded
     // (pushed doc_id range) and the CDF comes from the persisted
     // snapshot store.
-    val plan = Queries.ingestPctPass(spark, dir, None)
+    val plan = Queries.ingestPct(spark, dir, None)
       .queryExecution.executedPlan.toString
     assert(plan.contains("graft_pctcdf_"),
       s"the gate must read the persisted CDF snapshot store:\n$plan")
@@ -173,7 +173,7 @@ class PlanSpec extends AnyFunSuite {
     // batch-bounded quality scoring — a corpus-wide scan regressing
     // into this plan is the scale-killer shape the gated-chain pin
     // above locks out
-    val (_, pass) = Queries.routedDetAndPass(spark, dir)
+    val (_, pass) = Queries.routedDetAndPct(spark, dir)
     val plan = pass.queryExecution.executedPlan.toString
     assert(plan.contains("graft_pctcdf_r_"),
       s"the routed gate must read the detected-lang CDF snapshot:\n$plan")
@@ -209,7 +209,7 @@ class PlanSpec extends AnyFunSuite {
     // snapshot store, and every live documents scan is batch-bounded
     // — a corpus-wide text scan regressing into the chain that runs
     // per ingest batch is the scale-killer shape these pins exist for
-    val (boil, _, pass) = Queries.routedBoilDetAndPass(spark, dir)
+    val (boil, _, pass) = Queries.routedBoilDetAndPct(spark, dir)
     val plan = pass.queryExecution.executedPlan.toString
     assert(plan.contains("graft_pctcdf_r_"),
       s"the routed+boil gate must read the detected-lang CDF snapshot:\n$plan")

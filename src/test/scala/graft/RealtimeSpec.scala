@@ -444,7 +444,7 @@ class RealtimeSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     // the batch chain over one snapshot, using the SAME public ops and
-    // the SAME constants as Queries.ingestStages
+    // the SAME constants as the base chain of Queries.ingestSpecs
     def batchChain(corpus: org.apache.spark.sql.DataFrame,
         batch: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val kept1 = Dedup.incrementalExact(corpus, batch, "doc_id", "text")
@@ -481,7 +481,7 @@ class RealtimeSpec extends AnyFunSuite {
 
     // 1) one micro-batch == the registered pipeline_ingest chain exactly
     val batch = docs.filter(col("doc_id") >= Queries.incrementalSplit)
-    val expectFull = ids(Queries.ingestStages(spark, dir)._4)
+    val expectFull = ids(Queries.ingestSpecs("").survivors(spark, dir))
     val s1 = mkStore()
     val src1 = TestSpark.tempDir("graft_sip_src1_")
     batch.coalesce(1).write.mode("append").parquet(src1)
@@ -1105,7 +1105,7 @@ class RealtimeSpec extends AnyFunSuite {
     // (text swap + all-boilerplate drop) → percentile gate scored on
     // the CLEANED text → shingle decontam signing the CLEANED text →
     // near-dup shingling the CLEANED text. The batch twin is the
-    // PRODUCTION entry itself (ingestDecontamTagged(percentile, boil)
+    // PRODUCTION entry itself (Queries.ingestSpecs("_boil")
     // — the frame behind the DuckDB-oracled pipeline_ingest_boil /
     // ingest_audit_boil), so stream, batch chain, and oracle are one
     // triangle.
@@ -1133,8 +1133,7 @@ class RealtimeSpec extends AnyFunSuite {
     QualityCal.buildPercentileStore(store, "quality_cdf", docs,
       "lang", "text", snapshot = "corpus-v1")
     // the production batch twin: survivors + their CLEANED text
-    val tagged = Queries.ingestDecontamTagged(spark, dir,
-      percentile = true, boil = true)
+    val tagged = Queries.ingestSpecs("_boil").tagged(spark, dir)._2
     val expect = tagged.filter(col("__s4"))
       .select(col("doc_id"), col("__ct")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -1397,7 +1396,7 @@ class RealtimeSpec extends AnyFunSuite {
       "detection reads the CLEANED text that ships (r19)") {
     // the full production configuration — BoilerplateGate + LangIdGate
     // + PercentileGate + decontamination — against the DuckDB-oracled
-    // batch twin (Queries.ingestRoutedBoilTagged, the frame behind
+    // batch twin (Queries.ingestSpecs("_routed_boil"), the frame behind
     // pipeline_ingest_routed_boil / ingest_audit_routed_boil), so
     // stream, batch chain, and oracle are one triangle. The pin's
     // point is the composition ORDER: detection runs AFTER the span
@@ -1438,7 +1437,7 @@ class RealtimeSpec extends AnyFunSuite {
       "lang", "text", snapshot = "corpus-v1")
     LangId.saveModel(store, "langid_model", model)
     // the batch twin IS the production entry
-    val tagged = Queries.ingestRoutedBoilTagged(spark, dir)
+    val tagged = Queries.ingestSpecs("_routed_boil").tagged(spark, dir)._2
       .localCheckpoint(false)
     val expect = tagged.filter(col("__s4"))
       .select(col("doc_id"), col("__ct"), col("__dl")).collect()
@@ -1527,26 +1526,19 @@ class RealtimeSpec extends AnyFunSuite {
         "DETECTED language")
   }
 
-  test("EVERYTHING-ON stream (boil + routed + percentile + shingle " +
-      "decontam + SEMANTIC + near-dup) ≡ the oracled batch twin (r20)") {
-    // the r19 verdict's #6: the semantic rung was never enabled
-    // simultaneously with routing + boil — this is the full-ladder-
-    // at-ingest posture (every gate the pipeline offers, composed at
-    // once) pinned against Queries.ingestRoutedBoilTagged(semantic =
-    // true), the frame behind the DuckDB-oracled
-    // pipeline_ingest_routed_boil_sem / ingest_audit_routed_boil_sem
-    // entries — stream, batch chain, and oracle are one triangle.
-    // The semantic flag set is a per-doc property of the STATIC
-    // vectors (deliberately independent of the boil text swap), so
-    // the stream carries the embeddings column and its banded probe
-    // must drop exactly the ladderSemanticFlags ids among the
-    // decontam survivors.
+  /** The everything-on fixture: a store holding the pre-split corpus
+    * (docs + signature index), the benchmark signatures and vectors,
+    * the span-df store, the detected-language calibration snapshot and
+    * the language-ID model; and the ingest batch (doc_id, text,
+    * embedding) — PRODUCTION SHAPE: no lang column. */
+  private def everythingOnFixture(prefix: String)
+      : (graft.sources.ParquetStore, org.apache.spark.sql.DataFrame) = {
     import graft.operators.{Dedup, LangId, QualityCal}
     import graft.functions.GraftFunctions
     val dir = "/root/testdata/sf0.01"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val docsRaw = spark.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "text") // PRODUCTION SHAPE: no lang column
+      .select("doc_id", "text")
     val existing = docsRaw.filter(col("doc_id") < Queries.incrementalSplit)
     val batch = docsRaw
       .filter(col("doc_id") >= Queries.incrementalSplit &&
@@ -1557,7 +1549,7 @@ class RealtimeSpec extends AnyFunSuite {
       col("doc_id") >= Queries.decontamNearDupSplit)
     val model = Queries.langIdModel(spark, dir)
     val store = new graft.sources.ParquetStore(
-      spark, TestSpark.tempDir("graft_allrb_store_"))
+      spark, TestSpark.tempDir(prefix + "store_"))
     store.merge("docs", existing, "doc_id")
     Dedup.buildNearDupStore(store, "sigs", existing, "doc_id", "text",
       shingleN = Queries.minHashShingleN,
@@ -1575,30 +1567,21 @@ class RealtimeSpec extends AnyFunSuite {
         scorer = LangId.scorer(model)),
       "lang", "text", snapshot = "corpus-v1")
     LangId.saveModel(store, "langid_model", model)
-    // the batch twin IS the production everything-on entry
-    val tagged = Queries.ingestRoutedBoilTagged(spark, dir, semantic = true)
-      .localCheckpoint(false)
-    val expect = tagged.filter(col("__s4"))
-      .select(col("doc_id"), col("__ct"), col("__dl")).collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
-    assert(expect.nonEmpty, "everything-on survivors must be nonempty")
-    // non-vacuity: every gate this configuration adds must DO work —
-    // the semantic rung must prune decontam survivors (or the pin
-    // collapses to the already-covered routed+boil case), and the
-    // clean must change some surviving doc's text
-    assert(tagged.filter(col("__s3")).count() >
-      tagged.filter(col("__s3s")).count(),
-      "the semantic rung must prune >= 1 shingle-decontam survivor")
-    assert(tagged.filter(col("__s4") && col("__ct") =!= col("text"))
-      .limit(1).count() == 1,
-      "at least one survivor's text must differ from raw after cleaning")
-    val src = TestSpark.tempDir("graft_allrb_src_")
+    (store, batch)
+  }
+
+  /** Streams `batch` as one micro-batch through every gate
+    * streamIngestPipeline offers, with the audit on. */
+  private def everythingOnStream(store: graft.sources.ParquetStore,
+      batch: org.apache.spark.sql.DataFrame, prefix: String)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val src = TestSpark.tempDir(prefix + "src_")
     batch.coalesce(1).write.mode("append").parquet(src)
-    val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
+    Realtime.streamIngestPipeline(store, "docs", "sigs",
       spark.readStream
         .schema("doc_id LONG, text STRING, embedding ARRAY<FLOAT>")
         .parquet(src),
-      "doc_id", "text", TestSpark.tempDir("graft_allrb_cp_"),
+      "doc_id", "text", TestSpark.tempDir(prefix + "cp_"),
       blocklist = Queries.blocklistTerms,
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
@@ -1614,6 +1597,74 @@ class RealtimeSpec extends AnyFunSuite {
         minDocs = Queries.boilerplateMinDocs)),
       langIdGate = Some(Realtime.LangIdGate("langid_model")),
       auditTable = Some("audit"))
+  }
+
+  test("EVERYTHING-ON micro-batch with the audit on: the funnel is ONE " +
+      "aggregate — exact Spark job count") {
+    // the stream evaluates the chain as one tagged frame and takes every
+    // audit count from one funnel aggregate; a count() per stage would
+    // show up here as extra jobs. Only the micro-batch's jobs count:
+    // they carry the query's id as the streaming local property, while
+    // the start-time checks run on the caller's thread.
+    val (store, batch) = everythingOnFixture("graft_jobs_")
+    val sc = spark.sparkContext
+    val byQuery = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach(byQuery.add)
+    }
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    val q = try {
+      val q = everythingOnStream(store, batch, "graft_jobs_")
+      assert(q.awaitTermination(360000),
+        "everything-on stream did not finish in time")
+      org.apache.spark.ListenerDrain.drain(sc)
+      q
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val jobs = byQuery.asScala.count(_ == q.id.toString)
+    assert(store.read("audit").count() == 8, "the funnel must be written")
+    assert(jobs == 82, s"everything-on micro-batch ran $jobs Spark jobs")
+  }
+
+  test("EVERYTHING-ON stream (boil + routed + percentile + shingle " +
+      "decontam + SEMANTIC + near-dup) ≡ the oracled batch twin (r20)") {
+    // the r19 verdict's #6: the semantic rung was never enabled
+    // simultaneously with routing + boil — this is the full-ladder-
+    // at-ingest posture (every gate the pipeline offers, composed at
+    // once) pinned against Queries.ingestSpecs("_routed_boil_sem"),
+    // the frame behind the DuckDB-oracled
+    // pipeline_ingest_routed_boil_sem / ingest_audit_routed_boil_sem
+    // entries — stream, batch chain, and oracle are one triangle.
+    // The semantic flag set is a per-doc property of the STATIC
+    // vectors (deliberately independent of the boil text swap), so
+    // the stream carries the embeddings column and its banded probe
+    // must drop exactly the ladderSemanticFlags ids among the
+    // decontam survivors.
+    val dir = "/root/testdata/sf0.01"
+    val (store, batch) = everythingOnFixture("graft_allrb_")
+    // the batch twin IS the production everything-on entry
+    val tagged = Queries.ingestSpecs("_routed_boil_sem").tagged(spark, dir)._2
+      .localCheckpoint(false)
+    val expect = tagged.filter(col("__s4"))
+      .select(col("doc_id"), col("__ct"), col("__dl")).collect()
+      .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+    assert(expect.nonEmpty, "everything-on survivors must be nonempty")
+    // non-vacuity: every gate this configuration adds must DO work —
+    // the semantic rung must prune decontam survivors (or the pin
+    // collapses to the already-covered routed+boil case), and the
+    // clean must change some surviving doc's text
+    assert(tagged.filter(col("__s3")).count() >
+      tagged.filter(col("__s3s")).count(),
+      "the semantic rung must prune >= 1 shingle-decontam survivor")
+    assert(tagged.filter(col("__s4") && col("__ct") =!= col("text"))
+      .limit(1).count() == 1,
+      "at least one survivor's text must differ from raw after cleaning")
+    val q = everythingOnStream(store, batch, "graft_allrb_")
     assert(q.awaitTermination(360000),
       "everything-on stream did not finish in time")
     // survivors ship the CLEANED text AND its detection — doc-for-doc

@@ -669,7 +669,7 @@ class ScaleSpec extends AnyFunSuite {
       }
     val semFlagged = Queries.ladderSemanticFlags(spark, base)
       .localCheckpoint(false)
-    val q = Queries.ingestDecontamTaggedOn(store, batch,
+    val q = Queries.ingestChain(store,
         corpusPred = col("id") < Queries.incrementalSplit ||
           col("id") >= maxBase,
         batchPred = col("id") >= Queries.incrementalSplit &&
@@ -678,6 +678,7 @@ class ScaleSpec extends AnyFunSuite {
           col("id") < maxBase,
         semFlagged = Some(semFlagged),
         boilCleaned = boilCleaned)
+      .tagged(batch)
       .filter(col("__s4")).select("doc_id")
     // the zero-corpus-text lock, asserted ON THE RUNG: every stage of
     // the composed chain reads the narrow signature index (and the
