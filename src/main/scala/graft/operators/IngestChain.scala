@@ -33,8 +33,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   * a stage means. Exact dedup runs over the whole batch in either
   * form, and every later gate but near-dup decides per doc (against a
   * static benchmark, calibration snapshot or span-df store), so
-  * computing its set over the whole batch and ANDing the flags keeps
-  * exactly the rows a filter cascade keeps.
+  * computing its set over any superset of the survivors before it and
+  * ANDing the flags keeps exactly the rows a filter cascade keeps.
+  * The chain's head — its leading row predicates and whole-batch sets
+  * — narrows the batch first ([[View.rows]]), so the later sets, the
+  * clean and the signatures only cost what a cascade would spend on
+  * the head's survivors (nothing for a redelivered batch that exact
+  * dedup drops whole).
   */
 private[graft] object IngestChain {
 
@@ -67,15 +72,20 @@ private[graft] object IngestChain {
   /** Keeps the rows whose text passes — the raw text before a [[Clean]]
     * stage, the cleaned text after it. */
   final case class Keep(pred: Column => Column) extends Rule
-  /** Keeps the docs whose ids the set lists (each id at most once). */
-  final case class Pass(ids: View => DataFrame) extends Rule
-  /** Drops the docs whose ids the set lists (each id at most once). */
+  /** Keeps the docs whose ids the set lists (each id at most once).
+    * A `whole` set reads the whole batch ([[View.batch]]); any other
+    * set need only cover [[View.rows]]. */
+  final case class Pass(ids: View => DataFrame, whole: Boolean = false)
+      extends Rule
+  /** Drops the docs whose ids the set lists (each id at most once);
+    * the set need only cover [[View.rows]]. */
   final case class Drop(ids: View => DataFrame) extends Rule
   /** Swaps each doc's text for its cleaned text and drops the docs the
-    * clean left empty. The frame is (id, clean_text, n_kept) over the
-    * batch and must already be lineage-truncated: the view's texts, the
-    * tag join and (batch side) the percentile scoring all read it. */
-  final case class Clean(cleaned: DataFrame => DataFrame) extends Rule
+    * clean left empty. The frame is (id, clean_text, n_kept) over at
+    * least [[View.rows]] and must already be lineage-truncated: the
+    * view's texts, the tag join and (batch side) the percentile scoring
+    * all read it. */
+  final case class Clean(cleaned: View => DataFrame) extends Rule
   /** The last stage: given the view and the earlier gates' survivors as
     * (id, text), returns the ids no earlier doc near-duplicates. */
   final case class NearDup(kept: (View, DataFrame) => DataFrame) extends Rule
@@ -91,13 +101,29 @@ private[graft] object IngestChain {
   final class View private[IngestChain] (chain: Chain, val batch: DataFrame) {
     def id: String = chain.id
     def text: String = chain.text
+    /** The sets of the chain's head, each computed once (truncated):
+      * they narrow [[rows]] and join the tag union. */
+    private[IngestChain] lazy val headSets: Map[String, DataFrame] =
+      chain.head.collect { case s @ Stage(_, _, Pass(ids, _)) =>
+        s.flag -> ids(this).transform(truncate) }.toMap
+    /** The batch rows that pass the chain's head: a row the head drops
+      * can pass no later flag, so the later stages' sets, the clean and
+      * [[texts]] need read only these (truncated: they all do). Built
+      * on first use, so stages given precomputed inputs do not pay for
+      * it. */
+    lazy val rows: DataFrame = chain.head.foldLeft(batch) {
+      case (df, Stage(_, _, Keep(pred))) =>
+        df.filter(coalesce(pred(col(text)), lit(false)))
+      case (df, s) =>
+        df.join(broadcast(headSets(s.flag)), Seq(id), "left_semi")
+    }.transform(truncate)
     /** The boilerplate stage's clean, when the chain has one. */
-    val cleaned: Option[DataFrame] = chain.stages.collectFirst {
-      case Stage(_, _, Clean(c)) => c(batch) }
-    /** (id, text) of every doc as it would ship: the cleaned text (docs
-      * the clean emptied are absent) after a boilerplate stage, else
-      * the raw text. */
-    val texts: DataFrame = cleaned.fold(batch.select(col(id), col(text)))(c =>
+    lazy val cleaned: Option[DataFrame] = chain.stages.collectFirst {
+      case Stage(_, _, Clean(c)) => c(this) }
+    /** (id, text) as each doc would ship: the cleaned text (docs the
+      * clean emptied are absent) after a boilerplate stage, else the
+      * raw text of [[rows]]. */
+    lazy val texts: DataFrame = cleaned.fold(rows.select(col(id), col(text)))(c =>
       c.filter(col("n_kept") > 0).select(col(id), col("clean_text").as(text)))
     /** (id, `__dl`), when the chain routes. */
     lazy val detected: Option[DataFrame] = chain.route.map(_.detect(this))
@@ -117,6 +143,15 @@ private[graft] object IngestChain {
     /** The flag of the last stage: a survivor has it set. */
     def last: String = stages.last.flag
 
+    /** The leading stages that read the raw batch row by row (`Keep`)
+      * or whole (`Pass(_, whole = true)`): [[View.rows]] holds their
+      * survivors. */
+    def head: Seq[Stage] = stages.takeWhile(_.rule match {
+      case Keep(_) => true
+      case Pass(_, whole) => whole
+      case _ => false
+    })
+
     def view(batch: DataFrame): View = new View(this, batch)
 
     def tagged(batch: DataFrame): DataFrame = tagged(view(batch))
@@ -127,7 +162,8 @@ private[graft] object IngestChain {
     def tagged(v: View): DataFrame = {
       def marker(s: Stage) = s"__m${s.flag}"
       val sets = stages.collect {
-        case s @ Stage(_, _, Pass(ids)) => s -> ids(v)
+        case s @ Stage(_, _, Pass(ids, _)) =>
+          s -> v.headSets.getOrElse(s.flag, ids(v))
         case s @ Stage(_, _, Drop(ids)) => s -> ids(v)
       }
       // ONE materialization for every per-doc set: a kind-tagged union,
@@ -154,11 +190,14 @@ private[graft] object IngestChain {
       stages.foreach { s =>
         val here = s.rule match {
           case Keep(pred) => prev && coalesce(pred(txt), lit(false))
-          case Pass(_) => prev && has(marker(s))
+          case Pass(_, _) => prev && has(marker(s))
           case Drop(_) => prev && !has(marker(s))
           case Clean(_) => txt = col("__ct"); prev && has("__mb")
           case NearDup(kept) =>
-            val in = t.filter(prev).select(col(id), txt.as(text))
+            // right after the head, the survivors are the view's rows:
+            // near-dup reads them without going through the tag join
+            val in = if (head == stages.init) v.rows.select(col(id), col(text))
+              else t.filter(prev).select(col(id), txt.as(text))
             t = t.join(broadcast(kept(v, in).select(col(id),
               lit(true).as(marker(s)))), Seq(id), "left")
             prev && has(marker(s))
@@ -214,24 +253,26 @@ private[graft] object IngestChain {
   }
 
   /** Exact dedup against the signature index's norm hashes plus the
-    * keep-first rule within the batch. A store with no index yet (a
-    * stream's first batch) dedups within the batch alone. */
+    * keep-first rule within the WHOLE batch (a whole set: which copy of
+    * a duplicate is first does not depend on any later gate). A store
+    * with no index yet (a stream's first batch) dedups within the
+    * batch alone. */
   def exact(store: ParquetStore, sigTable: String,
       corpusPred: Option[Column] = None): Stage =
-    Stage("__s1", "1_exact_dedup", Pass { v =>
+    Stage("__s1", "1_exact_dedup", Pass({ v =>
       (if (store.exists(sigTable))
         Dedup.incrementalExactStored(store, sigTable, v.batch, v.id, v.text,
           corpusPred = corpusPred)
       else Dedup.incrementalExact(v.batch.limit(0), v.batch, v.id, v.text))
         .select(col("id").as(v.id))
-    })
+    }, whole = true))
 
   /** The C4 blocklist over the RAW text (no terms: keeps every row). */
   def blocklist(terms: Seq[String]): Stage =
     Stage("__s2", "2_blocklist", Keep(t =>
       if (terms.isEmpty) lit(true) else GraftFunctions.blocklistClean(t, terms)))
 
-  def boilerplate(clean: DataFrame => DataFrame): Stage =
+  def boilerplate(clean: View => DataFrame): Stage =
     Stage("__s2b", "2b_boilerplate", Clean(clean))
 
   /** The per-language percentile gate over `scored`'s (id, pct): keeps

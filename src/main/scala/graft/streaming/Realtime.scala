@@ -671,7 +671,10 @@ object Realtime {
     }
     // the stage list, built ONCE for the stream's lifetime from the
     // options above: the same IngestChain the batch chain entries run,
-    // each rule reading the micro-batch through the view it is given
+    // each rule reading the micro-batch through the view it is given.
+    // Every stage after exact dedup and the blocklist reads only their
+    // survivors (view.rows), as the filter cascade did: a replayed
+    // batch that exact dedup drops costs the later stages nothing
     val ic = graft.operators.IngestChain
     val geometry = ic.Geometry(shingleN, nHashes, nBands, threshold)
     val chain = ic.Chain(idCol, textCol, geometry, Seq(
@@ -679,8 +682,8 @@ object Realtime {
       Some(ic.blocklist(blocklist)),
       // truncated: the view's texts, the tag join and (routed) the
       // detection all read the clean
-      boilerplateGate.map(g => ic.boilerplate(b =>
-        graft.operators.Dedup.boilerplateRemoveAgainst(boilHashes.get, b,
+      boilerplateGate.map(g => ic.boilerplate(v =>
+        graft.operators.Dedup.boilerplateRemoveAgainst(boilHashes.get, v.rows,
           idCol, textCol, g.spanTokens).transform(ic.truncate))),
       // per-language rank lookup against the stream-lifetime CDF
       // snapshot, keyed on the detected language when the router is on;
@@ -688,7 +691,7 @@ object Realtime {
       // abstains (see PercentileGate)
       percentileGate.map(g => ic.percentile({ v =>
         val lang = v.detected.getOrElse(
-          v.batch.select(col(idCol), col(g.langCol).as("__dl")))
+          v.rows.select(col(idCol), col(g.langCol).as("__dl")))
         // scored once and truncated: the lookup reads its rows twice
         val scored = v.texts.join(lang, Seq(idCol))
           .select(col(idCol), col("__dl"), graft.functions.GraftFunctions
@@ -705,7 +708,7 @@ object Realtime {
       benchSigTable.map(bt => ic.decontam(store, bt, geometry,
         decontamThreshold.getOrElse(threshold))),
       semanticGate.map(g => ic.semantic(v =>
-        graft.operators.Dedup.contaminatedDocsSemanticBanded(v.batch,
+        graft.operators.Dedup.contaminatedDocsSemanticBanded(v.rows,
             semanticBench.get, idCol, g.vecCol, g.dim, g.threshold, g.bits,
             g.bands)
           .select(col("id").as(idCol)))),
