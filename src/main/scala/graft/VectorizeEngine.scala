@@ -376,22 +376,26 @@ final class VectorizeEngine(
     * would lose the tokens of already-embedded rows forever.
     *
     * `rows` are source rows with at most one row per key; the caller
-    * owns their persistence. The embedded rows are persisted here so
-    * that the index upsert, which reads them after the vector MERGE,
-    * does not repeat the provider calls.
+    * owns their persistence. With an index, the embedded rows are
+    * persisted here so that the index upsert, which reads them after
+    * the vector MERGE, does not repeat the provider calls; without
+    * one, the MERGE reads them once (a compacting MERGE persists its
+    * input itself).
     */
   private[graft] def upsertRows(job: VectorizeJob, rows: DataFrame,
       indexPath: Option[String] = None): Unit = writing(job) {
     mergeTokens(job, rows)
     val inputs = Pipeline.renderInputs(rows, job.primaryKey, job.srcColumns)
-    val embedded = Pipeline.embed(inputs, provider(job), job.model.apiName)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val embedded0 = Pipeline.embed(inputs, provider(job), job.model.apiName)
+    val embedded =
+      if (indexPath.isEmpty) embedded0
+      else embedded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // an empty batch commits no vectors and leaves the index as it is
       if (mergeVectors(job, rows, embedded))
         indexPath.foreach(p =>
           upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
-    } finally embedded.unpersist()
+    } finally if (indexPath.nonEmpty) embedded.unpersist()
   }
 
   private def mergeTokens(job: VectorizeJob, rows: DataFrame): Unit =

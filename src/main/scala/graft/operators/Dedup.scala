@@ -852,15 +852,15 @@ object Dedup {
       batchSig: Option[DataFrame] = None): DataFrame = {
     val rows = numHashes / bands
     // batch signatures back three branches (banding + two shingle
-    // join-backs) — the same persist contract as minHashLshPairs,
-    // delta-sized here. A caller-provided batchSig (already persisted,
+    // join-backs): lineage-truncated, delta-sized, and released with
+    // the returned frame (a persist here outlived the query in the
+    // CacheManager). A caller-provided batchSig (already persisted,
     // caller-managed lifetime — the streaming chain's contract) is
     // used as-is, so a micro-batch never re-shingles.
     batchSig.foreach(validateBatchSig(_, shingleN, numHashes,
       "incrementalNearDup"))
     val bSig = batchSig.getOrElse(
-      minHashSigOf(batch, idCol, textCol, shingleN, numHashes)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      IngestChain.truncate(minHashSigOf(batch, idCol, textCol, shingleN, numHashes)))
     val bBanded = bandKeysOf(bSig, bands, rows)
     val keySet = bBanded.select("band", "band_key").distinct()
     // map-side gate: corpus bands that collide with a batch band key

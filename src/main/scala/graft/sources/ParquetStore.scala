@@ -1,9 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, count, hash, lit, max, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode, SparkSession}
 
 /** Snapshot-versioned Parquet table with key-hash-bucketed upsert
   * (MERGE) semantics.
@@ -12,47 +14,67 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `INSERT ... ON CONFLICT (pkey) DO UPDATE` (worker/src/ops.rs:8-70)
   * and bulk update-joins (worker/src/ops.rs:95-160). Spark+Parquet has
   * no in-place upsert, so rows live in `nBuckets` key-hash buckets
-  * (`pmod(hash(key), nBuckets)` — deterministic across sessions) and
-  * a MERGE rewrites ONLY the buckets its update keys fall into:
-  * per-merge I/O is O(|table| * touchedBuckets / nBuckets + |batch|),
-  * not O(|table|). At 100 TB with a realistic bucket count the write
-  * path scales with the batch, which is the property Delta/Iceberg
-  * MERGE gives and a naive copy-on-write-the-world store does not.
+  * (`pmod(hash(key), nBuckets)` — deterministic across sessions) plus
+  * at most one small merge-on-read *delta*:
   *
-  * Sizing: `nBuckets` is the one layout knob. It sets the MERGE
-  * granularity (thousands of buckets at 100 TB so a merge rewrites a
-  * thin slice; 16 fits the sf-scale stores) and is pinned per table
+  *  - A MERGE into a bucketed table reads and rewrites no bucket. It
+  *    writes a new delta — the old delta's rows whose key the batch
+  *    does not carry, plus the batch — as one new version dir and
+  *    commits it beside the unchanged bucket map: O(|delta| + |batch|)
+  *    per MERGE, like the reference's O(batch) upsert.
+  *  - Compaction is the copy-on-write MERGE: the delta's rows replace
+  *    same-key rows of the buckets they hash into, and ONLY those
+  *    buckets are rewritten (O(|table| * touched / nBuckets)), which
+  *    clears the delta. It runs when a delta's written bytes pass
+  *    min(mean base-bucket bytes, `spark.sql.autoBroadcastJoinThreshold`)
+  *    — so the delta stays smaller than a bucket and broadcastable —
+  *    and before a [[delete]], on a MERGE that widens the schema, and on
+  *    the first MERGE into a flat (overwrite) or legacy snapshot. A
+  *    negative threshold (broadcasts off) makes every MERGE copy on
+  *    write.
+  *
+  * Sizing: `nBuckets` is the one layout knob. It sets the compaction
+  * granularity (thousands of buckets at 100 TB so a compaction rewrites
+  * a thin slice; 16 fits the sf-scale stores) and is pinned per table
   * by the `#n` header. Writer tasks and files per bucket are not
   * knobs: [[bucketedWrite]] rebalances on the bucket and lets adaptive
   * execution size the writers from the data being written.
   *
   * Layout per table:
   *   `_CURRENT`       — monotonic global version pointer (liveness)
-  *   `_BUCKETS`       — header lines, then "bucket version" lines:
+  *   `_BUCKETS`       — header lines, then "bucket version bytes" lines:
   *                      which snapshot dir holds each bucket's current
-  *                      data (-1 = flat, unbucketed snapshot from
-  *                      overwrite()). Header lines start with `#`:
+  *                      data and its parquet bytes (-1 = flat,
+  *                      unbucketed snapshot from overwrite()). Header
+  *                      lines start with `#`:
   *                      `#n <buckets>` pins the bucket count,
   *                      `#schema <json>` is the schema the commit wrote
   *                      (so a read needs no parquet schema inference,
   *                      which is a Spark job), `#token <uuid>` is unique
   *                      per commit (a dropped and re-created table that
   *                      re-commits an identical bucket map at `v_0`
-  *                      still reads as new content)
+  *                      still reads as new content), and
+  *                      `#delta <version> <key>` names the delta dir and
+  *                      the key its rows replace base rows by
   *   `v_<n>/__bucket=<b>/` — parquet for the buckets rewritten at n
+  *   `v_<n>/`         — or, for a delta version, its unbucketed rows
   *
   * [[read]] returns one DataFrame per committed `_BUCKETS` content and
   * hands the same object back until the next commit: no file listing,
   * no schema job, and callers may key caches on the handle by
-  * reference. Tables committed before the header existed are read
-  * with schema inference, uncached.
+  * reference. With a delta the handle is the base buckets null-safely
+  * (`<=>`) left-anti-joined against the broadcast delta keys, union the
+  * delta: last writer per key, never all-pairs. A table without a
+  * delta reads its buckets alone. Tables committed before the header
+  * existed are read with schema inference, uncached.
   *
   * Both pointer files flip via overwriting rename (posix/HDFS rename
   * onto an existing path is atomic), so readers never observe a
   * missing or partial pointer; a failed merge leaves the previous
   * pointers intact — idempotent-retry safe, which is what makes the
   * streaming path's at-least-once delivery correct (SURVEY §7.4).
-  * Old snapshot dirs are GC'd once no bucket references them.
+  * Old snapshot dirs are GC'd once neither the bucket map nor the
+  * delta references them, after one commit of grace (see [[cleanOld]]).
   *
   * Concurrency contract: ONE writer per table (the engine is the
   * single writer; streaming micro-batches are serialized by
@@ -60,8 +82,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * counter — multi-writer needs the optimistic-commit protocol of a
   * real table format, which is part of what the Delta swap buys.
   * Readers are safe against a single concurrent writer: pointer flips
-  * are atomic renames, and GC retains the previous bucket map's
-  * versions for one commit cycle. Catalog-level changes made by THE
+  * are atomic renames, and GC retains the previous commit's bucket
+  * and delta versions for one commit cycle, so a handle read before a
+  * commit still reads after it. Catalog-level changes made by THE
   * writer engine (job/prompt create, delete) propagate to reader
   * engines over the same warehouse without restart via
   * VectorizeEngine.refreshCatalog — the poll-based analogue of the
@@ -75,7 +98,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     extends Serializable {
-  import ParquetStore.BucketsFile
+  import ParquetStore.{BucketsFile, Delta}
 
   /** The session this store reads/writes with — for helpers that
     * build driver-side frames destined for this store (review r19:
@@ -262,17 +285,25 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val lines = raw.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
     def header(tag: String) =
       lines.find(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag ").trim)
+    // "bucket version" lines, with the bucket's bytes since the delta
+    // store; a commit made before then has no bytes column
+    val entries = lines.filterNot(_.startsWith("#")).map(_.split("\\s+"))
     Some(BucketsFile(raw, header("n").map(_.toInt),
       header("schema").map(j => DataType.fromJson(j).asInstanceOf[StructType]),
       header("token"),
-      lines.filterNot(_.startsWith("#")).map { line =>
-        val Array(b, v) = line.split("\\s+")
-        b.toInt -> v.toLong
-      }.toMap))
+      entries.map(e => e(0).toInt -> e(1).toLong).toMap,
+      entries.collect { case Array(b, _, n) => b.toInt -> n.toLong }.toMap,
+      header("delta").map { d =>
+        val Array(v, key) = d.split(" ", 2)
+        Delta(v.toLong, key)
+      }))
   }
 
-  private def readBucketMap(table: String): Map[Int, Long] =
-    readBucketsFile(table).map(_.map).getOrElse(legacyBucketMap(table))
+  /** The committed state of an existing table: its `_BUCKETS`, or for a
+    * legacy table without one, its flat snapshot and no header. */
+  private def state(table: String): BucketsFile =
+    readBucketsFile(table).getOrElse(
+      BucketsFile("", None, None, None, legacyBucketMap(table), Map.empty, None))
 
   // Migration: a pre-bucketing table has _CURRENT but no _BUCKETS (the
   // old format stored one flat snapshot at the current version).
@@ -295,16 +326,16 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   def read(table: String): DataFrame = {
     if (!exists(table))
       throw new IllegalStateException(s"no such table: $root/$table")
-    readBucketsFile(table) match {
-      case Some(f) if f.schema.isDefined && f.token.isDefined =>
-        val cached = handles.get(table)
-        if (cached != null && cached._1 == f.raw) cached._2
-        else {
-          val df = scan(table, f.map, f.schema)
-          handles.put(table, (f.raw, df))
-          df
-        }
-      case f => scan(table, f.fold(legacyBucketMap(table))(_.map), None)
+    val f = state(table)
+    if (f.schema.isEmpty || f.token.isEmpty) scan(table, f)
+    else {
+      val cached = handles.get(table)
+      if (cached != null && cached._1 == f.raw) cached._2
+      else {
+        val df = scan(table, f)
+        handles.put(table, (f.raw, df))
+        df
+      }
     }
   }
 
@@ -313,19 +344,32 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   @transient private lazy val handles =
     new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
 
-  /** Parquet scan of the buckets in `m`, typed by `schema` when the
-    * commit recorded one and inferred (a Spark job) otherwise.
+  /** Parquet scan of a commit's buckets, typed by its schema when the
+    * commit recorded one and inferred (a Spark job) otherwise; with a
+    * delta, the base rows the delta does not replace, plus the delta.
     */
-  private def scan(table: String, m: Map[Int, Long], schema: Option[StructType]): DataFrame = {
-    val paths = bucketDataPaths(table, m)
+  private def scan(table: String, f: BucketsFile): DataFrame = {
+    val paths = bucketDataPaths(table, f.map)
     if (paths.isEmpty)
       throw new IllegalStateException(s"no data for table: $root/$table")
     // recursiveFileLookup disables partition-directory inference — the
     // leaf dirs come from different snapshot versions, which would
     // otherwise trip "conflicting directory structures".
     val reader = spark.read.option("recursiveFileLookup", "true")
-    schema.fold(reader)(reader.schema).parquet(paths: _*)
+    val base = f.schema.fold(reader)(reader.schema).parquet(paths: _*)
+    f.delta.fold(base) { d =>
+      // the delta is below the broadcast threshold by construction
+      // (compaction bound); null-safe, so a null-key delta row
+      // replaces the base's null-key row
+      val delta = deltaRows(table, d, f.schema.get)
+      base.join(broadcast(delta.select(col(d.key).as("__dk"))),
+        base(d.key) <=> col("__dk"), "left_anti").unionByName(delta)
+    }
   }
+
+  private def deltaRows(table: String, d: Delta, schema: StructType,
+      session: SparkSession = spark): DataFrame =
+    session.read.schema(schema).parquet(versionDir(table, d.v))
 
   /** read(), or None when the table does not exist. */
   def readOption(table: String): Option[DataFrame] =
@@ -375,7 +419,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   }
 
   private def commit(table: String, v: Long, bucketMap: Map[Int, Long],
-      nb: Int, written: StructType, prevReferenced: Set[Long] = Set.empty): Unit = {
+      bytes: Map[Int, Long], nb: Int, written: StructType, delta: Option[Delta] = None,
+      prevReferenced: Set[Long] = Set.empty): Unit = {
     // Pointer-write ORDER is crash-critical, and differs by case:
     // - first commit: _BUCKETS before _CURRENT, so exists() only turns
     //   true once the map it implies is in place (a crash between the
@@ -389,12 +434,15 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     //   v+1 directory.
     // The "#n" header pins the table's bucket count (self-describing
     // layout — see tableBuckets); "#schema" is the written schema less
-    // the bucket partition column, and "#token" makes every commit's
-    // content unique (see the class doc).
+    // the bucket partition column, "#token" makes every commit's
+    // content unique, and "#delta" names the delta (see the class doc).
     val schema = StructType(written.filterNot(_.name == "__bucket"))
     val bucketsContent =
       (Seq(s"#n $nb", s"#schema ${schema.json}", s"#token ${java.util.UUID.randomUUID()}") ++
-        bucketMap.toSeq.sortBy(_._1).map { case (b, ver) => s"$b $ver" }).mkString("\n")
+        delta.map(d => s"#delta ${d.v} ${d.key}") ++
+        bucketMap.toSeq.sortBy(_._1).map { case (b, ver) =>
+          s"$b $ver" + bytes.get(b).fold("")(n => s" $n")
+        }).mkString("\n")
     if (currentVersion(table).isEmpty) {
       atomicWrite(bucketsPath(table), bucketsContent)
       atomicWrite(pointer(table), v.toString)
@@ -402,17 +450,17 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       atomicWrite(pointer(table), v.toString)
       atomicWrite(bucketsPath(table), bucketsContent)
     }
-    cleanOld(table, v, bucketMap, prevReferenced)
+    cleanOld(table, v, bucketMap.values.toSet ++ delta.map(_.v), prevReferenced)
   }
 
   /** Full overwrite (initial backfill / small dimension tables /
     * catalog). Written flat — a subsequent merge re-buckets.
     */
   def overwrite(table: String, df: DataFrame): Unit = {
-    val prev = readBucketMap(table).values.toSet
+    val prev = state(table).versions
     val v = currentVersion(table).getOrElse(-1L) + 1L
     df.write.mode(SaveMode.Overwrite).parquet(versionDir(table, v))
-    commit(table, v, Map(-1 -> v), tableBuckets(table), df.schema, prev)
+    commit(table, v, Map(-1 -> v), Map.empty, tableBuckets(table), df.schema, None, prev)
   }
 
   /** [[overwrite]] with the snapshot's properties committed
@@ -443,7 +491,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   def overwriteWithMeta(table: String, df: DataFrame,
       props: Map[String, String]): Unit = {
     validateMetaProps(props)
-    val prev = readBucketMap(table).values.toSet
+    val prev = state(table).versions
     val v0 = currentVersion(table)
     val v = v0.getOrElse(-1L) + 1L
     def checkUnmoved(stage: String): Unit = {
@@ -495,7 +543,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
     atomicWrite(metaVPath(table, v), renderMeta(props))
     checkUnmoved("before the pointer flip")
-    commit(table, v, Map(-1 -> v), tableBuckets(table), df.schema, prev)
+    commit(table, v, Map(-1 -> v), Map.empty, tableBuckets(table), df.schema, None, prev)
   }
 
   /** The current snapshot's data and the properties committed WITH it,
@@ -537,8 +585,11 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         catch { case _: java.io.FileNotFoundException => None }
       sidecar match {
         case Some(m) =>
-          return (spark.read.option("recursiveFileLookup", "true")
-            .parquet(versionDir(table, v)), m)
+          // the commit's schema when the bucket map just read is this
+          // version's flat snapshot; inferred (a Spark job) otherwise
+          val schema = readBucketsFile(table).filter(_.map == Map(-1 -> v)).flatMap(_.schema)
+          val reader = spark.read.option("recursiveFileLookup", "true")
+          return (schema.fold(reader)(reader.schema).parquet(versionDir(table, v)), m)
         case None =>
           if (v == lastV || metaVersions(table).isEmpty) {
             // STABLE sidecar-less version: pair the data with the
@@ -572,118 +623,217 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   /** MERGE: rows in `updates` replace same-key rows in the current
     * snapshot; new keys are appended. `updates` must contain at most
     * one row per key (enforce upstream), matching the reference's
-    * ON CONFLICT upsert semantics. Rewrites ONLY the buckets the
-    * update keys hash into. Returns whether it committed a version:
-    * an empty `updates` commits none.
+    * ON CONFLICT upsert semantics. Into a bucketed table it writes a
+    * new delta and rewrites no bucket; the copy-on-write compaction
+    * runs instead where the class doc says. Returns whether it
+    * committed a version: an empty `updates` commits none.
     */
   def merge(table: String, updates: DataFrame, key: String): Boolean = {
-    val file = readBucketsFile(table)
-    val nb = file.flatMap(_.nb).getOrElse(nBuckets)
-    if (!exists(table)) {
-      // first write: bucketed from the start
-      val v = 0L
-      bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nb)),
-        versionDir(table, v))
-      val written = writtenBuckets(table, v)
-      if (written.isEmpty) {
-        // zero-row first merge: committing an empty bucket map would
-        // make exists() true but read() impossible — leave the table
-        // nonexistent instead
-        fs.delete(new Path(versionDir(table, v)), true)
-        return false
-      }
-      commit(table, v, written, nb, updates.schema)
-      return true
+    if (!exists(table)) return firstMerge(table, updates, key)
+    val f = state(table)
+    // The current schema comes from the commit header; only a legacy
+    // table without one pays a schema inference (a Spark job), once.
+    val schema = f.schema.getOrElse {
+      val allPaths = bucketDataPaths(table, f.map)
+      if (allPaths.isEmpty) updates.schema
+      else spark.read.option("recursiveFileLookup", "true").parquet(allPaths: _*).schema
     }
-    val m = file.map(_.map).getOrElse(legacyBucketMap(table))
-    // persisted: merge runs three actions over `updates` (touched-
-    // bucket collect, the anti-join probe, the union write) — callers
-    // should not have to know to pre-persist to avoid 3x upstream I/O
-    val upd = updates.withColumn("__bucket", bucketOf(key, nb))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // additive schema evolution: updates carrying a column the table
+    // lacks (or a column at another type) force a one-time FULL
+    // rewrite, so every committed file shares the widened schema —
+    // rewriting only touched buckets, or writing a delta, would leave
+    // mixed-schema files and read() projects the header's schema
+    val evolving = updates.schema.exists(u => schema.find(_.name == u.name)
+      .forall(c => !DataTypeUtils.equalsIgnoreNullability(c.dataType, u.dataType)))
+    if (!(f.schema.isEmpty || f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
+        f.delta.exists(_.key != key)))
+      return appendDelta(table, f, schema, updates, key, currentVersion(table).get + 1L)
+    // copy-on-write: several actions over `updates` (the touched-bucket
+    // collect, the anti-join probe, the union write) — persisted, so
+    // callers need not pre-persist to avoid repeated upstream I/O
+    val upd = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val touched = upd.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
-      if (touched.isEmpty) return false
-      // additive schema evolution: updates carrying a column the table
-      // lacks force a one-time FULL rewrite (the flat path below), so
-      // every committed file shares the widened schema — rewriting
-      // only touched buckets would leave mixed-schema bucket dirs and
-      // read() projects whichever file's footer it samples. The current
-      // schema comes from the commit header; only a legacy table
-      // without one pays a schema inference (a Spark job), once, and
-      // its schema serves the touched-bucket read below too.
-      val curSchema = file.flatMap(_.schema).getOrElse {
-        val allPaths = bucketDataPaths(table, m)
-        if (allPaths.isEmpty) updates.schema
-        else spark.read.option("recursiveFileLookup", "true")
-          .parquet(allPaths: _*).schema
+      var g = f
+      // a delta the batch cannot fold into is compacted on its own first
+      if (g.delta.exists(d => evolving || d.key != key)) {
+        if (upd.isEmpty) return false
+        compact(table, g)
+        g = state(table)
       }
-      val evolving = updates.columns.exists(c => !curSchema.fieldNames.contains(c))
-      // current rows of ONLY the touched buckets (a flat snapshot has
-      // no bucket dirs yet — filter it by recomputed bucket; a schema
-      // evolution rewrites everything like a flat snapshot)
-      val flat = m.contains(-1) || evolving
-      val curPaths = bucketDataPaths(table,
-        if (flat) m else m.filter { case (b, _) => touched.contains(b) })
-      val cur0 =
-        if (curPaths.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            updates.schema)
-        else spark.read.schema(curSchema).option("recursiveFileLookup", "true")
-          .parquet(curPaths: _*)
-      // flat snapshots are fully re-bucketed on first merge (every row
-      // must land in a bucket dir); bucketed snapshots only load and
-      // rewrite the touched buckets
-      val curAll = cur0.withColumn("__bucket", bucketOf(key, nb))
-      val cur = if (flat) curAll else curAll.filter(col("__bucket").isin(touched.toSeq: _*))
-      // null-safe anti join: a null-key update must REPLACE the
-      // existing null-key row, not append a duplicate every merge
-      // (plain equality never matches null = null)
-      val kept = cur.join(upd.select(col(key).as("__mk")),
-        cur(key) <=> col("__mk"), "left_anti")
-      // schema evolution, additive only: a column newly produced by the
-      // render path (e.g. search_token_counts) must not be silently
-      // dropped when merging into a pre-existing table — widen KEPT
-      // rows with nulls instead, so consumers see the column and can
-      // coalesce legacy rows. An update missing a CURRENT column still
-      // fails loudly in unionByName (a sign the caller regressed).
-      val newCols = upd.columns.filterNot(cur.columns.contains)
-      val keptWide = newCols.foldLeft(kept)((d, c) =>
-        d.withColumn(c, org.apache.spark.sql.functions.lit(null).cast(upd.schema(c).dataType)))
-      val next = keptWide.unionByName(upd)
       val v = currentVersion(table).get + 1L
-      bucketedWrite(next, versionDir(table, v))
-      val written = writtenBuckets(table, v)
-      // a flat snapshot must be fully re-bucketed on first merge (its
-      // untouched rows were rewritten into v as well)
-      val base = if (flat) Map.empty[Int, Long] else m
-      commit(table, v, base -- touched ++ written, nb, next.schema, m.values.toSet)
-      true
+      g.delta match {
+        case None => rewrite(table, g, schema, upd, key, v, full = g.map.contains(-1) || evolving)
+        case Some(d) =>
+          // compaction of delta ∪ batch in one commit
+          if (upd.isEmpty) return false
+          rewrite(table, g, schema, lastWriter(deltaRows(table, d, schema),
+            upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key), key, v, full = false)
+      }
     } finally upd.unpersist()
   }
 
-  /** Buckets actually present in a freshly written snapshot dir. */
-  private def writtenBuckets(table: String, v: Long): Map[Int, Long] = {
-    val dir = new Path(versionDir(table, v))
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("__bucket="))
-      .map(n => n.stripPrefix("__bucket=").toInt -> v)
-      .toMap
+  /** First write: bucketed from the start. */
+  private def firstMerge(table: String, updates: DataFrame, key: String): Boolean = {
+    val nb = tableBuckets(table)
+    val v = 0L
+    bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nb)), versionDir(table, v))
+    val written = writtenBuckets(table, v)
+    if (written.isEmpty) {
+      // zero-row first merge: committing an empty bucket map would
+      // make exists() true but read() impossible — leave the table
+      // nonexistent instead
+      fs.delete(new Path(versionDir(table, v)), true)
+      return false
+    }
+    commit(table, v, written.map { case (b, _) => b -> v }, written, nb, updates.schema)
+    true
   }
 
-  /** Delete rows whose key appears in `keys` — rewrites only the
-    * touched buckets, like merge.
+  /** The delta bytes at which a MERGE compacts: the mean base bucket's
+    * bytes, capped by the broadcast threshold the delta read relies
+    * on. 0 when no bucket's bytes are known (a commit made before the
+    * bucket map carried them), so such a table compacts first. */
+  private def compactionBound(f: BucketsFile): Long = {
+    val known = f.map.keys.toSeq.flatMap(f.bytes.get)
+    val mean = if (known.isEmpty) 0L else known.sum / known.size
+    math.min(mean, GraftColumnBridge.broadcastThreshold(spark))
+  }
+
+  /** Writes the table's next delta — the old delta's rows whose key
+    * `upd` does not carry, plus `upd` — and commits it beside the
+    * unchanged bucket map, or compacts it when it passes the bound.
+    * `upd` is read once, by the delta write, so it is not persisted. An
+    * empty `upd` commits nothing; its emptiness is observed by the
+    * write itself, so it costs no job.
+    */
+  private def appendDelta(table: String, f: BucketsFile, schema: StructType,
+      upd: DataFrame, key: String, v: Long): Boolean = {
+    val dir = versionDir(table, v)
+    val seen = Observation()
+    // in the table's column order; a missing column fails here, loudly
+    val batch = upd.observe(seen, count(lit(1)).as("rows"))
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    // a shuffle either way, whose partitions adaptive execution sizes:
+    // one file for a small delta. The old delta is read in `upd`'s
+    // session (a streaming micro-batch's is a clone of the store's):
+    // the write runs in its left input's session, and only that
+    // session's listener delivers the observed row count
+    val next = f.delta.fold(batch.hint("rebalance"))(d =>
+      lastWriter(deltaRows(table, d, schema, upd.sparkSession), batch, key))
+    next.write.mode(SaveMode.Overwrite).parquet(dir)
+    val rows = scala.concurrent.Await.result(seen.future,
+      scala.concurrent.duration.Duration(5, java.util.concurrent.TimeUnit.MINUTES))
+    if (rows.getLong(0) == 0L) {
+      fs.delete(new Path(dir), true)
+      return false
+    }
+    val written = Delta(v, key)
+    if (dataBytes(new Path(dir)) > compactionBound(f))
+      rewrite(table, f, schema, deltaRows(table, written, schema), key, v + 1L, full = false)
+    else commit(table, v, f.map, f.bytes, f.nb.getOrElse(nBuckets), schema, Some(written), f.versions)
+    true
+  }
+
+  /** `old` rows whose key `batch` does not carry (null keys alike),
+    * plus `batch`: one shuffle on the key. */
+  private def lastWriter(old: DataFrame, batch: DataFrame, key: String): DataFrame =
+    old.withColumn("__o", lit(0)).unionByName(batch.withColumn("__o", lit(1)))
+      .withColumn("__last", max(col("__o")).over(Window.partitionBy(col(key))))
+      .filter(col("__o") === col("__last")).drop("__o", "__last")
+
+  /** Folds the table's delta into its buckets. */
+  private def compact(table: String, f: BucketsFile): Unit = {
+    val d = f.delta.get
+    rewrite(table, f, f.schema.get, deltaRows(table, d, f.schema.get), d.key,
+      currentVersion(table).get + 1L, full = false)
+  }
+
+  /** Copy-on-write MERGE of `rows` into the base buckets, written at
+    * version `v` and committed with no delta: `rows` replace same-key
+    * base rows (null keys alike) and new keys append. Rewrites ONLY
+    * the buckets `rows` hash into, or every bucket when `full` (a flat
+    * snapshot is re-bucketed; a schema evolution widens every file).
+    * The caller has folded any delta into `rows`. Returns false, and
+    * commits nothing, when `rows` is empty.
+    */
+  private def rewrite(table: String, f: BucketsFile, schema: StructType, rows: DataFrame,
+      key: String, v: Long, full: Boolean): Boolean = {
+    val nb = f.nb.getOrElse(nBuckets)
+    val upd = rows.withColumn("__bucket", bucketOf(key, nb))
+    val touched = upd.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
+    if (touched.isEmpty) return false
+    val m = f.map
+    val curPaths = bucketDataPaths(table, if (full) m else m.filter { case (b, _) => touched(b) })
+    val cur0 =
+      if (curPaths.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows.schema)
+      else spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(curPaths: _*)
+    // a flat snapshot has no bucket dirs yet — its rows are bucketed
+    // by recomputed bucket, every one of them rewritten
+    val curAll = cur0.withColumn("__bucket", bucketOf(key, nb))
+    val cur = if (full) curAll else curAll.filter(col("__bucket").isin(touched.toSeq: _*))
+    // null-safe anti join: a null-key update must REPLACE the
+    // existing null-key row, not append a duplicate every merge
+    // (plain equality never matches null = null)
+    val kept = cur.join(upd.select(col(key).as("__mk")), cur(key) <=> col("__mk"), "left_anti")
+    // schema evolution, additive only: a column newly produced by the
+    // render path (e.g. search_token_counts) must not be silently
+    // dropped when merging into a pre-existing table — widen KEPT
+    // rows with nulls instead, so consumers see the column and can
+    // coalesce legacy rows. An update missing a CURRENT column still
+    // fails loudly in unionByName (a sign the caller regressed).
+    val newCols = upd.columns.filterNot(cur.columns.contains)
+    val keptWide = newCols.foldLeft(kept)((d, c) =>
+      d.withColumn(c, lit(null).cast(upd.schema(c).dataType)))
+    val next = keptWide.unionByName(upd)
+    bucketedWrite(next, versionDir(table, v))
+    val written = writtenBuckets(table, v)
+    val (base, baseBytes) = if (full) (Map.empty[Int, Long], Map.empty[Int, Long])
+      else (m -- touched, f.bytes -- touched)
+    commit(table, v, base ++ written.map { case (b, _) => b -> v }, baseBytes ++ written,
+      nb, next.schema, None, f.versions)
+    true
+  }
+
+  /** Parquet bytes under `dir` by the bucket dir they sit in (-1 for
+    * files outside one), from one recursive listing. */
+  private def bytesByBucket(dir: Path): Map[Int, Long] = {
+    if (!fs.exists(dir)) return Map.empty
+    val it = fs.listFiles(dir, true)
+    val sizes = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    while (it.hasNext) {
+      val st = it.next()
+      val name = st.getPath.getName
+      if (!name.startsWith(".") && !name.startsWith("_")) {
+        val parent = st.getPath.getParent.getName
+        val b = if (parent.startsWith("__bucket=")) parent.stripPrefix("__bucket=").toInt else -1
+        sizes(b) += st.getLen
+      }
+    }
+    sizes.toMap
+  }
+
+  /** Buckets present in a freshly written snapshot dir, with their bytes. */
+  private def writtenBuckets(table: String, v: Long): Map[Int, Long] =
+    bytesByBucket(new Path(versionDir(table, v))) - (-1)
+
+  private def dataBytes(dir: Path): Long = bytesByBucket(dir).values.sum
+
+  /** Delete rows whose key appears in `keys` — compacts any delta first,
+    * then rewrites only the touched buckets.
     */
   def delete(table: String, keys: DataFrame, key: String): Unit = {
     if (!exists(table)) return
-    val file = readBucketsFile(table)
-    val nb = file.flatMap(_.nb).getOrElse(nBuckets)
-    val m = file.map(_.map).getOrElse(legacyBucketMap(table))
+    var f = state(table)
+    val nb = f.nb.getOrElse(nBuckets)
     val keyed = keys.select(key).withColumn("__bucket", bucketOf(key, nb))
     val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return
+    if (f.delta.nonEmpty) {
+      compact(table, f)
+      f = state(table)
+    }
+    val m = f.map
     val flat = m.contains(-1)
     val curPaths = bucketDataPaths(table,
       if (flat) m else m.filter { case (b, _) => touched.contains(b) })
@@ -691,7 +841,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // the current schema from the commit header, inferred (a Spark
     // job) only for a legacy table without one
     val reader = spark.read.option("recursiveFileLookup", "true")
-    val cur = file.flatMap(_.schema).fold(reader)(reader.schema).parquet(curPaths: _*)
+    val cur = f.schema.fold(reader)(reader.schema).parquet(curPaths: _*)
       .withColumn("__bucket", bucketOf(key, nb))
     val scoped = if (flat) cur else cur.filter(col("__bucket").isin(touched.toSeq: _*))
     // null-safe like merge: deleting a null key removes the null-key row
@@ -700,16 +850,17 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val v = currentVersion(table).get + 1L
     bucketedWrite(next, versionDir(table, v))
     val written = writtenBuckets(table, v)
-    val base = if (flat) Map.empty[Int, Long] else m
+    val (base, baseBytes) = if (flat) (Map.empty[Int, Long], Map.empty[Int, Long])
+      else (m -- touched, f.bytes -- touched)
     // touched buckets that became empty simply vanish from the map
-    val next2 = base -- touched ++ written
+    val next2 = base ++ written.map { case (b, _) => b -> v }
     if (next2.isEmpty) {
       // every remaining row deleted: an empty table is a nonexistent
       // table (same invariant as the zero-row first merge) — a
       // committed empty bucket map would make exists() true while
       // read() throws
       drop(table)
-    } else commit(table, v, next2, nb, next.schema, m.values.toSet)
+    } else commit(table, v, next2, baseBytes ++ written, nb, next.schema, None, f.versions)
   }
 
   def drop(table: String): Unit = {
@@ -718,18 +869,19 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     handles.remove(table)
   }
 
-  /** GC snapshot dirs no bucket references. `prevReferenced` — the
-    * versions the PREVIOUS bucket map pointed at — are retained for
-    * one more commit cycle, so a reader that resolved its file
-    * listing just before this commit still finds its data (the
-    * standard one-commit grace; readers idle across multiple commits
-    * need a longer retention policy, as with Delta VACUUM).
+  /** GC snapshot dirs neither the bucket map nor the delta references.
+    * `prevReferenced` — the versions the PREVIOUS commit's bucket map
+    * and delta pointed at — are retained for one more commit cycle, so
+    * a reader that resolved its file listing (or holds its handle)
+    * just before this commit still finds its data (the standard
+    * one-commit grace; readers idle across multiple commits need a
+    * longer retention policy, as with Delta VACUUM).
     */
-  private def cleanOld(table: String, current: Long, bucketMap: Map[Int, Long],
+  private def cleanOld(table: String, current: Long, live: Set[Long],
       prevReferenced: Set[Long]): Unit = {
     val dir = new Path(s"$root/$table")
     if (!fs.exists(dir)) return
-    val referenced = bucketMap.values.toSet ++ prevReferenced + current
+    val referenced = live ++ prevReferenced + current
     fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("v_")) {
@@ -748,10 +900,18 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 }
 
 object ParquetStore {
-  /** One `_BUCKETS` file: its exact text, the header fields and the
-    * bucket → snapshot version map. Bucket -1 marks a flat
-    * (unbucketed) snapshot written by overwrite().
+  /** One `_BUCKETS` file: its exact text, the header fields, the
+    * bucket → snapshot version map and each bucket's bytes where the
+    * commit recorded them. Bucket -1 marks a flat (unbucketed)
+    * snapshot written by overwrite().
     */
   private final case class BucketsFile(raw: String, nb: Option[Int],
-      schema: Option[StructType], token: Option[String], map: Map[Int, Long])
+      schema: Option[StructType], token: Option[String], map: Map[Int, Long],
+      bytes: Map[Int, Long], delta: Option[Delta]) {
+    /** Every version dir this commit reads from. */
+    def versions: Set[Long] = map.values.toSet ++ delta.map(_.v)
+  }
+
+  /** The delta at version `v`, whose rows replace base rows by `key`. */
+  private final case class Delta(v: Long, key: String)
 }

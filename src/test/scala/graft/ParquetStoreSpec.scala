@@ -5,9 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed-merge store semantics: upsert correctness AND the scale
-  * property that a merge rewrites only the key-hash buckets it
-  * touches (per-merge I/O ∝ batch, not table — the property Delta
-  * MERGE has and copy-on-write-the-world does not).
+  * properties — a MERGE into a bucketed table writes one small delta
+  * and reads or rewrites no bucket, and the copy-on-write compaction
+  * rewrites only the key-hash buckets it touches (per-merge I/O ∝
+  * batch, not table — the property Delta MERGE has and
+  * copy-on-write-the-world does not).
   */
 class ParquetStoreSpec extends AnyFunSuite {
 
@@ -16,6 +18,30 @@ class ParquetStoreSpec extends AnyFunSuite {
 
   private def rows(ids: Range, tag: String) =
     ids.map(i => (i.toString, s"$tag-$i")).toDF("pkey", "payload")
+
+  /** Runs `body` with broadcasts off, which makes every MERGE take the
+    * copy-on-write compaction path (a delta read needs its broadcast);
+    * the shared test session gets its setting back. */
+  private def copyOnWrite[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  private def contents(store: ParquetStore, table: String = "t"): Map[Option[String], String] = {
+    val got = store.read(table).collect().map(r => Option(r.getString(0)) -> r.getString(1))
+    assert(got.map(_._1).distinct.length == got.length, s"duplicate keys: ${got.toSeq}")
+    got.toMap
+  }
+
+  /** The `_BUCKETS` header lines and bucket lines of a table. */
+  private def bucketsFile(dir: String, table: String = "t"): (Seq[String], Seq[String]) =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, table, "_BUCKETS")),
+      "UTF-8").split("\n").toSeq.partition(_.startsWith("#"))
+
+  private def versionDirs(dir: String, table: String = "t"): Set[String] =
+    new java.io.File(s"$dir/$table").listFiles().map(_.getName).filter(_.startsWith("v_")).toSet
 
   test("merge: updates replace same-key rows, new keys append") {
     val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_"))
@@ -46,7 +72,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     // rebalance: one file per bucket
     val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_files_"))
     store.merge("t", rows(1 to 500, "v1").repartition(32), "pkey")
-    store.merge("t", rows(200 to 700, "v2").repartition(32), "pkey")
+    copyOnWrite(store.merge("t", rows(200 to 700, "v2").repartition(32), "pkey"))
     val small = partFilesByBucket(store)
     assert(small.size == 16)
     assert(small.values.forall(_ == 1),
@@ -61,7 +87,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     try {
       val big = new ParquetStore(spark, TestSpark.tempDir("graft_ps_files_"))
       big.merge("t", rows(1 to 2000, "v1").repartition(32), "pkey")
-      big.merge("t", rows(1500 to 2500, "v2").repartition(32), "pkey")
+      copyOnWrite(big.merge("t", rows(1500 to 2500, "v2").repartition(32), "pkey"))
       val got = big.read("t").collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got.size == 2500 && got("10") == "v1-10" && got("2000") == "v2-2000")
       val spread = partFilesByBucket(big)
@@ -112,7 +138,9 @@ class ParquetStoreSpec extends AnyFunSuite {
     val store = new ParquetStore(spark, dir)
     store.merge("t", rows(1 to 800, "v1"), "pkey")
     val update = rows(1 to 50, "v2")
-    val seen = jobsOf(store.merge("t", update, "pkey"))
+    // compacting: the delta MERGE's own pin is "a 50-row MERGE into a
+    // 5,000-row table writes one delta ..."
+    val seen = jobsOf(copyOnWrite(store.merge("t", update, "pkey")))
     assert(inferences(seen).isEmpty, s"no schema inference for a table with a header, jobs: $seen")
 
     val v = store.currentVersion("t").get
@@ -168,6 +196,23 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(store.read("f").schema == spark.read.parquet(s"$dir/f/v_0").schema)
   }
 
+  test("readSnapshotWithMeta takes the schema from the commit header: no inference job") {
+    val dir = TestSpark.tempDir("graft_ps_snapmeta_")
+    val store = new ParquetStore(spark, dir)
+    val wide = (1 to 20).map(i => (i.toString, i.toLong, if (i % 4 == 0) null else s"t$i"))
+      .toDF("pkey", "n", "note")
+    store.overwriteWithMeta("cdf", wide, Map("label" -> "a"))
+    var got: (org.apache.spark.sql.DataFrame, Map[String, String]) = null
+    val seen = jobsOf { got = store.readSnapshotWithMeta("cdf"); got._1.schema }
+    assert(inferences(seen).isEmpty, s"no schema inference on a header table, jobs: $seen")
+    assert(got._2 == Map("label" -> "a"))
+    assert(got._1.schema == spark.read.parquet(s"$dir/cdf/v_0").schema)
+    assert(got._1.collect().map(_.toString).toSet == wide.collect().map(_.toString).toSet)
+    // a commit without the header falls back to inference
+    stripHeader(dir, "cdf")
+    assert(inferences(jobsOf(store.readSnapshotWithMeta("cdf")._1.schema)).size == 1)
+  }
+
   test("merge widens a pre-existing table with new update columns") {
     val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_evo_"))
     store.merge("t", rows(1 to 10, "v1"), "pkey")
@@ -198,8 +243,9 @@ class ParquetStoreSpec extends AnyFunSuite {
     val v0Buckets = bucketDirs(0)
     assert(v0Buckets.size > 1, "initial merge must produce multiple buckets")
 
-    // a single-key update touches exactly ONE bucket
-    store.merge("t", Seq(("7", "v2-7")).toDF("pkey", "payload"), "pkey")
+    // a single-key update touches exactly ONE bucket (compacting: a
+    // delta MERGE rewrites none)
+    copyOnWrite(store.merge("t", Seq(("7", "v2-7")).toDF("pkey", "payload"), "pkey"))
     val v1Buckets = bucketDirs(1)
     assert(v1Buckets.size == 1,
       s"single-key merge must rewrite one bucket, rewrote: $v1Buckets")
@@ -233,7 +279,10 @@ class ParquetStoreSpec extends AnyFunSuite {
     val dir = TestSpark.tempDir("graft_ps_")
     val store = new ParquetStore(spark, dir)
     store.merge("t", rows(1 to 20, "v1"), "pkey")
-    (1 to 5).foreach(i => store.merge("t", Seq(("1", s"u$i")).toDF("pkey", "payload"), "pkey"))
+    // compacting merges; the delta form is pinned by "a reader holding
+    // a handle across one commit ..."
+    (1 to 5).foreach(i => copyOnWrite(
+      store.merge("t", Seq(("1", s"u$i")).toDF("pkey", "payload"), "pkey")))
     assert(store.read("t").collect().map(r => r.getString(0) -> r.getString(1))
       .toMap.apply("1") == "u5")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -464,5 +513,107 @@ class ParquetStoreSpec extends AnyFunSuite {
     store.putMeta("t", Map("label" -> "legacy2"))
     assert(store.getMeta("t") == Map("label" -> "legacy2"))
     assert(store.read("t").count() == 5, "old snapshot still serves")
+  }
+
+  test("a 50-row MERGE into a 5,000-row table writes one delta dir, reads no bucket, " +
+      "keeps the bucket map") {
+    val dir = TestSpark.tempDir("graft_ps_delta_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 5000, "v1"), "pkey")
+    val (_, map0) = bucketsFile(dir)
+    assert(map0.size == 16)
+    // hide every base bucket file: a MERGE that read, listed or
+    // rewrote a bucket would fail or change the map
+    val base = java.nio.file.Paths.get(dir, "t", "v_0")
+    val hidden = java.nio.file.Paths.get(dir, "hidden_v_0")
+    java.nio.file.Files.move(base, hidden)
+    val seen = try jobsOf(assert(store.merge("t", rows(4976 to 5025, "v2"), "pkey")))
+      finally java.nio.file.Files.move(hidden, base)
+    assert(inferences(seen).isEmpty, s"no schema inference, jobs: $seen")
+    assert(seen.size <= 2, s"a delta MERGE is one shuffle and one write, jobs: $seen")
+    assert(versionDirs(dir) == Set("v_0", "v_1"), "exactly one new version dir")
+    val (header, map1) = bucketsFile(dir)
+    assert(map1 == map0, "the bucket map is unchanged")
+    assert(header.contains("#delta 1 pkey"), header)
+    assert(!new java.io.File(s"$dir/t/v_1").listFiles().exists(_.getName.startsWith("__bucket=")))
+    val got = contents(store)
+    assert(got.size == 5025 && got(Some("4976")) == "v2-4976" && got(Some("4975")) == "v1-4975")
+    // the next MERGE folds the old delta into its delta: still no bucket
+    java.nio.file.Files.move(base, hidden)
+    try assert(store.merge("t", rows(4990 to 5040, "v3"), "pkey"))
+    finally java.nio.file.Files.move(hidden, base)
+    assert(bucketsFile(dir)._2 == map0)
+    val got2 = contents(store)
+    assert(got2.size == 5040 && got2(Some("4980")) == "v2-4980" && got2(Some("5040")) == "v3-5040")
+  }
+
+  test("a reader holding a handle across one commit still reads it") {
+    val dir = TestSpark.tempDir("graft_ps_grace_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    store.merge("t", rows(1 to 10, "v2"), "pkey")
+    val deltaHandle = store.read("t")
+    val before = deltaHandle.collect().map(_.toString).toSet
+    assert(before.size == 2000 && before.contains("[3,v2-3]"))
+    // a delta commit: the held handle's delta dir stays for one commit
+    store.merge("t", rows(5 to 20, "v3"), "pkey")
+    assert(deltaHandle.collect().map(_.toString).toSet == before)
+    // a compacting commit: its buckets and delta stay for one commit
+    val held = store.read("t")
+    val heldRows = held.collect().map(_.toString).toSet
+    copyOnWrite(store.merge("t", rows(15 to 30, "v4"), "pkey"))
+    assert(held.collect().map(_.toString).toSet == heldRows)
+    assert(contents(store)(Some("16")) == "v4-16")
+    // and GC: the delta of two commits ago is gone, the table reads on
+    store.merge("t", rows(40 to 41, "v5"), "pkey")
+    assert(!versionDirs(dir).contains("v_1") && !versionDirs(dir).contains("v_2"),
+      s"superseded deltas not GC'd: ${versionDirs(dir)}")
+    assert(contents(store).size == 2000)
+  }
+
+  test("model: seeded interleavings of merge, delete, overwrite, compaction and reopening " +
+      "read as an eager upsert") {
+    val ops = Seq("small", "small", "small", "small", "large", "delete", "overwrite",
+      "compact", "reopen")
+    Seq(11L, 23L, 37L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val dir = TestSpark.tempDir("graft_ps_model_")
+      var store = new ParquetStore(spark, dir)
+      var model = Map.empty[Option[String], String]
+      var deltas, compactions = 0
+      def keys(n: Int): Seq[Option[String]] =
+        Seq.fill(n)(if (rnd.nextInt(40) == 0) None else Some(s"k${rnd.nextInt(1500)}")).distinct
+      def frame(kv: Seq[(Option[String], String)]) =
+        kv.map { case (k, v) => (k.orNull, v) }.toDF("pkey", "payload")
+      def upsert(n: Int, step: Int): Unit = {
+        val batch = keys(n).map(k => k -> s"s$seed-$step-${k.getOrElse("null")}")
+        val mapBefore = if (store.exists("t")) bucketsFile(dir)._2 else Nil
+        store.merge("t", frame(batch), "pkey")
+        model ++= batch
+        if (bucketsFile(dir)._1.exists(_.startsWith("#delta "))) deltas += 1
+        else if (mapBefore.nonEmpty && bucketsFile(dir)._2 != mapBefore) compactions += 1
+      }
+      upsert(1200, 0)
+      (1 to 30).foreach { step =>
+        ops(rnd.nextInt(ops.size)) match {
+          case "small" => upsert(1 + rnd.nextInt(12), step)
+          case "large" => upsert(150 + rnd.nextInt(150), step)
+          case "delete" =>
+            val gone = keys(1 + rnd.nextInt(20)) ++ rnd.shuffle(model.keys.toSeq).take(3)
+            store.delete("t", gone.map(_.orNull).toDF("pkey"), "pkey")
+            model --= gone
+          case "overwrite" if rnd.nextInt(3) == 0 =>
+            val kept = rnd.shuffle(model.toSeq).take(model.size * 9 / 10)
+            store.overwrite("t", frame(kept))
+            model = kept.toMap
+          case "overwrite" => upsert(4, step)
+          case "compact" => copyOnWrite(upsert(1 + rnd.nextInt(5), step))
+          case "reopen" => store = new ParquetStore(spark, dir)
+        }
+        assert(contents(store) == model, s"seed $seed step $step")
+      }
+      assert(deltas > 0 && compactions > 0,
+        s"seed $seed exercised $deltas delta and $compactions compacting merges")
+    }
   }
 }

@@ -516,6 +516,19 @@ class PlanSpec extends AnyFunSuite {
       s"no semi gate in the ingest chain may shuffle its corpus side:\n$plan")
   }
 
+  test("chain entries leave no persisted frame behind in the CacheManager") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val entries = Seq("pipeline_ingest", "ingest_audit", "pipeline_ingest_decontam")
+    // a first run builds the session's stores (signature index, span-df)
+    entries.foreach(q => SparkEntry.queries(q)(spark, dir).collect())
+    spark.catalog.clearCache()
+    entries.foreach { q =>
+      SparkEntry.queries(q)(spark, dir).collect()
+      assert(cache.isEmpty, s"$q left a persisted frame in the CacheManager")
+    }
+  }
+
   test("ingest_audit: one tagged pass — no stage-prefix union, bounded exchanges") {
     val plan = SparkEntry.queries("ingest_audit")(spark, dir)
       .queryExecution.executedPlan.toString

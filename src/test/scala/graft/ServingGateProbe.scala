@@ -12,7 +12,11 @@ import scala.jdk.CollectionConverters._
   * three frames' size estimates against `spark.sql.autoBroadcastJoinThreshold`,
   * the snapshot's build time and driver heap, and an interleaved run of
   * 50-row `Realtime.processBatch` commits, each followed by `reads`
-  * alternating search / hybrid reads, with the tier on and off.
+  * alternating search / hybrid reads, with the tier on and off. Each
+  * cycle prints its `processBatch` time, marked `rewrite=1` when the
+  * batch rewrote base buckets of the vector or token table (their
+  * `_BUCKETS` bucket lines changed), and each mode ends with the
+  * median, mean and max batch time over all cycles.
   *
   * {{{
   * SPARK_DRIVER_MEM=3g sbt "Test/runMain graft.ServingGateProbe 5000 15000 30000"
@@ -118,6 +122,13 @@ object ServingGateProbe {
     println(s"n=$n snapshot heap_bytes_by_field " +
       byField.map { case (f, b) => s"${f.replaceAll(".*\\$", "")}=$b" }.mkString(" "))
 
+    def bucketLines(table: String): Seq[String] = {
+      val p = java.nio.file.Paths.get(s"$dir/warehouse/$table/_BUCKETS")
+      if (!java.nio.file.Files.exists(p)) Nil
+      else java.nio.file.Files.readAllLines(p).asScala.toSeq.filterNot(_.startsWith("#"))
+    }
+    def bucketMaps() = Seq(engine.embTable("docs"), engine.tokTable("docs")).map(bucketLines)
+
     val queries = Seq("a", "b", "c", "d", "e", "f").map(_ => text(rnd).split(" ").take(2).mkString(" "))
     Seq("on" -> None, "off" -> Some("-1")).foreach { case (mode, conf) =>
       val old = spark.conf.get(Threshold)
@@ -127,6 +138,7 @@ object ServingGateProbe {
         val firstMs = scala.collection.mutable.ArrayBuffer.empty[Double]
         val laterMs = scala.collection.mutable.ArrayBuffer.empty[Double]
         val cycleMs = scala.collection.mutable.ArrayBuffer.empty[Double]
+        var rewrites = 0
         (0 until cycles).foreach { c =>
           val stamp = System.currentTimeMillis()
           val changed = (0 until 50).map(_ => rnd.nextInt(n).toLong).distinct
@@ -136,8 +148,12 @@ object ServingGateProbe {
             val (t, l, ts) = docs(id)
             Row(id, t, l, new java.sql.Timestamp(ts))
           }.asJava, schema)
+          val before = bucketMaps()
           val (_, b) = timed(Realtime.processBatch(engine, job, batch))
+          val rewrite = bucketMaps() != before
           batchMs += b
+          if (rewrite) rewrites += 1
+          println(f"n=$n tier=$mode cycle=$c batch_ms=$b%.0f rewrite=${if (rewrite) 1 else 0}")
           var cycle = b
           (0 until reads).foreach { r =>
             val q = queries((c * reads + r) % queries.size)
@@ -151,7 +167,8 @@ object ServingGateProbe {
         }
         println(f"n=$n tier=$mode batch_ms=${median(batchMs.toSeq)}%.0f " +
           f"first_read_ms=${median(firstMs.toSeq)}%.0f later_read_ms=${median(laterMs.toSeq)}%.0f " +
-          f"cycle_ms=${median(cycleMs.toSeq)}%.0f")
+          f"cycle_ms=${median(cycleMs.toSeq)}%.0f batch_ms_mean=${batchMs.sum / batchMs.size}%.0f " +
+          f"batch_ms_max=${batchMs.max}%.0f rewrites=$rewrites/$cycles")
       } finally spark.conf.set(Threshold, old)
     }
     engine.deleteJob("docs")
