@@ -57,11 +57,8 @@ final class ServingSnapshot private (
     tokIds: java.util.HashMap[UTF8String, Integer],
     // token ids per token row: null = a null token array, -1 = a null token
     toks: Array[Array[Int]],
-    // null = no counts (count 1 per token)
-    cnts: Array[Array[Int]],
-    // the null elements of each row's counts (a null row = none); null
-    // when no row has a null count
-    cntNulls: Array[java.util.BitSet]) {
+    // null = no counts (count 1 per token); a null element is a null count
+    cnts: Array[Array[Integer]]) {
   import ServingSnapshot._
 
   /** Whether the snapshot answers with these filters and return
@@ -201,15 +198,14 @@ final class ServingSnapshot private (
         // zip_with pads the shorter array with nulls; a matched token's
         // null count nulls the sum
         val cs = cnts(r)
-        val nulls = if (cntNulls == null) null else cntNulls(r)
+        val n = if (cs == null) ts.length else math.max(ts.length, cs.length)
         var sum = 0L
         var isNull = false
         var i = 0
-        while (i < ts.length) {
-          if (hit(ts(i))) {
-            if (cs == null) sum += 1
-            else if (i >= cs.length || nulls != null && nulls.get(i)) isNull = true
-            else sum += cs(i)
+        while (i < n) {
+          if (i < ts.length && hit(ts(i))) {
+            val c: Integer = if (cs == null) 1 else if (i < cs.length) cs(i) else null
+            if (c == null) isNull = true else sum += c.intValue
           }
           i += 1
         }
@@ -356,23 +352,15 @@ object ServingSnapshot {
         }
       }
     }
-    val cnts = new Array[Array[Int]](tr.length)
-    var cntNulls: Array[java.util.BitSet] = null
-    tr.indices.foreach { r =>
-      if (hasCounts && !tr(r).isNullAt(2)) {
-        val a = tr(r).getArray(2)
-        cnts(r) = Array.tabulate(a.numElements()) { i =>
-          if (!a.isNullAt(i)) a.getInt(i)
-          else {
-            if (cntNulls == null) cntNulls = new Array[java.util.BitSet](tr.length)
-            if (cntNulls(r) == null) cntNulls(r) = new java.util.BitSet()
-            cntNulls(r).set(i)
-            0
-          }
-        }
+    val cnts = tr.map { r =>
+      if (!hasCounts || r.isNullAt(2)) null
+      else {
+        val a = r.getArray(2)
+        Array.tabulate[Integer](a.numElements())(i =>
+          if (a.isNullAt(i)) null else Integer.valueOf(a.getInt(i)))
       }
     }
     new ServingSnapshot(spark, srcAttrs, srcRows, byKey, vr.map(key), vecOff, vecs, vecSq,
-      tr.map(key), tokIds, toks, cnts, cntNulls)
+      tr.map(key), tokIds, toks, cnts)
   }
 }

@@ -1,11 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, count, hash, lit, max, pmod}
+import org.apache.spark.sql.functions.{broadcast, col, hash, lit, max, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
 
 /** Snapshot-versioned Parquet table with key-hash-bucketed upsert
   * (MERGE) semantics.
@@ -84,13 +86,16 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode
   * Readers are safe against a single concurrent writer: pointer flips
   * are atomic renames, and GC retains the previous commit's bucket
   * and delta versions for one commit cycle, so a handle read before a
-  * commit still reads after it. Catalog-level changes made by THE
-  * writer engine (job/prompt create, delete) propagate to reader
-  * engines over the same warehouse without restart via
-  * VectorizeEngine.refreshCatalog — the poll-based analogue of the
-  * reference's LISTEN/NOTIFY cache invalidation, called once per
-  * JobScheduler tick. Catalog mutation itself remains single-writer
-  * (persistCatalog overwrites from the local view).
+  * commit still reads after it. An operation that compacts first and
+  * then commits its own version (a [[delete]], a widening MERGE or one
+  * on another key) keeps the versions from before it through its
+  * second commit too. Catalog-level changes made by THE writer engine
+  * (job/prompt create, delete) propagate to reader engines over the
+  * same warehouse without restart via VectorizeEngine.refreshCatalog —
+  * the poll-based analogue of the reference's LISTEN/NOTIFY cache
+  * invalidation, called once per JobScheduler tick. Catalog mutation
+  * itself remains single-writer (persistCatalog overwrites from the
+  * local view).
   *
   * On a production cluster this class is swapped for Delta
   * `MERGE INTO` (same call signature); the engine's call sites depend
@@ -367,9 +372,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
   }
 
-  private def deltaRows(table: String, d: Delta, schema: StructType,
-      session: SparkSession = spark): DataFrame =
-    session.read.schema(schema).parquet(versionDir(table, d.v))
+  private def deltaRows(table: String, d: Delta, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(versionDir(table, d.v))
 
   /** read(), or None when the table does not exist. */
   def readOption(table: String): Option[DataFrame] =
@@ -639,12 +643,14 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       else spark.read.option("recursiveFileLookup", "true").parquet(allPaths: _*).schema
     }
     // additive schema evolution: updates carrying a column the table
-    // lacks (or a column at another type) force a one-time FULL
-    // rewrite, so every committed file shares the widened schema —
-    // rewriting only touched buckets, or writing a delta, would leave
-    // mixed-schema files and read() projects the header's schema
-    val evolving = updates.schema.exists(u => schema.find(_.name == u.name)
-      .forall(c => !DataTypeUtils.equalsIgnoreNullability(c.dataType, u.dataType)))
+    // lacks, or a column the union widens (an int batch into a long
+    // column does not), force a one-time FULL rewrite, so every
+    // committed file shares the widened schema — rewriting only
+    // touched buckets, or writing a delta, would leave mixed-schema
+    // files and read() projects the header's schema
+    val evolving = updates.schema.exists(u => schema.find(_.name == u.name).forall(c =>
+      GraftColumnBridge.unionType(spark, c.dataType, u.dataType)
+        .forall(w => !DataTypeUtils.equalsIgnoreNullability(w, c.dataType))))
     if (!(f.schema.isEmpty || f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
         f.delta.exists(_.key != key)))
       return appendDelta(table, f, schema, updates, key, currentVersion(table).get + 1L)
@@ -660,14 +666,18 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         compact(table, g)
         g = state(table)
       }
+      // the pre-merge versions keep their one-commit grace across both
+      // commits when a compaction ran first
+      val prev = f.versions ++ g.versions
       val v = currentVersion(table).get + 1L
       g.delta match {
-        case None => rewrite(table, g, schema, upd, key, v, full = g.map.contains(-1) || evolving)
+        case None =>
+          rewrite(table, g, schema, upd, key, v, full = g.map.contains(-1) || evolving, prev)
         case Some(d) =>
           // compaction of delta ∪ batch in one commit
           if (upd.isEmpty) return false
           rewrite(table, g, schema, lastWriter(deltaRows(table, d, schema),
-            upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key), key, v, full = false)
+            upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key), key, v, full = false, prev)
       }
     } finally upd.unpersist()
   }
@@ -703,35 +713,42 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * `upd` does not carry, plus `upd` — and commits it beside the
     * unchanged bucket map, or compacts it when it passes the bound.
     * `upd` is read once, by the delta write, so it is not persisted. An
-    * empty `upd` commits nothing; its emptiness is observed by the
-    * write itself, so it costs no job.
+    * empty `upd` commits nothing; the written files' footers tell, so
+    * it costs no job.
     */
   private def appendDelta(table: String, f: BucketsFile, schema: StructType,
       upd: DataFrame, key: String, v: Long): Boolean = {
-    val dir = versionDir(table, v)
-    val seen = Observation()
-    // in the table's column order; a missing column fails here, loudly
-    val batch = upd.observe(seen, count(lit(1)).as("rows"))
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    val dir = new Path(versionDir(table, v))
+    // in the table's column order and types (a narrower column is cast
+    // up); a missing column fails here, loudly
+    val batch = upd.select(schema.fields.map { c =>
+      if (upd.schema.find(_.name == c.name)
+          .forall(u => DataTypeUtils.equalsIgnoreNullability(u.dataType, c.dataType))) col(c.name)
+      else col(c.name).cast(c.dataType).as(c.name)
+    }.toIndexedSeq: _*)
     // a shuffle either way, whose partitions adaptive execution sizes:
-    // one file for a small delta. The old delta is read in `upd`'s
-    // session (a streaming micro-batch's is a clone of the store's):
-    // the write runs in its left input's session, and only that
-    // session's listener delivers the observed row count
+    // one file for a small delta
     val next = f.delta.fold(batch.hint("rebalance"))(d =>
-      lastWriter(deltaRows(table, d, schema, upd.sparkSession), batch, key))
-    next.write.mode(SaveMode.Overwrite).parquet(dir)
-    val rows = scala.concurrent.Await.result(seen.future,
-      scala.concurrent.duration.Duration(5, java.util.concurrent.TimeUnit.MINUTES))
-    if (rows.getLong(0) == 0L) {
-      fs.delete(new Path(dir), true)
+      lastWriter(deltaRows(table, d, schema), batch, key))
+    next.write.mode(SaveMode.Overwrite).parquet(dir.toString)
+    val files = dataFiles(dir)
+    if (files.map(rowCount).sum == 0L) {
+      fs.delete(dir, true)
       return false
     }
     val written = Delta(v, key)
-    if (dataBytes(new Path(dir)) > compactionBound(f))
-      rewrite(table, f, schema, deltaRows(table, written, schema), key, v + 1L, full = false)
+    if (files.map(_.getLen).sum > compactionBound(f))
+      rewrite(table, f, schema, deltaRows(table, written, schema), key, v + 1L, full = false,
+        f.versions)
     else commit(table, v, f.map, f.bytes, f.nb.getOrElse(nBuckets), schema, Some(written), f.versions)
     true
+  }
+
+  /** Rows in one parquet file, from its footer. */
+  private def rowCount(st: FileStatus): Long = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** `old` rows whose key `batch` does not carry (null keys alike),
@@ -745,7 +762,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   private def compact(table: String, f: BucketsFile): Unit = {
     val d = f.delta.get
     rewrite(table, f, f.schema.get, deltaRows(table, d, f.schema.get), d.key,
-      currentVersion(table).get + 1L, full = false)
+      currentVersion(table).get + 1L, full = false, f.versions)
   }
 
   /** Copy-on-write MERGE of `rows` into the base buckets, written at
@@ -753,11 +770,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * base rows (null keys alike) and new keys append. Rewrites ONLY
     * the buckets `rows` hash into, or every bucket when `full` (a flat
     * snapshot is re-bucketed; a schema evolution widens every file).
-    * The caller has folded any delta into `rows`. Returns false, and
-    * commits nothing, when `rows` is empty.
+    * The caller has folded any delta into `rows`; `prev` keeps its
+    * grace (see [[cleanOld]]). Returns false, and commits nothing,
+    * when `rows` is empty.
     */
   private def rewrite(table: String, f: BucketsFile, schema: StructType, rows: DataFrame,
-      key: String, v: Long, full: Boolean): Boolean = {
+      key: String, v: Long, full: Boolean, prev: Set[Long]): Boolean = {
     val nb = f.nb.getOrElse(nBuckets)
     val upd = rows.withColumn("__bucket", bucketOf(key, nb))
     val touched = upd.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
@@ -791,33 +809,29 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val (base, baseBytes) = if (full) (Map.empty[Int, Long], Map.empty[Int, Long])
       else (m -- touched, f.bytes -- touched)
     commit(table, v, base ++ written.map { case (b, _) => b -> v }, baseBytes ++ written,
-      nb, next.schema, None, f.versions)
+      nb, next.schema, None, prev)
     true
   }
 
-  /** Parquet bytes under `dir` by the bucket dir they sit in (-1 for
-    * files outside one), from one recursive listing. */
-  private def bytesByBucket(dir: Path): Map[Int, Long] = {
-    if (!fs.exists(dir)) return Map.empty
-    val it = fs.listFiles(dir, true)
-    val sizes = scala.collection.mutable.Map.empty[Int, Long].withDefaultValue(0L)
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (!name.startsWith(".") && !name.startsWith("_")) {
-        val parent = st.getPath.getParent.getName
-        val b = if (parent.startsWith("__bucket=")) parent.stripPrefix("__bucket=").toInt else -1
-        sizes(b) += st.getLen
+  /** The parquet files in `dir` and its bucket dirs. Plain listings: a
+    * recursive `listFiles` returns located statuses, which on the local
+    * filesystem load each file's permissions (a shell command per file
+    * without Hadoop's native library; ~110 ms for a 16-bucket write). */
+  private def dataFiles(dir: Path): Seq[FileStatus] = {
+    if (!fs.exists(dir)) return Seq.empty
+    val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
+    (files ++ (if (dirs.isEmpty) Nil else fs.listStatus(dirs.map(_.getPath).toArray).toSeq))
+      .filter { st =>
+        val name = st.getPath.getName
+        !name.startsWith(".") && !name.startsWith("_")
       }
-    }
-    sizes.toMap
   }
 
   /** Buckets present in a freshly written snapshot dir, with their bytes. */
   private def writtenBuckets(table: String, v: Long): Map[Int, Long] =
-    bytesByBucket(new Path(versionDir(table, v))) - (-1)
-
-  private def dataBytes(dir: Path): Long = bytesByBucket(dir).values.sum
+    dataFiles(new Path(versionDir(table, v))).map(st => st.getPath.getParent.getName -> st.getLen)
+      .collect { case (d, n) if d.startsWith("__bucket=") => d.stripPrefix("__bucket=").toInt -> n }
+      .groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Delete rows whose key appears in `keys` — compacts any delta first,
     * then rewrites only the touched buckets.
@@ -829,6 +843,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val keyed = keys.select(key).withColumn("__bucket", bucketOf(key, nb))
     val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return
+    // the pre-delete versions keep their one-commit grace across both
+    // commits when a compaction runs first
+    val prev = f.versions
     if (f.delta.nonEmpty) {
       compact(table, f)
       f = state(table)
@@ -860,7 +877,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // committed empty bucket map would make exists() true while
       // read() throws
       drop(table)
-    } else commit(table, v, next2, baseBytes ++ written, nb, next.schema, None, f.versions)
+    } else commit(table, v, next2, baseBytes ++ written, nb, next.schema, None, prev ++ f.versions)
   }
 
   def drop(table: String): Unit = {

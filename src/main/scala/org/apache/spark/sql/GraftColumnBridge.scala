@@ -65,6 +65,15 @@ object GraftColumnBridge {
   def broadcastThreshold(spark: SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
 
+  /** The type a union of columns typed `a` and `b` takes under the
+    * session's coercion rules (ANSI or not), or None when they do not
+    * unify. */
+  def unionType(spark: SparkSession, a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.DataType] =
+    if (spark.sessionState.conf.ansiEnabled)
+      org.apache.spark.sql.catalyst.analysis.AnsiTypeCoercion.findWiderTypeForTwo(a, b)
+    else org.apache.spark.sql.catalyst.analysis.TypeCoercion.findWiderTypeForTwo(a, b)
+
   /** The optimizer's size estimate of `df`, as broadcast planning reads it. */
   def sizeInBytes(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 

@@ -571,6 +571,59 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(contents(store).size == 2000)
   }
 
+  test("a handle read before a delete or a widening MERGE that compacts first still reads") {
+    val dir = TestSpark.tempDir("graft_ps_grace2_")
+    val store = new ParquetStore(spark, dir)
+    def rowSet(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSet
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    store.merge("t", rows(1 to 10, "v2"), "pkey")
+    assert(bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    // a delete compacts the delta (one commit), then commits its own
+    val beforeDelete = store.read("t")
+    val deleteRows = rowSet(beforeDelete)
+    store.delete("t", Seq("3", "500").toDF("pkey"), "pkey")
+    assert(rowSet(beforeDelete) == deleteRows)
+    assert(contents(store).size == 1998 && !contents(store).contains(Some("3")))
+    // a widening MERGE compacts the delta, then rewrites every bucket
+    store.merge("t", rows(20 to 30, "v3"), "pkey")
+    assert(bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    val beforeWiden = store.read("t")
+    val widenRows = rowSet(beforeWiden)
+    store.merge("t", rows(40 to 45, "v4").withColumn("extra", org.apache.spark.sql.functions.lit(1)),
+      "pkey")
+    assert(rowSet(beforeWiden) == widenRows)
+    val widened = store.read("t")
+    assert(widened.columns.toSeq == Seq("pkey", "payload", "extra") && widened.count() == 1998)
+    assert(widened.where("pkey = '42'").head().getInt(2) == 1)
+  }
+
+  test("a MERGE of a narrower column type writes a delta; a wider one rewrites every bucket") {
+    import org.apache.spark.sql.types.LongType
+    val dir = TestSpark.tempDir("graft_ps_types_")
+    val store = new ParquetStore(spark, dir)
+    def longs(ids: Range, sign: Long) = ids.map(i => (i.toString, sign * i)).toDF("pkey", "n")
+    def ints(ids: Range, sign: Int) = ids.map(i => (i.toString, sign * i)).toDF("pkey", "n")
+    def value(table: String, k: String) = store.read(table).where(s"pkey = '$k'").head().getLong(1)
+    // an int batch into a long column: the union keeps long, so a delta
+    store.merge("t", longs(1 to 2000, 1L), "pkey")
+    val map0 = bucketsFile(dir)._2
+    store.merge("t", ints(1 to 10, -1), "pkey")
+    val (header, map1) = bucketsFile(dir)
+    assert(map1 == map0 && header.exists(_.startsWith("#delta ")), header)
+    assert(store.read("t").schema("n").dataType == LongType)
+    assert(value("t", "3") == -3L && value("t", "30") == 30L)
+    // a long batch into an int column widens it: every bucket rewritten
+    store.merge("u", ints(1 to 2000, 1), "pkey")
+    val before = bucketsFile(dir, "u")._2
+    store.merge("u", longs(1 to 10, -1L), "pkey")
+    val (headerU, after) = bucketsFile(dir, "u")
+    assert(!headerU.exists(_.startsWith("#delta ")), headerU)
+    assert(after.size == before.size && after.forall(_.split(" ")(1) == "1"),
+      s"every bucket at the new version: $after")
+    assert(store.read("u").schema("n").dataType == LongType)
+    assert(value("u", "3") == -3L && value("u", "30") == 30L && store.read("u").count() == 2000)
+  }
+
   test("model: seeded interleavings of merge, delete, overwrite, compaction and reopening " +
       "read as an eager upsert") {
     val ops = Seq("small", "small", "small", "small", "large", "delete", "overwrite",
