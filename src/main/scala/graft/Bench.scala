@@ -14,6 +14,12 @@ package graft
   * per-query ok/failed flag (`status`). A failed query no longer
   * silently contributes a near-zero time to an exit-0 run: the
   * process exits 1 if any query threw.
+  *
+  * The record file (`BENCH_FULL.json` at 32 cpus, `BENCH_FULL_c<n>.json`
+  * at n cpus) is rewritten by every run: it is the last run's record,
+  * not a minimum kept across runs. Each query's value in it is the
+  * minimum over that run's attempts (the planned best-of-N plus any
+  * tiebreak or rerun).
   */
 object Bench {
   private def loadAvg1m(): Double =

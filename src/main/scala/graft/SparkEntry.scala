@@ -22,7 +22,7 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = Oracles.sql
 
-  /** The local session the mains (Verify, Bench, ProfileQ) run on:
+  /** The local session the mains (Verify, Bench) run on:
     * `local[cpus]` with one shuffle partition per core, UTC, no UI,
     * and nanosecond parquet timestamps read as longs (the testdata has
     * shipped events.ts both as TIMESTAMP(NANOS) and as µs; see

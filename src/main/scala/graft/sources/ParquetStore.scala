@@ -31,9 +31,10 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   *    min(mean base-bucket bytes, `spark.sql.autoBroadcastJoinThreshold`)
   *    — so the delta stays smaller than a bucket and broadcastable —
   *    and before a [[delete]], on a MERGE that widens the schema, and on
-  *    the first MERGE into a flat (overwrite) or legacy snapshot. A
-  *    negative threshold (broadcasts off) makes every MERGE copy on
-  *    write.
+  *    the first MERGE into a flat (overwrite) snapshot. A negative
+  *    threshold (broadcasts off) makes every MERGE copy on write.
+  *  - A [[delete]] compacts any delta, then runs the same copy-on-write
+  *    body with the keys to remove and no rows to add.
   *
   * Sizing: `nBuckets` is the one layout knob. It sets the compaction
   * granularity (thousands of buckets at 100 TB so a compaction rewrites
@@ -48,7 +49,9 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   *                      which snapshot dir holds each bucket's current
   *                      data and its parquet bytes (-1 = flat,
   *                      unbucketed snapshot from overwrite()). Header
-  *                      lines start with `#`:
+  *                      lines start with `#`; every commit writes `#n`,
+  *                      `#schema` and `#token`, and a `_BUCKETS` that
+  *                      lacks one fails loudly:
   *                      `#n <buckets>` pins the bucket count,
   *                      `#schema <json>` is the schema the commit wrote
   *                      (so a read needs no parquet schema inference,
@@ -67,8 +70,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   * reference. With a delta the handle is the base buckets null-safely
   * (`<=>`) left-anti-joined against the broadcast delta keys, union the
   * delta: last writer per key, never all-pairs. A table without a
-  * delta reads its buckets alone. Tables committed before the header
-  * existed are read with schema inference, uncached.
+  * delta reads its buckets alone.
   *
   * Both pointer files flip via overwriting rename (posix/HDFS rename
   * onto an existing path is atomic), so readers never observe a
@@ -135,14 +137,14 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   private def versionDir(table: String, v: Long) = s"$root/$table/v_$v"
 
   /** Effective bucket count for a table: the count persisted in its
-    * _BUCKETS header (written at first bucketed commit), falling back
-    * to the constructor value for new or legacy tables. Persisting it
+    * _BUCKETS header (written at its first commit), falling back to
+    * the constructor value for a new table. Persisting it
     * makes the layout self-describing — reopening an existing table
     * with a different constructor nBuckets would otherwise hash keys
     * into the wrong buckets and silently duplicate/miss rows on merge.
     */
   private def tableBuckets(table: String): Int =
-    readBucketsFile(table).flatMap(_.nb).getOrElse(nBuckets)
+    readBucketsFile(table).fold(nBuckets)(_.nb)
 
   private def bucketOf(key: String, nb: Int) = pmod(hash(col(key)), lit(nb))
 
@@ -287,35 +289,30 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val raw =
       try new String(readFully(bucketsPath(table)), "UTF-8")
       catch { case _: java.io.FileNotFoundException => return None }
+    def malformed(what: String) =
+      new IllegalStateException(s"$root/$table: _BUCKETS $what")
     val lines = raw.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
     def header(tag: String) =
       lines.find(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag ").trim)
-    // "bucket version" lines, with the bucket's bytes since the delta
-    // store; a commit made before then has no bytes column
-    val entries = lines.filterNot(_.startsWith("#")).map(_.split("\\s+"))
-    Some(BucketsFile(raw, header("n").map(_.toInt),
-      header("schema").map(j => DataType.fromJson(j).asInstanceOf[StructType]),
-      header("token"),
-      entries.map(e => e(0).toInt -> e(1).toLong).toMap,
-      entries.collect { case Array(b, _, n) => b.toInt -> n.toLong }.toMap,
+    def required(tag: String) = header(tag).getOrElse(throw malformed(s"lacks its #$tag line"))
+    val entries = lines.filterNot(_.startsWith("#")).map(_.split("\\s+") match {
+      case Array(b, v, n) => (b.toInt, v.toLong, n.toLong)
+      case e => throw malformed(s"line '${e.mkString(" ")}' is not 'bucket version bytes'")
+    })
+    Some(BucketsFile(raw, required("n").toInt,
+      DataType.fromJson(required("schema")).asInstanceOf[StructType],
+      required("token"),
+      entries.map { case (b, v, _) => b -> v }.toMap,
+      entries.map { case (b, _, n) => b -> n }.toMap,
       header("delta").map { d =>
         val Array(v, key) = d.split(" ", 2)
         Delta(v.toLong, key)
       }))
   }
 
-  /** The committed state of an existing table: its `_BUCKETS`, or for a
-    * legacy table without one, its flat snapshot and no header. */
-  private def state(table: String): BucketsFile =
-    readBucketsFile(table).getOrElse(
-      BucketsFile("", None, None, None, legacyBucketMap(table), Map.empty, None))
-
-  // Migration: a pre-bucketing table has _CURRENT but no _BUCKETS (the
-  // old format stored one flat snapshot at the current version).
-  // Synthesize the flat map so legacy warehouses stay readable; the
-  // next merge re-buckets them like any flat overwrite() snapshot.
-  private def legacyBucketMap(table: String): Map[Int, Long] =
-    currentVersion(table).map(v => Map(-1 -> v)).getOrElse(Map.empty)
+  /** The committed state of an existing table. */
+  private def state(table: String): BucketsFile = readBucketsFile(table).getOrElse(
+    throw new IllegalStateException(s"$root/$table: _CURRENT without _BUCKETS"))
 
   private def readFully(p: Path): Array[Byte] = {
     val in = controlFs.open(p)
@@ -326,21 +323,18 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     m.toSeq.sortBy(_._1).map {
       case (-1, v) => versionDir(table, v)
       case (b, v) => s"${versionDir(table, v)}/__bucket=$b"
-    }.filter(p => fs.exists(new Path(p)))
+    }
 
   def read(table: String): DataFrame = {
     if (!exists(table))
       throw new IllegalStateException(s"no such table: $root/$table")
     val f = state(table)
-    if (f.schema.isEmpty || f.token.isEmpty) scan(table, f)
+    val cached = handles.get(table)
+    if (cached != null && cached._1 == f.raw) cached._2
     else {
-      val cached = handles.get(table)
-      if (cached != null && cached._1 == f.raw) cached._2
-      else {
-        val df = scan(table, f)
-        handles.put(table, (f.raw, df))
-        df
-      }
+      val df = scan(table, f)
+      handles.put(table, (f.raw, df))
+      df
     }
   }
 
@@ -349,9 +343,10 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   @transient private lazy val handles =
     new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
 
-  /** Parquet scan of a commit's buckets, typed by its schema when the
-    * commit recorded one and inferred (a Spark job) otherwise; with a
+  /** Parquet scan of a commit's buckets, typed by its schema; with a
     * delta, the base rows the delta does not replace, plus the delta.
+    * A mapped bucket dir that is missing fails the scan: a read never
+    * returns a subset of the committed rows.
     */
   private def scan(table: String, f: BucketsFile): DataFrame = {
     val paths = bucketDataPaths(table, f.map)
@@ -360,13 +355,13 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // recursiveFileLookup disables partition-directory inference — the
     // leaf dirs come from different snapshot versions, which would
     // otherwise trip "conflicting directory structures".
-    val reader = spark.read.option("recursiveFileLookup", "true")
-    val base = f.schema.fold(reader)(reader.schema).parquet(paths: _*)
+    val base = spark.read.schema(f.schema).option("recursiveFileLookup", "true")
+      .parquet(paths: _*)
     f.delta.fold(base) { d =>
       // the delta is below the broadcast threshold by construction
       // (compaction bound); null-safe, so a null-key delta row
       // replaces the base's null-key row
-      val delta = deltaRows(table, d, f.schema.get)
+      val delta = deltaRows(table, d, f.schema)
       base.join(broadcast(delta.select(col(d.key).as("__dk"))),
         base(d.key) <=> col("__dk"), "left_anti").unionByName(delta)
     }
@@ -415,11 +410,6 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       fc.rename(fs.makeQualified(tmp), fs.makeQualified(target),
         org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
-    // drop any stale checksum sidecar a pre-r16 (checksummed) write
-    // left for this control file — raw readers ignore it, but a
-    // leftover would confuse external checksummed tooling forever
-    val crc = new Path(target.getParent, s".${target.getName}.crc")
-    if (controlFs.exists(crc)) controlFs.delete(crc, false)
   }
 
   private def commit(table: String, v: Long, bucketMap: Map[Int, Long],
@@ -444,9 +434,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val bucketsContent =
       (Seq(s"#n $nb", s"#schema ${schema.json}", s"#token ${java.util.UUID.randomUUID()}") ++
         delta.map(d => s"#delta ${d.v} ${d.key}") ++
-        bucketMap.toSeq.sortBy(_._1).map { case (b, ver) =>
-          s"$b $ver" + bytes.get(b).fold("")(n => s" $n")
-        }).mkString("\n")
+        bucketMap.toSeq.sortBy(_._1).map { case (b, ver) => s"$b $ver ${bytes(b)}" })
+        .mkString("\n")
     if (currentVersion(table).isEmpty) {
       atomicWrite(bucketsPath(table), bucketsContent)
       atomicWrite(pointer(table), v.toString)
@@ -461,10 +450,21 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * catalog). Written flat — a subsequent merge re-buckets.
     */
   def overwrite(table: String, df: DataFrame): Unit = {
-    val prev = state(table).versions
+    val prev = priorVersions(table)
     val v = currentVersion(table).getOrElse(-1L) + 1L
     df.write.mode(SaveMode.Overwrite).parquet(versionDir(table, v))
-    commit(table, v, Map(-1 -> v), Map.empty, tableBuckets(table), df.schema, None, prev)
+    commitFlat(table, v, df.schema, prev)
+  }
+
+  /** The version dirs the table's last commit reads from; none for a
+    * new table. */
+  private def priorVersions(table: String): Set[Long] =
+    readBucketsFile(table).fold(Set.empty[Long])(_.versions)
+
+  /** Commits the flat snapshot written at `v`, with its bytes. */
+  private def commitFlat(table: String, v: Long, written: StructType, prev: Set[Long]): Unit = {
+    val bytes = dataFiles(new Path(versionDir(table, v))).map(_.getLen).sum
+    commit(table, v, Map(-1 -> v), Map(-1 -> bytes), tableBuckets(table), written, None, prev)
   }
 
   /** [[overwrite]] with the snapshot's properties committed
@@ -495,7 +495,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   def overwriteWithMeta(table: String, df: DataFrame,
       props: Map[String, String]): Unit = {
     validateMetaProps(props)
-    val prev = state(table).versions
+    val prev = priorVersions(table)
     val v0 = currentVersion(table)
     val v = v0.getOrElse(-1L) + 1L
     def checkUnmoved(stage: String): Unit = {
@@ -547,7 +547,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
     atomicWrite(metaVPath(table, v), renderMeta(props))
     checkUnmoved("before the pointer flip")
-    commit(table, v, Map(-1 -> v), Map.empty, tableBuckets(table), df.schema, None, prev)
+    commitFlat(table, v, df.schema, prev)
   }
 
   /** The current snapshot's data and the properties committed WITH it,
@@ -590,8 +590,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       sidecar match {
         case Some(m) =>
           // the commit's schema when the bucket map just read is this
-          // version's flat snapshot; inferred (a Spark job) otherwise
-          val schema = readBucketsFile(table).filter(_.map == Map(-1 -> v)).flatMap(_.schema)
+          // version's flat snapshot; inferred (a Spark job) in the window
+          // where a commit has moved _CURRENT but not yet _BUCKETS
+          val schema = readBucketsFile(table).filter(_.map == Map(-1 -> v)).map(_.schema)
           val reader = spark.read.option("recursiveFileLookup", "true")
           return (schema.fold(reader)(reader.schema).parquet(versionDir(table, v)), m)
         case None =>
@@ -635,13 +636,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   def merge(table: String, updates: DataFrame, key: String): Boolean = {
     if (!exists(table)) return firstMerge(table, updates, key)
     val f = state(table)
-    // The current schema comes from the commit header; only a legacy
-    // table without one pays a schema inference (a Spark job), once.
-    val schema = f.schema.getOrElse {
-      val allPaths = bucketDataPaths(table, f.map)
-      if (allPaths.isEmpty) updates.schema
-      else spark.read.option("recursiveFileLookup", "true").parquet(allPaths: _*).schema
-    }
+    val schema = f.schema
     // additive schema evolution: updates carrying a column the table
     // lacks, or a column the union widens (an int batch into a long
     // column does not), force a one-time FULL rewrite, so every
@@ -651,9 +646,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val evolving = updates.schema.exists(u => schema.find(_.name == u.name).forall(c =>
       GraftColumnBridge.unionType(spark, c.dataType, u.dataType)
         .forall(w => !DataTypeUtils.equalsIgnoreNullability(w, c.dataType))))
-    if (!(f.schema.isEmpty || f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
+    if (!(f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
         f.delta.exists(_.key != key)))
-      return appendDelta(table, f, schema, updates, key, currentVersion(table).get + 1L)
+      return appendDelta(table, f, updates, key, currentVersion(table).get + 1L)
     // copy-on-write: several actions over `updates` (the touched-bucket
     // collect, the anti-join probe, the union write) — persisted, so
     // callers need not pre-persist to avoid repeated upstream I/O
@@ -670,15 +665,15 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // commits when a compaction ran first
       val prev = f.versions ++ g.versions
       val v = currentVersion(table).get + 1L
-      g.delta match {
-        case None =>
-          rewrite(table, g, schema, upd, key, v, full = g.map.contains(-1) || evolving, prev)
+      val rows = g.delta match {
+        case None => upd
         case Some(d) =>
           // compaction of delta ∪ batch in one commit
           if (upd.isEmpty) return false
-          rewrite(table, g, schema, lastWriter(deltaRows(table, d, schema),
-            upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key), key, v, full = false, prev)
+          lastWriter(deltaRows(table, d, schema),
+            upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key)
       }
+      rewrite(table, g, rows, Some(rows), key, v, full = g.map.contains(-1) || evolving, prev)
     } finally upd.unpersist()
   }
 
@@ -701,13 +696,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 
   /** The delta bytes at which a MERGE compacts: the mean base bucket's
     * bytes, capped by the broadcast threshold the delta read relies
-    * on. 0 when no bucket's bytes are known (a commit made before the
-    * bucket map carried them), so such a table compacts first. */
-  private def compactionBound(f: BucketsFile): Long = {
-    val known = f.map.keys.toSeq.flatMap(f.bytes.get)
-    val mean = if (known.isEmpty) 0L else known.sum / known.size
-    math.min(mean, GraftColumnBridge.broadcastThreshold(spark))
-  }
+    * on. */
+  private def compactionBound(f: BucketsFile): Long =
+    math.min(f.bytes.values.sum / f.bytes.size.max(1), GraftColumnBridge.broadcastThreshold(spark))
 
   /** Writes the table's next delta — the old delta's rows whose key
     * `upd` does not carry, plus `upd` — and commits it beside the
@@ -716,12 +707,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * empty `upd` commits nothing; the written files' footers tell, so
     * it costs no job.
     */
-  private def appendDelta(table: String, f: BucketsFile, schema: StructType,
-      upd: DataFrame, key: String, v: Long): Boolean = {
+  private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String,
+      v: Long): Boolean = {
     val dir = new Path(versionDir(table, v))
     // in the table's column order and types (a narrower column is cast
     // up); a missing column fails here, loudly
-    val batch = upd.select(schema.fields.map { c =>
+    val batch = upd.select(f.schema.fields.map { c =>
       if (upd.schema.find(_.name == c.name)
           .forall(u => DataTypeUtils.equalsIgnoreNullability(u.dataType, c.dataType))) col(c.name)
       else col(c.name).cast(c.dataType).as(c.name)
@@ -729,7 +720,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // a shuffle either way, whose partitions adaptive execution sizes:
     // one file for a small delta
     val next = f.delta.fold(batch.hint("rebalance"))(d =>
-      lastWriter(deltaRows(table, d, schema), batch, key))
+      lastWriter(deltaRows(table, d, f.schema), batch, key))
     next.write.mode(SaveMode.Overwrite).parquet(dir.toString)
     val files = dataFiles(dir)
     if (files.map(rowCount).sum == 0L) {
@@ -737,10 +728,10 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       return false
     }
     val written = Delta(v, key)
-    if (files.map(_.getLen).sum > compactionBound(f))
-      rewrite(table, f, schema, deltaRows(table, written, schema), key, v + 1L, full = false,
-        f.versions)
-    else commit(table, v, f.map, f.bytes, f.nb.getOrElse(nBuckets), schema, Some(written), f.versions)
+    if (files.map(_.getLen).sum > compactionBound(f)) {
+      val rows = deltaRows(table, written, f.schema)
+      rewrite(table, f, rows, Some(rows), key, v + 1L, full = false, f.versions)
+    } else commit(table, v, f.map, f.bytes, f.nb, f.schema, Some(written), f.versions)
     true
   }
 
@@ -761,55 +752,62 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   /** Folds the table's delta into its buckets. */
   private def compact(table: String, f: BucketsFile): Unit = {
     val d = f.delta.get
-    rewrite(table, f, f.schema.get, deltaRows(table, d, f.schema.get), d.key,
-      currentVersion(table).get + 1L, full = false, f.versions)
+    val rows = deltaRows(table, d, f.schema)
+    rewrite(table, f, rows, Some(rows), d.key, currentVersion(table).get + 1L, full = false,
+      f.versions)
   }
 
-  /** Copy-on-write MERGE of `rows` into the base buckets, written at
-    * version `v` and committed with no delta: `rows` replace same-key
-    * base rows (null keys alike) and new keys append. Rewrites ONLY
-    * the buckets `rows` hash into, or every bucket when `full` (a flat
+  /** The copy-on-write body, written at version `v` and committed with
+    * no delta: base rows whose key `keys` carries (null keys alike) are
+    * removed and `rows`, when given, are appended — a MERGE passes its
+    * rows as both, a [[delete]] only the keys. Rewrites ONLY the
+    * buckets `keys` hash into, or every bucket when `full` (a flat
     * snapshot is re-bucketed; a schema evolution widens every file).
     * The caller has folded any delta into `rows`; `prev` keeps its
-    * grace (see [[cleanOld]]). Returns false, and commits nothing,
-    * when `rows` is empty.
+    * grace (see [[cleanOld]]). A result with no row left drops the
+    * table. Returns false, and commits nothing, when `keys` is empty
+    * or, with no rows to add, none of the buckets it hashes into holds
+    * data.
     */
-  private def rewrite(table: String, f: BucketsFile, schema: StructType, rows: DataFrame,
+  private def rewrite(table: String, f: BucketsFile, keys: DataFrame, rows: Option[DataFrame],
       key: String, v: Long, full: Boolean, prev: Set[Long]): Boolean = {
-    val nb = f.nb.getOrElse(nBuckets)
-    val upd = rows.withColumn("__bucket", bucketOf(key, nb))
-    val touched = upd.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
+    val keyed = keys.select(col(key)).withColumn("__bucket", bucketOf(key, f.nb))
+    val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return false
-    val m = f.map
-    val curPaths = bucketDataPaths(table, if (full) m else m.filter { case (b, _) => touched(b) })
-    val cur0 =
-      if (curPaths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rows.schema)
-      else spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(curPaths: _*)
+    val cur = if (full) f.map else f.map.filter { case (b, _) => touched(b) }
+    if (cur.isEmpty && rows.isEmpty) return false
     // a flat snapshot has no bucket dirs yet — its rows are bucketed
     // by recomputed bucket, every one of them rewritten
-    val curAll = cur0.withColumn("__bucket", bucketOf(key, nb))
-    val cur = if (full) curAll else curAll.filter(col("__bucket").isin(touched.toSeq: _*))
+    val curRows = spark.read.schema(f.schema).option("recursiveFileLookup", "true")
+      .parquet(bucketDataPaths(table, cur): _*).withColumn("__bucket", bucketOf(key, f.nb))
     // null-safe anti join: a null-key update must REPLACE the
-    // existing null-key row, not append a duplicate every merge
-    // (plain equality never matches null = null)
-    val kept = cur.join(upd.select(col(key).as("__mk")), cur(key) <=> col("__mk"), "left_anti")
-    // schema evolution, additive only: a column newly produced by the
-    // render path (e.g. search_token_counts) must not be silently
-    // dropped when merging into a pre-existing table — widen KEPT
-    // rows with nulls instead, so consumers see the column and can
-    // coalesce legacy rows. An update missing a CURRENT column still
-    // fails loudly in unionByName (a sign the caller regressed).
-    val newCols = upd.columns.filterNot(cur.columns.contains)
-    val keptWide = newCols.foldLeft(kept)((d, c) =>
-      d.withColumn(c, lit(null).cast(upd.schema(c).dataType)))
-    val next = keptWide.unionByName(upd)
+    // existing null-key row, not append a duplicate every merge, and
+    // deleting a null key removes the null-key row (plain equality
+    // never matches null = null)
+    val kept = curRows.join(keyed.select(col(key).as("__mk")), curRows(key) <=> col("__mk"),
+      "left_anti")
+    val next = rows.fold(kept) { r =>
+      val upd = r.withColumn("__bucket", bucketOf(key, f.nb))
+      // schema evolution, additive only: a column newly produced by the
+      // render path (e.g. search_token_counts) must not be silently
+      // dropped when merging into a pre-existing table — widen KEPT
+      // rows with nulls instead, so consumers see the column and can
+      // coalesce legacy rows. An update missing a CURRENT column still
+      // fails loudly in unionByName (a sign the caller regressed).
+      upd.columns.filterNot(kept.columns.contains).foldLeft(kept)((d, c) =>
+        d.withColumn(c, lit(null).cast(upd.schema(c).dataType))).unionByName(upd)
+    }
     bucketedWrite(next, versionDir(table, v))
     val written = writtenBuckets(table, v)
     val (base, baseBytes) = if (full) (Map.empty[Int, Long], Map.empty[Int, Long])
-      else (m -- touched, f.bytes -- touched)
-    commit(table, v, base ++ written.map { case (b, _) => b -> v }, baseBytes ++ written,
-      nb, next.schema, None, prev)
+      else (f.map -- touched, f.bytes -- touched)
+    // touched buckets that became empty simply vanish from the map
+    val map = base ++ written.map { case (b, _) => b -> v }
+    // every remaining row deleted: an empty table is a nonexistent
+    // table (same invariant as the zero-row first merge) — a committed
+    // empty bucket map would make exists() true while read() throws
+    if (map.isEmpty) drop(table)
+    else commit(table, v, map, baseBytes ++ written, f.nb, next.schema, None, prev)
     true
   }
 
@@ -833,51 +831,22 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       .collect { case (d, n) if d.startsWith("__bucket=") => d.stripPrefix("__bucket=").toInt -> n }
       .groupMapReduce(_._1)(_._2)(_ + _)
 
-  /** Delete rows whose key appears in `keys` — compacts any delta first,
-    * then rewrites only the touched buckets.
+  /** Delete rows whose key appears in `keys`: compacts any delta, then
+    * runs the copy-on-write body of [[merge]] with no rows to add. An
+    * empty `keys` commits nothing and keeps the delta.
     */
   def delete(table: String, keys: DataFrame, key: String): Unit = {
     if (!exists(table)) return
-    var f = state(table)
-    val nb = f.nb.getOrElse(nBuckets)
-    val keyed = keys.select(key).withColumn("__bucket", bucketOf(key, nb))
-    val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
-    if (touched.isEmpty) return
-    // the pre-delete versions keep their one-commit grace across both
-    // commits when a compaction runs first
-    val prev = f.versions
-    if (f.delta.nonEmpty) {
+    val f = state(table)
+    val g = if (f.delta.isEmpty) f else {
+      if (keys.isEmpty) return
       compact(table, f)
-      f = state(table)
+      state(table)
     }
-    val m = f.map
-    val flat = m.contains(-1)
-    val curPaths = bucketDataPaths(table,
-      if (flat) m else m.filter { case (b, _) => touched.contains(b) })
-    if (curPaths.isEmpty) return
-    // the current schema from the commit header, inferred (a Spark
-    // job) only for a legacy table without one
-    val reader = spark.read.option("recursiveFileLookup", "true")
-    val cur = f.schema.fold(reader)(reader.schema).parquet(curPaths: _*)
-      .withColumn("__bucket", bucketOf(key, nb))
-    val scoped = if (flat) cur else cur.filter(col("__bucket").isin(touched.toSeq: _*))
-    // null-safe like merge: deleting a null key removes the null-key row
-    val next = scoped.join(keyed.select(col(key).as("__dk")),
-      scoped(key) <=> col("__dk"), "left_anti")
-    val v = currentVersion(table).get + 1L
-    bucketedWrite(next, versionDir(table, v))
-    val written = writtenBuckets(table, v)
-    val (base, baseBytes) = if (flat) (Map.empty[Int, Long], Map.empty[Int, Long])
-      else (m -- touched, f.bytes -- touched)
-    // touched buckets that became empty simply vanish from the map
-    val next2 = base ++ written.map { case (b, _) => b -> v }
-    if (next2.isEmpty) {
-      // every remaining row deleted: an empty table is a nonexistent
-      // table (same invariant as the zero-row first merge) — a
-      // committed empty bucket map would make exists() true while
-      // read() throws
-      drop(table)
-    } else commit(table, v, next2, baseBytes ++ written, nb, next.schema, None, prev ++ f.versions)
+    // the pre-delete versions keep their one-commit grace across both
+    // commits when a compaction ran first
+    rewrite(table, g, keys, None, key, currentVersion(table).get + 1L,
+      full = g.map.contains(-1), f.versions ++ g.versions)
   }
 
   def drop(table: String): Unit = {
@@ -918,13 +887,11 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 
 object ParquetStore {
   /** One `_BUCKETS` file: its exact text, the header fields, the
-    * bucket → snapshot version map and each bucket's bytes where the
-    * commit recorded them. Bucket -1 marks a flat (unbucketed)
+    * bucket → snapshot version map and each bucket's bytes. Bucket -1 marks a flat (unbucketed)
     * snapshot written by overwrite().
     */
-  private final case class BucketsFile(raw: String, nb: Option[Int],
-      schema: Option[StructType], token: Option[String], map: Map[Int, Long],
-      bytes: Map[Int, Long], delta: Option[Delta]) {
+  private final case class BucketsFile(raw: String, nb: Int, schema: StructType,
+      token: String, map: Map[Int, Long], bytes: Map[Int, Long], delta: Option[Delta]) {
     /** Every version dir this commit reads from. */
     def versions: Set[Long] = map.values.toSet ++ delta.map(_.v)
   }

@@ -124,8 +124,8 @@ class ParquetStoreSpec extends AnyFunSuite {
   private def inferences(jobs: Seq[(String, Boolean)]) = jobs.filter { case (site, inSql) =>
     site.startsWith("parquet at ParquetStore.scala") && !inSql }
 
-  /** Rewrite a table's `_BUCKETS` as a commit made before the schema
-    * and token header lines existed. */
+  /** Rewrite a table's `_BUCKETS` without its schema and token header
+    * lines, the format of commits made before they existed. */
   private def stripHeader(dir: String, table: String): Unit = {
     val p = java.nio.file.Paths.get(dir, table, "_BUCKETS")
     val lines = new String(java.nio.file.Files.readAllBytes(p), "UTF-8").split("\n")
@@ -156,19 +156,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(store.read("t").count() == 795)
   }
 
-  test("a MERGE into a legacy table without a schema header infers the schema once") {
-    val dir = TestSpark.tempDir("graft_ps_legacy_")
-    val store = new ParquetStore(spark, dir)
-    store.merge("t", rows(1 to 300, "v1"), "pkey")
-    stripHeader(dir, "t")
-    val seen = jobsOf(store.merge("t", rows(1 to 50, "v2"), "pkey"))
-    assert(inferences(seen).size == 1, s"one schema inference per legacy MERGE, jobs: $seen")
-    val got = store.read("t").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got.size == 300 && got("7") == "v2-7" && got("70") == "v1-70")
-    // the MERGE's commit writes the header: the next one infers nothing
-    assert(inferences(jobsOf(store.merge("t", rows(2 to 3, "v3"), "pkey"))).isEmpty)
-  }
-
   test("read: the header schema equals the inferred one, one handle per commit") {
     val dir = TestSpark.tempDir("graft_ps_handle_")
     val store = new ParquetStore(spark, dir)
@@ -190,10 +177,37 @@ class ParquetStoreSpec extends AnyFunSuite {
     store.overwrite("f", wide.limit(5))
     assert(!(store.read("f") eq first))
     assert(store.read("f").count() == 5)
-    // a legacy table reads by inference, uncached
-    stripHeader(dir, "f")
-    assert(inferences(jobsOf(store.read("f").count())).size == 1)
-    assert(store.read("f").schema == spark.read.parquet(s"$dir/f/v_0").schema)
+  }
+
+  test("a table without the header lines or without _BUCKETS fails loudly") {
+    val dir = TestSpark.tempDir("graft_ps_noheader_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 300, "v1"), "pkey")
+    stripHeader(dir, "t")
+    def failsNamingTable(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(s"$dir/t") && e.getMessage.contains("#schema"), e.getMessage)
+    }
+    failsNamingTable(store.read("t"))
+    failsNamingTable(store.merge("t", rows(1 to 50, "v2"), "pkey"))
+    failsNamingTable(store.delete("t", rows(1 to 5, "x").select("pkey"), "pkey"))
+    // the pre-bucketing layout: one flat snapshot and a _CURRENT pointer
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "t", "_BUCKETS"))
+    assert(store.exists("t"))
+    val e = intercept[IllegalStateException](store.read("t"))
+    assert(e.getMessage.contains(s"$dir/t") && e.getMessage.contains("_BUCKETS"), e.getMessage)
+  }
+
+  test("a read over a lost bucket dir fails instead of returning fewer rows") {
+    val dir = TestSpark.tempDir("graft_ps_lost_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 300, "v1"), "pkey")
+    val (_, map) = bucketsFile(dir)
+    val lost = java.nio.file.Paths.get(dir, "t", "v_0", s"__bucket=${map.head.split(" ")(0)}")
+    java.nio.file.Files.walk(lost).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.delete(p))
+    val e = intercept[org.apache.spark.sql.AnalysisException](store.read("t"))
+    assert(e.getMessage.contains("__bucket="), e.getMessage)
   }
 
   test("readSnapshotWithMeta takes the schema from the commit header: no inference job") {
@@ -208,9 +222,17 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(got._2 == Map("label" -> "a"))
     assert(got._1.schema == spark.read.parquet(s"$dir/cdf/v_0").schema)
     assert(got._1.collect().map(_.toString).toSet == wide.collect().map(_.toString).toSet)
-    // a commit without the header falls back to inference
-    stripHeader(dir, "cdf")
-    assert(inferences(jobsOf(store.readSnapshotWithMeta("cdf")._1.schema)).size == 1)
+    // in the window where a commit has moved _CURRENT but not yet
+    // _BUCKETS, the bucket map names the previous version: the schema
+    // is inferred from the current version's files
+    val buckets = java.nio.file.Paths.get(dir, "cdf", "_BUCKETS")
+    val committed = java.nio.file.Files.readAllBytes(buckets)
+    store.overwriteWithMeta("cdf", wide.limit(7), Map("label" -> "b"))
+    java.nio.file.Files.write(buckets, committed)
+    var raced: (org.apache.spark.sql.DataFrame, Map[String, String]) = null
+    val racedJobs = jobsOf { raced = store.readSnapshotWithMeta("cdf"); raced._1.schema }
+    assert(inferences(racedJobs).size == 1, s"one schema inference, jobs: $racedJobs")
+    assert(raced._2 == Map("label" -> "b") && raced._1.count() == 7)
   }
 
   test("merge widens a pre-existing table with new update columns") {
@@ -312,6 +334,47 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(store32.read("t").count() == 119)
   }
 
+  test("a copy-on-write MERGE into buckets the table does not hold yet appends its rows") {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val dir = TestSpark.tempDir("graft_ps_sparse_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 1, "v1"), "pkey")
+    val Seq(held) = bucketsFile(dir)._2.map(_.split(" ")(0).toInt)
+    // keys that hash only into buckets the table holds no dir for
+    val other = rows(2 to 40, "v2").where(pmod(hash(col("pkey")), lit(16)) =!= held)
+    val n = other.count().toInt
+    copyOnWrite(assert(store.merge("t", other, "pkey")))
+    assert(bucketsFile(dir)._2.size > 1 && bucketsFile(dir)._2.exists(_.startsWith(s"$held 0 ")),
+      bucketsFile(dir)._2)
+    val got = contents(store)
+    assert(got.size == n + 1 && got(Some("1")) == "v1-1")
+  }
+
+  test("a delete with no keys on a table with a delta commits nothing and keeps the delta") {
+    val dir = TestSpark.tempDir("graft_ps_delnone_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    store.merge("t", rows(1 to 10, "v2"), "pkey")
+    val before = bucketsFile(dir)
+    assert(before._1.exists(_.startsWith("#delta ")), before._1)
+    val v = store.currentVersion("t")
+    store.delete("t", Seq.empty[String].toDF("pkey"), "pkey")
+    assert(store.currentVersion("t") == v && bucketsFile(dir) == before)
+    assert(contents(store).size == 2000)
+  }
+
+  test("a delete of a key held only in the delta removes that row") {
+    val dir = TestSpark.tempDir("graft_ps_deldelta_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    store.merge("t", rows(2001 to 2005, "v2"), "pkey")
+    assert(bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    store.delete("t", Seq("2003").toDF("pkey"), "pkey")
+    assert(!bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    val got = contents(store)
+    assert(got.size == 2004 && !got.contains(Some("2003")) && got(Some("2004")) == "v2-2004")
+  }
+
   test("deleting every remaining key leaves the table nonexistent, not bricked") {
     val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_"))
     store.merge("t", rows(1 to 5, "v1"), "pkey")
@@ -328,25 +391,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     // and a later real merge works normally
     store.merge("t", rows(1 to 5, "v1"), "pkey")
     assert(store.read("t").count() == 5)
-  }
-
-  test("legacy table (_CURRENT without _BUCKETS) stays readable and re-buckets on merge") {
-    // simulate the pre-bucketing format: one flat snapshot at v_0 and
-    // a _CURRENT pointer, no _BUCKETS file
-    val root = TestSpark.tempDir("graft_ps_legacy_")
-    rows(1 to 50, "old").write.parquet(s"$root/t/v_0")
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(s"$root/t/_CURRENT"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-
-    val store = new ParquetStore(spark, root)
-    assert(store.exists("t"))
-    assert(store.read("t").count() == 50) // not "no data for table"
-    // the next merge re-buckets the legacy snapshot without losing rows
-    store.merge("t", rows(40 to 60, "new"), "pkey")
-    val got = store.read("t").collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(got.size == 60)
-    assert(got("10") == "old-10" && got("40") == "new-40" && got("60") == "new-60")
   }
 
   test("null-key rows upsert (replace), never accumulate duplicates") {
