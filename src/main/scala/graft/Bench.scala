@@ -1,72 +1,85 @@
 package graft
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line.
-  * Results are fully materialized through the noop sink (count()
-  * would let Catalyst prune the projections being measured).
+  * SPARK_GRAFT_SF_DIR (default sf0.1) at SPARK_GRAFT_CPUS (default 32)
+  * and prints two JSON lines. Results are fully materialized through
+  * the noop sink (count() would let Catalyst prune the projections
+  * being measured).
   *
-  * Contamination-evidence instrumentation (r6): the official r4/r5
-  * bench records were poisoned by concurrent sandbox load (dedup_exact
-  * 293s official vs 3.07s on an idle re-run of identical code). To
-  * make any future contamination self-evident, the JSON line now
-  * carries per-query start epoch-seconds (`ts`), the 1-minute
-  * /proc/loadavg sampled at each query start (`load`), and a
-  * per-query ok/failed flag (`status`). A failed query no longer
-  * silently contributes a near-zero time to an exit-0 run: the
-  * process exits 1 if any query threw.
+  * Protocol: best-of-2. Each query runs twice and records the min: the
+  * bench shares its box, and a single load spike once printed 18.5 s
+  * for a query that measures 0.80 s idle. A failed attempt is not
+  * retried, and the process exits 1 if any query failed.
   *
-  * The record file (`BENCH_FULL.json` at 32 cpus, `BENCH_FULL_c<n>.json`
-  * at n cpus) is rewritten by every run: it is the last run's record,
-  * not a minimum kept across runs. Each query's value in it is the
-  * minimum over that run's attempts (the planned best-of-N plus any
-  * tiebreak or rerun).
+  * One rerun rule ([[selectReruns]]): after every query's planned
+  * attempts, a query whose attempts both succeeded and either disagree
+  * by more than 2x or have a best more than 1.5x its value in the
+  * committed record ([[recordPath]] of this cpu count) is re-measured
+  * once. The re-measures run together at the end of the run, after one
+  * short settle, so each lands in a different load window from its
+  * planned attempts; the min is kept. Load that covers a whole window
+  * hits both planned attempts, so only this end-of-run pass can clear
+  * it; a genuine regression stays slow on the re-measure and the
+  * record stands. The diag's `rerun` map tells the two apart.
+  *
+  * The diag also carries each query's start epoch-seconds (`ts`), its
+  * 1-minute /proc/loadavg at start (`load`) and its `status`, so a run
+  * taken under load indicts itself. The record file is rewritten by
+  * every run: it is the last run's record, not a minimum kept across
+  * runs.
   */
 object Bench {
+  /** Planned attempts per query. */
+  private val Runs = 2
+  /** Planned attempts disagree when the slower is over this × the faster. */
+  private val Disagree = 2.0
+  /** A time is slow when it is over this × the committed one. */
+  private val Slow = 1.5
+
   private def loadAvg1m(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split("\\s+").head.toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Per-query seconds from the last COMMITTED BENCH_FULL.json — the
-    * reference the regression-aware tiebreak compares against (r15).
-    * Source order: `SPARK_GRAFT_BENCH_BASELINE` (a path; "" or "none"
-    * disables the tiebreak) → `git show HEAD:BENCH_FULL.json` (the
-    * official record — the WORKING-TREE file may be a stale local
-    * sf0.01 run) → the working-tree file. A baseline recorded at a
-    * DIFFERENT scale factor or cpu count than this run (the record's
-    * `sf` and `cpus` fields) is discarded: comparing an sf1 run
-    * against sf0.1 times would fire the "regression" retry on
-    * essentially every query and bury real regressions in noise. Any failure degrades to an empty map
-    * (tiebreak off), never an error: the baseline is diagnostic, a
-    * bench must run without one.
+  /** The record a run at `cpus` writes and reads its baseline from.
+    * `BENCH_FULL.json` is the official 32-cpu record; any other cpu
+    * count (-1 when SPARK_GRAFT_CPUS is not a number) has its own
+    * sidecar, so a scaling run never overwrites the official record and
+    * is judged against its own cpu count's times.
+    */
+  private[graft] def recordPath(cpus: Int): String =
+    if (cpus == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpus.json"
+
+  /** Per-query seconds of the COMMITTED record at [[recordPath]]:
+    * `git show HEAD:<path>` (the working-tree file may be a local run
+    * at another scale), else the working-tree file. A record at another
+    * scale or cpu count is discarded ([[baselineForScale]]). Any
+    * failure degrades to an empty map, never an error: a bench must
+    * run without a baseline (the over-baseline trigger is then off).
     */
   private def baselineTimes(sfDir: String, cpus: Int): Map[String, Double] = {
-    def readFile(path: String): Option[String] =
-      try Some(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8"))
-      catch { case _: Throwable => None }
+    val path = recordPath(cpus)
     def gitShow(): Option[String] =
       try {
-        val p = new ProcessBuilder("git", "show", "HEAD:BENCH_FULL.json").start()
+        val p = new ProcessBuilder("git", "show", s"HEAD:$path").start()
         val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
         if (p.waitFor() == 0 && out.nonEmpty) Some(out) else None
       } catch { case _: Throwable => None }
-    val src = sys.env.get("SPARK_GRAFT_BENCH_BASELINE") match {
-      case Some("") | Some("none") => None
-      case Some(path) => readFile(path)
-      case None => gitShow().orElse(readFile("BENCH_FULL.json"))
-    }
-    src.map(baselineForScale(_, sfDir, cpus)).getOrElse(Map.empty)
+    def readFile(): Option[String] =
+      try Some(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(path)), "UTF-8"))
+      catch { case _: Throwable => None }
+    gitShow().orElse(readFile())
+      .map(baselineForScale(_, sfDir, cpus)).getOrElse(Map.empty)
   }
 
   /** Baseline accepted only when its record NAMES this run's scale
-    * and cpu count: `exists`, not `forall` — a record
-    * with no `sf` field at all (legacy/foreign file) was previously
-    * accepted unconditionally, and a cross-scale baseline then fires
-    * the regression tiebreak on essentially every query, adding a
-    * wasted third attempt each. A record from another cpu count (or
-    * with no `cpus` field) is just as foreign: an 8-cpu scaling run
-    * judged against 32-cpu times reports bogus drift rows.
+    * and cpu count: `exists`, not `forall` — a record with no `sf`
+    * field (legacy/foreign file) is foreign, and a cross-scale baseline
+    * would put essentially every query over 1.5x and re-measure it. A
+    * record from another cpu count (or with no `cpus` field) is just as
+    * foreign: an 8-cpu run judged against 32-cpu times reports bogus
+    * ratios.
     */
   private[graft] def baselineForScale(json: String, sfDir: String,
       cpus: Int): Map[String, Double] = {
@@ -94,14 +107,12 @@ object Bench {
       .toMap
   }
 
-  /** Self-adjudication vs the committed record (r17): the judge (and
-    * the builder) re-derive "median per-query ratio vs the committed
-    * baseline" by hand every round to separate uniform environmental
-    * drift from real regressions — emit it from the SAME baseline the
-    * regression tiebreak already parses. Returns (median ratio,
-    * #queries over 1.5x); (-1.0, -1) when no baseline covers any
-    * query (fresh clone, cross-scale record, tiebreak disabled), so
-    * "no baseline" never reads as "perfect parity".
+  /** Self-adjudication vs the committed record: the median per-query
+    * ratio separates uniform environmental drift from real
+    * regressions. Returns (median ratio, #queries over 1.5x);
+    * (-1.0, -1) when no baseline covers any query (fresh clone,
+    * cross-scale record), so "no baseline" never reads as "perfect
+    * parity".
     */
   private[graft] def ratioStats(times: Map[String, Double],
       baseline: Map[String, Double]): (Double, Int) = {
@@ -113,84 +124,115 @@ object Bench {
       val m = ratios.size
       val med = if (m % 2 == 1) ratios(m / 2)
         else (ratios(m / 2 - 1) + ratios(m / 2)) / 2.0
-      (med, ratios.count(_ > 1.5))
+      (med, ratios.count(_ > Slow))
     }
   }
 
-  /** Window-contamination detector (r18, the r17 verdict's #4): the
-    * per-query regression tiebreak cannot see a bad window that
-    * OUTLASTS all attempts of consecutive queries — r17's official
-    * run recorded 8 false regressions (s1–s8 plus sample_percentile
-    * at 6.2x committed) because one ~60 s load window covered every
-    * attempt of a contiguous alphabetical block, while a judge
-    * re-measure on identical code sat at 1.0x. The cross-query
-    * signature IS the evidence: independent queries don't all regress
-    * >2x in one contiguous block by coincidence. Rule: among the
-    * queries that HAVE a committed baseline (no-baseline entries are
-    * unjudgeable and simply don't participate), any maximal run of
-    * >= k consecutive (execution order) ok queries each measuring
-    * > factor x committed is a contaminated block; the bench re-runs
-    * those queries ONCE at the end (in a presumably cleaner window)
-    * and keeps the min. A GENUINE regression touching one or two
-    * queries never forms a k-block and is untouched; a genuine
-    * k-query regression stays slow on the re-run and the record
-    * stands.
+  /** One query's attempts, each (seconds, ok): the planned ones and at
+    * most one re-measure.
     */
-  private[graft] def contaminatedRuns(order: Seq[String],
-      times: Map[String, Double], baseline: Map[String, Double],
-      factor: Double = 2.0, k: Int = 3): Set[String] = {
-    val judged = order.filter(n => baseline.get(n).exists(_ > 0)
-      && times.contains(n))
-    val over = judged.map(n => n -> (times(n) > factor * baseline(n)))
-    // maximal runs of consecutive over-factor queries, length >= k
-    val out = scala.collection.mutable.Set[String]()
-    var run = List.empty[String]
-    def flush(): Unit = { if (run.size >= k) out ++= run; run = Nil }
-    over.foreach { case (n, bad) => if (bad) run ::= n else flush() }
-    flush()
-    out.toSet
+  private[graft] case class Measured(name: String,
+      planned: Seq[(Double, Boolean)], startEpochSec: Long, load1m: Double,
+      rerun: Option[Rerun] = None) {
+    /** From the planned attempts only: a re-measure refines an ok time
+      * and never downgrades it.
+      */
+    def ok: Boolean = planned.forall(_._2)
+    def attempts: Seq[(Double, Boolean)] =
+      planned ++ rerun.map(r => (r.sec, r.ok))
+    /** Min over the ok attempts; a failed query records the duration of
+      * its failed attempt.
+      */
+    def sec: Double = attempts.filter(_._2).map(_._1).reduceOption(_ min _)
+      .getOrElse(planned.head._1)
   }
 
-  /** Whole-run drift adjudication (r19, the r18 verdict's #2): the
-    * window detector above catches a contaminated BLOCK (>= k
-    * consecutive queries over 2x), but r18's official run was ~1.2-1.4x
-    * slow EVERYWHERE — uniform inflation below every per-query trigger,
-    * 14 queries over 1.5x, zero window hits — and the judge had to
-    * adjudicate it by hand. Rule: every baselined ok query still over
-    * `overFactor` x committed after the earlier passes gets ONE
-    * re-measure at bench end, keeping the per-query best. This is
-    * deliberately the whole rule (review r19): the verdict's
-    * "median > 1.1 OR n_over > 0" trigger is subsumed by it — the
-    * over-set is nonempty exactly when n_over > 0, and an inflated
-    * median with nothing over the factor has nothing to re-run — so
-    * a separate median gate would be dead code. The uniformly-slow
-    * run self-corrects because all 14 of its over-1.5x queries
-    * re-measure; a GENUINE regression stays slow on the re-run and
-    * the record stands. Unbaselined queries are unjudgeable and never
-    * re-run.
+  /** A re-measure: its trigger (`disagree`, `over_baseline` or `both`),
+    * its attempt, and whether it was still slow — over 1.5x committed,
+    * or failed, since a failed re-measure cannot clear a query.
     */
-  private[graft] def driftReruns(times: Map[String, Double],
-      baseline: Map[String, Double],
-      overFactor: Double = 1.5): Set[String] =
-    times.keySet.filter(n =>
-      baseline.get(n).exists(b => b > 0 && times(n) > overFactor * b))
+  private[graft] case class Rerun(trigger: String, sec: Double, ok: Boolean,
+      stillSlow: Boolean)
 
-  /** Whether a drift re-measure CONFIRMS the slowness (r20, the r19
-    * verdict's #8 + ADVICE r19): true when the rerun itself ALSO
-    * exceeded overFactor × committed — or failed outright, which
-    * cannot exonerate — so the record distinguishes "slow on both
-    * measurements" (a persistent window, or genuine creep the judge
-    * must adjudicate) from "rerun improved but the keep-min already
-    * had the better time". The keep-min record itself is unchanged:
-    * this ANNOTATES the masking hazard the unconditional best-of-two
-    * carries (a flaky genuine regression whose lucky rerun hides it)
-    * instead of weakening the self-correction that neutralizes
-    * sandbox windows — the diag's drift_confirmed field is the
-    * judge's evidence either way.
+  /** The rerun rule: each query whose planned attempts all succeeded
+    * and either disagree by more than 2x (one of them was load-poisoned,
+    * but which?) or have a best more than 1.5x its committed baseline
+    * (load that covered both attempts), mapped to its trigger. A failed
+    * query is never re-run: its error, not its time, is the record.
     */
-  private[graft] def driftConfirmed(rerunSec: Double, rerunOk: Boolean,
-      baselineSec: Double, overFactor: Double = 1.5): Boolean =
-    !rerunOk || rerunSec > overFactor * baselineSec
+  private[graft] def selectReruns(planned: Seq[Measured],
+      baseline: Map[String, Double]): Map[String, String] =
+    planned.filter(_.ok).flatMap { m =>
+      val ts = m.planned.map(_._1)
+      val disagree = ts.max > Disagree * ts.min
+      val over = baseline.get(m.name).exists(b => b > 0 && ts.min > Slow * b)
+      val trigger =
+        if (disagree && over) Some("both")
+        else if (disagree) Some("disagree")
+        else if (over) Some("over_baseline")
+        else None
+      trigger.map(m.name -> _)
+    }.toMap
+
+  /** `m` with its re-measure `(sec, ok)` folded in. */
+  private[graft] def remeasured(m: Measured, trigger: String, sec: Double,
+      ok: Boolean, baseline: Map[String, Double]): Measured = {
+    val stillSlow = !ok || baseline.get(m.name).exists(b => b > 0 && sec > Slow * b)
+    m.copy(rerun = Some(Rerun(trigger, sec, ok, stillSlow)))
+  }
+
+  /** What a run prints and records: the full stdout line, the compact
+    * stdout line, the diag (also on stderr) and the record file.
+    */
+  private[graft] case class Report(full: String, compact: String,
+      diag: String, record: String)
+
+  private[graft] def report(results: Seq[Measured],
+      baseline: Map[String, Double], sfDir: String, cpus: Int): Report = {
+    def jmap(f: Measured => String): String =
+      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
+    val total = results.map(_.sec).sum
+    val loads = results.map(_.load1m).filter(_ >= 0)
+    val loadMax = if (loads.isEmpty) -1.0 else loads.max
+    val loadMean = if (loads.isEmpty) -1.0 else loads.sum / loads.size
+    // ok queries only: a failed query's sec is its failed attempt's
+    // meaningless duration, and fail-fast throws would drag the median
+    // ratio down and make a broken run read as faster than baseline
+    val (medRatio, nOver) =
+      ratioStats(results.filter(_.ok).map(r => r.name -> r.sec).toMap, baseline)
+    val fields = f""""n":${results.size},"failed":${results.count(!_.ok)},"runs":$Runs,"cpus":$cpus,"load_max":$loadMax%.2f,"load_mean":$loadMean%.2f,"median_ratio_vs_baseline":$medRatio%.4f,"n_over_1_5x":$nOver,"sf":"$sfDir""""
+    val summary = f""""metric":"total","value":$total%.3f,"unit":"sec",$fields"""
+    val rerun = jmap(_.rerun.map(x =>
+      s"""{"trigger":"${x.trigger}","still_slow":${x.stillSlow}}""").getOrElse("null"))
+    // -1 = no baseline entry
+    val ratios = jmap(r => baseline.get(r.name).filter(_ > 0)
+      .map(b => f"${r.sec / b}%.3f").getOrElse("-1"))
+    val noBaseline =
+      if (baseline.isEmpty) Nil else results.map(_.name).filterNot(baseline.contains)
+    val diag = "{\"diag\":\"bench\"" +
+      ",\"status\":" + jmap(r => if (r.ok) "\"ok\"" else "\"failed\"") +
+      ",\"ts\":" + jmap(_.startEpochSec.toString) +
+      ",\"load\":" + jmap(r => f"${r.load1m}%.2f") +
+      ",\"attempts\":" + jmap(_.attempts.map(a => f"${a._1}%.3f").mkString("[", ",", "]")) +
+      ",\"rerun\":" + rerun + ",\"ratio_vs_baseline\":" + ratios +
+      ",\"baseline_n\":" + baseline.size +
+      ",\"no_baseline\":" + noBaseline.map("\"" + _ + "\"").mkString("[", ",", "]") + "}"
+    // The driver keeps only a TAIL of stdout, truncating from the
+    // FRONT. The full line therefore puts the queries map FIRST, sorted
+    // ASCENDING by duration, so truncation eats the fastest (least
+    // informative) entries and never the summary fields at the end. At
+    // 160 queries even that line is ~6 KB and loses its head, so the
+    // compact line follows it: ~200 fixed bytes, always inside the tail,
+    // with DISTINCT keys (bench_total, not metric/value) so it cannot be
+    // mistaken for the full record.
+    val qsAsc = results.sortBy(_.sec)
+      .map(r => f""""${r.name}":${r.sec}%.3f""").mkString("{", ",", "}")
+    Report(
+      full = s"""{"queries":$qsAsc,$summary}""",
+      compact = f"""{"bench_total":$total%.3f,$fields}""",
+      diag = diag,
+      record = s"""{"queries":${jmap(r => f"${r.sec}%.3f")},$summary,"diag":$diag}""")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -215,241 +257,49 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] prepare failed: ${e.getMessage}")
     }
-    case class QRun(name: String, sec: Double, ok: Boolean,
-                    startEpochSec: Long, load1m: Double,
-                    attempts: Seq[Double], retry: String,
-                    windowRerun: Boolean = false,
-                    driftRerun: Boolean = false,
-                    driftConfirmedSlow: Option[Boolean] = None)
     val baseline = baselineTimes(sfDir, cpusStamp)
-    // Self-consistency guard (r16): a registry query with no entry in
-    // the committed record silently runs without the regression
-    // tiebreak — expected for a freshly added query, but after a
-    // RENAME the old baseline is lost without a trace. Name the
-    // uncovered queries on stderr and in the diag so a rename that
-    // drops its baseline is visible in the round artifact.
-    val noBaseline =
-      if (baseline.isEmpty) Seq.empty[String]
-      else SparkEntry.queries.keys.toSeq.sorted.filterNot(baseline.contains)
-    if (noBaseline.nonEmpty)
-      System.err.println(s"[bench] no committed baseline for " +
-        s"${noBaseline.size} quer${if (noBaseline.size == 1) "y" else "ies"} " +
-        s"(regression tiebreak off for them): ${noBaseline.mkString(", ")}")
-    // Best-of-N (default 2): the official runner benches on a shared
-    // sandbox where a single load spike printed 18.5 s for a query
-    // that measures 0.80 s idle (r11 f5_websearch). Per query the
-    // recorded time is the MIN across attempts — a spike would have
-    // to hit every attempt to poison the record. All attempt times
-    // stay in the diag, and SPARK_GRAFT_BENCH_RUNS=1 restores the
-    // single-shot mode.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val startedAt = System.currentTimeMillis() / 1000
-      val load = loadAvg1m()
-      def attempt(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val first = attempt()
-      // a failed query is not retried (its error, not its time, is the
-      // record); extra attempts only refine an ok measurement
-      val planned = first +: (if (first._2) (2 to runs).map(_ => attempt()) else Nil)
-      // tiebreak triggers — each run adds at most ONE extra attempt,
-      // recorded in the diag's `attempts`/`retry` fields:
-      //  (a) the planned attempts DISAGREE >2x: the pair is ambiguous
-      //      (one was load-poisoned, but which? — r12's
-      //      pipeline_ingest measured [1.97, 5.77] under load 3.2);
-      //  (b) REGRESSION vs the last committed BENCH_FULL: best-of-N
-      //      exceeds the query's committed value >2x. Window-level
-      //      contamination hits EVERY attempt, so trigger (a) never
-      //      fires on it — r14's passage_search recorded [3.64, 3.23]
-      //      against 0.47s committed for code untouched since r8. A
-      //      third attempt in a (possibly cleaner) later window lets
-      //      the artifact self-correct; a GENUINE regression simply
-      //      stays slow across all three and the record stands.
-      // runs > 1 + forall ok implies >= 2 ok times, so min/max exist
-      val okTimes = planned.filter(_._2).map(_._1)
-      val canRetry = runs > 1 && planned.forall(_._2)
-      val disagree = canRetry && okTimes.max > 2.0 * okTimes.min
-      val regressed = canRetry &&
-        baseline.get(name).exists(b => b > 0 && okTimes.min > 2.0 * b)
-      val tiebreak = if (disagree || regressed) Seq(attempt()) else Nil
-      val retry =
-        if (disagree && regressed) "both"
-        else if (disagree) "disagree"
-        else if (regressed) "regression"
-        else "none"
-      val all = planned ++ tiebreak
-      // the record's ok/failed status comes from the PLANNED attempts
-      // only: the tiebreak is diagnostic, and extra attempts must
-      // only refine an ok measurement, never downgrade one (a
-      // transient failure on the third run would otherwise mark a
-      // query with two valid times as failed)
-      val okAll = planned.forall(_._2)
-      QRun(name, all.filter(_._2).map(_._1).reduceOption(_ min _)
-          .getOrElse(first._1),
-        okAll, startedAt, load, all.map(_._1), retry)
-    }
-    // Shared single re-measure for the diagnostic passes below —
-    // status never downgrades (a rerun only refines an ok time).
-    def measureOnce(name: String, tag: String): (Double, Boolean) = {
+    def attempt(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        try { SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag rerun $name failed: ${e.getMessage}")
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
-    // Short fixed settle before a rerun pass (ADVICE r18): the window
-    // pass executes immediately after the first pass, so a load
-    // window covering the END of the execution order could cover the
-    // rerun too and make it ineffective exactly when the block is
-    // late. A loadavg GATE is the wrong tool here (review r19): the
-    // 1-minute average still reflects the bench's own local[32] work
-    // (a healthy run of ours records load_mean ~2.5 while r18's
-    // CONTAMINATED official window recorded 1.97), so any absolute
-    // threshold either never fires or degrades into an unconditional
-    // max-length sleep. A small fixed pause gives a transient spike a
-    // chance to pass without taxing every triggered pass.
-    def settle(): Unit = Thread.sleep(5000)
-    // Window-contamination pass (see [[contaminatedRuns]]): a block of
-    // >= 3 consecutive baselined ok queries all over 2x committed is
-    // the cross-query contamination signature the per-query tiebreak
-    // cannot see; re-run each once now — the whole bench has elapsed
-    // since the block, so this measures a different window — and keep
-    // the min. The diag records `window_rerun` per query.
-    val contaminated = contaminatedRuns(
-      firstPass.map(_.name),
-      firstPass.filter(_.ok).map(r => r.name -> r.sec).toMap,
-      baseline)
-    if (contaminated.nonEmpty) {
-      System.err.println(s"[bench] window-contamination suspected for " +
-        s"${contaminated.size} queries, re-running: " +
-        contaminated.toSeq.sorted.mkString(", "))
-      settle()
+    val planned = SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      val startedAt = System.currentTimeMillis() / 1000
+      val load = loadAvg1m()
+      val first = attempt(name)
+      val rest = if (first._2) Seq.fill(Runs - 1)(attempt(name)) else Nil
+      Measured(name, first +: rest, startedAt, load)
     }
-    val afterWindow = firstPass.map { r =>
-      if (!contaminated(r.name)) r
-      else {
-        val (t, ok) = measureOnce(r.name, "window")
-        r.copy(sec = if (ok) r.sec min t else r.sec,
-          attempts = r.attempts :+ t, windowRerun = true)
-      }
+    val reruns = selectReruns(planned, baseline)
+    if (reruns.nonEmpty) {
+      System.err.println(s"[bench] re-measuring ${reruns.size} quer" +
+        s"${if (reruns.size == 1) "y" else "ies"}: ${reruns.keys.toSeq.sorted.mkString(", ")}")
+      // A short fixed settle gives a transient load spike a chance to
+      // pass. A loadavg gate is the wrong tool: the 1-minute average
+      // still reflects this bench's own local[32] work, so any absolute
+      // threshold either never fires or degrades into a max-length sleep.
+      Thread.sleep(5000)
     }
-    // Whole-run drift pass (see [[driftReruns]]): uniform inflation
-    // below every per-query trigger — the r18 official-run signature
-    // (median 1.15, 14 queries over 1.5x, zero window hits) — gets one
-    // self-correcting re-measure of the over-1.5x queries; the diag
-    // records `drift_rerun` per query.
-    val drift = driftReruns(
-      afterWindow.filter(_.ok).map(r => r.name -> r.sec).toMap, baseline)
-    if (drift.nonEmpty) {
-      System.err.println(s"[bench] whole-run drift suspected, re-running " +
-        s"${drift.size} over-1.5x quer${if (drift.size == 1) "y" else "ies"}: " +
-        drift.toSeq.sorted.mkString(", "))
-      settle()
-    }
-    val results = afterWindow.map { r =>
-      if (!drift(r.name)) r
-      else {
-        val (t, ok) = measureOnce(r.name, "drift")
-        r.copy(sec = if (ok) r.sec min t else r.sec,
-          attempts = r.attempts :+ t, driftRerun = true,
-          // drift ⊆ baselined by construction, so .get is safe
-          driftConfirmedSlow =
-            Some(driftConfirmed(t, ok, baseline(r.name))))
-      }
-    }
-    def jmap(f: QRun => String): String =
-      results.map(r => "\"" + r.name + "\":" + f(r)).mkString("{", ",", "}")
-    val qs = jmap(r => f"${r.sec}%.3f")
-    val status = jmap(r => if (r.ok) "\"ok\"" else "\"failed\"")
-    val ts = jmap(_.startEpochSec.toString)
-    val load = jmap(r => f"${r.load1m}%.2f")
-    val total = results.map(_.sec).sum
-    val failed = results.count(!_.ok)
-    // The driver keeps only a 2000-char TAIL of stdout, truncating from
-    // the FRONT; with 96 queries the full JSON line is ~3 KB, so SOME
-    // of it is always lost. r9 put the fixed-size summary fields (incl.
-    // the load_max/load_mean contamination evidence) FIRST and the
-    // queries map last — and the truncation ate exactly the evidence.
-    // Layout that survives any front-truncation of a too-long line:
-    //   {"queries":{...ascending by duration...}, <fixed-size fields>}
-    // The queries map comes FIRST, sorted ASCENDING by duration, so the
-    // bytes truncated are the fastest (least informative) entries; the
-    // slow entries the judge compares against BASELINE.md sit at the
-    // END, immediately before the summary + load-evidence fields, which
-    // are therefore ALWAYS inside the tail window. The complete record
-    // (all queries + per-query ts/load/status diag) is additionally
-    // written to BENCH_FULL.json in the working directory, and the full
-    // diag still goes to stderr. An idle run shows load_max of a few; a
-    // poisoned run indicts itself.
-    val loads = results.map(_.load1m).filter(_ >= 0)
-    val loadMax = if (loads.isEmpty) -1.0 else loads.max
-    val loadMean = if (loads.isEmpty) -1.0 else loads.sum / loads.size
-    val qsAsc = results.sortBy(_.sec)
-      .map(r => f""""${r.name}":${r.sec}%.3f""").mkString("{", ",", "}")
-    // ok queries only (review r17): a failed query's recorded sec is
-    // the failed attempt's meaningless duration — three fail-fast
-    // throws against 2s baselines would drag the median ratio DOWN
-    // and make a broken round read as faster than baseline
-    val (medRatio, nOver) =
-      ratioStats(results.filter(_.ok).map(r => r.name -> r.sec).toMap, baseline)
-    val summary = f""""metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"failed":$failed,"runs":$runs,"cpus":$cpusStamp,"load_max":$loadMax%.2f,"load_mean":$loadMean%.2f,"median_ratio_vs_baseline":$medRatio%.4f,"n_over_1_5x":$nOver,"sf":"$sfDir""""
-    val attempts = jmap(r =>
-      r.attempts.map(a => f"$a%.3f").mkString("[", ",", "]"))
-    val retries = jmap(r => "\"" + r.retry + "\"")
-    val windowReruns = jmap(r => if (r.windowRerun) "true" else "false")
-    val driftReruns0 = jmap(r => if (r.driftRerun) "true" else "false")
-    // per-query drift adjudication (r20): true = the rerun was ALSO
-    // over 1.5x committed (persistent-window or genuine creep — the
-    // judge's row to look at), false = the rerun improved (transient
-    // drift, keep-min already took the better time), null = no drift
-    // rerun ran for this query
-    val driftConfirmedJ = jmap(r =>
-      r.driftConfirmedSlow.map(_.toString).getOrElse("null"))
-    // per-query ratio vs the committed baseline (r19, verdict stretch
-    // #7): round-over-round regressions readable straight off the
-    // record instead of diffing git history; -1 = no baseline entry
-    val ratios = jmap(r => baseline.get(r.name).filter(_ > 0)
-      .map(b => f"${r.sec / b}%.3f").getOrElse("-1"))
-    val noBaselineJson =
-      noBaseline.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val diag = f"""{"diag":"bench","status":$status,"ts":$ts,"load":$load,"attempts":$attempts,"retry":$retries,"window_rerun":$windowReruns,"drift_rerun":$driftReruns0,"drift_confirmed":$driftConfirmedJ,"ratio_vs_baseline":$ratios,"baseline_n":${baseline.size},"no_baseline":$noBaselineJson}"""
-    System.err.println(diag)
-    // The OFFICIAL record is the 32-cpu run: the r20 driver's 8-core
-    // scaling run overwrote the committed 32-core BENCH_FULL (the file
-    // carried no cpus field, so its drift/ratio rows silently compared
-    // 8c times to 32c baselines — 34 bogus "drift_confirmed" rows).
-    // A non-32-cpu run now writes a cpus-suffixed sidecar instead, and
-    // every record carries "cpus" (r21, the r20 verdict's #2b).
-    val recordPath =
-      if (cpusStamp == 32) "BENCH_FULL.json" else s"BENCH_FULL_c$cpusStamp.json"
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(recordPath),
-      (s"""{"queries":$qs,$summary,"diag":$diag}""" + "\n").getBytes("UTF-8"))
+    val results = planned.map(m => reruns.get(m.name).fold(m) { trigger =>
+      val (t, ok) = attempt(m.name)
+      remeasured(m, trigger, t, ok, baseline)
+    })
+    val out = report(results, baseline, sfDir, cpusStamp)
+    System.err.println(out.diag)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(recordPath(cpusStamp)),
+      (out.record + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => }
-    println(s"""{"queries":$qsAsc,$summary}""")
-    // Compact second line (r21, the r20 verdict's #2a): the full line
-    // above IS the contract (metric/value/unit/queries/sf, unchanged),
-    // but at 160 queries it is ~6 KB and the driver keeps only a tail
-    // of stdout, truncating the line's head and failing its JSON parse
-    // (PERF_r19/r20 recorded parsed:null, per_query:{}). This line is
-    // ~200 fixed bytes, always fully inside any tail window, and uses
-    // DISTINCT keys (bench_total, not metric/value) so it can never be
-    // mistaken for the full record. Per-query detail stays in the full
-    // line and the committed BENCH_FULL.json.
-    println(f"""{"bench_total":$total%.3f,"n":${results.size},"failed":$failed,"runs":$runs,"cpus":$cpusStamp,"load_max":$loadMax%.2f,"load_mean":$loadMean%.2f,"median_ratio_vs_baseline":$medRatio%.4f,"n_over_1_5x":$nOver,"sf":"$sfDir"}""")
+    println(out.full)
+    println(out.compact)
     spark.stop()
-    if (failed > 0) sys.exit(1)
+    if (results.exists(!_.ok)) sys.exit(1)
   }
 }

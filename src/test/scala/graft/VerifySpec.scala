@@ -51,11 +51,11 @@ class VerifySpec extends AnyFunSuite {
   }
 
   test("Bench.parseQueriesMap reads ONLY the queries map, never the diag") {
-    // the regression tiebreak's baseline comes from a committed
+    // the over-baseline rerun's baseline comes from a committed
     // BENCH_FULL line whose diag ALSO pairs query names with numbers
     // (ts epoch-seconds, load averages) — a whole-file regex would
-    // poison the baseline with epoch timestamps and the tiebreak would
-    // never fire (every min is < 2x a billion)
+    // poison the baseline with epoch timestamps and the rerun would
+    // never fire (every min is < 1.5x a billion)
     val line = """{"queries":{"q_fast":0.123,"q_slow":4.5},""" +
       """"metric":"total","value":4.623,"n":2,"sf":"/root/testdata/sf0.1",""" +
       """"diag":{"diag":"bench","ts":{"q_fast":1755241082,"q_slow":1755241085},""" +
@@ -63,7 +63,7 @@ class VerifySpec extends AnyFunSuite {
       """"attempts":{"q_fast":[0.2,0.123],"q_slow":[4.5,5.0]}}}"""
     val m = Bench.parseQueriesMap(line)
     assert(m == Map("q_fast" -> 0.123, "q_slow" -> 4.5), s"got $m")
-    // degenerate inputs degrade to empty (tiebreak off), never throw
+    // degenerate inputs degrade to empty (no baseline), never throw
     assert(Bench.parseQueriesMap("").isEmpty)
     assert(Bench.parseQueriesMap("""{"no_queries":1}""").isEmpty)
     assert(Bench.parseQueriesMap("""{"queries":{""").isEmpty)
@@ -74,11 +74,11 @@ class VerifySpec extends AnyFunSuite {
     val withSf = s"""{"queries":{"q":1.5},"cpus":32,"sf":"$sf01"}"""
     assert(Bench.baselineForScale(withSf, sf01, 32) == Map("q" -> 1.5))
     // a record at another scale is discarded (cross-scale times would
-    // fire the regression retry on every query)
+    // re-run every query as over baseline)
     assert(Bench.baselineForScale(withSf, "sf0.01", 32).isEmpty)
     // a record with NO sf field (legacy/foreign file) is discarded
     // too — the old forall accepted it unconditionally, with the same
-    // every-query-retries blast radius
+    // every-query-reruns blast radius
     assert(Bench.baselineForScale("""{"queries":{"q":1.5},"cpus":32}""", sf01, 32).isEmpty)
     // the same gate on cpus: an 8-cpu scaling run must not judge
     // itself against the 32-cpu record, and a record that names no
@@ -108,89 +108,104 @@ class VerifySpec extends AnyFunSuite {
     assert(Bench.ratioStats(Map("a" -> 1.0), Map.empty) == (-1.0, -1))
   }
 
-  test("Bench.contaminatedRuns: >=k consecutive over-2x baselined queries " +
-      "flag as a contaminated window (r18)") {
-    val base = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0, "e" -> 1.0)
-    val order = Seq("a", "b", "c", "d", "e")
-    // the r17 shape: a contiguous block (b,c,d) all >2x committed while
-    // its neighbours sit at 1x — the cross-query contamination signature
-    assert(Bench.contaminatedRuns(order,
-      Map("a" -> 1.0, "b" -> 3.0, "c" -> 2.5, "d" -> 9.0, "e" -> 1.0),
-      base) == Set("b", "c", "d"))
-    // a 2-query run never reaches k=3 — a genuine localized regression
-    // is untouched by the rerun pass
-    assert(Bench.contaminatedRuns(order,
-      Map("a" -> 1.0, "b" -> 3.0, "c" -> 2.5, "d" -> 1.0, "e" -> 9.0),
-      base).isEmpty)
-    // exactly-2x is NOT over (strict >, matching the regression
-    // tiebreak's trigger)
-    assert(Bench.contaminatedRuns(order,
-      Map("a" -> 2.0, "b" -> 2.0, "c" -> 2.0, "d" -> 1.0, "e" -> 1.0),
-      base).isEmpty)
-    // no-baseline queries are unjudgeable and don't participate — they
-    // neither extend nor break a run (x sits mid-block here)
-    assert(Bench.contaminatedRuns(Seq("a", "b", "x", "c", "d"),
-      Map("a" -> 1.0, "b" -> 3.0, "x" -> 99.0, "c" -> 2.5, "d" -> 9.0),
-      base) == Set("b", "c", "d"))
-    // zero/negative baselines are unjudgeable too, never divide
-    assert(Bench.contaminatedRuns(Seq("a", "b", "c"),
-      Map("a" -> 9.0, "b" -> 9.0, "c" -> 9.0),
-      Map("a" -> 0.0, "b" -> 1.0, "c" -> 1.0)) == Set.empty)
-    // a FAILED query has no recorded time (the caller passes ok times
-    // only) and doesn't participate
-    assert(Bench.contaminatedRuns(order,
-      Map("a" -> 3.0, "b" -> 3.0, "d" -> 3.0, "e" -> 3.0),
-      base) == Set("a", "b", "d", "e"))
-    // whole-run contamination (every query over) still flags
-    assert(Bench.contaminatedRuns(order,
-      order.map(_ -> 5.0).toMap, base) == order.toSet)
+  test("Bench.recordPath: the official 32-cpu record, a sidecar per other " +
+      "cpu count; the run reads its baseline from the same path") {
+    assert(Bench.recordPath(32) == "BENCH_FULL.json")
+    assert(Bench.recordPath(8) == "BENCH_FULL_c8.json")
+    // a non-numeric SPARK_GRAFT_CPUS (local[*]) stamps -1
+    assert(Bench.recordPath(-1) == "BENCH_FULL_c-1.json")
   }
 
-  test("Bench.driftReruns: uniformly-slow run re-measures its over-1.5x " +
-      "queries; healthy runs and unjudgeable queries untouched (r19)") {
-    val base = Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0, "e" -> 1.0)
-    // the r18 official-run signature: everything ~1.2-1.4x (below the
-    // 2x per-query and window triggers), a few queries over 1.5x —
-    // exactly those re-measure once
-    assert(Bench.driftReruns(
-      Map("a" -> 1.2, "b" -> 1.3, "c" -> 1.4, "d" -> 1.6, "e" -> 1.8),
-      base) == Set("d", "e"))
-    // healthy run: nothing over — no reruns
-    assert(Bench.driftReruns(
-      Map("a" -> 1.0, "b" -> 1.05, "c" -> 0.9, "d" -> 1.0, "e" -> 1.0),
-      base).isEmpty)
-    // ONE query over 1.5x in an otherwise-parity run: one diagnostic
-    // re-measure (a genuine regression stays slow on the rerun and
-    // the record stands)
-    assert(Bench.driftReruns(
-      Map("a" -> 1.0, "b" -> 1.0, "c" -> 1.0, "d" -> 1.0, "e" -> 1.7),
-      base) == Set("e"))
-    // uniformly inflated but nothing over 1.5x: nothing to re-run —
-    // best-of-attempts already bounded the damage
-    assert(Bench.driftReruns(
-      base.keySet.map(_ -> 1.3).toMap, base).isEmpty)
-    // no baseline at all → nothing judgeable → never fires
-    assert(Bench.driftReruns(Map("a" -> 9.0), Map.empty).isEmpty)
-    // uncovered queries are unjudgeable: they never re-run, however
-    // slow they look
-    assert(Bench.driftReruns(
-      Map("a" -> 1.2, "b" -> 1.3, "c" -> 1.4, "d" -> 1.6, "x" -> 99.0),
-      base) == Set("d"))
+  private def measured(name: String, times: Double*) =
+    Bench.Measured(name, times.map(_ -> true), 0L, -1.0)
+
+  test("Bench.selectReruns: over 1.5x committed or planned attempts " +
+      "disagreeing over 2x re-run once; the cuts are strict") {
+    val base = Map("slow" -> 1.0, "edge" -> 1.0, "both" -> 1.0, "fine" -> 1.0)
+    val got = Bench.selectReruns(Seq(
+      measured("slow", 1.6, 1.7),     // best 1.6x committed
+      measured("edge", 1.5, 1.6),     // best exactly 1.5x: not over
+      measured("both", 2.0, 5.0),     // over and disagreeing
+      measured("fine", 1.0, 1.1),
+      measured("x", 1.0, 2.5),        // no baseline, disagree 2.5x
+      measured("y", 1.0, 2.0),        // no baseline, exactly 2x: agree
+      measured("z", 9.0, 9.5)),       // no baseline, agreeing: unjudgeable
+      base)
+    assert(got == Map("slow" -> "over_baseline", "both" -> "both",
+      "x" -> "disagree"), s"got $got")
+    // zero baselines never divide, and no baseline leaves only disagree
+    assert(Bench.selectReruns(Seq(measured("slow", 9.0, 9.0)),
+      Map("slow" -> 0.0)).isEmpty)
+    assert(Bench.selectReruns(Seq(measured("slow", 9.0, 9.0)), Map.empty).isEmpty)
   }
 
-  test("Bench.driftConfirmed: the rerun adjudicates slow-on-both vs " +
-      "transient drift; a failed rerun cannot exonerate (r20)") {
-    // ADVICE r19 + the r19 verdict's #8: keep-min stays, but the diag
-    // must say whether the rerun attempt ALSO exceeded 1.5x committed
-    // — the judge's split between a persistent window / genuine creep
-    // (true) and transient drift the min already corrected (false)
-    assert(Bench.driftConfirmed(1.8, rerunOk = true, baselineSec = 1.0),
-      "a rerun still over 1.5x confirms the slowness")
-    assert(!Bench.driftConfirmed(1.1, rerunOk = true, baselineSec = 1.0),
-      "a rerun back under 1.5x refutes it (transient drift)")
-    assert(Bench.driftConfirmed(0.0, rerunOk = false, baselineSec = 1.0),
-      "a FAILED rerun cannot exonerate — flag it for the judge")
-    // exactly the driftReruns boundary: > factor, not >=
-    assert(!Bench.driftConfirmed(1.5, rerunOk = true, baselineSec = 1.0))
+  test("Bench.selectReruns: a query with a failed planned attempt never re-runs") {
+    val base = Map("a" -> 1.0, "b" -> 1.0)
+    // a fails on its first attempt and is not retried; b fails second
+    val planned = Seq(Bench.Measured("a", Seq(0.1 -> false), 0L, -1.0),
+      Bench.Measured("b", Seq(5.0 -> true, 0.1 -> false), 0L, -1.0))
+    assert(Bench.selectReruns(planned, base).isEmpty)
+  }
+
+  test("Bench.remeasured: the min is kept; a failed re-measure keeps the " +
+      "planned min and reads as still slow") {
+    val base = Map("q" -> 1.0)
+    val planned = measured("q", 3.0, 3.5)
+    val cleared = Bench.remeasured(planned, "over_baseline", 1.1, ok = true, base)
+    assert(cleared.sec == 1.1 && cleared.ok)
+    assert(cleared.attempts.map(_._1) == Seq(3.0, 3.5, 1.1))
+    assert(cleared.rerun.contains(Bench.Rerun("over_baseline", 1.1, true, false)))
+    // a genuine regression stays slow on the re-measure: exactly 1.5x
+    // is not over
+    assert(Bench.remeasured(planned, "over_baseline", 1.6, ok = true, base)
+      .rerun.exists(_.stillSlow))
+    assert(!Bench.remeasured(planned, "over_baseline", 1.5, ok = true, base)
+      .rerun.exists(_.stillSlow))
+    // a failed re-measure cannot clear the query nor downgrade it, and
+    // its duration never becomes the record
+    val failed = Bench.remeasured(planned, "over_baseline", 0.2, ok = false, base)
+    assert(failed.sec == 3.0 && failed.ok)
+    assert(failed.rerun.exists(_.stillSlow))
+    // without a baseline an ok re-measure is not slow
+    assert(!Bench.remeasured(planned, "disagree", 9.0, ok = true, Map.empty)
+      .rerun.exists(_.stillSlow))
+  }
+
+  test("Bench.report: both stdout lines and the record parse as JSON") {
+    import graft.api.MiniJson
+    val base = Map("q_fast" -> 0.2, "q_slow" -> 1.0)
+    val results = Seq(
+      Bench.remeasured(Bench.Measured("q_fast", Seq(0.2 -> true, 0.5 -> true),
+        1755241082L, 2.15), "disagree", 0.25, ok = true, base),
+      Bench.Measured("q_new", Seq(0.7 -> false), 1755241083L, 2.5),
+      Bench.Measured("q_slow", Seq(1.1 -> true, 1.2 -> true), 1755241085L, 3.0))
+    val sf = "/root/testdata/sf0.1"
+    val out = Bench.report(results, base, sf, 8)
+    def obj(line: String): Map[String, MiniJson.JValue] =
+      MiniJson.parse(line).toOption.flatMap(_.asObj)
+        .getOrElse(fail(s"not a JSON object: $line"))
+    val full = obj(out.full)
+    assert(Seq("queries", "metric", "value", "unit").forall(full.contains))
+    assert(full("metric") == MiniJson.JStr("total"))
+    // the queries map of the full line is ascending by duration, so a
+    // front truncation loses the fastest entries first
+    assert(out.full.indexOf("q_fast") < out.full.indexOf("q_new") &&
+      out.full.indexOf("q_new") < out.full.indexOf("q_slow"))
+    val compact = obj(out.compact)
+    assert(Seq("bench_total", "n", "failed", "cpus", "sf").forall(compact.contains))
+    assert(compact("n") == MiniJson.JNum(3) && compact("failed") == MiniJson.JNum(1))
+    assert(compact("cpus") == MiniJson.JNum(8) && compact("sf") == MiniJson.JStr(sf))
+    val record = obj(out.record)
+    assert(record("sf") == MiniJson.JStr(sf) && record("cpus") == MiniJson.JNum(8))
+    val diag = record("diag").asObj.get
+    assert(diag == obj(out.diag))
+    val rerun = diag("rerun").asObj.get
+    assert(rerun("q_fast") == MiniJson.JObj(Map(
+      "trigger" -> MiniJson.JStr("disagree"), "still_slow" -> MiniJson.JBool(false))))
+    assert(rerun("q_slow") == MiniJson.JNull && rerun("q_new") == MiniJson.JNull)
+    assert(diag("no_baseline") == MiniJson.JArr(Seq(MiniJson.JStr("q_new"))))
+    // the record reads back as the next run's baseline
+    assert(Bench.baselineForScale(out.record, sf, 8) ==
+      Map("q_fast" -> 0.2, "q_new" -> 0.7, "q_slow" -> 1.1))
   }
 }
