@@ -686,7 +686,7 @@ object Queries {
   /** Build-once persisted span document-frequency store over the full
     * corpus — the calibration table behind the PRODUCTION boilerplate
     * probe (full-replace on calibration cadence, the quality-CDF
-    * refresh model; spanTokens frozen in _META).
+    * refresh model; spanTokens frozen in the store properties).
     */
   private def spanDfStore(spark: SparkSession, dir: String)
       : graft.sources.ParquetStore = {
@@ -2660,7 +2660,7 @@ object Queries {
     * [[operators.LangId.FeatChar]]'s Cavnar–Trenkle joined-stream
     * char n-grams, which carry evidence on short docs whose
     * word-bigram space is empty. Same integer serving path; the kind
-    * rides in the model and its `_META`, so a geometry mismatch
+    * rides in the model and its store properties, so a geometry mismatch
     * between featurizer and coefficients is impossible by
     * construction. */
   private[graft] def langIdCharModel(spark: SparkSession, dir: String)
@@ -2743,7 +2743,7 @@ object Queries {
   /** [[textLanguageIdTrained]] served from the PERSISTED model
     * artifact (r19) — the production serving path end-to-end under
     * the driver gate: saveModel on train cadence → loadModel's full
-    * `_META` geometry validation (version/langs/hexLen/n/serving
+    * store-property geometry validation (version/langs/hexLen/n/serving
     * scale, read with the data as one consistent pair) → the same
     * relational integer-arithmetic detect. The store round-trips raw
     * IEEE doubles exactly, so routing is byte-identical to the

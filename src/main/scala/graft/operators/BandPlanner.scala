@@ -7,7 +7,7 @@ package graft.operators
   * pipeline re-tunes banding per corpus similarity profile — a
   * near-dup pass at 0.8 on clean encyclopedic text wants a steep,
   * precise curve; a 0.3 pass over noisy crawl data wants recall —
-  * and the signature stores' self-describing `_META` geometry
+  * and the signature stores' self-describing geometry properties
   * (Dedup.requireStoreGeometry) already makes switching safe: a
   * probe against an index built with the old geometry fails loudly,
   * so migration is "rebuild the index with the planned geometry",

@@ -462,7 +462,7 @@ object Dedup {
       .agg(count(col("__id")).as("n_docs"), sum(col("__n")).as("n_occurrences"))
   }
 
-  /** `_META` key freezing a span-df store's span grain — the
+  /** Store property freezing a span-df store's span grain — the
     * boilerplate family's [[requireStoreGeometry]] analogue: probing
     * a df table built at a different `spanTokens` silently matches
     * (almost) nothing, so drift is a loud rebuild.
@@ -472,12 +472,11 @@ object Dedup {
   private[graft] def requireSpanDfGeometry(store: graft.sources.ParquetStore,
       table: String, spanTokens: Int, caller: String,
       strict: Boolean): Unit = {
-    if (!strict && !store.exists(table)) return
     val meta = store.getMeta(table)
     if (strict && !meta.contains(MetaSpanTokens))
       throw new IllegalStateException(
         s"$caller: span-df store '$table' records no span grain " +
-          "(_META) — rebuild it with Dedup.buildSpanDfStore (which " +
+          "(store properties) — rebuild it with Dedup.buildSpanDfStore (which " +
           "records span_tokens); probing a table of unknown grain " +
           "silently removes (almost) nothing")
     meta.get(MetaSpanTokens).foreach(s => require(s.trim == spanTokens.toString,
@@ -494,11 +493,12 @@ object Dedup {
     * the signature stores' MERGE): distinct-document counting is a
     * corpus-global statistic whose per-hash vote set can't ride a
     * doc-keyed MERGE, and the table is df-bounded (distinct spans),
-    * not corpus-bounded. `spanTokens` is frozen in `_META` and
-    * require-matched by every probe; the threshold deliberately is
-    * NOT frozen — the store carries full counts so operators can
-    * tighten/loosen `minDocs` per probe without a rebuild (reading
-    * the df head via [[spanDocFrequency]] to choose it).
+    * not corpus-bounded. `spanTokens` is frozen in the store
+    * properties and require-matched by every probe; the threshold
+    * deliberately is NOT frozen — the store carries full counts so
+    * operators can tighten/loosen `minDocs` per probe without a
+    * rebuild (reading the df head via [[spanDocFrequency]] to choose
+    * it).
     */
   def buildSpanDfStore(store: graft.sources.ParquetStore, table: String,
       docs: DataFrame, idCol: String, textCol: String,
@@ -511,15 +511,11 @@ object Dedup {
       .agg(count(lit(1)).as("__n"))
       .groupBy(col("__sh").as("span_hash"))
       .agg(count(col("__id")).as("n_docs"), sum(col("__n")).as("n_occurrences"))
-    // ATOMIC (counts, grain) commit (ADVICE r17): overwriteWithMeta
-    // flips data and properties under ONE _CURRENT pointer, so a
-    // calibration refresh can never serve one snapshot's counts with
-    // another's span grain — the quality-CDF store's refresh model,
-    // replacing the two-step putMeta-then-overwrite whose window
-    // paired them inconsistently (benign here only because grain
-    // drift is a loud rebuild, but the window was real)
-    store.overwriteWithMeta(table, df,
-      Map(MetaSpanTokens -> spanTokens.toString))
+    // ONE (counts, grain) commit: the grain is a snapshot property of
+    // the overwrite, so a calibration refresh can never serve one
+    // snapshot's counts with another's span grain — the quality-CDF
+    // store's refresh model
+    store.overwrite(table, df, Map(MetaSpanTokens -> spanTokens.toString))
   }
 
   /** [[boilerplateRemove]] against a PERSISTED span-df store — the
@@ -931,7 +927,7 @@ object Dedup {
       .select("id", "norm_hash", "sig", "shingles", "band_keys")
   }
 
-  /** `_META` keys recording a signature index's frozen build geometry
+  /** Store property keys recording a signature index's frozen build geometry
     * (ADVICE r13): the builders write them, the geometry-taking
     * probes REQUIRE-match them — probing a table banded with
     * different (shingleN, numHashes, bands) silently returns
@@ -956,28 +952,23 @@ object Dedup {
     * Builds (`strict = false`) tolerate absence (they are about to
     * record it) but still reject a recorded mismatch: extending an
     * index with drifted parameters is the corruption, a rebuild
-    * (drop + build) is the supported path. Exception (ADVICE r14): a
-    * recorded geometry with NO committed data is a crash artifact —
-    * the builder writes `_META` before the data MERGE, so a crash in
-    * that window leaves a geometry-only sidecar. There is nothing the
-    * new geometry could drift FROM, so a build simply overwrites the
-    * orphaned sidecar instead of wedging every rebuild behind a
-    * manual drop.
+    * (drop + build) is the supported path. The geometry commits with
+    * the index rows (one store MERGE), so a table without data has
+    * none to drift from.
     */
   private[graft] def requireStoreGeometry(store: graft.sources.ParquetStore,
       table: String, shingleN: Int, numHashes: Int, bands: Int,
       caller: String, strict: Boolean): Unit = {
-    if (!strict && !store.exists(table)) return
     val meta = store.getMeta(table)
     val keys = Seq((MetaShingleN, shingleN, "shingleN"),
       (MetaNumHashes, numHashes, "numHashes"), (MetaBands, bands, "bands"))
     // strict probes require EVERY key recorded — a partially-populated
-    // sidecar (hand-stamped putMeta) must read as unknown provenance,
+    // record (a hand-stamped property set) must read as unknown provenance,
     // not pass vacuously on whichever keys happen to be absent
     if (strict && !keys.forall(k => meta.contains(k._1)))
       throw new IllegalStateException(
         s"$caller: signature index '$table' records no (or incomplete) " +
-          "build geometry (_META) — rebuild it with " +
+          "build geometry (store properties) — rebuild it with " +
           "Dedup.buildNearDupStore (which records (shingleN, numHashes, " +
           "bands)); probing an index of unknown geometry silently " +
           "returns near-zero matches")
@@ -995,7 +986,7 @@ object Dedup {
     * a snapshot's survivors rewrites only the key-hash buckets they
     * fall into (O(|batch|), never O(|corpus|)). (shingleN, numHashes,
     * bands) are frozen for the life of the table — recorded in the
-    * store's `_META` sidecar and require-matched here and by every
+    * store properties and require-matched here and by every
     * geometry-taking probe, so parameter drift fails loudly instead
     * of silently missing matches; changing them is a rebuild, exactly
     * like frozen LSH planes.
@@ -1009,8 +1000,8 @@ object Dedup {
   /** [[buildNearDupStore]] with a [[BandPlanner]]-recommended geometry
     * (r17, wiring the planner into the build path): the plan's
     * (numHashes, bands) become the index's frozen geometry, and the
-    * plan's predicted operating point is recorded in the same `_META`
-    * sidecar — so an operator reading the index learns not just HOW
+    * plan's predicted operating point is recorded in the same store
+    * properties — so an operator reading the index learns not just HOW
     * it was banded but WHY (the curve it was planned to clear).
     * Probing with drifted geometry still fails loudly through
     * [[requireStoreGeometry]]; migrating to a re-planned geometry is
@@ -1023,7 +1014,7 @@ object Dedup {
       plan.numHashes, plan.bands, extraProps = plannerProps(plan))
 
   /** The `planner.*` provenance keys a planner-chosen geometry records
-    * in its index `_META` — ONE definition for the batch build above
+    * in its index properties — ONE definition for the batch build above
     * and the streaming first-delivery build (ADVICE r18: with
     * plannedGeometry on a brand-new store the self-heal build never
     * runs, and the first [[buildNearDupStoreFromSig]] recorded only
@@ -1064,7 +1055,7 @@ object Dedup {
   }
 
   /** The geometry a signature index was built with, read back from
-    * its `_META` sidecar — None when the table doesn't exist or
+    * its store properties — None when the table doesn't exist or
     * records no/incomplete geometry (unknown provenance). The
     * serving-continuity read behind planned-geometry pipelines: an
     * EXISTING index's frozen geometry wins over a fresh plan, because
@@ -1073,7 +1064,6 @@ object Dedup {
     */
   def storedGeometry(store: graft.sources.ParquetStore,
       table: String): Option[(Int, Int, Int)] = {
-    if (!store.exists(table)) return None
     val meta = store.getMeta(table)
     for {
       s <- meta.get(MetaShingleN)
@@ -1089,32 +1079,16 @@ object Dedup {
       extraProps: Map[String, String]): Unit = {
     requireStoreGeometry(store, table, shingleN, numHashes, bands,
       "buildNearDupStore", strict = false)
-    // meta BEFORE data: a crash between the two leaves a table whose
-    // next build-retry rewrites the same meta (idempotent), so any
-    // index with committed data always carries its geometry.
-    // Existing keys are PRESERVED under the rewrite (review r18):
-    // putMeta is a full replace, so an incremental extend of a
-    // planner-built index would otherwise silently strip its
-    // planner.* provenance on the first MERGE — the geometry keys
-    // re-assert (require-matched identical above), extraProps win on
-    // a planned rebuild. Preservation applies ONLY when the table has
-    // COMMITTED data (review r18, second pass): a geometry-only
-    // sidecar is the documented r14 crash artifact — describing data
-    // that never landed — and merging its stale planner.* keys onto a
-    // fresh differently-planned build would label the new index with
-    // a plan it was never built from; the artifact still gets wiped.
-    val prior =
-      if (store.exists(table)) store.getMeta(table)
-      else Map.empty[String, String]
-    store.putMeta(table,
-      prior ++ geometryProps(shingleN, numHashes, bands) ++ extraProps)
+    // the geometry commits WITH the rows (one MERGE), so an index with
+    // data always carries it and one without data has none. The
+    // properties replace the table's whole set, so existing keys are
+    // PRESERVED (review r18): an incremental extend of a planner-built
+    // index would otherwise strip its planner.* provenance — the
+    // geometry keys re-assert (require-matched identical above),
+    // extraProps win on a planned rebuild
     store.merge(table,
-      sigStoreRows(docs, idCol, textCol, shingleN, numHashes, bands), "id")
-    // a zero-row first build leaves the table nonexistent by
-    // ParquetStore contract — drop the just-written sidecar too, so a
-    // later build of the still-empty table with different geometry is
-    // not rejected as drift against data that was never committed
-    if (!store.exists(table)) store.drop(table)
+      sigStoreRows(docs, idCol, textCol, shingleN, numHashes, bands), "id",
+      store.getMeta(table) ++ geometryProps(shingleN, numHashes, bands) ++ extraProps)
   }
 
   /** [[buildNearDupStore]] from an already-computed (persisted)
@@ -1123,7 +1097,9 @@ object Dedup {
     * survivors from text would repeat exactly the per-row work the
     * shared per-batch signature frame exists to pay once. Index-row
     * parity with the text path is exact: norm_hash recomputes from
-    * text (cheap, not in the sig frame), the left join restores
+    * `docs`' text (cheap, not in the sig frame) — the text exact
+    * dedup hashes, which the stream passes raw while `sig` signs its
+    * clean — the left join restores
     * shingle-less docs as (shingles = [], sig/band_keys = null) —
     * [[minHashSigOf]] filtered them, [[sigStoreRows]] keeps them for
     * the exact-dedup probe's norm_hash domain — and band_keys derive
@@ -1137,20 +1113,6 @@ object Dedup {
     validateBatchSig(sig, shingleN, numHashes, "buildNearDupStoreFromSig")
     requireStoreGeometry(store, table, shingleN, numHashes, bands,
       "buildNearDupStoreFromSig", strict = false)
-    // preserve existing keys (review r18): the streaming chain calls
-    // this per surviving micro-batch, and a bare geometry-only
-    // replace wiped a planner-built index's planner.* provenance on
-    // the first delivery with survivors. Committed-data-only, like
-    // the batch builder: a geometry-only crash sidecar is wiped, not
-    // resurrected. `extraProps` (ADVICE r18) lets the planned-geometry
-    // stream stamp its freshly-computed planner.* provenance on the
-    // very first build when NO self-heal ran (brand-new store) — the
-    // scaladoc-promised record the geometry keys alone lost.
-    val prior =
-      if (store.exists(table)) store.getMeta(table)
-      else Map.empty[String, String]
-    store.putMeta(table,
-      prior ++ geometryProps(shingleN, numHashes, bands) ++ extraProps)
     val rows = numHashes / bands
     val merged = docs.select(col(idCol).as("id"), col(textCol).as("text"))
       .withColumn("norm_hash", normHash(col("text")))
@@ -1163,9 +1125,13 @@ object Dedup {
         array((0 until bands).map(b =>
           hash(lit(b), slice(col("sig"), b * rows + 1, rows))): _*)))
       .select("id", "norm_hash", "sig", "shingles", "band_keys")
-    store.merge(table, merged, "id")
-    // same zero-row cleanup as buildNearDupStore
-    if (!store.exists(table)) store.drop(table)
+    // existing keys preserved, as in buildNearDupStore: the streaming
+    // chain calls this per surviving micro-batch. `extraProps` (ADVICE
+    // r18) lets the planned-geometry stream stamp its freshly-computed
+    // planner.* provenance on the very first build when NO self-heal
+    // ran (brand-new store)
+    store.merge(table, merged, "id",
+      store.getMeta(table) ++ geometryProps(shingleN, numHashes, bands) ++ extraProps)
   }
 
   /** NEAR-DUP decontamination (the MinHash sibling of

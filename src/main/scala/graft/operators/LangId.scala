@@ -77,7 +77,7 @@ object LangId {
     * fastText's subwords key on. Char grams give SHORT documents
     * evidence the empty word-bigram space cannot (one token already
     * emits grams at n ≤ len+2). The kind is part of the model's
-    * feature GEOMETRY: it rides in `_META` and every serving surface
+    * feature GEOMETRY: it rides in the store properties and every serving surface
     * featurizes by the artifact's own kind — a scorer hashing word
     * grams against char-trained coefficients is silently garbage,
     * the same drift class hexLen/n already guard.
@@ -196,11 +196,11 @@ object LangId {
         Array.tabulate(dim)(c => m(r, c))), hexLen, n, featKind)
   }
 
-  /** `_META` keys for a persisted model table ([[saveModel]]): the
+  /** Store property keys for a persisted model table ([[saveModel]]): the
     * FULL serving geometry rides with the artifact — langs inventory,
     * bucket hexLen, n-gram order, and the 12-dp integer serving scale
     * — so a consumer can require-match ALL of it before any corpus
-    * work (the signature indexes' `_META` discipline; reference
+    * work (the signature indexes' store-property discipline; reference
     * shape: the job-scoped model/provenance checks of
     * core/src/init.rs:122-269).
     */
@@ -230,8 +230,8 @@ object LangId {
     * (lang, icept, w array, RAW doubles: parquet round-trips IEEE
     * doubles exactly, where persisting the scaled integers would bake
     * one serving scale into the artifact) — with the full feature
-    * geometry in `_META`, committed atomically alongside the data
-    * ([[graft.sources.ParquetStore.overwriteWithMeta]] — a model
+    * geometry as the snapshot's properties, committed with the data
+    * ([[graft.sources.ParquetStore.overwrite]] — a model
     * refresh is a full replace, never a merge, like the CDF
     * calibration snapshots).
     */
@@ -239,7 +239,7 @@ object LangId {
       model: Model): Unit = {
     require(model.langs.forall(!_.contains(",")),
       s"LangId.saveModel: language labels must not contain ',' " +
-        s"(the _META inventory separator): ${model.langs.mkString("|")}")
+        s"(the property inventory separator): ${model.langs.mkString("|")}")
     requireFeatKind(model.featKind, "LangId.saveModel")
     // the STORE's session, not SparkSession.active (review r19): the
     // frame must be built where it will be written, and active() is
@@ -248,7 +248,7 @@ object LangId {
     import spark.implicits._
     val rows = model.langs.indices.map(i =>
       (model.langs(i), model.intercepts(i), model.weights(i).toSeq))
-    store.overwriteWithMeta(table,
+    store.overwrite(table,
       rows.toDF("lang", "icept", "w"),
       Map(MetaFn -> FnVersion,
         MetaLangs -> model.langs.mkString(","),
@@ -274,7 +274,7 @@ object LangId {
     val (df, meta) = store.readSnapshotWithMeta(table)
     val fn = meta.get(MetaFn)
     if (fn.isEmpty) throw new IllegalStateException(
-      s"$caller: model table '$table' records no version (_META) — " +
+      s"$caller: model table '$table' records no version (store properties) — " +
         "rewrite it with LangId.saveModel; routing on a model of unknown " +
         "provenance mislabels every language")
     require(fn.contains(FnVersion),
@@ -325,13 +325,13 @@ object LangId {
       .sortBy(_._1)
     require(rows.map(_._1).toSeq == metaLangs.sorted,
       s"$caller: model table '$table' rows name languages " +
-        s"[${rows.map(_._1).mkString(",")}] but _META records " +
+        s"[${rows.map(_._1).mkString(",")}] but its properties record " +
         s"[${metaLangs.mkString(",")}] — a partial overwrite or foreign " +
         "table; rewrite the artifact")
     rows.foreach { case (l, _, w) =>
       require(w.length == dim,
         s"$caller: model table '$table' row '$l' spans ${w.length} buckets " +
-          s"but _META hexLen=$hexLen implies $dim — geometry drift; retrain")
+          s"but the recorded hexLen=$hexLen implies $dim — geometry drift; retrain")
     }
     Model(rows.map(_._1), rows.map(_._2), rows.map(_._3), hexLen, n,
       featKind)

@@ -247,7 +247,7 @@ object Multimodal {
     * "deterministic, replayable vectors" contract then only holds
     * within one deployment. Mixed-executor clusters or upgrades that
     * add imageio plugins must re-extract stored feature vectors (the
-    * `_META` snapshot-drift discipline applies: version the extractor
+    * store-property snapshot-drift discipline applies: version the extractor
     * alongside any index built over its output).
     */
   def imageBlockLuma(dim: Int = 64): Array[Byte] => Seq[Float] = {

@@ -19,7 +19,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * builds/refreshes the CDF snapshot on calibration cadence
   * ([[buildPercentileStore]] — the frame is the (lang, 4dp-quality)
   * HISTOGRAM CDF, ≤ 10001 cells per language, tiny at any corpus
-  * size), `_META` records the scorer version + a caller snapshot
+  * size), its store properties record the scorer version + a caller snapshot
   * label, and every probe require-matches them
   * ([[requireCdf]]) so a CDF built by an older scorer — whose
   * percentiles are not comparable — fails loudly instead of silently
@@ -27,7 +27,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object QualityCal {
 
-  /** `_META` keys for a persisted CDF snapshot table. */
+  /** Store property keys for a persisted CDF snapshot table. */
   private[graft] val MetaFn = "quality.cdf.fn"
   private[graft] val MetaSnapshot = "quality.cdf.snapshot"
 
@@ -73,25 +73,22 @@ object QualityCal {
 
   /** Build (or refresh) the persisted CDF snapshot: one tiny
     * versioned overwrite — a calibration snapshot is a full replace,
-    * never a merge — with the provenance record committed ATOMICALLY
-    * alongside the data ([[graft.sources.ParquetStore
-    * .overwriteWithMeta]]: both halves are in place before the
-    * `_CURRENT` pointer flips, the store's single commit point). A
-    * refresh crash therefore leaves the PREVIOUS (data, label) pair
-    * fully served — there is no window where a concurrent stream
-    * start can pass `requireCdf` against one snapshot's label and
-    * read another's cells, which the earlier two-step
-    * overwrite-then-putMeta refresh permitted between its writes
-    * (ADVICE r15). Serving paths should read the pair back through
-    * [[loadCdf]], which resolves data and label from one pointer
-    * read.
+    * never a merge — with the provenance record as the snapshot's
+    * properties, committed in the same store commit as the data
+    * ([[graft.sources.ParquetStore.overwrite]]). A refresh crash
+    * therefore leaves the PREVIOUS (data, label) pair fully served —
+    * there is no window where a concurrent stream start can pass
+    * `requireCdf` against one snapshot's label and read another's
+    * cells (ADVICE r15). Serving paths should read the pair back
+    * through [[loadCdf]], which resolves data and label from one
+    * commit read.
     */
   def buildPercentileStore(store: graft.sources.ParquetStore, table: String,
       docs: DataFrame, langCol: String, textCol: String,
       snapshot: String): Unit = {
     val scored = docs.select(col(langCol).as("lang"),
       GraftFunctions.qualityScore(col(textCol)).as("quality"))
-    store.overwriteWithMeta(table, cdfOf(scored),
+    store.overwrite(table, cdfOf(scored),
       Map(MetaFn -> FnVersion, MetaSnapshot -> snapshot))
   }
 
@@ -107,7 +104,7 @@ object QualityCal {
     val fn = meta.get(MetaFn)
     if (fn.isEmpty) throw new IllegalStateException(
       s"$caller: quality CDF table '$table' records no scorer version " +
-        "(_META) — rebuild it with QualityCal.buildPercentileStore; " +
+        "(store properties) — rebuild it with QualityCal.buildPercentileStore; " +
         "gating on a CDF of unknown provenance miscalibrates every language")
     require(fn.contains(FnVersion),
       s"$caller: CDF table '$table' was built by scorer '${fn.get}' but " +
@@ -137,9 +134,9 @@ object QualityCal {
 
   /** Validate AND read the CDF snapshot as one consistent pair: the
     * returned frame is the data committed with the very label the
-    * checks cleared (one `_CURRENT` resolution via
+    * checks cleared (one commit read via
     * [[graft.sources.ParquetStore.readSnapshotWithMeta]]). Separate
-    * `requireCdf` + `store.read` calls re-resolve the pointer, so a
+    * `requireCdf` + `store.read` calls each read the commit, so a
     * calibration refresh landing between them could serve cells the
     * cleared label never described.
     */

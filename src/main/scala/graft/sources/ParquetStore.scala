@@ -43,26 +43,32 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   * knobs: [[bucketedWrite]] rebalances on the bucket and lets adaptive
   * execution size the writers from the data being written.
   *
-  * Layout per table:
-  *   `_CURRENT`       — monotonic global version pointer (liveness)
+  * Layout per table: one control file, `_BUCKETS`, and the snapshot
+  * dirs it names.
   *   `_BUCKETS`       — header lines, then "bucket version bytes" lines:
   *                      which snapshot dir holds each bucket's current
   *                      data and its parquet bytes (-1 = flat,
   *                      unbucketed snapshot from overwrite()). Header
-  *                      lines start with `#`; every commit writes `#n`,
-  *                      `#schema` and `#token`, and a `_BUCKETS` that
-  *                      lacks one fails loudly:
+  *                      lines start with `#`; every commit writes
+  *                      `#version`, `#n`, `#schema` and `#token`:
+  *                      `#version <n>` is the commit's version (the
+  *                      next commit writes `v_<n+1>`),
   *                      `#n <buckets>` pins the bucket count,
   *                      `#schema <json>` is the schema the commit wrote
   *                      (so a read needs no parquet schema inference,
   *                      which is a Spark job), `#token <uuid>` is unique
   *                      per commit (a dropped and re-created table that
   *                      re-commits an identical bucket map at `v_0`
-  *                      still reads as new content), and
+  *                      still reads as new content),
   *                      `#delta <version> <key>` names the delta dir and
-  *                      the key its rows replace base rows by
+  *                      the key its rows replace base rows by, and
+  *                      `#tprop <key> <value>` / `#sprop <key> <value>`
+  *                      are the table's properties (see [[getMeta]])
   *   `v_<n>/__bucket=<b>/` — parquet for the buckets rewritten at n
   *   `v_<n>/`         — or, for a delta version, its unbucketed rows
+  * A `_BUCKETS` without `#version` or one of `#n`, `#schema`, `#token`
+  * fails loudly, naming the table, as does a first write into a table
+  * dir an older layout left control files in.
   *
   * [[read]] returns one DataFrame per committed `_BUCKETS` content and
   * hands the same object back until the next commit: no file listing,
@@ -72,21 +78,22 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   * delta: last writer per key, never all-pairs. A table without a
   * delta reads its buckets alone.
   *
-  * Both pointer files flip via overwriting rename (posix/HDFS rename
+  * A commit is one overwriting rename of `_BUCKETS` (posix/HDFS rename
   * onto an existing path is atomic), so readers never observe a
-  * missing or partial pointer; a failed merge leaves the previous
-  * pointers intact — idempotent-retry safe, which is what makes the
-  * streaming path's at-least-once delivery correct (SURVEY §7.4).
-  * Old snapshot dirs are GC'd once neither the bucket map nor the
-  * delta references them, after one commit of grace (see [[cleanOld]]).
+  * missing or partial file, and a table's rows, version and properties
+  * flip together; a failed write leaves the previous commit intact —
+  * idempotent-retry safe, which is what makes the streaming path's
+  * at-least-once delivery correct (SURVEY §7.4). Old snapshot dirs
+  * are GC'd once neither the bucket map nor the delta references them,
+  * after one commit of grace (see [[cleanOld]]).
   *
   * Concurrency contract: ONE writer per table (the engine is the
   * single writer; streaming micro-batches are serialized by
   * foreachBatch). Two concurrent merges would race the version
   * counter — multi-writer needs the optimistic-commit protocol of a
   * real table format, which is part of what the Delta swap buys.
-  * Readers are safe against a single concurrent writer: pointer flips
-  * are atomic renames, and GC retains the previous commit's bucket
+  * Readers are safe against a single concurrent writer: commits are
+  * atomic renames, and GC retains the previous commit's bucket
   * and delta versions for one commit cycle, so a handle read before a
   * commit still reads after it. An operation that compacts first and
   * then commits its own version (a [[delete]], a widening MERGE or one
@@ -116,12 +123,11 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 
   private def fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Control-file IO (pointers, bucket maps, meta sidecars) through
-    * the RAW filesystem when the scheme wraps a checksummed one
-    * (local `file://`): ChecksumFileSystem keeps each file's CRC in a
-    * separate `.name.crc` sidecar which does NOT flip atomically with
-    * the overwriting rename, so a concurrent reader could pair the
-    * NEW pointer bytes with the OLD sidecar and fail with
+  /** `_BUCKETS` IO through the RAW filesystem when the scheme wraps a
+    * checksummed one (local `file://`): ChecksumFileSystem keeps each
+    * file's CRC in a separate `.name.crc` sidecar which does NOT flip
+    * atomically with the overwriting rename, so a concurrent reader
+    * could pair the NEW bytes with the OLD sidecar and fail with
     * ChecksumException — observed under the concurrent
     * refresh-while-serving pin (r16), violating the "readers see old
     * or new content, never an error" contract the atomic rename
@@ -132,19 +138,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
     case other => other
   }
-  private def pointer(table: String) = new Path(s"$root/$table/_CURRENT")
   private def bucketsPath(table: String) = new Path(s"$root/$table/_BUCKETS")
   private def versionDir(table: String, v: Long) = s"$root/$table/v_$v"
-
-  /** Effective bucket count for a table: the count persisted in its
-    * _BUCKETS header (written at its first commit), falling back to
-    * the constructor value for a new table. Persisting it
-    * makes the layout self-describing — reopening an existing table
-    * with a different constructor nBuckets would otherwise hash keys
-    * into the wrong buckets and silently duplicate/miss rows on merge.
-    */
-  private def tableBuckets(table: String): Int =
-    readBucketsFile(table).fold(nBuckets)(_.nb)
 
   private def bucketOf(key: String, nb: Int) = pmod(hash(col(key)), lit(nb))
 
@@ -168,155 +163,93 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     df.hint("rebalance", col("__bucket"))
       .write.partitionBy("__bucket").mode(SaveMode.Overwrite).parquet(dir)
 
-  private def metaPath(table: String) = new Path(s"$root/$table/_META")
-
-  /** Table-level key→value properties sidecar (`_META`) — the
-    * self-describing-layout companion to the `#n` bucket-count header:
-    * index builders record their frozen build parameters here (e.g.
-    * the MinHash (shingleN, numHashes, bands) geometry) so a probe
-    * can REQUIRE-match them instead of trusting the caller to have
-    * remembered them. Written via the same atomic tmp+rename as the
-    * pointers; survives merges (it describes the table, not a
-    * snapshot) and dies with drop(). Keys must be whitespace-free,
-    * values newline-free — enforced here so getMeta's line format
-    * can never be corrupted into silently wrong pairs.
-    */
-  private def validateMetaProps(props: Map[String, String]): Unit = {
+  /** Property keys must be whitespace-free, values newline-free, so a
+    * `#tprop`/`#sprop` header line can never be corrupted into
+    * silently wrong pairs. */
+  private def validateProps(props: Map[String, String]): Unit = {
     require(props.keys.forall(k => k.nonEmpty && !k.exists(_.isWhitespace)),
-      s"putMeta keys must be non-empty and whitespace-free: ${props.keys}")
+      s"property keys must be non-empty and whitespace-free: ${props.keys}")
     require(props.values.forall(v => !v.exists(c => c == '\n' || c == '\r')),
-      "putMeta values must be newline-free")
+      "property values must be newline-free")
   }
 
-  private def renderMeta(props: Map[String, String]): String =
-    props.toSeq.sortBy(_._1).map { case (k, v) => s"$k $v" }.mkString("\n")
-
-  private def parseMeta(bytes: Array[Byte]): Map[String, String] =
-    new String(bytes, "UTF-8").linesIterator
-      .map(_.trim).filter(_.nonEmpty).map { line =>
-        val i = line.indexOf(' ')
-        if (i < 0) line -> "" else line.substring(0, i) -> line.substring(i + 1)
-      }.toMap
-
-  def putMeta(table: String, props: Map[String, String]): Unit = {
-    validateMetaProps(props)
-    // review r17: on a sidecar-era table (ANY _META_v exists) this
-    // legacy write would SUCCEED but never be served — getMeta
-    // resolves sidecars or loud unknown provenance — so the caller's
-    // update silently vanishes; fail loudly instead. Tables
-    // maintained by putMeta alone (the signature-geometry stores)
-    // never have sidecars. Once every sidecar is GC'd (plain
-    // overwrites aged the era out entirely), putMeta is legal again:
-    // with no versioned trace left, the table-level label coherently
-    // describes the table.
-    if (metaVersions(table).nonEmpty)
-      throw new IllegalStateException(
-        s"$root/$table: this table's properties are versioned " +
-          "(_META_v sidecars via overwriteWithMeta) — a legacy putMeta " +
-          "would never be served; refresh it through overwriteWithMeta")
-    atomicWrite(metaPath(table), renderMeta(props))
-  }
-
-  /** Per-version `_META_v<n>` sidecar path — written by
-    * [[overwriteWithMeta]] BEFORE the `_CURRENT` flip, so the
-    * snapshot's data and its properties commit atomically (readers
-    * resolving the pointer see either the old pair or the new pair,
-    * never new data under old properties — the calibration-refresh
-    * race the table-level `_META` write order could not close).
+  /** The table's key→value properties, committed in `_BUCKETS` with the
+    * rows they describe; empty for a table that does not exist. Index
+    * builders record their frozen build parameters here (e.g. the
+    * MinHash (shingleN, numHashes, bands) geometry) so a probe can
+    * REQUIRE-match them instead of trusting the caller to have
+    * remembered them. Two scopes:
+    *  - table properties, set by [[merge]]: every later merge, delete
+    *    and compaction carries them (they describe the table);
+    *  - snapshot properties, set by [[overwrite]]: the next commit
+    *    drops them (they name one snapshot, e.g. a calibration
+    *    release, and a stale label over fresh cells is the silent
+    *    miscalibration they exist to prevent).
+    * Properties passed to a write replace both scopes; a write without
+    * them carries the table properties.
     */
-  private def metaVPath(table: String, v: Long) =
-    new Path(s"$root/$table/_META_v$v")
+  def getMeta(table: String): Map[String, String] =
+    state(table).fold(Map.empty[String, String])(_.props)
 
-  /** Versions carrying a versioned `_META_v<n>` sidecar, ascending. */
-  private def metaVersions(table: String): Seq[Long] = {
-    val dir = new Path(s"$root/$table")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("_META_v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("_META_v").toLong).toOption)
-      .sorted
-  }
+  /** The version of the table's last commit. */
+  def currentVersion(table: String): Option[Long] = state(table).map(_.version)
 
-  /** Properties for the table: the `_META_v<current>` sidecar when
-    * the CURRENT version carries one (committed via
-    * [[overwriteWithMeta]]), else the table-level `_META` written by
-    * [[putMeta]]; empty for tables with neither. Resolution is
-    * EXACT-version, not newest-at-or-below (code review r16): a
-    * version committed WITHOUT a sidecar — a plain [[overwrite]], or
-    * a [[merge]] — after an overwriteWithMeta must read as "no
-    * versioned properties" (falling back to the legacy sidecar, or
-    * unknown provenance), never serve the SUPERSEDED snapshot's
-    * label for data it does not describe: a stale label under fresh
-    * cells is exactly the silent miscalibration the atomic commit
-    * exists to prevent. Consequence: overwriteWithMeta tables are
-    * full-replace tables — refresh them only through
-    * overwriteWithMeta (a merge would drop them to unknown
-    * provenance, loudly).
-    */
-  def getMeta(table: String): Map[String, String] = {
-    // tolerant sidecar read: a sidecar GC'd between the exists probe
-    // and the read degrades to the legacy path (consistent-pair
-    // consumers use readSnapshotWithMeta, which retries instead)
-    val exact = currentVersion(table).map(metaVPath(table, _))
-      .filter(fs.exists)
-      .flatMap(p => try Some(parseMeta(readFully(p)))
-        catch { case _: java.io.FileNotFoundException => None })
-    exact.getOrElse {
-      // legacy fallback ONLY for tables that never entered the
-      // versioned-sidecar era (ADVICE r16): once any _META_v exists,
-      // a current version without its own sidecar is unknown
-      // provenance — the legacy table-level _META describes some
-      // SUPERSEDED snapshot, and serving its label over fresher cells
-      // is the exact stale pairing the exact-version rule blocks for
-      // sidecars
-      if (metaVersions(table).nonEmpty) Map.empty
-      else {
-        val p = metaPath(table)
-        if (!fs.exists(p)) Map.empty else parseMeta(readFully(p))
-      }
-    }
-  }
+  def exists(table: String): Boolean = controlFs.exists(bucketsPath(table))
 
-  def currentVersion(table: String): Option[Long] = {
-    val p = pointer(table)
-    if (!fs.exists(p)) None
-    else Some(new String(readFully(p), "UTF-8").trim.toLong)
-  }
-
-  def exists(table: String): Boolean = currentVersion(table).isDefined
-
-  private def readBucketsFile(table: String): Option[BucketsFile] = {
-    val raw =
-      try new String(readFully(bucketsPath(table)), "UTF-8")
+  /** The committed `_BUCKETS` text, or None when the table does not exist. */
+  private def readRaw(table: String): Option[String] = {
+    val in = try controlFs.open(bucketsPath(table))
       catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+  }
+
+  /** The committed state of a table, or None when it does not exist. */
+  private def state(table: String): Option[BucketsFile] = readRaw(table).map(parse(table, _))
+
+  private def parse(table: String, raw: String): BucketsFile = {
     def malformed(what: String) =
       new IllegalStateException(s"$root/$table: _BUCKETS $what")
     val lines = raw.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    def header(tag: String) =
-      lines.find(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag ").trim)
-    def required(tag: String) = header(tag).getOrElse(throw malformed(s"lacks its #$tag line"))
+    def headers(tag: String) =
+      lines.filter(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag ").trim)
+    def required(tag: String) =
+      headers(tag).headOption.getOrElse(throw malformed(s"lacks its #$tag line"))
+    def props(tag: String) = headers(tag).map { p =>
+      val i = p.indexOf(' ')
+      if (i < 0) p -> "" else p.substring(0, i) -> p.substring(i + 1)
+    }.toMap
+    if (headers("version").isEmpty) throw oldLayout(table)
     val entries = lines.filterNot(_.startsWith("#")).map(_.split("\\s+") match {
       case Array(b, v, n) => (b.toInt, v.toLong, n.toLong)
       case e => throw malformed(s"line '${e.mkString(" ")}' is not 'bucket version bytes'")
     })
-    Some(BucketsFile(raw, required("n").toInt,
+    val f = BucketsFile(required("version").toLong, required("n").toInt,
       DataType.fromJson(required("schema")).asInstanceOf[StructType],
-      required("token"),
       entries.map { case (b, v, _) => b -> v }.toMap,
       entries.map { case (b, _, n) => b -> n }.toMap,
-      header("delta").map { d =>
+      headers("delta").headOption.map { d =>
         val Array(v, key) = d.split(" ", 2)
         Delta(v.toLong, key)
-      }))
+      },
+      props("tprop"), props("sprop"))
+    required("token") // every commit writes one; the cache keys on it
+    f
   }
 
-  /** The committed state of an existing table. */
-  private def state(table: String): BucketsFile = readBucketsFile(table).getOrElse(
-    throw new IllegalStateException(s"$root/$table: _CURRENT without _BUCKETS"))
+  /** The old layout kept a `_CURRENT` version pointer and `_META` /
+    * `_META_v<n>` property files beside a `_BUCKETS` without
+    * `#version`. Such a table fails loudly and is re-created. */
+  private def oldLayout(table: String) = new IllegalStateException(
+    s"$root/$table: a table in the old store layout (_CURRENT, _META or _META_v files, " +
+      "or a _BUCKETS without #version) — drop and re-create it")
 
-  private def readFully(p: Path): Array[Byte] = {
-    val in = controlFs.open(p)
-    try in.readAllBytes() finally in.close()
+  /** A first commit must not land beside the old layout's control
+    * files, which would outlive it. */
+  private def requireNoOldLayout(table: String): Unit = {
+    val dir = new Path(s"$root/$table")
+    if (fs.exists(dir) && fs.listStatus(dir).map(_.getPath.getName)
+        .exists(n => n.startsWith("_CURRENT") || n.startsWith("_META")))
+      throw oldLayout(table)
   }
 
   private def bucketDataPaths(table: String, m: Map[Int, Long]): Seq[String] =
@@ -325,23 +258,34 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       case (b, v) => s"${versionDir(table, v)}/__bucket=$b"
     }
 
-  def read(table: String): DataFrame = {
-    if (!exists(table))
-      throw new IllegalStateException(s"no such table: $root/$table")
-    val f = state(table)
+  def read(table: String): DataFrame = readSnapshotWithMeta(table)._1
+
+  /** The current snapshot's data and the properties committed with it,
+    * from one `_BUCKETS` read: a consistent pair whatever commit lands
+    * meanwhile (separate [[getMeta]] and [[read]] calls each read the
+    * file, so a commit between them can pair one snapshot's
+    * properties with another's data). */
+  def readSnapshotWithMeta(table: String): (DataFrame, Map[String, String]) =
+    handle(table).map { case (df, f) => (df, f.props) }
+      .getOrElse(throw new IllegalStateException(s"no such table: $root/$table"))
+
+  /** The handle for the table's current commit, with its parsed state;
+    * built (and the file parsed) only when the content changed. */
+  private def handle(table: String): Option[(DataFrame, BucketsFile)] = readRaw(table).map { raw =>
     val cached = handles.get(table)
-    if (cached != null && cached._1 == f.raw) cached._2
+    if (cached != null && cached._1 == raw) (cached._3, cached._2)
     else {
+      val f = parse(table, raw)
       val df = scan(table, f)
-      handles.put(table, (f.raw, df))
-      df
+      handles.put(table, (raw, f, df))
+      (df, f)
     }
   }
 
-  /** The last committed `_BUCKETS` content read per table, with the
-    * DataFrame [[read]] built for it. */
+  /** The last committed `_BUCKETS` content read per table, with its
+    * parsed state and the DataFrame [[read]] built for it. */
   @transient private lazy val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+    new java.util.concurrent.ConcurrentHashMap[String, (String, BucketsFile, DataFrame)]()
 
   /** Parquet scan of a commit's buckets, typed by its schema; with a
     * delta, the base rows the delta does not replace, plus the delta.
@@ -371,8 +315,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     spark.read.schema(schema).parquet(versionDir(table, d.v))
 
   /** read(), or None when the table does not exist. */
-  def readOption(table: String): Option[DataFrame] =
-    if (exists(table)) Some(read(table)) else None
+  def readOption(table: String): Option[DataFrame] = handle(table).map(_._1)
 
   /** read(), or an empty frame of `schema` when the table does not
     * exist (zero-row backfills deliberately leave tables uncreated).
@@ -381,9 +324,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     readOption(table).getOrElse(spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
-  /** Atomic pointer write: tmp file + overwriting rename — the
-    * pointer is NEVER absent once created; a crash or concurrent
-    * reader observes either the old or the new content.
+  /** Atomic control-file write: tmp file + overwriting rename — the
+    * file is NEVER absent once created; a crash or concurrent reader
+    * observes either the old or the new content.
     */
   private def atomicWrite(target: Path, content: String): Unit = {
     val tmp = new Path(target.getParent, target.getName + ".tmp")
@@ -395,9 +338,9 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // POSIX rename(2): atomically REPLACES the target in one
       // syscall. Hadoop's local FileContext rename with OVERWRITE is
       // delete-then-rename — a concurrent reader can observe the
-      // pointer ABSENT between the two (caught by the r16 concurrent
+      // file ABSENT between the two (caught by the r16 concurrent
       // refresh-while-serving pin), which breaks this store's
-      // "pointer never absent once created" contract.
+      // "never absent once created" contract.
       java.nio.file.Files.move(
         java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
         java.nio.file.Paths.get(fs.makeQualified(target).toUri.getPath),
@@ -412,217 +355,36 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
   }
 
-  private def commit(table: String, v: Long, bucketMap: Map[Int, Long],
-      bytes: Map[Int, Long], nb: Int, written: StructType, delta: Option[Delta] = None,
-      prevReferenced: Set[Long] = Set.empty): Unit = {
-    // Pointer-write ORDER is crash-critical, and differs by case:
-    // - first commit: _BUCKETS before _CURRENT, so exists() only turns
-    //   true once the map it implies is in place (a crash between the
-    //   two leaves the table nonexistent — correct).
-    // - later commits: _CURRENT before _BUCKETS. The reverse would
-    //   leave a crashed merge's NEW map visible with the OLD version
-    //   counter — the retry would then recompute the same v and
-    //   SaveMode.Overwrite the very directories its input paths point
-    //   into. With pointer-first, a crash leaves the old map intact:
-    //   readers serve the pre-merge state and the retry writes a fresh
-    //   v+1 directory.
-    // The "#n" header pins the table's bucket count (self-describing
-    // layout — see tableBuckets); "#schema" is the written schema less
-    // the bucket partition column, "#token" makes every commit's
-    // content unique, and "#delta" names the delta (see the class doc).
-    val schema = StructType(written.filterNot(_.name == "__bucket"))
-    val bucketsContent =
-      (Seq(s"#n $nb", s"#schema ${schema.json}", s"#token ${java.util.UUID.randomUUID()}") ++
-        delta.map(d => s"#delta ${d.v} ${d.key}") ++
-        bucketMap.toSeq.sortBy(_._1).map { case (b, ver) => s"$b $ver ${bytes(b)}" })
-        .mkString("\n")
-    if (currentVersion(table).isEmpty) {
-      atomicWrite(bucketsPath(table), bucketsContent)
-      atomicWrite(pointer(table), v.toString)
-    } else {
-      atomicWrite(pointer(table), v.toString)
-      atomicWrite(bucketsPath(table), bucketsContent)
-    }
-    cleanOld(table, v, bucketMap.values.toSet ++ delta.map(_.v), prevReferenced)
+  /** Publishes `next` — the table's one commit point — then GCs; `prev`
+    * keeps its grace (see [[cleanOld]]). */
+  private def commit(table: String, next: BucketsFile, prev: Set[Long]): Unit = {
+    atomicWrite(bucketsPath(table), next.render)
+    cleanOld(table, next.version, next.versions, prev)
   }
 
   /** Full overwrite (initial backfill / small dimension tables /
-    * catalog). Written flat — a subsequent merge re-buckets.
-    */
-  def overwrite(table: String, df: DataFrame): Unit = {
-    val prev = priorVersions(table)
-    val v = currentVersion(table).getOrElse(-1L) + 1L
-    df.write.mode(SaveMode.Overwrite).parquet(versionDir(table, v))
-    commitFlat(table, v, df.schema, prev)
-  }
-
-  /** The version dirs the table's last commit reads from; none for a
-    * new table. */
-  private def priorVersions(table: String): Set[Long] =
-    readBucketsFile(table).fold(Set.empty[Long])(_.versions)
-
-  /** Commits the flat snapshot written at `v`, with its bytes. */
-  private def commitFlat(table: String, v: Long, written: StructType, prev: Set[Long]): Unit = {
-    val bytes = dataFiles(new Path(versionDir(table, v))).map(_.getLen).sum
-    commit(table, v, Map(-1 -> v), Map(-1 -> bytes), tableBuckets(table), written, None, prev)
-  }
-
-  /** [[overwrite]] with the snapshot's properties committed
-    * ATOMICALLY alongside it: data dir and `_META_v<n>` sidecar are
-    * both in place BEFORE the `_CURRENT` flip, so the pointer — the
-    * single commit point — publishes the (data, properties) pair
-    * together. A crash anywhere before the flip leaves the previous
-    * pair fully served; there is no window where readers see new data
-    * under old properties or vice versa (the two-step
-    * overwrite+putMeta refresh has exactly that window between its
-    * writes). Use for snapshot-versioned reference tables whose
-    * properties name the snapshot (e.g. the quality-CDF calibration
-    * store); read the consistent pair back via
-    * [[readSnapshotWithMeta]].
+    * catalog / snapshot-versioned reference tables). Written flat — a
+    * subsequent merge re-buckets. `props`, when given, become the
+    * snapshot's properties, committed with its rows (see [[getMeta]]):
+    * a failed write leaves the previous (rows, properties) pair served,
+    * and [[readSnapshotWithMeta]] reads the pair back.
     *
-    * Writer contract: SINGLE WRITER PER TABLE (ADVICE r16). The
-    * atomicity above is crash-atomicity, not isolation — two
-    * concurrent refreshers can compute the same next version and one
-    * writer's parquet dir can land under the other's sidecar before
-    * they race on `_CURRENT`. The pre-flip check below turns the
-    * common interleaving into a loud failure (the version read at
-    * start must still be current at commit), but it is best-effort —
-    * a local filesystem has no compare-and-swap rename, so a writer
-    * sneaking in between the check and the flip is not detected.
-    * Serialize refreshes per table (the calibration scheduler's
-    * single maintenance job does).
+    * Writer contract: SINGLE WRITER PER TABLE. Serialize refreshes of
+    * one table (the calibration scheduler's single maintenance job
+    * does): two concurrent writers compute the same next version.
     */
-  def overwriteWithMeta(table: String, df: DataFrame,
-      props: Map[String, String]): Unit = {
-    validateMetaProps(props)
-    val prev = priorVersions(table)
-    val v0 = currentVersion(table)
-    val v = v0.getOrElse(-1L) + 1L
-    def checkUnmoved(stage: String): Unit = {
-      val vNow = currentVersion(table)
-      if (vNow != v0) throw new IllegalStateException(
-        s"$root/$table: concurrent refresh detected $stage — _CURRENT " +
-          s"moved from ${v0.getOrElse(-1L)} to ${vNow.getOrElse(-1L)} " +
-          s"while this overwriteWithMeta was staging version $v; " +
-          "overwriteWithMeta tables are single-writer (serialize refreshes)")
-    }
-    // BEFORE the destructive write (review r17): if another writer
-    // already committed the same next version, overwriting its dir
-    // would clobber COMMITTED data before this writer's own check
-    // could abort it; catching the already-moved pointer here leaves
-    // the winner untouched. (Best-effort, as documented above — a
-    // writer landing between this read and the write is undetectable
-    // without a CAS rename.)
-    checkUnmoved("before staging")
-    df.write.mode(SaveMode.Overwrite).parquet(versionDir(table, v))
-    // the era is permanent (review r17): retire the legacy table-level
-    // _META on every overwriteWithMeta, BEFORE the flip. Era detection
-    // via surviving sidecars is GC-defeatable — cleanOld drops
-    // sidecars of superseded versions after one grace commit, so a
-    // plain overwrite + one more commit would otherwise resurrect the
-    // legacy label for data it never described. Retire = PROMOTE then
-    // delete (review r17, second pass): the legacy label describes the
-    // STILL-CURRENT snapshot v0 until the pointer flips, so a bare
-    // delete that crashed before the flip would strip a live
-    // snapshot's provenance (and era-permanence locks putMeta, so it
-    // could never be restored). Re-writing it first as v0's exact
-    // _META_v sidecar preserves the pair across every crash point:
-    // after the flip it is superseded and GC'd on the normal grace
-    // schedule, before the flip it serves exactly what the legacy
-    // fallback served. Placed AFTER the (long, failure-prone) data
-    // write (review r17, third pass): a df whose computation throws
-    // must leave the table OUT of the sidecar era entirely — the
-    // promote-first ordering era-locked putMeta on a refresh that
-    // never staged any data.
-    val legacy = metaPath(table)
-    if (fs.exists(legacy)) {
-      v0.foreach { cur =>
-        val curSidecar = metaVPath(table, cur)
-        if (!fs.exists(curSidecar))
-          try atomicWrite(curSidecar,
-            new String(readFully(legacy), "UTF-8"))
-          catch { case _: java.io.FileNotFoundException => () }
-      }
-      fs.delete(legacy, false)
-    }
-    atomicWrite(metaVPath(table, v), renderMeta(props))
-    checkUnmoved("before the pointer flip")
-    commitFlat(table, v, df.schema, prev)
-  }
-
-  /** The current snapshot's data and the properties committed WITH it,
-    * resolved from ONE `_CURRENT` read — the consistent pair for
-    * tables maintained by [[overwriteWithMeta]]. Separate
-    * `getMeta`+`read` calls each resolve the pointer independently,
-    * so a refresh landing between them can pair one snapshot's
-    * properties with another's data; here both halves derive from the
-    * same version (whose files are immutable and GC-graced one commit
-    * cycle). Tables without a versioned sidecar at the current
-    * version (legacy two-step writers, or a merge since the last
-    * overwriteWithMeta) fall back to `(read, getMeta)` with that
-    * pairing caveat.
-    */
-  def readSnapshotWithMeta(table: String): (DataFrame, Map[String, String]) = {
-    // bounded retry (code review r16): a reader can resolve a version
-    // whose sidecar was just GC'd because refreshes outpaced it —
-    // falling back to the two-call pair THERE would silently re-open
-    // the torn-pair window this method exists to close, so re-resolve
-    // instead. But a current version that lacks a sidecar and is
-    // STABLE across two looks (a plain overwrite/merge landed, or a
-    // legacy putMeta table) is not a race: take the documented
-    // two-call fallback — with exact-version getMeta that reads as
-    // the table-level properties or unknown provenance, never a
-    // superseded snapshot's label.
-    var attempt = 0
-    var lastV = Long.MinValue
-    while (true) {
-      val v = currentVersion(table).getOrElse(
-        throw new IllegalStateException(s"no such table: $root/$table"))
-      val mp = metaVPath(table, v)
-      // tolerant sidecar read (review r16): a sidecar GC'd between
-      // the exists probe and the read is the same outpacing race —
-      // fall through to the retry instead of surfacing a raw
-      // FileNotFoundException
-      val sidecar =
-        if (!fs.exists(mp)) None
-        else try Some(parseMeta(readFully(mp)))
-        catch { case _: java.io.FileNotFoundException => None }
-      sidecar match {
-        case Some(m) =>
-          // the commit's schema when the bucket map just read is this
-          // version's flat snapshot; inferred (a Spark job) in the window
-          // where a commit has moved _CURRENT but not yet _BUCKETS
-          val schema = readBucketsFile(table).filter(_.map == Map(-1 -> v)).map(_.schema)
-          val reader = spark.read.option("recursiveFileLookup", "true")
-          return (schema.fold(reader)(reader.schema).parquet(versionDir(table, v)), m)
-        case None =>
-          if (v == lastV || metaVersions(table).isEmpty) {
-            // STABLE sidecar-less version: pair the data with the
-            // LEGACY table-level _META only — a plain getMeta here
-            // could find a versioned sidecar a refresh committed
-            // between our two calls and pair a FRESH label with this
-            // resolution's older cells (review r16); legacy-absent
-            // reads as unknown provenance, which is loud downstream.
-            // And only for tables that never entered the sidecar era
-            // (ADVICE r16, the getMeta rule): once any _META_v
-            // exists, the legacy _META describes a superseded
-            // snapshot — unknown provenance, never its stale label.
-            val p = metaPath(table)
-            val legacy =
-              if (metaVersions(table).nonEmpty || !fs.exists(p))
-                Map.empty[String, String]
-              else parseMeta(readFully(p))
-            return (read(table), legacy)
-          }
-          lastV = v
-          attempt += 1
-          if (attempt >= 5) throw new IllegalStateException(
-            s"$root/$table: refreshes outpaced this reader $attempt times " +
-              "(each resolved version's _META_v sidecar was replaced before " +
-              "it could be read) — retry under a calmer refresh cadence")
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  def overwrite(table: String, df: DataFrame, props: Map[String, String] = Map.empty): Unit = {
+    validateProps(props)
+    val prior = state(table)
+    if (prior.isEmpty) requireNoOldLayout(table)
+    val v = prior.fold(0L)(_.version + 1L)
+    val dir = versionDir(table, v)
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    val bytes = dataFiles(new Path(dir)).map(_.getLen).sum
+    val tprops = if (props.nonEmpty) Map.empty[String, String]
+      else prior.fold(Map.empty[String, String])(_.tprops)
+    commit(table, BucketsFile(v, prior.fold(nBuckets)(_.nb), df.schema, Map(-1 -> v),
+      Map(-1 -> bytes), None, tprops, props), prior.fold(Set.empty[Long])(_.versions))
   }
 
   /** MERGE: rows in `updates` replace same-key rows in the current
@@ -630,12 +392,18 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * one row per key (enforce upstream), matching the reference's
     * ON CONFLICT upsert semantics. Into a bucketed table it writes a
     * new delta and rewrites no bucket; the copy-on-write compaction
-    * runs instead where the class doc says. Returns whether it
-    * committed a version: an empty `updates` commits none.
+    * runs instead where the class doc says. `props`, when given,
+    * become the table properties, committed with the merged rows (see
+    * [[getMeta]]). Returns whether it committed a version: an empty
+    * `updates` commits none, and so records no `props` — unless the
+    * table has a delta, which it then rewrites with the same rows.
     */
-  def merge(table: String, updates: DataFrame, key: String): Boolean = {
-    if (!exists(table)) return firstMerge(table, updates, key)
-    val f = state(table)
+  def merge(table: String, updates: DataFrame, key: String,
+      props: Map[String, String] = Map.empty): Boolean = {
+    validateProps(props)
+    def recording(f: BucketsFile) = if (props.isEmpty) f else f.copy(tprops = props)
+    val f0 = state(table).getOrElse(return firstMerge(table, updates, key, props))
+    val f = recording(f0)
     val schema = f.schema
     // additive schema evolution: updates carrying a column the table
     // lacks, or a column the union widens (an int batch into a long
@@ -648,23 +416,23 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         .forall(w => !DataTypeUtils.equalsIgnoreNullability(w, c.dataType))))
     if (!(f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
         f.delta.exists(_.key != key)))
-      return appendDelta(table, f, updates, key, currentVersion(table).get + 1L)
+      return appendDelta(table, f, updates, key)
     // copy-on-write: several actions over `updates` (the touched-bucket
     // collect, the anti-join probe, the union write) — persisted, so
     // callers need not pre-persist to avoid repeated upstream I/O
     val upd = updates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       var g = f
-      // a delta the batch cannot fold into is compacted on its own first
+      // a delta the batch cannot fold into is compacted on its own
+      // first, under the properties it was committed with
       if (g.delta.exists(d => evolving || d.key != key)) {
         if (upd.isEmpty) return false
-        compact(table, g)
-        g = state(table)
+        compact(table, f0)
+        g = recording(state(table).get)
       }
       // the pre-merge versions keep their one-commit grace across both
       // commits when a compaction ran first
       val prev = f.versions ++ g.versions
-      val v = currentVersion(table).get + 1L
       val rows = g.delta match {
         case None => upd
         case Some(d) =>
@@ -673,24 +441,26 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
           lastWriter(deltaRows(table, d, schema),
             upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key)
       }
-      rewrite(table, g, rows, Some(rows), key, v, full = g.map.contains(-1) || evolving, prev)
+      rewrite(table, g, rows, Some(rows), key, g.version + 1L,
+        full = g.map.contains(-1) || evolving, prev)
     } finally upd.unpersist()
   }
 
   /** First write: bucketed from the start. */
-  private def firstMerge(table: String, updates: DataFrame, key: String): Boolean = {
-    val nb = tableBuckets(table)
-    val v = 0L
-    bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nb)), versionDir(table, v))
-    val written = writtenBuckets(table, v)
+  private def firstMerge(table: String, updates: DataFrame, key: String,
+      props: Map[String, String]): Boolean = {
+    requireNoOldLayout(table)
+    bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nBuckets)), versionDir(table, 0L))
+    val written = writtenBuckets(table, 0L)
     if (written.isEmpty) {
       // zero-row first merge: committing an empty bucket map would
       // make exists() true but read() impossible — leave the table
       // nonexistent instead
-      fs.delete(new Path(versionDir(table, v)), true)
+      fs.delete(new Path(versionDir(table, 0L)), true)
       return false
     }
-    commit(table, v, written.map { case (b, _) => b -> v }, written, nb, updates.schema)
+    commit(table, BucketsFile(0L, nBuckets, updates.schema, written.map { case (b, _) => b -> 0L },
+      written, None, props, Map.empty), Set.empty)
     true
   }
 
@@ -704,11 +474,11 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * `upd` does not carry, plus `upd` — and commits it beside the
     * unchanged bucket map, or compacts it when it passes the bound.
     * `upd` is read once, by the delta write, so it is not persisted. An
-    * empty `upd` commits nothing; the written files' footers tell, so
-    * it costs no job.
+    * empty `upd` into a table without a delta commits nothing; the
+    * written files' footers tell, so it costs no job.
     */
-  private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String,
-      v: Long): Boolean = {
+  private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String): Boolean = {
+    val v = f.version + 1L
     val dir = new Path(versionDir(table, v))
     // in the table's column order and types (a narrower column is cast
     // up); a missing column fails here, loudly
@@ -731,7 +501,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     if (files.map(_.getLen).sum > compactionBound(f)) {
       val rows = deltaRows(table, written, f.schema)
       rewrite(table, f, rows, Some(rows), key, v + 1L, full = false, f.versions)
-    } else commit(table, v, f.map, f.bytes, f.nb, f.schema, Some(written), f.versions)
+    } else commit(table, f.copy(version = v, delta = Some(written), sprops = Map.empty), f.versions)
     true
   }
 
@@ -753,21 +523,20 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   private def compact(table: String, f: BucketsFile): Unit = {
     val d = f.delta.get
     val rows = deltaRows(table, d, f.schema)
-    rewrite(table, f, rows, Some(rows), d.key, currentVersion(table).get + 1L, full = false,
-      f.versions)
+    rewrite(table, f, rows, Some(rows), d.key, f.version + 1L, full = false, f.versions)
   }
 
   /** The copy-on-write body, written at version `v` and committed with
-    * no delta: base rows whose key `keys` carries (null keys alike) are
-    * removed and `rows`, when given, are appended — a MERGE passes its
-    * rows as both, a [[delete]] only the keys. Rewrites ONLY the
-    * buckets `keys` hash into, or every bucket when `full` (a flat
-    * snapshot is re-bucketed; a schema evolution widens every file).
-    * The caller has folded any delta into `rows`; `prev` keeps its
-    * grace (see [[cleanOld]]). A result with no row left drops the
-    * table. Returns false, and commits nothing, when `keys` is empty
-    * or, with no rows to add, none of the buckets it hashes into holds
-    * data.
+    * no delta and `f`'s table properties: base rows whose key `keys`
+    * carries (null keys alike) are removed and `rows`, when given, are
+    * appended — a MERGE passes its rows as both, a [[delete]] only the
+    * keys. Rewrites ONLY the buckets `keys` hash into, or every bucket
+    * when `full` (a flat snapshot is re-bucketed; a schema evolution
+    * widens every file). The caller has folded any delta into `rows`;
+    * `prev` keeps its grace (see [[cleanOld]]). A result with no row
+    * left drops the table. Returns false, and commits nothing, when
+    * `keys` is empty or, with no rows to add, none of the buckets it
+    * hashes into holds data.
     */
   private def rewrite(table: String, f: BucketsFile, keys: DataFrame, rows: Option[DataFrame],
       key: String, v: Long, full: Boolean, prev: Set[Long]): Boolean = {
@@ -807,7 +576,8 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // table (same invariant as the zero-row first merge) — a committed
     // empty bucket map would make exists() true while read() throws
     if (map.isEmpty) drop(table)
-    else commit(table, v, map, baseBytes ++ written, f.nb, next.schema, None, prev)
+    else commit(table, BucketsFile(v, f.nb, next.schema, map, baseBytes ++ written, None,
+      f.tprops, Map.empty), prev)
     true
   }
 
@@ -836,17 +606,16 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * empty `keys` commits nothing and keeps the delta.
     */
   def delete(table: String, keys: DataFrame, key: String): Unit = {
-    if (!exists(table)) return
-    val f = state(table)
+    val f = state(table).getOrElse(return)
     val g = if (f.delta.isEmpty) f else {
       if (keys.isEmpty) return
       compact(table, f)
-      state(table)
+      state(table).get
     }
     // the pre-delete versions keep their one-commit grace across both
     // commits when a compaction ran first
-    rewrite(table, g, keys, None, key, currentVersion(table).get + 1L,
-      full = g.map.contains(-1), f.versions ++ g.versions)
+    rewrite(table, g, keys, None, key, g.version + 1L, full = g.map.contains(-1),
+      f.versions ++ g.versions)
   }
 
   def drop(table: String): Unit = {
@@ -875,25 +644,34 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         if (v < current - 1 && !referenced.contains(v)) fs.delete(st.getPath, true)
       }
     }
-    // versioned _META sidecars: exact-version resolution (getMeta)
-    // means only the current version's sidecar is live — keep it plus
-    // one commit cycle of grace, mirroring the snapshot-dir policy,
-    // so an in-flight consistent-pair reader still finds the sidecar
-    // its pointer read implied
-    metaVersions(table).filter(_ < current - 1)
-      .foreach(w => fs.delete(metaVPath(table, w), false))
   }
 }
 
 object ParquetStore {
-  /** One `_BUCKETS` file: its exact text, the header fields, the
-    * bucket → snapshot version map and each bucket's bytes. Bucket -1 marks a flat (unbucketed)
-    * snapshot written by overwrite().
+  /** One `_BUCKETS` file: its header fields, the bucket → snapshot
+    * version map, each bucket's bytes and the two property scopes.
+    * Bucket -1 marks a flat (unbucketed) snapshot written by
+    * overwrite().
     */
-  private final case class BucketsFile(raw: String, nb: Int, schema: StructType,
-      token: String, map: Map[Int, Long], bytes: Map[Int, Long], delta: Option[Delta]) {
+  private final case class BucketsFile(version: Long, nb: Int, schema: StructType,
+      map: Map[Int, Long], bytes: Map[Int, Long], delta: Option[Delta],
+      tprops: Map[String, String], sprops: Map[String, String]) {
     /** Every version dir this commit reads from. */
     def versions: Set[Long] = map.values.toSet ++ delta.map(_.v)
+
+    def props: Map[String, String] = tprops ++ sprops
+
+    /** The file's text, with a fresh `#token`; the schema less the
+      * bucket partition column. */
+    def render: String =
+      (Seq(s"#version $version", s"#n $nb",
+        s"#schema ${StructType(schema.filterNot(_.name == "__bucket")).json}",
+        s"#token ${java.util.UUID.randomUUID()}") ++
+        delta.map(d => s"#delta ${d.v} ${d.key}") ++
+        tprops.toSeq.sorted.map { case (k, v) => s"#tprop $k $v" } ++
+        sprops.toSeq.sorted.map { case (k, v) => s"#sprop $k $v" } ++
+        map.toSeq.sortBy(_._1).map { case (b, v) => s"$b $v ${bytes(b)}" })
+        .mkString("\n")
   }
 
   /** The delta at version `v`, whose rows replace base rows by `key`. */

@@ -149,7 +149,7 @@ object Realtime {
     * spanTokens, minDocs) — the store never changes under the stream
     * — so an at-least-once redelivery MERGEs byte-identical rows (a
     * no-op), the CurriculumExport purity argument. The span grain is
-    * require-matched against the store's `_META` at stream START
+    * require-matched against the store's properties at stream START
     * (cheap-config-checks-first: a drifted store must fail the start,
     * not wedge every checkpoint restart inside the first
     * micro-batch) and again by every probe.
@@ -344,7 +344,7 @@ object Realtime {
     * downstream gate reads. The model's FULL feature geometry (langs
     * inventory, bucket hexLen, n-gram order, integer serving scale)
     * is require-matched at stream START
-    * ([[graft.operators.LangId.loadModel]] — the `_META` discipline
+    * ([[graft.operators.LangId.loadModel]] — the store-property discipline
     * of the signature indexes; reference shape: the job-scoped
     * model/provenance checks of core/src/init.rs:122-269): a drifted,
     * partial, or unversioned artifact fails the `.start()`, never the
@@ -612,7 +612,13 @@ object Realtime {
     // documented replay order), where erroring would wedge every
     // restart of a first micro-batch that crashed mid-commit. For a
     // large pre-seeded corpus this is the one-time CREATE INDEX cost
-    // the pipeline needs anyway.
+    // the pipeline needs anyway. The docs table holds the SHIPPED text,
+    // so with the boilerplate gate on a healed index hashes the cleaned
+    // text where the stream's own MERGEs hash the raw delivery: a
+    // redelivered pre-heal row whose clean changed its text passes
+    // exact dedup again (near-dup skips the row's own id) and re-MERGEs
+    // the same row under its key — a wasted chain pass, never a
+    // duplicate.
     // an EXISTING corpus index with drifted geometry must also fail
     // here, not inside the first micro-batch after the (potentially
     // corpus-sized) exact stage already ran
@@ -775,9 +781,14 @@ object Realtime {
               // survivors' signatures MERGE from the view's shared
               // frame (a superset of the rows' signatures; the join
               // restricts) — the text path would re-shingle +
-              // re-MinHash the very rows the batch already signed
+              // re-MinHash the very rows the batch already signed.
+              // The index's norm hash is of the RAW delivered text, the
+              // text the exact stage hashes (the batch twin's index is
+              // built from raw documents too), so a redelivered row
+              // whose clean changed its text is dropped by exact dedup
               graft.operators.Dedup.buildNearDupStoreFromSig(store,
-                sigTable, rows, idCol, textCol, view.sig, shingleN,
+                sigTable, tagged.filter(col(chain.last)).select(idCol, textCol),
+                idCol, textCol, view.sig, shingleN,
                 nHashes, nBands,
                 // planner provenance on a freshly-planned geometry
                 // (ADVICE r18): a brand-new store has no self-heal build
@@ -879,7 +890,7 @@ object Realtime {
     * ParquetStore maintenance op, do not run it CONCURRENTLY with a
     * batch commit on the same table — quiesce or pause the stream for
     * the compaction window (single-writer-per-table, the
-    * overwriteWithMeta contract).
+    * ParquetStore.overwrite contract).
     *
     * `rows` is the current corpus view (typically
     * `store.read(docsTable)`); pass the same (idCol, textCol) the

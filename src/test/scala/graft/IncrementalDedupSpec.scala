@@ -289,7 +289,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       spark, TestSpark.tempDir("graft_ndgeom_"))
     Dedup.buildNearDupStore(store, "sigs", docs, "doc_id", "text",
       shingleN = 2, numHashes = 64, bands = 16)
-    // the index is self-describing: the build parameters are in _META
+    // the index is self-describing: the build parameters are in its properties
     val meta = store.getMeta("sigs")
     assert(meta.get("minhash.shingle_n").contains("2") &&
       meta.get("minhash.num_hashes").contains("64") &&
@@ -322,9 +322,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
         shingleN = 2, numHashes = 64, bands = 16)
     }
     assert(e3.getMessage.contains("geometry"), e3.getMessage)
-    // ... and a PARTIALLY-recorded sidecar (hand-stamped) must read as
-    // unknown provenance too, not pass vacuously on the absent keys
-    raw.putMeta("sigs", Map("minhash.bands" -> "16"))
+    // ... and a PARTIALLY-recorded property set (hand-stamped) must read
+    // as unknown provenance too, not pass vacuously on the absent keys
+    raw.merge("sigs", store.read("sigs"), "id", Map("minhash.bands" -> "16"))
     val e3b = intercept[IllegalStateException] {
       Dedup.incrementalNearDupStored(raw, "sigs", batch, "doc_id", "text",
         shingleN = 2, numHashes = 64, bands = 16)
@@ -359,32 +359,5 @@ class IncrementalDedupSpec extends AnyFunSuite {
         .collect().map(_.getLong(0)).toSet
       assert(withSig == without, s"batchSig path diverged: $withSig vs $without")
     } finally okSig.unpersist()
-  }
-
-  test("geometry-only sidecar (build crash artifact) never wedges a rebuild (ADVICE r14)") {
-    import spark.implicits._
-    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
-    val store = new graft.sources.ParquetStore(
-      spark, TestSpark.tempDir("graft_ndgeom_crash_"))
-    // simulate buildNearDupStore's crash window: _META committed (the
-    // builder writes it first, by design), data MERGE never ran
-    store.putMeta("sigs", Map("minhash.shingle_n" -> "2",
-      "minhash.num_hashes" -> "64", "minhash.bands" -> "16"))
-    assert(!store.exists("sigs"), "precondition: no committed data")
-    // a rebuild with DIFFERENT geometry has no committed data to drift
-    // from — it must overwrite the orphaned sidecar, not throw
-    Dedup.buildNearDupStore(store, "sigs", docs, "doc_id", "text",
-      shingleN = 3, numHashes = 32, bands = 8)
-    val meta = store.getMeta("sigs")
-    assert(meta.get("minhash.shingle_n").contains("3") &&
-      meta.get("minhash.num_hashes").contains("32") &&
-      meta.get("minhash.bands").contains("8"),
-      s"orphaned sidecar not overwritten: $meta")
-    assert(store.exists("sigs"))
-    // ...and once data IS committed, drift rejection is unchanged
-    intercept[IllegalArgumentException] {
-      Dedup.buildNearDupStore(store, "sigs", docs, "doc_id", "text",
-        shingleN = 2, numHashes = 64, bands = 16)
-    }
   }
 }

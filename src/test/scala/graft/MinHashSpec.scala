@@ -164,7 +164,7 @@ class MinHashSpec extends AnyFunSuite {
       (3L, "completely different subject matter about databases and executors")))
     Dedup.buildNearDupStore(store, "sig", corpus, "doc_id", "text",
       plan, shingleN = 2)
-    // the sidecar records the planned geometry AND the plan's
+    // the store properties record the planned geometry AND the plan's
     // predicted operating point
     val meta = store.getMeta("sig")
     assert(meta("minhash.num_hashes") == plan.numHashes.toString)
@@ -252,9 +252,9 @@ class MinHashSpec extends AnyFunSuite {
       "restart against the recorded geometry must keep serving")
     // doc 11 ingested, so the restart's surviving micro-batch ran the
     // per-batch signature MERGE (buildNearDupStoreFromSig) — whose
-    // geometry-only _META rewrite used to WIPE the planner.*
-    // provenance the self-heal build recorded (review r18: putMeta is
-    // a full replace; builders now preserve existing keys)
+    // geometry-only property rewrite used to WIPE the planner.*
+    // provenance the self-heal build recorded (review r18: a write's
+    // properties replace the set; builders preserve existing keys)
     val sMeta2 = sStore.getMeta("sigs")
     assert(sMeta2("planner.rows_per_band") == plan.rowsPerBand.toString,
       "planner provenance must survive the per-micro-batch signature MERGE")

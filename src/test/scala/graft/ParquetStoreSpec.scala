@@ -191,11 +191,30 @@ class ParquetStoreSpec extends AnyFunSuite {
     failsNamingTable(store.read("t"))
     failsNamingTable(store.merge("t", rows(1 to 50, "v2"), "pkey"))
     failsNamingTable(store.delete("t", rows(1 to 5, "x").select("pkey"), "pkey"))
-    // the pre-bucketing layout: one flat snapshot and a _CURRENT pointer
-    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "t", "_BUCKETS"))
-    assert(store.exists("t"))
-    val e = intercept[IllegalStateException](store.read("t"))
-    assert(e.getMessage.contains(s"$dir/t") && e.getMessage.contains("_BUCKETS"), e.getMessage)
+    // the old layout: a _BUCKETS without #version beside a version
+    // pointer and a property file
+    def failsAsOldLayout(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(s"$dir/u") && e.getMessage.contains("old store layout"),
+        e.getMessage)
+    }
+    store.merge("u", rows(1 to 30, "v1"), "pkey")
+    val u = java.nio.file.Paths.get(dir, "u")
+    val old = new String(java.nio.file.Files.readAllBytes(u.resolve("_BUCKETS")), "UTF-8")
+      .split("\n").filterNot(_.startsWith("#version ")).mkString("\n")
+    java.nio.file.Files.write(u.resolve("_BUCKETS"), old.getBytes("UTF-8"))
+    java.nio.file.Files.write(u.resolve("_CURRENT"), "0".getBytes("UTF-8"))
+    java.nio.file.Files.write(u.resolve("_META"), "minhash.bands 16".getBytes("UTF-8"))
+    failsAsOldLayout(store.read("u"))
+    failsAsOldLayout(store.getMeta("u"))
+    failsAsOldLayout(store.merge("u", rows(1 to 5, "v2"), "pkey"))
+    failsAsOldLayout(store.overwrite("u", rows(1 to 5, "v2")))
+    // without its _BUCKETS the table does not exist, and a first write
+    // beside the old control files fails
+    java.nio.file.Files.delete(u.resolve("_BUCKETS"))
+    assert(!store.exists("u"))
+    failsAsOldLayout(store.merge("u", rows(1 to 5, "v2"), "pkey"))
+    failsAsOldLayout(store.overwrite("u", rows(1 to 5, "v2"), Map("label" -> "a")))
   }
 
   test("a read over a lost bucket dir fails instead of returning fewer rows") {
@@ -215,24 +234,16 @@ class ParquetStoreSpec extends AnyFunSuite {
     val store = new ParquetStore(spark, dir)
     val wide = (1 to 20).map(i => (i.toString, i.toLong, if (i % 4 == 0) null else s"t$i"))
       .toDF("pkey", "n", "note")
-    store.overwriteWithMeta("cdf", wide, Map("label" -> "a"))
+    store.overwrite("cdf", wide, Map("label" -> "a"))
     var got: (org.apache.spark.sql.DataFrame, Map[String, String]) = null
     val seen = jobsOf { got = store.readSnapshotWithMeta("cdf"); got._1.schema }
     assert(inferences(seen).isEmpty, s"no schema inference on a header table, jobs: $seen")
     assert(got._2 == Map("label" -> "a"))
     assert(got._1.schema == spark.read.parquet(s"$dir/cdf/v_0").schema)
     assert(got._1.collect().map(_.toString).toSet == wide.collect().map(_.toString).toSet)
-    // in the window where a commit has moved _CURRENT but not yet
-    // _BUCKETS, the bucket map names the previous version: the schema
-    // is inferred from the current version's files
-    val buckets = java.nio.file.Paths.get(dir, "cdf", "_BUCKETS")
-    val committed = java.nio.file.Files.readAllBytes(buckets)
-    store.overwriteWithMeta("cdf", wide.limit(7), Map("label" -> "b"))
-    java.nio.file.Files.write(buckets, committed)
-    var raced: (org.apache.spark.sql.DataFrame, Map[String, String]) = null
-    val racedJobs = jobsOf { raced = store.readSnapshotWithMeta("cdf"); raced._1.schema }
-    assert(inferences(racedJobs).size == 1, s"one schema inference, jobs: $racedJobs")
-    assert(raced._2 == Map("label" -> "b") && raced._1.count() == 7)
+    store.overwrite("cdf", wide.limit(7), Map("label" -> "b"))
+    val next = store.readSnapshotWithMeta("cdf")
+    assert(next._2 == Map("label" -> "b") && next._1.count() == 7)
   }
 
   test("merge widens a pre-existing table with new update columns") {
@@ -417,146 +428,77 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(after == before)
   }
 
-  test("_META sidecar: roundtrip, overwrite, survives merges, dies with drop") {
-    val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_"))
-    assert(store.getMeta("t").isEmpty, "no sidecar yet")
-    store.putMeta("t", Map("minhash.bands" -> "16", "note" -> "a b c"))
-    assert(store.getMeta("t") ==
-      Map("minhash.bands" -> "16", "note" -> "a b c"),
+  test("store properties: roundtrip, table and snapshot scopes, die with drop") {
+    val dir = TestSpark.tempDir("graft_ps_props_")
+    val store = new ParquetStore(spark, dir)
+    assert(store.getMeta("t").isEmpty, "no table yet")
+    store.merge("t", rows(1 to 2000, "v1"), "pkey",
+      Map("minhash.bands" -> "16", "note" -> "a b c"))
+    assert(store.getMeta("t") == Map("minhash.bands" -> "16", "note" -> "a b c"),
       "values may contain spaces (first-space split)")
-    store.merge("t", rows(1 to 5, "v1"), "pkey")
+    // table properties describe the table: a delta MERGE, a compacting
+    // MERGE and a delete carry them
     store.merge("t", rows(3 to 8, "v2"), "pkey")
-    assert(store.getMeta("t")("minhash.bands") == "16",
-      "meta describes the table, not a snapshot — merges keep it")
-    store.putMeta("t", Map("minhash.bands" -> "8"))
+    assert(bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    copyOnWrite(store.merge("t", rows(5 to 9, "v3"), "pkey"))
+    store.delete("t", Seq("4").toDF("pkey"), "pkey")
+    assert(store.getMeta("t")("minhash.bands") == "16")
+    // an empty MERGE commits nothing, so records nothing
+    assert(!store.merge("t", rows(1 to 0, "x"), "pkey", Map("k" -> "v")))
+    assert(store.getMeta("t")("minhash.bands") == "16")
+    store.merge("t", rows(1 to 2, "v4"), "pkey", Map("minhash.bands" -> "8"))
     assert(store.getMeta("t") == Map("minhash.bands" -> "8"),
-      "putMeta replaces the whole property set atomically")
-    intercept[IllegalArgumentException] {
-      store.putMeta("t", Map("bad key" -> "x"))
-    }
-    intercept[IllegalArgumentException] {
-      store.putMeta("t", Map("k" -> "line1\nline2"))
-    }
+      "a write's properties replace the whole set")
+    intercept[IllegalArgumentException](store.merge("t", rows(1 to 2, "x"), "pkey",
+      Map("bad key" -> "x")))
+    intercept[IllegalArgumentException](store.overwrite("t", rows(1 to 2, "x"),
+      Map("k" -> "line1\nline2")))
+    // snapshot properties name one snapshot: they replace the table
+    // properties, and the next commit of any kind drops them
+    store.overwrite("t", rows(1 to 5, "s1"), Map("label" -> "snap1"))
+    assert(store.getMeta("t") == Map("label" -> "snap1"))
+    store.overwrite("t", rows(1 to 5, "s2"))
+    assert(store.getMeta("t").isEmpty && store.readSnapshotWithMeta("t")._2.isEmpty,
+      "a plain overwrite never serves the superseded snapshot's label")
+    store.overwrite("t", rows(1 to 5, "s3"), Map("label" -> "snap3"))
+    store.merge("t", rows(2 to 3, "s4"), "pkey")
+    assert(store.getMeta("t").isEmpty, "a MERGE drops the snapshot's label")
+    // a plain overwrite carries table properties
+    store.merge("t", rows(2 to 3, "s5"), "pkey", Map("owner" -> "x"))
+    store.overwrite("t", rows(1 to 5, "s6"))
+    assert(store.getMeta("t") == Map("owner" -> "x"))
     store.drop("t")
-    assert(store.getMeta("t").isEmpty, "drop removes the sidecar")
+    assert(store.getMeta("t").isEmpty, "drop removes the properties with the table")
   }
 
-  test("sidecar-era table never serves the legacy _META over a plain " +
-      "overwrite (ADVICE r16)") {
-    val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_"))
-    // legacy era: table-level _META describes the table
-    store.overwrite("t", rows(1 to 5, "v1"))
-    store.putMeta("t", Map("label" -> "legacy"))
-    assert(store.getMeta("t") == Map("label" -> "legacy"))
-    // versioned era begins: the sidecar wins AND the legacy file is
-    // deleted (the era is permanent — see the GC pin below)
-    store.overwriteWithMeta("t", rows(1 to 5, "v2"), Map("label" -> "snap2"))
-    assert(store.getMeta("t") == Map("label" -> "snap2"))
-    // a legacy putMeta on a sidecar-era table fails loudly instead of
-    // writing a label nothing would serve (review r17)
-    val e = intercept[IllegalStateException] {
-      store.putMeta("t", Map("label" -> "sneaky"))
+  test("a failed property-setting write leaves the previous (rows, properties) pair served") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val boom = udf((x: Long) => { if (x >= 0) throw new RuntimeException("boom"); x.toString })
+    val bad = spark.range(3).select(boom(col("id")).as("pkey"), col("id").cast("string").as("payload"))
+    val dir = TestSpark.tempDir("graft_ps_propfail_")
+    val store = new ParquetStore(spark, dir)
+    // a never-committed table stays nonexistent, with no properties
+    intercept[Throwable](store.merge("m", bad, "pkey", Map("label" -> "x")))
+    intercept[Throwable](store.overwrite("o", bad, Map("label" -> "x")))
+    Seq("m", "o").foreach { t =>
+      assert(!store.exists(t) && store.getMeta(t).isEmpty, t)
     }
-    assert(e.getMessage.contains("overwriteWithMeta"))
-    // a later PLAIN overwrite leaves the current version sidecar-less;
-    // the superseded label must NOT come back (stale label over fresh
-    // cells)
-    store.overwrite("t", rows(1 to 5, "v3"))
-    assert(store.getMeta("t").isEmpty,
-      "sidecar-era table without a current sidecar is unknown provenance")
-    val (df, props) = store.readSnapshotWithMeta("t")
-    assert(props.isEmpty,
-      "readSnapshotWithMeta must apply the same rule on its stable fallback")
-    assert(df.count() == 5)
-    // GC pin (review r17): one MORE commit ages the v2 sidecar out of
-    // cleanOld's grace window, so era detection via surviving sidecars
-    // alone would flip back to the legacy fallback — the stale label
-    // must stay gone because overwriteWithMeta DELETED the legacy file
-    store.overwrite("t", rows(1 to 5, "v4"))
-    assert(store.getMeta("t").isEmpty,
-      "a GC'd sidecar era must never resurrect the superseded legacy label")
-  }
-
-  test("legacy _META is PROMOTED to the pre-refresh version's sidecar, " +
-      "so a crash before the pointer flip keeps the live pair (review r17)") {
-    val root = TestSpark.tempDir("graft_ps_promo_")
-    val store = new ParquetStore(spark, root)
-    store.overwrite("t", rows(1 to 5, "v1")) // version 0
-    store.putMeta("t", Map("label" -> "legacy"))
-    store.overwriteWithMeta("t", rows(1 to 5, "v2"), Map("label" -> "snap2"))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the retire step must not DELETE a label the old snapshot still
-    // needs: the legacy file is gone, but its content survives as the
-    // pre-refresh version's EXACT sidecar — the state a crash between
-    // the retire and the _CURRENT flip would leave behind pairs the
-    // old data with the old label (a bare delete stripped a LIVE
-    // snapshot's provenance and era-locked putMeta, unrecoverably)
-    assert(!fs.exists(new Path(s"$root/t/_META")), "legacy file retired")
-    assert(fs.exists(new Path(s"$root/t/_META_v0")),
-      "legacy label must be promoted to the pre-refresh version's sidecar")
-    // simulate the crash window: point _CURRENT back at version 0 (as
-    // if the flip never happened) — the old (data, label) pair must
-    // serve intact through the exact-version rule
-    val out = fs.create(new Path(s"$root/t/_CURRENT"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    assert(store.getMeta("t") == Map("label" -> "legacy"),
-      "pre-flip crash must leave the live snapshot's provenance readable")
-  }
-
-  test("promote-then-crash era-lock recovers through an overwriteWithMeta " +
-      "retry (ADVICE r17)") {
-    // the one crash window ADVICE r17 flagged untested: legacy _META
-    // promoted to _META_v<v0> (entering the sidecar era, so putMeta is
-    // now locked) but the _CURRENT flip never happened — no sidecar-
-    // committed refresh ever landed, yet the table is era-locked. The
-    // documented recovery is a successful overwriteWithMeta retry;
-    // this pins that the retry actually restores a serving
-    // (data, meta) pair, so the recovery path stays guaranteed.
-    val root = TestSpark.tempDir("graft_ps_lock_")
-    val store = new ParquetStore(spark, root)
-    store.overwrite("t", rows(1 to 5, "v1")) // version 0
-    store.putMeta("t", Map("label" -> "legacy"))
-    store.overwriteWithMeta("t", rows(1 to 5, "v2"), Map("label" -> "snap2"))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // simulate the crash: pointer back at v0, promoted sidecar + staged
-    // v1 artifacts left behind (exactly what a crash between the retire
-    // and the flip leaves)
-    val out = fs.create(new Path(s"$root/t/_CURRENT"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    // the lock is real: putMeta refuses (era permanence)
-    intercept[IllegalStateException] {
-      store.putMeta("t", Map("label" -> "poke"))
+    // a committed table keeps its pair through every failed write path:
+    // a delta MERGE, a copy-on-write MERGE and an overwrite
+    store.merge("t", rows(1 to 2000, "v1"), "pkey", Map("label" -> "a"))
+    store.overwrite("s", rows(1 to 5, "v1"), Map("label" -> "a"))
+    def unchanged(t: String, n: Int): Unit = {
+      val (df, props) = store.readSnapshotWithMeta(t)
+      assert(props == Map("label" -> "a") && df.count() == n, (t, props))
     }
-    // ...but the retry path restores a fully-served pair
-    store.overwriteWithMeta("t", rows(1 to 7, "v3"), Map("label" -> "snap3"))
-    val (df, meta) = store.readSnapshotWithMeta("t")
-    assert(meta == Map("label" -> "snap3"),
-      "retry must commit its own label as the serving properties")
-    assert(df.count() == 7, "retry must serve its own data")
-    assert(store.getMeta("t") == Map("label" -> "snap3"))
-  }
-
-  test("a FAILED overwriteWithMeta leaves a legacy table out of the " +
-      "sidecar era entirely (review r17, third pass)") {
-    val store = new ParquetStore(spark, TestSpark.tempDir("graft_ps_fail_"))
-    store.overwrite("t", rows(1 to 5, "v1"))
-    store.putMeta("t", Map("label" -> "legacy"))
-    // a refresh whose df THROWS during the data write must not have
-    // promoted/deleted anything: the retire step runs after the write
-    val boom = org.apache.spark.sql.functions.udf((x: Long) => {
-      if (x >= 0) throw new RuntimeException("boom"); x
-    })
-    import org.apache.spark.sql.functions.col
-    val bad = spark.range(3).select(boom(col("id")).as("k"), col("id").as("v"))
-    intercept[Throwable] {
-      store.overwriteWithMeta("t", bad, Map("label" -> "snap2"))
-    }
-    assert(store.getMeta("t") == Map("label" -> "legacy"),
-      "failed refresh must leave the legacy label serving")
-    // and crucially putMeta is NOT era-locked: no sidecar was written
-    store.putMeta("t", Map("label" -> "legacy2"))
-    assert(store.getMeta("t") == Map("label" -> "legacy2"))
-    assert(store.read("t").count() == 5, "old snapshot still serves")
+    intercept[Throwable](store.merge("t", bad, "pkey", Map("label" -> "b")))
+    unchanged("t", 2000)
+    intercept[Throwable](copyOnWrite(store.merge("t", bad, "pkey", Map("label" -> "b"))))
+    unchanged("t", 2000)
+    intercept[Throwable](store.overwrite("s", bad, Map("label" -> "b")))
+    unchanged("s", 5)
+    intercept[Throwable](store.merge("s", bad, "pkey", Map("label" -> "b")))
+    unchanged("s", 5)
   }
 
   test("a 50-row MERGE into a 5,000-row table writes one delta dir, reads no bucket, " +
@@ -708,6 +650,13 @@ class ParquetStoreSpec extends AnyFunSuite {
           case "reopen" => store = new ParquetStore(spark, dir)
         }
         assert(contents(store) == model, s"seed $seed step $step")
+        // one control file: the table dir holds `_BUCKETS` and version
+        // dirs only, and the version is the header's
+        val entries = new java.io.File(s"$dir/t").listFiles().map(_.getName)
+        assert(entries.forall(n => n == "_BUCKETS" || n.matches("v_[0-9]+")),
+          s"seed $seed step $step: ${entries.sorted.toSeq}")
+        assert(store.currentVersion("t").map(v => s"#version $v") ==
+          bucketsFile(dir)._1.find(_.startsWith("#version ")), s"seed $seed step $step")
       }
       assert(deltas > 0 && compactions > 0,
         s"seed $seed exercised $deltas delta and $compactions compacting merges")

@@ -109,8 +109,7 @@ class QualityFilterSpec extends AnyFunSuite {
     QualityCal.requireCdf(store, "cdf", "t", expectSnapshot = Some("v1"))
     // A refresh OUTSIDE the atomic path (plain overwrite — the legacy
     // two-step's first half, or a foreign writer) commits a version
-    // with no sidecar: exact-version resolution (r16) reads that as
-    // UNKNOWN provenance — loud even UNPINNED, strictly stronger than
+    // without snapshot properties, which reads as UNKNOWN provenance — loud even UNPINNED, strictly stronger than
     // the old data-then-meta ordering, which only a pinned probe
     // could catch and which still served the old label to unpinned
     // ones
@@ -132,7 +131,7 @@ class QualityFilterSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("scorer version"), e2.getMessage)
     // a recorded scorer-version mismatch is rejected (percentiles from
     // different scorers are not comparable)
-    store.putMeta("raw", Map("quality.cdf.fn" -> "qualityScore-v0",
+    store.overwrite("raw", store.read("cdf"), Map("quality.cdf.fn" -> "qualityScore-v0",
       "quality.cdf.snapshot" -> "v1"))
     val e3 = intercept[IllegalArgumentException] {
       QualityCal.requireCdf(store, "raw", "t")

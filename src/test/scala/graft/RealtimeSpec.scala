@@ -971,7 +971,7 @@ class RealtimeSpec extends AnyFunSuite {
         expectSnapshot = Some("corpus-v2")))
     }
     assert(e2.getMessage.contains("snapshot"), e2.getMessage)
-    // a CDF table of unknown provenance (no _META scorer record)
+    // a CDF table of unknown provenance (no recorded scorer version)
     store.overwrite("raw_cdf", store.read("quality_cdf"))
     val e3 = intercept[IllegalStateException] {
       startWith(Realtime.PercentileGate("raw_cdf", 0.8))
@@ -1145,10 +1145,11 @@ class RealtimeSpec extends AnyFunSuite {
       "at least one survivor's text must differ from raw after cleaning")
     val src = TestSpark.tempDir("graft_boilgate_src_")
     batch.coalesce(1).write.mode("append").parquet(src)
-    val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
+    val cp = TestSpark.tempDir("graft_boilgate_cp_")
+    def start() = Realtime.streamIngestPipeline(store, "docs", "sigs",
       spark.readStream
         .schema("doc_id LONG, text STRING, lang STRING").parquet(src),
-      "doc_id", "text", TestSpark.tempDir("graft_boilgate_cp_"),
+      "doc_id", "text", cp,
       blocklist = Queries.blocklistTerms,
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
@@ -1160,7 +1161,7 @@ class RealtimeSpec extends AnyFunSuite {
         spanTokens = Queries.spanDedupTokens,
         minDocs = Queries.boilerplateMinDocs)),
       auditTable = Some("audit"))
-    assert(q.awaitTermination(360000),
+    assert(start().awaitTermination(360000),
       "boil-gated stream did not finish in time")
     // survivors AND their shipped text equal the batch composition —
     // the docs table must carry the CLEANED text
@@ -1183,6 +1184,21 @@ class RealtimeSpec extends AnyFunSuite {
       "3_decontam" -> tagCount("__s3"),
       "4_near_dedup" -> tagCount("__s4")),
       s"boil funnel must equal the batch twin's stage counts: $a")
+    // the same rows delivered again under the same checkpoint: the
+    // signature index hashes the RAW text, the text exact dedup hashes,
+    // so exact drops every survivor — also those whose clean changed
+    // their text — and no row passes every stage again. Exact passes
+    // the first delivery's exact survivors less its final survivors
+    batch.coalesce(1).write.mode("append").parquet(src)
+    assert(start().awaitTermination(360000),
+      "boil-gated replay did not finish in time")
+    val audit = store.read("audit")
+    val last = audit.agg(org.apache.spark.sql.functions.max("batch_id")).head().getLong(0)
+    val replay = audit.filter(col("batch_id") === last).collect()
+      .map(r => (r.getAs[String]("stage"), r.getAs[Long]("n_docs"))).toMap
+    assert(last > 0 && replay("0_batch") == a("0_batch") &&
+      replay("1_exact_dedup") == a("1_exact_dedup") - a("4_near_dedup") &&
+      replay("4_near_dedup") == 0L, s"replayed boil funnel: $replay")
   }
 
   test("language-ID routed percentile gate mirrors the batch " +
@@ -1280,10 +1296,10 @@ class RealtimeSpec extends AnyFunSuite {
       .map(r => (r.getAs[String]("stage"), r.getAs[Long]("n_docs"))).toMap
     assert(a("2p_percentile") == b2p.count(),
       s"routed-gate funnel must equal the batch twin's stage count: $a")
-    // geometry drift fails the .start(): an artifact whose _META says
-    // hexLen=4 over hexLen=3 weight rows must be rejected before any
-    // batch runs (the signature indexes' _META discipline)
-    store.overwriteWithMeta("langid_bad",
+    // geometry drift fails the .start(): an artifact whose properties
+    // say hexLen=4 over hexLen=3 weight rows must be rejected before any
+    // batch runs (the signature indexes' store-property discipline)
+    store.overwrite("langid_bad",
       store.read("langid_model"),
       Map(LangId.MetaFn -> LangId.FnVersion,
         LangId.MetaLangs -> model.langs.mkString(","),
@@ -1380,7 +1396,7 @@ class RealtimeSpec extends AnyFunSuite {
     // the argmax would be vacuous and every per-language gate
     // downstream degenerates silently)
     import LangId.{MetaFn, MetaLangs, MetaHexLen, MetaN, MetaScale}
-    store.overwriteWithMeta("langid_one",
+    store.overwrite("langid_one",
       store.read("langid_model").filter(col("lang") === model.langs.head),
       Map(MetaFn -> LangId.FnVersion, MetaLangs -> model.langs.head,
         MetaHexLen -> model.hexLen.toString, MetaN -> model.n.toString,

@@ -243,7 +243,7 @@ class TextSpec extends AnyFunSuite {
     // char n-grams — signal for short docs and agglutinative
     // languages whose few long words yield almost no word bigrams.
     // Same integer serving path; the kind rides in the Model (and its
-    // _META), so featurizer/coefficient drift is impossible.
+    // store properties), so featurizer/coefficient drift is impossible.
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -291,7 +291,7 @@ class TextSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.operators.LangId.detect(docs, bogus, "doc_id", "text")
     }
-    // a persisted artifact round-trips the kind through _META
+    // a persisted artifact round-trips the kind through its store properties
     val store = new graft.sources.ParquetStore(
       spark, TestSpark.tempDir("graft_cglid_"))
     graft.operators.LangId.saveModel(store, "m", char)
@@ -299,7 +299,7 @@ class TextSpec extends AnyFunSuite {
     assert(loaded.featKind == graft.operators.LangId.FeatChar &&
       loaded.n == Queries.langIdCharN &&
       loaded.langs.sameElements(char.langs),
-      "featKind must round-trip through the _META geometry")
+      "featKind must round-trip through the recorded geometry")
   }
 
   test("sampled training that drops a minority language entirely fails " +
