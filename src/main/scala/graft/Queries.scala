@@ -1222,12 +1222,11 @@ object Queries {
     // BOTH the per-cluster argmin and the final membership join, and
     // without truncation each branch would re-execute the whole pair
     // sweep + CC + quality scan subtree
-    val member = labels.join(
+    val member = IngestChain.truncate(labels.join(
         t(spark, dir, "documents").select(col("doc_id"),
           qualityScore(col("text")).as("quality")),
         labels("id") === col("doc_id"))
-      .select(col("cluster_id"), col("doc_id"), col("quality"))
-      .localCheckpoint(false)
+      .select(col("cluster_id"), col("doc_id"), col("quality")))
     val rep = member.groupBy(col("cluster_id"))
       .agg(min(struct((-col("quality")).as("nq"), col("doc_id").as("d")))
           .as("best"),
@@ -2459,7 +2458,7 @@ object Queries {
     * PlanSpec pins no-parquet-scan on quality_percentile).
     */
   private[graft] def qualityPercentiledOf(scored: DataFrame): DataFrame = {
-    val s = scored.localCheckpoint(false)
+    val s = IngestChain.truncate(scored)
     val cdf = operators.QualityCal.cdfOf(s)
       .withColumnRenamed("lang", "__cl")
       .withColumnRenamed("quality", "__cq")

@@ -3,6 +3,7 @@ package graft
 import graft.operators.{Ann, Hnsw, Pipeline, Search, ServingSnapshot}
 import graft.providers.{ChatProvider, DeterministicChatProvider, EmbeddingProvider, Providers}
 import graft.sources.ParquetStore
+import graft.sources.ParquetStore.Handle
 import graft.types._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -205,12 +206,12 @@ final class VectorizeEngine(
     * table) handles of the state before them. */
   private final class Writes {
     var inFlight = 0
-    var before: (Option[DataFrame], Option[DataFrame]) = (None, None)
+    var before: (Option[Handle], Option[Handle]) = (None, None)
   }
   private val writes = scala.collection.concurrent.TrieMap.empty[String, Writes]
 
-  private def currentHandles(job: VectorizeJob): (Option[DataFrame], Option[DataFrame]) =
-    (store.readOption(servedTable(job)), store.readOption(tokTable(job.jobName)))
+  private def currentHandles(job: VectorizeJob): (Option[Handle], Option[Handle]) =
+    (store.readHandle(servedTable(job)), store.readHandle(tokTable(job.jobName)))
 
   /** Run a write to a job's stores. A read that overlaps it serves the
     * handles of the state before it ([[readHandles]]), so a read never
@@ -232,56 +233,106 @@ final class VectorizeEngine(
   /** The handles a read serves from: the current ones, or while a
     * write of the job is in flight those of the state before it.
     */
-  private def readHandles(job: VectorizeJob): (Option[DataFrame], Option[DataFrame]) = {
+  private def readHandles(job: VectorizeJob): (Option[Handle], Option[Handle]) = {
     val w = writes.getOrElseUpdate(job.jobName, new Writes)
     w.synchronized(if (w.inFlight == 0) currentHandles(job) else w.before)
   }
 
-  /** The serving tier's state for a job: the frames it serves from
-    * (compared by reference), their largest size estimate, and the
-    * driver-local snapshot, built on first use.
+  /** The serving tier's state for a job: the source and store handles
+    * it serves from (compared by reference), their frames' largest size
+    * estimate, and the driver-local snapshot, made on first use:
+    * patched from the snapshot of `basis`, an earlier state, when it
+    * can be ([[patchFrom]]), else built. Once made, the reference to
+    * `basis` is dropped, so no chain of old snapshots is kept.
     */
   private final class Serving(val job: VectorizeJob, val src: DataFrame,
-      val emb: Option[DataFrame], val tok: Option[DataFrame], val timeZone: String) {
-    def servesFrom(j: VectorizeJob, s: DataFrame, e: Option[DataFrame],
-        t: Option[DataFrame], tz: String): Boolean =
+      val emb: Option[Handle], val tok: Option[Handle], val timeZone: String,
+      @volatile private var basis: Option[Serving]) {
+    def servesFrom(j: VectorizeJob, s: DataFrame, e: Option[Handle],
+        t: Option[Handle], tz: String): Boolean =
       j == job && (s eq src) && sameHandle(e, emb) && sameHandle(t, tok) && tz == timeZone
-    private def sameHandle(a: Option[DataFrame], b: Option[DataFrame]) =
+    private def sameHandle(a: Option[Handle], b: Option[Handle]) =
       a.isEmpty && b.isEmpty || a.nonEmpty && b.nonEmpty && (a.get eq b.get)
-    private lazy val (embFrame, tokFrame) = (embeddingsFrom(job, emb), tokensFrom(tok))
+    private lazy val (embFrame, tokFrame) =
+      (embeddingsFrom(job, emb.map(_.rows)), tokensFrom(tok.map(_.rows)))
     lazy val size: BigInt = Seq(src, embFrame, tokFrame).map(GraftColumnBridge.sizeInBytes).max
     // held softly: the collector may reclaim it under memory pressure,
     // and the next read builds it again
-    private var held = new java.lang.ref.SoftReference[ServingSnapshot](null)
+    @volatile private var held = new java.lang.ref.SoftReference[ServingSnapshot](null)
+    /** The state a later one patches from: this one while it holds its
+      * snapshot, else the one this would patch from. */
+    def patchBasis: Option[Serving] = if (held.get != null) Some(this) else basis
     def snapshot: ServingSnapshot = synchronized {
       Option(held.get).getOrElse {
-        val built = ServingSnapshot.build(spark, src, job.primaryKey, embFrame, tokFrame)
-        held = new java.lang.ref.SoftReference(built)
-        built
+        val made = basis.flatMap(patchFrom).getOrElse {
+          servingBuilds.incrementAndGet()
+          ServingSnapshot.build(spark, src, job.primaryKey, embFrame, tokFrame)
+        }
+        held = new java.lang.ref.SoftReference(made)
+        basis = None
+        made
+      }
+    }
+    /** This state's snapshot patched from `b`'s: the same job and time
+      * zone, `b`'s snapshot still held, and each store table unchanged
+      * or moved only its delta over the same base ([[deltaSince]]). The
+      * source is collected again only when it was re-registered. The
+      * Append method's served table holds rows with a null vector; the
+      * patch removes their keys and adds no row for them, which is what
+      * its null-embedding filter does.
+      */
+    private def patchFrom(b: Serving): Option[ServingSnapshot] = {
+      val old = b.held.get
+      if (old == null || b.job != job || b.timeZone != timeZone) return None
+      for (e <- deltaSince(b.emb, emb); t <- deltaSince(b.tok, tok)) yield {
+        servingPatches.incrementAndGet()
+        ServingSnapshot.patch(old, if (b.src eq src) None else Some(src), job.primaryKey, e, t)
       }
     }
   }
   private val serving = scala.collection.mutable.HashMap.empty[String, Serving]
+
+  /** Snapshots built whole, and snapshots patched from an earlier one. */
+  private[graft] val servingBuilds, servingPatches = new java.util.concurrent.atomic.AtomicLong
+
+  /** What a snapshot read over store handle `from` needs to serve `to`:
+    * Some(None) when the rows are the same, Some(Some(delta rows)) when
+    * `to` kept `from`'s base and holds a later delta keyed by `pkey`,
+    * and None when the snapshot must be built (a new base, a handle
+    * without a base identity, or `to` older than `from`).
+    */
+  private def deltaSince(from: Option[Handle], to: Option[Handle]): Option[Option[DataFrame]] =
+    (from, to) match {
+      case (None, None) => Some(None)
+      case (Some(a), Some(b)) if a.base.nonEmpty && a.base == b.base =>
+        def version(h: Handle) = h.delta.fold(-1L)(_.version)
+        if (version(b) == version(a)) Some(None)
+        else b.delta.filter(d => d.version > version(a) && d.key == "pkey").map(d => Some(d.rows))
+      case _ => None
+    }
 
   /** The driver-local snapshot a read over these frames is answered
     * from, when every frame is small enough that Spark would broadcast
     * it (`spark.sql.autoBroadcastJoinThreshold`; -1 turns the tier
     * off). A snapshot lives until the source is re-registered or either
     * store table commits, or until the collector reclaims it under
-    * memory pressure.
+    * memory pressure. The first read after a commit that only moved
+    * the store tables' deltas patches the last snapshot from the deltas
+    * (and the source, when it was re-registered) instead of building a
+    * new one: one Spark job per changed frame.
     */
   private def localSnapshot(job: VectorizeJob, src: DataFrame,
-      handles: (Option[DataFrame], Option[DataFrame])): Option[ServingSnapshot] = {
+      handles: (Option[Handle], Option[Handle])): Option[ServingSnapshot] = {
     val threshold = GraftColumnBridge.broadcastThreshold(spark)
     if (threshold < 0) return None
     val tz = spark.conf.get("spark.sql.session.timeZone")
     val s = serving.synchronized {
-      serving.get(job.jobName).filter(_.servesFrom(job, src, handles._1, handles._2, tz))
-        .getOrElse {
-          val fresh = new Serving(job, src, handles._1, handles._2, tz)
-          serving.put(job.jobName, fresh)
-          fresh
-        }
+      val last = serving.get(job.jobName)
+      last.filter(_.servesFrom(job, src, handles._1, handles._2, tz)).getOrElse {
+        val fresh = new Serving(job, src, handles._1, handles._2, tz, last.flatMap(_.patchBasis))
+        serving.put(job.jobName, fresh)
+        fresh
+      }
     }
     if (s.size > threshold) None else Some(s.snapshot)
   }
@@ -559,7 +610,7 @@ final class VectorizeEngine(
       // ranking like the typed filters (reference placement,
       // core/src/query.rs:669-700 WHERE on the joined result).
       // Caller-supplied SQL, same trust model as the reference.
-      Search.semanticSearch(src, embeddingsFrom(job, handles._1),
+      Search.semanticSearch(src, embeddingsFrom(job, handles._1.map(_.rows)),
         job.primaryKey, qv, limit, filters, returnCols, preFilter, whereSql))(
       _.semanticSearch(qv, limit, filters, returnCols))
   }
@@ -608,8 +659,8 @@ final class VectorizeEngine(
       if (bm25 || whereSql.nonEmpty || limit < 1 || window < 1 || !(rrfK > -1.0)) None
       else localSnapshot(job, src, handles).filter(_.supports(filters, returnCols))
     local.fold(
-      Search.hybridSearch(src, embeddingsFrom(job, handles._1),
-        tokensFrom(handles._2), job.primaryKey, qv, query, limit,
+      Search.hybridSearch(src, embeddingsFrom(job, handles._1.map(_.rows)),
+        tokensFrom(handles._2.map(_.rows)), job.primaryKey, qv, query, limit,
         windowSize, rrfK, semanticWt, ftsWt, filters, returnCols, bm25,
         whereSql))(
       _.hybridSearch(qv, query, limit, window, rrfK, semanticWt, ftsWt, filters, returnCols))

@@ -75,9 +75,8 @@ object Dedup {
     */
   private def keepGroups(docs: DataFrame, idCol: String,
       textCol: String): (DataFrame, DataFrame) = {
-    val narrow = docs
-      .select(col(idCol), normTextHash(textCol).as("__norm_hash"))
-      .localCheckpoint(false)
+    val narrow = IngestChain.truncate(docs
+      .select(col(idCol), normTextHash(textCol).as("__norm_hash")))
     val groups = narrow
       .groupBy(col("__norm_hash").as("__gh_key"))
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("group_size"))
@@ -393,7 +392,7 @@ object Dedup {
     val withSpans = withSpansOf(docs, idCol, textCol, spanTokens)
     // one pass builds BOTH what the two branches need (df vote +
     // kept-set) — localCheckpointed because two branches read it
-    val perDoc = spanPerDocOf(withSpans).localCheckpoint(false)
+    val perDoc = IngestChain.truncate(spanPerDocOf(withSpans))
     // count(col) skips nulls, so a null-id doc casts NO vote — the
     // SQL count(DISTINCT doc_id) semantics the DuckDB oracle replays
     // (count(lit(1)) would count the collapsed null-id group as one
@@ -629,11 +628,10 @@ object Dedup {
     // tokenizations of the corpus counting reassembly; now two). The
     // clusterCanonical convention: lineage traded for the single
     // derivation.
-    val grams = base.withColumn("__g", gramsArr)
+    val grams = IngestChain.truncate(base.withColumn("__g", gramsArr)
       .select(col("__id"), posexplode_outer(col("__g")).as(Seq("__p0", "__gram")))
       .select(col("__id"), col("__p0"), md5(col("__gram")).as("__gh"))
-      .filter(col("__gh").isNotNull)
-      .localCheckpoint(false)
+      .filter(col("__gh").isNotNull))
     // keep-first via groupBy, not a window (r16): min(struct(d,p))
     // per gram hash partial-aggregates map-side, so a corpus-wide hot
     // gram collapses in every mapper instead of landing its whole
@@ -1755,23 +1753,20 @@ object Dedup {
     // round's convergence action materializes the round frame anyway,
     // so the eager form's separate materialization job per round was
     // pure overhead
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    val edges = IngestChain.truncate(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
+      .distinct())
+    var labels = IngestChain.truncate(edges.select(col("src").as("id"))
       .distinct()
-      .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint(false)
+      .withColumn("cluster_id", col("id")))
     var round = 0
     var changed = 1L
     while (changed > 0 && round < maxRounds) {
       val viaNeighbor = edges
         .join(labels.select(col("id").as("dst"), col("cluster_id")), Seq("dst"))
         .select(col("src").as("id"), col("cluster_id"))
-      val next = labels.union(viaNeighbor)
-        .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
-        .localCheckpoint(false)
+      val next = IngestChain.truncate(labels.union(viaNeighbor)
+        .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id")))
       changed = next
         .join(labels.select(col("id"), col("cluster_id").as("__prev")), Seq("id"))
         .filter(col("cluster_id") =!= col("__prev"))
@@ -1816,14 +1811,12 @@ object Dedup {
     // lazy checkpoints (r20, see clusterCanonical): the convergence
     // action of each round materializes the frames; eager ran one
     // extra job per round
-    val nodes = pairs.select(col(idA).as("id"))
-      .union(pairs.select(col(idB).as("id"))).distinct()
-      .localCheckpoint(false)
-    var edges = pairs.select(col(idA).as("u"), col(idB).as("v"))
+    val nodes = IngestChain.truncate(pairs.select(col(idA).as("id"))
+      .union(pairs.select(col(idB).as("id"))).distinct())
+    var edges = IngestChain.truncate(pairs.select(col(idA).as("u"), col(idB).as("v"))
       .filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"), greatest(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // one phase: per-node neighborhood min (self included), then hook
     // the selected side of each neighborhood onto it
     def phase(e: DataFrame, large: Boolean): DataFrame = {
@@ -1843,8 +1836,7 @@ object Dedup {
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val next = phase(phase(edges, large = true), large = false)
-        .localCheckpoint(false)
+      val next = IngestChain.truncate(phase(phase(edges, large = true), large = false))
       // stable when the (canonicalized, deduped) edge set is unchanged
       // — symmetric difference via ONE full-outer count, not a
       // count + anti-join pair of actions per round

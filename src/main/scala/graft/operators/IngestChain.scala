@@ -43,7 +43,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 private[graft] object IngestChain {
 
-  /** `df.localCheckpoint(false)` — the chain's lineage truncation — with
+  /** `df.localCheckpoint(false)` — the lineage truncation of the chain,
+    * of the dedup operators and of the queries that reuse a frame — with
     * `df` kept reachable for as long as the checkpointed frame's RDD is.
     * Tasks computing a lazily checkpointed frame can still be running
     * when a concurrent job completes its checkpoint; once nothing else

@@ -39,27 +39,21 @@ import scala.jdk.CollectionConverters._
   *     source schema and run by `Predicate.create` over the source
   *     rows, so coercion and null handling are Spark's.
   *
-  * Immutable once built, so any number of threads may query it.
+  * Three parts — the source rows, the vector rows and the token rows —
+  * each built from one collected frame ([[ServingSnapshot.build]]).
+  * After a store commit that kept a table's base and only moved its
+  * delta, [[ServingSnapshot.patch]] brings a snapshot forward from the
+  * delta's rows alone and shares every part that did not change.
+  * Immutable once built, so any number of threads may query it, and
+  * patching leaves the old snapshot as it was.
   */
-final class ServingSnapshot private (
-    spark: SparkSession,
-    srcAttrs: Seq[AttributeReference],
-    // source columns, then cast(pk as string)
-    srcRows: Array[InternalRow],
-    byKey: java.util.HashMap[UTF8String, Array[Int]],
-    vecKeys: Array[UTF8String],
-    // row r's vector is vecs(vecOff(r) until vecOff(r + 1))
-    vecOff: Array[Int],
-    vecs: Array[Float],
-    vecSq: Array[Double],
-    tokKeys: Array[UTF8String],
-    // each distinct token's id in `toks`
-    tokIds: java.util.HashMap[UTF8String, Integer],
-    // token ids per token row: null = a null token array, -1 = a null token
-    toks: Array[Array[Int]],
-    // null = no counts (count 1 per token); a null element is a null count
-    cnts: Array[Array[Integer]]) {
+final class ServingSnapshot private (private val spark: SparkSession,
+    private val source: ServingSnapshot.Source, private val vectors: ServingSnapshot.Vectors,
+    private val tokens: ServingSnapshot.Tokens) {
   import ServingSnapshot._
+  import source.{attrs => srcAttrs, byKey, rows => srcRows}
+  import tokens.{cnts, ids => tokIds, keys => tokKeys, toks}
+  import vectors.{data => vecs, keys => vecKeys, off => vecOff, sq => vecSq}
 
   /** Whether the snapshot answers with these filters and return
     * columns exactly; callers take the Spark plan when it does not.
@@ -301,66 +295,160 @@ object ServingSnapshot {
     * optional `search_token_counts`) — three Spark jobs.
     */
   def build(spark: SparkSession, src: DataFrame, pk: String, emb: DataFrame,
-      tokens: DataFrame): ServingSnapshot = {
-    val hasCounts = tokens.columns.contains("search_token_counts")
-    val srcAttrs = src.schema.map(f => AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
-    val srcRows = GraftColumnBridge.collectInternal(src.select(col("*"), src(pk).cast("string")))
-    val keyAt = srcAttrs.length
-    val byKey = new java.util.HashMap[UTF8String, Array[Int]]()
-    srcRows.indices.foreach { i =>
-      if (!srcRows(i).isNullAt(keyAt)) {
-        val k = srcRows(i).getUTF8String(keyAt)
-        byKey.put(k, byKey.getOrDefault(k, NoRows) :+ i)
+      tokens: DataFrame): ServingSnapshot =
+    new ServingSnapshot(spark, Source(src, pk), Vectors(vectorRows(emb)),
+      Tokens(tokenRows(tokens), hasCounts(tokens), new java.util.HashMap[UTF8String, Integer]()))
+
+  /** `old` brought forward to a later commit of its store tables that
+    * kept their bases and only moved their deltas. `src`, when given,
+    * is collected afresh (a re-registered source). For each of `emb`
+    * and `tokens` that is given — the table's delta rows, every row
+    * changed since the base, last writer per `pkey` — the old rows
+    * whose key the delta carries (a null key included) are removed and
+    * the delta's rows appended; a null vector removes its key's row and
+    * adds none. One Spark job per frame given; the parts not given are
+    * shared with `old`. The answers are those of a [[build]] over the
+    * later commit: the delta holds every key an earlier delta over the
+    * same base held, so every row `old` took from one is replaced.
+    */
+  def patch(old: ServingSnapshot, src: Option[DataFrame], pk: String, emb: Option[DataFrame],
+      tokens: Option[DataFrame]): ServingSnapshot =
+    new ServingSnapshot(old.spark, src.fold(old.source)(Source(_, pk)),
+      emb.fold(old.vectors) { d =>
+        val rows = vectorRows(d)
+        Vectors.concat(old.vectors, kept(old.vectors.keys, rows), Vectors(rows))
+      },
+      tokens.fold(old.tokens) { d =>
+        val rows = tokenRows(d)
+        Tokens.concat(old.tokens, kept(old.tokens.keys, rows),
+          Tokens(rows, hasCounts(d), new java.util.HashMap(old.tokens.ids)))
+      })
+
+  /** The indices of `keys` that no collected row carries as its first
+    * column, null alike. */
+  private def kept(keys: Array[UTF8String], rows: Array[InternalRow]): IndexedSeq[Int] = {
+    val gone = new java.util.HashSet[UTF8String]()
+    rows.foreach(r => gone.add(if (r.isNullAt(0)) null else r.getUTF8String(0)))
+    keys.indices.filterNot(r => gone.contains(keys(r)))
+  }
+
+  /** The first column's key, copied out of the collected row: a string
+    * read from a row points into the row's bytes and would keep them. */
+  private def key(r: InternalRow): UTF8String = if (r.isNullAt(0)) null else r.getUTF8String(0).clone()
+
+  /** The source's columns, then cast(pk as string), and each key's rows. */
+  private final class Source(val attrs: Seq[AttributeReference], val rows: Array[InternalRow],
+      val byKey: java.util.HashMap[UTF8String, Array[Int]])
+
+  private object Source {
+    def apply(src: DataFrame, pk: String): Source = {
+      val attrs = src.schema.map(f => AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
+      val rows = GraftColumnBridge.collectInternal(src.select(col("*"), src(pk).cast("string")))
+      val keyAt = attrs.length
+      val byKey = new java.util.HashMap[UTF8String, Array[Int]]()
+      rows.indices.foreach { i =>
+        if (!rows(i).isNullAt(keyAt)) {
+          val k = rows(i).getUTF8String(keyAt)
+          byKey.put(k, byKey.getOrDefault(k, NoRows) :+ i)
+        }
       }
+      new Source(attrs, rows, byKey)
     }
-    // the plan's cosine casts its input to array<float>; a null vector
-    // never scores
-    val vr = GraftColumnBridge.collectInternal(emb.select(col("pkey"), col("embeddings").cast("array<float>")))
-      .filterNot(_.isNullAt(1))
-    // keys and tokens are copied out of the collected rows: a string
-    // read from a row points into the row's bytes and would keep them
-    def key(r: InternalRow) = if (r.isNullAt(0)) null else r.getUTF8String(0).clone()
-    val vecOff = vr.scanLeft(0)(_ + _.getArray(1).numElements())
-    val vecs = new Array[Float](vecOff.last)
-    val vecSq = vr.indices.map { r =>
-      val a = vr(r).getArray(1)
-      var sq = 0.0
-      var i = 0
-      while (i < a.numElements()) {
-        val x = a.getFloat(i)
-        vecs(vecOff(r) + i) = x
-        sq += x.toDouble * x.toDouble
-        i += 1
+  }
+
+  /** Vector rows: row r's key, its vector `data(off(r) until off(r + 1))`
+    * and its Σx². */
+  private final class Vectors(val keys: Array[UTF8String], val off: Array[Int],
+      val data: Array[Float], val sq: Array[Double])
+
+  // the plan's cosine casts its input to array<float>
+  private def vectorRows(emb: DataFrame): Array[InternalRow] =
+    GraftColumnBridge.collectInternal(emb.select(col("pkey"), col("embeddings").cast("array<float>")))
+
+  private object Vectors {
+    /** Collected (`pkey`, `array<float>`) rows, less those with a null
+      * vector, which never scores. */
+    def apply(rows: Array[InternalRow]): Vectors = {
+      val vr = rows.filterNot(_.isNullAt(1))
+      val off = vr.scanLeft(0)(_ + _.getArray(1).numElements())
+      val data = new Array[Float](off.last)
+      val sq = vr.indices.map { r =>
+        val a = vr(r).getArray(1)
+        var s = 0.0
+        var i = 0
+        while (i < a.numElements()) {
+          val x = a.getFloat(i)
+          data(off(r) + i) = x
+          s += x.toDouble * x.toDouble
+          i += 1
+        }
+        s
+      }.toArray
+      new Vectors(vr.map(key), off, data, sq)
+    }
+
+    /** `a`'s rows `kept`, then every row of `b`. */
+    def concat(a: Vectors, kept: IndexedSeq[Int], b: Vectors): Vectors = {
+      val rows = kept.map(a -> _) ++ b.keys.indices.map(b -> _)
+      val off = rows.scanLeft(0) { case (o, (v, r)) => o + v.off(r + 1) - v.off(r) }.toArray
+      val data = new Array[Float](off.last)
+      rows.indices.foreach { i =>
+        val (v, r) = rows(i)
+        System.arraycopy(v.data, v.off(r), data, off(i), off(i + 1) - off(i))
       }
-      sq
-    }.toArray
-    val tr = GraftColumnBridge.collectInternal(tokens.select(col("pkey") +: col("search_tokens") +:
-      (if (hasCounts) Seq(col("search_token_counts")) else Nil): _*))
-    val tokIds = new java.util.HashMap[UTF8String, Integer]()
-    val toks = tr.map { r =>
-      if (r.isNullAt(1)) null
-      else {
-        val a = r.getArray(1)
-        Array.tabulate(a.numElements()) { i =>
-          if (a.isNullAt(i)) -1
-          else {
-            val t = a.getUTF8String(i)
-            val id = tokIds.get(t)
-            if (id != null) id.intValue
-            else { tokIds.put(t.clone(), tokIds.size); tokIds.size - 1 }
+      new Vectors(rows.map { case (v, r) => v.keys(r) }.toArray, off, data,
+        rows.map { case (v, r) => v.sq(r) }.toArray)
+    }
+  }
+
+  /** Token rows: row r's key, its token ids (null = a null token array,
+    * -1 = a null token; `ids` maps each distinct token to its id) and
+    * its counts (null = no counts, count 1 per token; a null element is
+    * a null count). */
+  private final class Tokens(val keys: Array[UTF8String], val ids: java.util.HashMap[UTF8String, Integer],
+      val toks: Array[Array[Int]], val cnts: Array[Array[Integer]])
+
+  private def hasCounts(tokens: DataFrame): Boolean = tokens.columns.contains("search_token_counts")
+
+  private def tokenRows(tokens: DataFrame): Array[InternalRow] =
+    GraftColumnBridge.collectInternal(tokens.select(col("pkey") +: col("search_tokens") +:
+      (if (hasCounts(tokens)) Seq(col("search_token_counts")) else Nil): _*))
+
+  private object Tokens {
+    /** Collected (`pkey`, `search_tokens`, optional
+      * `search_token_counts`) rows; `ids` gains each new token. */
+    def apply(tr: Array[InternalRow], hasCounts: Boolean,
+        ids: java.util.HashMap[UTF8String, Integer]): Tokens = {
+      val toks = tr.map { r =>
+        if (r.isNullAt(1)) null
+        else {
+          val a = r.getArray(1)
+          Array.tabulate(a.numElements()) { i =>
+            if (a.isNullAt(i)) -1
+            else {
+              val t = a.getUTF8String(i)
+              val id = ids.get(t)
+              if (id != null) id.intValue
+              else { ids.put(t.clone(), ids.size); ids.size - 1 }
+            }
           }
         }
       }
-    }
-    val cnts = tr.map { r =>
-      if (!hasCounts || r.isNullAt(2)) null
-      else {
-        val a = r.getArray(2)
-        Array.tabulate[Integer](a.numElements())(i =>
-          if (a.isNullAt(i)) null else Integer.valueOf(a.getInt(i)))
+      val cnts = tr.map { r =>
+        if (!hasCounts || r.isNullAt(2)) null
+        else {
+          val a = r.getArray(2)
+          Array.tabulate[Integer](a.numElements())(i =>
+            if (a.isNullAt(i)) null else Integer.valueOf(a.getInt(i)))
+        }
       }
+      new Tokens(tr.map(key), ids, toks, cnts)
     }
-    new ServingSnapshot(spark, srcAttrs, srcRows, byKey, vr.map(key), vecOff, vecs, vecSq,
-      tr.map(key), tokIds, toks, cnts)
+
+    /** `a`'s rows `kept`, then every row of `b`, whose token ids extend
+      * `a`'s. */
+    def concat(a: Tokens, kept: IndexedSeq[Int], b: Tokens): Tokens =
+      new Tokens((kept.map(a.keys) ++ b.keys).toArray, b.ids, (kept.map(a.toks) ++ b.toks).toArray,
+        (kept.map(a.cnts) ++ b.cnts).toArray)
   }
 }

@@ -1,13 +1,11 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, col, hash, lit, max, pmod}
+import org.apache.spark.sql.functions.{broadcast, col, count, hash, lit, max, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode, SparkSession}
 
 /** Snapshot-versioned Parquet table with key-hash-bucketed upsert
   * (MERGE) semantics.
@@ -60,6 +58,9 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   *                      per commit (a dropped and re-created table that
   *                      re-commits an identical bucket map at `v_0`
   *                      still reads as new content),
+  *                      `#base <uuid>` names the base the commit reads
+  *                      (minted by every commit that writes buckets or a
+  *                      flat snapshot, carried by a delta commit),
   *                      `#delta <version> <key>` names the delta dir and
   *                      the key its rows replace base rows by, and
   *                      `#tprop <key> <value>` / `#sprop <key> <value>`
@@ -76,7 +77,11 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   * reference. With a delta the handle is the base buckets null-safely
   * (`<=>`) left-anti-joined against the broadcast delta keys, union the
   * delta: last writer per key, never all-pairs. A table without a
-  * delta reads its buckets alone.
+  * delta reads its buckets alone. [[readHandle]] also tells the
+  * reader the base's identity and the delta's rows, so a reader that
+  * holds a copy of an earlier commit's rows over the same base can
+  * bring it forward from the delta alone (bucket versions cannot tell
+  * bases apart: a dropped and re-created table restarts at `v_0`).
   *
   * A commit is one overwriting rename of `_BUCKETS` (posix/HDFS rename
   * onto an existing path is atomic), so readers never observe a
@@ -112,7 +117,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SaveMode, SparkSessio
   */
 final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     extends Serializable {
-  import ParquetStore.{BucketsFile, Delta}
+  import ParquetStore.{BucketsFile, Delta, DeltaRows, Handle, newBase}
 
   /** The session this store reads/writes with — for helpers that
     * build driver-side frames destined for this store (review r19:
@@ -227,6 +232,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       DataType.fromJson(required("schema")).asInstanceOf[StructType],
       entries.map { case (b, v, _) => b -> v }.toMap,
       entries.map { case (b, _, n) => b -> n }.toMap,
+      headers("base").headOption,
       headers("delta").headOption.map { d =>
         val Array(v, key) = d.split(" ", 2)
         Delta(v.toLong, key)
@@ -266,56 +272,67 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * file, so a commit between them can pair one snapshot's
     * properties with another's data). */
   def readSnapshotWithMeta(table: String): (DataFrame, Map[String, String]) =
-    handle(table).map { case (df, f) => (df, f.props) }
+    handle(table).map { case (h, f) => (h.rows, f.props) }
       .getOrElse(throw new IllegalStateException(s"no such table: $root/$table"))
 
+  /** The table's current [[Handle]], or None when it does not exist:
+    * the same object until the next commit, like [[read]]'s frame. */
+  def readHandle(table: String): Option[Handle] = handle(table).map(_._1)
+
   /** The handle for the table's current commit, with its parsed state;
-    * built (and the file parsed) only when the content changed. */
-  private def handle(table: String): Option[(DataFrame, BucketsFile)] = readRaw(table).map { raw =>
+    * built (and the file parsed) only when the content changed. A
+    * commit that kept the cached commit's base reuses its base scan,
+    * whose file listing is then not repeated. */
+  private def handle(table: String): Option[(Handle, BucketsFile)] = readRaw(table).map { raw =>
     val cached = handles.get(table)
-    if (cached != null && cached._1 == raw) (cached._3, cached._2)
+    if (cached != null && cached.raw == raw) (cached.handle, cached.f)
     else {
       val f = parse(table, raw)
-      val df = scan(table, f)
-      handles.put(table, (raw, f, df))
-      (df, f)
+      val base = Option(cached).filter(c => f.base.nonEmpty && c.f.base == f.base && c.f.map == f.map)
+        .fold(baseScan(table, f))(_.base)
+      val h = scan(table, f, base)
+      handles.put(table, Cached(raw, f, h, base))
+      (h, f)
     }
   }
 
   /** The last committed `_BUCKETS` content read per table, with its
-    * parsed state and the DataFrame [[read]] built for it. */
-  @transient private lazy val handles =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, BucketsFile, DataFrame)]()
+    * parsed state, the handle built for it and its base scan. */
+  private case class Cached(raw: String, f: BucketsFile, handle: Handle, base: DataFrame)
+  @transient private lazy val handles = new java.util.concurrent.ConcurrentHashMap[String, Cached]()
 
-  /** Parquet scan of a commit's buckets, typed by its schema; with a
-    * delta, the base rows the delta does not replace, plus the delta.
-    * A mapped bucket dir that is missing fails the scan: a read never
-    * returns a subset of the committed rows.
+  /** Parquet scan of a commit's buckets, typed by its schema. A mapped
+    * bucket dir that is missing fails the scan: a read never returns a
+    * subset of the committed rows.
     */
-  private def scan(table: String, f: BucketsFile): DataFrame = {
+  private def baseScan(table: String, f: BucketsFile): DataFrame = {
     val paths = bucketDataPaths(table, f.map)
     if (paths.isEmpty)
       throw new IllegalStateException(s"no data for table: $root/$table")
     // recursiveFileLookup disables partition-directory inference — the
     // leaf dirs come from different snapshot versions, which would
     // otherwise trip "conflicting directory structures".
-    val base = spark.read.schema(f.schema).option("recursiveFileLookup", "true")
-      .parquet(paths: _*)
-    f.delta.fold(base) { d =>
+    spark.read.schema(f.schema).option("recursiveFileLookup", "true").parquet(paths: _*)
+  }
+
+  /** A commit's handle over its base scan: with a delta, the base rows
+    * the delta does not replace, plus the delta. */
+  private def scan(table: String, f: BucketsFile, base: DataFrame): Handle = {
+    val delta = f.delta.map(d => DeltaRows(d.v, d.key, deltaRows(table, d, f.schema)))
+    Handle(delta.fold(base) { d =>
       // the delta is below the broadcast threshold by construction
       // (compaction bound); null-safe, so a null-key delta row
       // replaces the base's null-key row
-      val delta = deltaRows(table, d, f.schema)
-      base.join(broadcast(delta.select(col(d.key).as("__dk"))),
-        base(d.key) <=> col("__dk"), "left_anti").unionByName(delta)
-    }
+      base.join(broadcast(d.rows.select(col(d.key).as("__dk"))),
+        base(d.key) <=> col("__dk"), "left_anti").unionByName(d.rows)
+    }, f.base, delta)
   }
 
   private def deltaRows(table: String, d: Delta, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(versionDir(table, d.v))
 
   /** read(), or None when the table does not exist. */
-  def readOption(table: String): Option[DataFrame] = handle(table).map(_._1)
+  def readOption(table: String): Option[DataFrame] = handle(table).map(_._1.rows)
 
   /** read(), or an empty frame of `schema` when the table does not
     * exist (zero-row backfills deliberately leave tables uncreated).
@@ -384,7 +401,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val tprops = if (props.nonEmpty) Map.empty[String, String]
       else prior.fold(Map.empty[String, String])(_.tprops)
     commit(table, BucketsFile(v, prior.fold(nBuckets)(_.nb), df.schema, Map(-1 -> v),
-      Map(-1 -> bytes), None, tprops, props), prior.fold(Set.empty[Long])(_.versions))
+      Map(-1 -> bytes), newBase, None, tprops, props), prior.fold(Set.empty[Long])(_.versions))
   }
 
   /** MERGE: rows in `updates` replace same-key rows in the current
@@ -395,8 +412,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * runs instead where the class doc says. `props`, when given,
     * become the table properties, committed with the merged rows (see
     * [[getMeta]]). Returns whether it committed a version: an empty
-    * `updates` commits none, and so records no `props` — unless the
-    * table has a delta, which it then rewrites with the same rows.
+    * `updates` commits none, and so records no `props`.
     */
   def merge(table: String, updates: DataFrame, key: String,
       props: Map[String, String] = Map.empty): Boolean = {
@@ -460,7 +476,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       return false
     }
     commit(table, BucketsFile(0L, nBuckets, updates.schema, written.map { case (b, _) => b -> 0L },
-      written, None, props, Map.empty), Set.empty)
+      written, newBase, None, props, Map.empty), Set.empty)
     true
   }
 
@@ -474,42 +490,40 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * `upd` does not carry, plus `upd` — and commits it beside the
     * unchanged bucket map, or compacts it when it passes the bound.
     * `upd` is read once, by the delta write, so it is not persisted. An
-    * empty `upd` into a table without a delta commits nothing; the
-    * written files' footers tell, so it costs no job.
+    * empty `upd` commits nothing: the write counts `upd`'s rows as an
+    * observed metric, so telling costs no job.
     */
   private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String): Boolean = {
     val v = f.version + 1L
     val dir = new Path(versionDir(table, v))
+    val counted = Observation()
     // in the table's column order and types (a narrower column is cast
-    // up); a missing column fails here, loudly
-    val batch = upd.select(f.schema.fields.map { c =>
-      if (upd.schema.find(_.name == c.name)
-          .forall(u => DataTypeUtils.equalsIgnoreNullability(u.dataType, c.dataType))) col(c.name)
-      else col(c.name).cast(c.dataType).as(c.name)
-    }.toIndexedSeq: _*)
+    // up); a missing column fails here, loudly. In the store's session,
+    // as the old delta's read is: an observation completes only in the
+    // session that runs the write, and a streaming micro-batch's frame
+    // belongs to a session of its own.
+    val batch = GraftColumnBridge.dataFrame(spark, GraftColumnBridge.logicalPlan(
+      upd.select(f.schema.fields.map { c =>
+        if (upd.schema.find(_.name == c.name)
+            .forall(u => DataTypeUtils.equalsIgnoreNullability(u.dataType, c.dataType))) col(c.name)
+        else col(c.name).cast(c.dataType).as(c.name)
+      }.toIndexedSeq: _*))).observe(counted, count(lit(1)).as("rows"))
     // a shuffle either way, whose partitions adaptive execution sizes:
     // one file for a small delta
     val next = f.delta.fold(batch.hint("rebalance"))(d =>
       lastWriter(deltaRows(table, d, f.schema), batch, key))
     next.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    val files = dataFiles(dir)
-    if (files.map(rowCount).sum == 0L) {
+    if (counted.get("rows") == 0L) {
       fs.delete(dir, true)
       return false
     }
+    val files = dataFiles(dir)
     val written = Delta(v, key)
     if (files.map(_.getLen).sum > compactionBound(f)) {
       val rows = deltaRows(table, written, f.schema)
       rewrite(table, f, rows, Some(rows), key, v + 1L, full = false, f.versions)
     } else commit(table, f.copy(version = v, delta = Some(written), sprops = Map.empty), f.versions)
     true
-  }
-
-  /** Rows in one parquet file, from its footer. */
-  private def rowCount(st: FileStatus): Long = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
-    try reader.getRecordCount finally reader.close()
   }
 
   /** `old` rows whose key `batch` does not carry (null keys alike),
@@ -576,7 +590,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // table (same invariant as the zero-row first merge) — a committed
     // empty bucket map would make exists() true while read() throws
     if (map.isEmpty) drop(table)
-    else commit(table, BucketsFile(v, f.nb, next.schema, map, baseBytes ++ written, None,
+    else commit(table, BucketsFile(v, f.nb, next.schema, map, baseBytes ++ written, newBase, None,
       f.tprops, Map.empty), prev)
     true
   }
@@ -648,13 +662,31 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
 }
 
 object ParquetStore {
+  /** A commit's read handle: its rows (what [[ParquetStore.read]]
+    * returns), the identity of the base buckets they are read from, and
+    * the delta's rows, if it has one. Two handles with the same `base`
+    * differ only in their deltas, and a later delta holds every key of
+    * an earlier one: the delta is every row changed since the base,
+    * last writer per key. `base` is None for a commit written before
+    * the identity was recorded.
+    */
+  final case class Handle(rows: DataFrame, base: Option[String], delta: Option[DeltaRows])
+
+  /** A delta's rows, committed at `version`; they replace base rows
+    * with the same `key`, null keys alike. */
+  final case class DeltaRows(version: Long, key: String, rows: DataFrame)
+
+  /** A fresh base identity, for a commit that writes buckets or a flat
+    * snapshot. */
+  private def newBase: Option[String] = Some(java.util.UUID.randomUUID().toString)
+
   /** One `_BUCKETS` file: its header fields, the bucket → snapshot
     * version map, each bucket's bytes and the two property scopes.
     * Bucket -1 marks a flat (unbucketed) snapshot written by
     * overwrite().
     */
   private final case class BucketsFile(version: Long, nb: Int, schema: StructType,
-      map: Map[Int, Long], bytes: Map[Int, Long], delta: Option[Delta],
+      map: Map[Int, Long], bytes: Map[Int, Long], base: Option[String], delta: Option[Delta],
       tprops: Map[String, String], sprops: Map[String, String]) {
     /** Every version dir this commit reads from. */
     def versions: Set[Long] = map.values.toSet ++ delta.map(_.v)
@@ -667,6 +699,7 @@ object ParquetStore {
       (Seq(s"#version $version", s"#n $nb",
         s"#schema ${StructType(schema.filterNot(_.name == "__bucket")).json}",
         s"#token ${java.util.UUID.randomUUID()}") ++
+        base.map(b => s"#base $b") ++
         delta.map(d => s"#delta ${d.v} ${d.key}") ++
         tprops.toSeq.sorted.map { case (k, v) => s"#tprop $k $v" } ++
         sprops.toSeq.sorted.map { case (k, v) => s"#sprop $k $v" } ++

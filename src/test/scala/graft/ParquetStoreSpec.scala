@@ -533,6 +533,63 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(got2.size == 5040 && got2(Some("4980")) == "v2-4980" && got2(Some("5040")) == "v3-5040")
   }
 
+  test("an empty MERGE into a table with a delta commits nothing and runs no extra job") {
+    val dir = TestSpark.tempDir("graft_ps_emptydelta_")
+    val store = new ParquetStore(spark, dir)
+    store.merge("t", rows(1 to 2000, "v1"), "pkey", Map("owner" -> "a"))
+    assert(store.merge("t", rows(3 to 8, "v2"), "pkey"))
+    assert(bucketsFile(dir)._1.exists(_.startsWith("#delta ")))
+    val deltaJobs = jobsOf(assert(store.merge("t", rows(20 to 23, "v4"), "pkey"))).size
+    def state = (bucketsFile(dir), store.currentVersion("t"), store.getMeta("t"), versionDirs(dir))
+    val before = state
+    val emptyJobs = jobsOf(assert(!store.merge("t", rows(1 to 0, "x"), "pkey", Map("owner" -> "b"))))
+    // `_BUCKETS` (its #token included), the version, the properties and
+    // the version dirs are as they were
+    assert(state == before && before._3 == Map("owner" -> "a"))
+    assert(emptyJobs.size <= deltaJobs, s"empty MERGE ran ${emptyJobs.size} jobs, a delta MERGE $deltaJobs")
+    assert(contents(store).size == 2000 && contents(store)(Some("20")) == "v4-20")
+  }
+
+  test("a handle's base identity: a delta commit carries it, every base-writing commit mints one") {
+    val dir = TestSpark.tempDir("graft_ps_base_")
+    val store = new ParquetStore(spark, dir)
+    def handle = store.readHandle("t").get
+    assert(store.readHandle("t").isEmpty)
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    val b0 = handle.base
+    assert(b0.nonEmpty && handle.delta.isEmpty)
+    store.merge("t", rows(3 to 8, "v2"), "pkey")
+    val h1 = handle
+    assert(h1.base == b0 && h1.delta.map(d => (d.version, d.key)) == Some((1L, "pkey")))
+    assert(h1.delta.get.rows.collect().map(_.getString(0)).sorted.toSeq == (3 to 8).map(_.toString).sorted)
+    store.merge("t", rows(5 to 12, "v3"), "pkey")
+    val h2 = handle
+    assert(h2.base == b0 && h2.delta.get.version == 2L)
+    // the later delta holds every key of the earlier one, last writer wins
+    assert(h2.delta.get.rows.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+      (3 to 4).map(i => i.toString -> s"v2-$i").toMap ++ (5 to 12).map(i => i.toString -> s"v3-$i"))
+    assert(store.readHandle("t").get eq h2, "the same handle until the next commit")
+    // compaction, delete, overwrite, and a drop + re-create whose first
+    // commit is `v_0` again: each a new base
+    val bases = scala.collection.mutable.Buffer(b0)
+    def newBase(what: String): Unit = {
+      assert(handle.delta.isEmpty && !bases.contains(handle.base), what)
+      bases += handle.base
+    }
+    copyOnWrite(store.merge("t", rows(1 to 3, "v4"), "pkey"))
+    newBase("compaction")
+    store.delete("t", Seq("7").toDF("pkey"), "pkey")
+    newBase("delete")
+    store.overwrite("t", rows(1 to 5, "v5"))
+    newBase("overwrite")
+    store.merge("t", rows(1 to 2, "v6"), "pkey")
+    newBase("first MERGE into a flat snapshot")
+    store.drop("t")
+    store.merge("t", rows(1 to 2000, "v1"), "pkey")
+    assert(store.currentVersion("t") == Some(0L))
+    newBase("re-created")
+  }
+
   test("a reader holding a handle across one commit still reads it") {
     val dir = TestSpark.tempDir("graft_ps_grace_")
     val store = new ParquetStore(spark, dir)

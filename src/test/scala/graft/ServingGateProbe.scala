@@ -12,11 +12,16 @@ import scala.jdk.CollectionConverters._
   * three frames' size estimates against `spark.sql.autoBroadcastJoinThreshold`,
   * the snapshot's build time and driver heap, and an interleaved run of
   * 50-row `Realtime.processBatch` commits, each followed by `reads`
-  * alternating search / hybrid reads, with the tier on and off. Each
-  * cycle prints its `processBatch` time, marked `rewrite=1` when the
-  * batch rewrote base buckets of the vector or token table (their
-  * `_BUCKETS` bucket lines changed), and each mode ends with the
-  * median, mean and max batch time over all cycles.
+  * alternating search / hybrid reads, with the tier on and off. Every
+  * cycle re-registers the source (a new parquet snapshot of the
+  * corpus) before its batch. Each cycle prints its `processBatch` time,
+  * marked `rewrite=1` when the batch rewrote base buckets of the vector
+  * or token table (their `_BUCKETS` bucket lines changed), and its
+  * first read's time and Spark jobs, with `snapshot=patched` when that
+  * read patched the serving snapshot from the store deltas, `built`
+  * when it built one whole, and `none` when it took the Spark plan.
+  * Each mode ends with the median, mean and max batch time over all
+  * cycles.
   *
   * {{{
   * SPARK_DRIVER_MEM=3g sbt "Test/runMain graft.ServingGateProbe 5000 15000 30000"
@@ -71,14 +76,22 @@ object ServingGateProbe {
     (r, (System.nanoTime() - t0) / 1e6)
   }
 
-  /** Heap held by a snapshot's data: its array and map fields (not the
-    * session or the orderings, which reach the snapshot itself), walked
-    * once for the total (shared objects count once) and one by one. */
+  /** Heap held by a snapshot's data: the array and map fields of its
+    * parts (not the session or the orderings, which reach the snapshot
+    * itself), walked once for the total (shared objects count once) and
+    * one by one. */
   private def ownHeap(s: ServingSnapshot): (Long, Seq[(String, Long)]) = {
-    val fields = s.getClass.getDeclaredFields.toSeq
-      .filter(f => f.getType.isArray || classOf[java.util.Map[_, _]].isAssignableFrom(f.getType) ||
-        classOf[scala.collection.Seq[_]].isAssignableFrom(f.getType))
-      .map { f => f.setAccessible(true); f.getName -> f.get(s) }
+    def values(o: AnyRef) = o.getClass.getDeclaredFields.toSeq.map { f =>
+      f.setAccessible(true)
+      (f, f.get(o))
+    }
+    val fields = values(s)
+      .flatMap { case (f, v) =>
+        if (v != null && f.getType.getName.startsWith(classOf[ServingSnapshot].getName + "$")) values(v)
+        else Seq((f, v)) }
+      .filter { case (f, _) => f.getType.isArray || classOf[java.util.Map[_, _]].isAssignableFrom(f.getType) ||
+        classOf[scala.collection.Seq[_]].isAssignableFrom(f.getType) }
+      .map { case (f, v) => s"${f.getDeclaringClass.getSimpleName.stripSuffix("$")}.${f.getName}" -> v }
     def est(o: AnyRef) = org.apache.spark.util.SizeEstimator.estimate(o)
     (est(fields.map(_._2).toArray), fields.map { case (n, v) => n -> est(v) })
   }
@@ -120,7 +133,25 @@ object ServingGateProbe {
       f"heap_bytes=$heap heap_per_row=${heap.toDouble / n}%.0f " +
       f"heap_over_max_size=${heap.toDouble / sizes.max.toDouble}%.2f")
     println(s"n=$n snapshot heap_bytes_by_field " +
-      byField.map { case (f, b) => s"${f.replaceAll(".*\\$", "")}=$b" }.mkString(" "))
+      byField.map { case (f, b) => s"$f=$b" }.mkString(" "))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    /** `body`'s time, its Spark jobs, and how it came by the serving
+      * snapshot. */
+    def traced(body: => Unit): (Double, Int, String) = {
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      val (j0, b0, p0) = (jobs.get, engine.servingBuilds.get, engine.servingPatches.get)
+      val (_, ms) = timed(body)
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      (ms, jobs.get - j0,
+        if (engine.servingPatches.get > p0) "patched" else if (engine.servingBuilds.get > b0) "built"
+        else "none")
+    }
 
     def bucketLines(table: String): Seq[String] = {
       val p = java.nio.file.Paths.get(s"$dir/warehouse/$table/_BUCKETS")
@@ -157,9 +188,15 @@ object ServingGateProbe {
           var cycle = b
           (0 until reads).foreach { r =>
             val q = queries((c * reads + r) % queries.size)
-            val (_, ms) = timed(
+            def read(): Unit =
               if (r % 2 == 0) engine.search("docs", q, 10).collect()
-              else engine.hybridSearch("docs", q, 10).collect())
+              else engine.hybridSearch("docs", q, 10).collect()
+            val ms = if (r > 0) timed(read())._2 else {
+              val (ms, readJobs, how) = traced(read())
+              println(f"n=$n tier=$mode cycle=$c first_read_ms=$ms%.0f first_read_jobs=$readJobs " +
+                s"snapshot=$how")
+              ms
+            }
             (if (r == 0) firstMs else laterMs) += ms
             cycle += ms
           }
@@ -171,6 +208,7 @@ object ServingGateProbe {
           f"batch_ms_max=${batchMs.max}%.0f rewrites=$rewrites/$cycles")
       } finally spark.conf.set(Threshold, old)
     }
+    spark.sparkContext.removeSparkListener(counter)
     engine.deleteJob("docs")
   }
 }

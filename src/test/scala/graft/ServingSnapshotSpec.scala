@@ -225,16 +225,25 @@ class ServingSnapshotSpec extends AnyFunSuite {
     * refresh sees every row as changed. */
   private def docs(n: Int, tag: String = ""): DataFrame = {
     val future = System.currentTimeMillis() + 3600000L
-    val keys = Seq("ä", "a", "Ω", "日本", "b", "é", "ab")
     val ws = Seq("camping", "backpack", "pencil", "airplane", "pizza", "tent", "ocean")
     val rows = (0 until n).map { i =>
-      Row(keys(i % keys.size) + i, s"${ws(i % 7)} ${ws((i * 3 + 1) % 7)} ${ws((i / 7) % 7)}$tag",
+      Row(docKey(i), s"${ws(i % 7)} ${ws((i * 3 + 1) % 7)} ${ws((i / 7) % 7)}$tag",
         Seq("en", "fr")(i % 2), i.toLong,
         new java.sql.Timestamp(if (tag.isEmpty) 1000L * (i + 1) else future))
     }
     spark.createDataFrame(rows.asJava, StructType(Seq(StructField("doc_key", StringType),
       StructField("body", StringType), StructField("lang", StringType),
       StructField("n", LongType), StructField("updated_at", TimestampType))))
+  }
+
+  private def docKey(i: Int): String = Seq("ä", "a", "Ω", "日本", "b", "é", "ab")(i % 7) + i
+
+  /** `df` written as parquet and read back: collecting it is a Spark
+    * job, as a file-backed source's is. */
+  private def onDisk(df: DataFrame): DataFrame = {
+    val dir = TestSpark.tempDir("graft_serve_src_")
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
   }
 
   private def engineWith(method: TableMethod, n: Int = 60): VectorizeEngine = {
@@ -309,15 +318,194 @@ class ServingSnapshotSpec extends AnyFunSuite {
       body
       assert((persisted -- before).isEmpty, s"$what left persisted RDDs: ${persisted -- before}")
     }
-    val e = engineWith(TableMethod.Join)
+    // enough rows that the batches below write store deltas
+    val e = engineWith(TableMethod.Join, n = 2000)
     noLeak("under-gate search")(e.search("docs", "camping", 5).collect())
     noLeak("above-gate search")(withThreshold("-1")(e.search("docs", "camping", 5).collect()))
-    e.registerSource("docs_src", docs(70, tag = " fresh"))
+    e.registerSource("docs_src", docs(2000, tag = " fresh").filter("n < 20").unionByName(
+      docs(2000).filter("n >= 20")))
     noLeak("refreshJob")(e.refreshJob("docs"))
     noLeak("processBatch")(streaming.Realtime.processBatch(e, e.job("docs").get,
       docs(5, tag = " batch")))
+    val patches = e.servingPatches.get
+    noLeak("patched read")(e.search("docs", "camping", 5).collect())
+    assert(e.servingPatches.get == patches + 1, "the read after the batch patches the snapshot")
     e.store.merge("t", docs(10), "doc_key")
     noLeak("store.merge")(e.store.merge("t", docs(12, tag = " merged"), "doc_key"))
+  }
+
+  test("engine: the first read after a delta MERGE patches the snapshot, one job per changed frame") {
+    val n = 3000
+    val e = new VectorizeEngine(spark, TestSpark.tempDir("graft_serve_patch_"),
+      embeddingProviderOverride = Some(new providers.DeterministicHashProvider(32)))
+    e.registerSource("docs_src", onDisk(docs(n)))
+    e.createJob(job(TableMethod.Join))
+    val j = e.job("docs").get
+    def bases = Seq(e.embTable("docs"), e.tokTable("docs")).map(e.store.readHandle(_).get.base)
+    def counts = (e.servingBuilds.get, e.servingPatches.get)
+    def batch(from: Int) = docs(n, tag = " zebra").filter(s"n >= $from and n < ${from + 50}")
+    def agrees(what: String): Unit = Seq("camping zebra", "pencil").foreach { q =>
+      assertSame(e.hybridSearch("docs", q, 8), withThreshold("-1")(e.hybridSearch("docs", q, 8)),
+        "doc_key", Seq("rrf_score"), 8, s"$what '$q'")
+    }
+    e.search("docs", "warm", 3).collect()
+    val base0 = bases
+    // a 50-row batch, the source unchanged: one delta collect per table
+    streaming.Realtime.processBatch(e, j, batch(0))
+    assert(bases == base0, "a 50-row batch writes deltas")
+    var c = counts
+    assert(jobsIn(e.search("docs", "camping", 5).collect()) == 2)
+    assert(counts == (c._1, c._2 + 1))
+    agrees("patched")
+    // the source re-registered too: its collect is the third job
+    e.registerSource("docs_src", onDisk(docs(n, tag = " zebra").filter("n < 100")
+      .unionByName(docs(n).filter("n >= 100"))))
+    streaming.Realtime.processBatch(e, j, batch(50))
+    assert(bases == base0)
+    c = counts
+    assert(jobsIn(e.search("docs", "camping", 5).collect()) == 3)
+    assert(counts == (c._1, c._2 + 1))
+    agrees("patched with a new source")
+    // a compaction writes new bases: the next read builds
+    withThreshold("-1")(streaming.Realtime.processBatch(e, j, batch(100)))
+    assert(bases.zip(base0).forall { case (now, was) => now.nonEmpty && now != was })
+    c = counts
+    e.search("docs", "camping", 5).collect()
+    assert(counts == (c._1 + 1, c._2))
+    agrees("rebuilt after a compaction")
+  }
+
+  test("property: after random commits the patched snapshot answers like a fresh build and the plans") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val n = 600
+    val vocab = Seq("camping", "backpack", "pencil", "airplane", "pizza", "tent", "ocean", "zebra")
+      .flatMap(graft.functions.TextAnalyzer.queryLexemes(_)).distinct
+    val steps = Seq("batch", "batch", "merge", "merge", "merge", "compact", "widen", "delete",
+      "register", "register", "recreate", "rejob")
+    Seq(TableMethod.Join -> 41L, TableMethod.Append -> 43L).foreach { case (m, seed) =>
+      val rnd = new scala.util.Random(seed)
+      val dir = TestSpark.tempDir("graft_serve_patchprop_")
+      def newEngine() = new VectorizeEngine(spark, dir,
+        embeddingProviderOverride = Some(new providers.DeterministicHashProvider(32)))
+      val e = newEngine()
+      var src = docs(n)
+      e.registerSource("docs_src", src)
+      e.createJob(job(m))
+      val tok = e.tokTable("docs")
+      val tables = Seq(if (m == TableMethod.Append) e.appTable("docs") else e.embTable("docs"), tok)
+      var widened = false
+      def handles = tables.map(e.store.readHandle)
+      def counts = (e.servingBuilds.get, e.servingPatches.get)
+      def randomKeys(k: Int) = Seq.fill(k)(docKey(rnd.nextInt(n))).distinct
+
+      /** Rows for table `t` from its current ones: some keys get new
+        * content, some a null vector or null tokens, some move to a key
+        * the source lacks, and maybe one row gets a null key. */
+      def updates(t: String): DataFrame = {
+        val cur = e.store.read(t)
+        val ks = randomKeys(2 + rnd.nextInt(10))
+        val (changed, rest) = ks.splitAt(ks.size / 2)
+        val (nulled, moved) = rest.splitAt(rest.size / 2)
+        val content: Seq[(String, org.apache.spark.sql.Column)] =
+          if (t == tok) {
+            val ts = Seq.fill(1 + rnd.nextInt(3))(vocab(rnd.nextInt(vocab.size)))
+            Seq("search_tokens" -> array(ts.map(lit): _*),
+              "search_token_counts" ->
+                (if (rnd.nextInt(4) == 0) lit(null).cast("array<int>")
+                else array(ts.map(_ => lit(1 + rnd.nextInt(3))): _*)))
+          } else {
+            val salt = rnd.nextInt(1000)
+            Seq("embeddings" -> array((0 until 32).map(i =>
+              (pmod(hash(col("pkey"), lit(salt + i)), lit(3)) - 1).cast("float")): _*))
+          }
+        def pick(keys: Seq[String]) = cur.filter(col("pkey").isin(keys: _*))
+        val nullKey = if (rnd.nextInt(3) == 0)
+          Seq(pick(changed.take(1)).withColumn("pkey", lit(null).cast("string"))) else Nil
+        (Seq(content.foldLeft(pick(changed)) { case (d, (c, v)) => d.withColumn(c, v) },
+          content.foldLeft(pick(nulled)) { case (d, (c, _)) =>
+            d.withColumn(c, lit(null).cast(cur.schema(c).dataType)) },
+          pick(moved).withColumn("pkey", concat(col("pkey"), lit("~")))) ++ nullKey)
+          .reduce(_ unionByName _)
+      }
+      def someTables = if (rnd.nextBoolean()) tables else Seq(tables(rnd.nextInt(2)))
+
+      e.search("docs", "warm", 3).collect()
+      var last = (src, handles)
+      val seen = scala.collection.mutable.Buffer.empty[String]
+      (1 to 12).foreach { step =>
+        val kind = steps(rnd.nextInt(steps.size)) match {
+          case "batch" if widened => "merge"
+          case k => k
+        }
+        kind match {
+          case "batch" =>
+            val ids = Seq.fill(1 + rnd.nextInt(8))(rnd.nextInt(n).toLong).distinct
+            streaming.Realtime.processBatch(e, e.job("docs").get,
+              docs(n, tag = s" zebra$step").filter(col("n").isin(ids: _*)))
+          case "merge" => someTables.foreach(t => e.store.merge(t, updates(t), "pkey"))
+          case "compact" =>
+            someTables.foreach(t => withThreshold("-1")(e.store.merge(t, updates(t), "pkey")))
+          case "widen" =>
+            val t = tables(rnd.nextInt(2))
+            e.store.merge(t, updates(t).withColumn("__w", lit(step)), "pkey")
+            widened = true
+          case "delete" =>
+            someTables.foreach(t => e.store.delete(t,
+              (randomKeys(1 + rnd.nextInt(6)).map(Option(_)) ++
+                (if (rnd.nextBoolean()) Seq(None) else Nil)).toDF("pkey"), "pkey"))
+          case "register" =>
+            val (r, d) = (rnd.nextInt(7), 3 + rnd.nextInt(5))
+            src = docs(n).filter(s"n % 7 != $r").unionByName(docs(n, s" zebra$step").filter(s"n % 7 = $r"))
+              .filter(s"n % $d != 1")
+            e.registerSource("docs_src", src)
+          case "recreate" =>
+            (tables :+ e.embTable("docs")).foreach(e.store.drop)
+            e.refreshJob("docs")
+            widened = false
+          case "rejob" =>
+            e.deleteJob("docs")
+            e.createJob(job(m))
+            widened = false
+        }
+        // the engine patches exactly when some frame changed and both
+        // store tables kept their bases
+        val now = (src, handles)
+        val expected =
+          if (kind == "rejob") (1, 0)
+          else if ((now._1 eq last._1) && now._2.zip(last._2).forall { case (a, b) => a == b }) (0, 0)
+          else if (now._2.zip(last._2).forall { case (a, b) =>
+            a.flatMap(_.base).nonEmpty && a.flatMap(_.base) == b.flatMap(_.base) }) (0, 1)
+          else (1, 0)
+        last = now
+        val c0 = counts
+        val twin = newEngine()
+        twin.registerSource("docs_src", src)
+        (0 until 2).foreach { q =>
+          val text = (queries :+ s"zebra$step camping")(rnd.nextInt(queries.size + 1))
+          val limit = 1 + rnd.nextInt(20)
+          val f = Seq(Map.empty[String, FilterValue], lang, nGte)(rnd.nextInt(3))
+          val clue = s"$m step $step ($kind) '$text' limit=$limit filters=$f"
+          val local = e.search("docs", text, limit, f)
+          assertSame(local, withThreshold("-1")(e.search("docs", text, limit, f)),
+            "doc_key", Seq("similarity_score"), limit, "search vs plan " + clue)
+          assertSame(local, twin.search("docs", text, limit, f),
+            "doc_key", Seq("similarity_score"), limit, "search vs build " + clue)
+          val hybrid = e.hybridSearch("docs", text, limit, filters = f)
+          assertSame(hybrid, withThreshold("-1")(e.hybridSearch("docs", text, limit, filters = f)),
+            "doc_key", Seq("rrf_score", "similarity_score", "fts_score"), limit, "hybrid vs plan " + clue)
+          assertSame(hybrid, twin.hybridSearch("docs", text, limit, filters = f),
+            "doc_key", Seq("rrf_score", "similarity_score", "fts_score"), limit, "hybrid vs build " + clue)
+        }
+        val c1 = counts
+        assert((c1._1 - c0._1, c1._2 - c0._2) == expected, s"$m step $step ($kind): builds, patches")
+        seen += s"$kind:${if (expected._2 == 1) "patched" else if (expected._1 == 1) "built" else "kept"}"
+        assert(twin.servingBuilds.get == 1 && twin.servingPatches.get == 0)
+      }
+      info(s"$m: ${seen.mkString(" ")}")
+      assert(e.servingPatches.get >= 3 && e.servingBuilds.get >= 3,
+        s"$m: ${e.servingBuilds.get} builds, ${e.servingPatches.get} patches")
+    }
   }
 
   test("concurrency: reads during a processBatch commit answer the state before or after it") {
