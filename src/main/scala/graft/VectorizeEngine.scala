@@ -421,32 +421,47 @@ final class VectorizeEngine(
     * search tokens, embed the rows, MERGE the vectors into the table
     * the job serves from, then keep the optional vector index fresh.
     *
-    * Tokens FIRST, embeddings second: a refresh's retry delta is
-    * derived from embedding staleness, so a crash after the tokens
-    * MERGE re-runs both merges (idempotent), while the reverse order
-    * would lose the tokens of already-embedded rows forever.
+    * The writes overlap, and the tokens commit first: the tokens MERGE
+    * runs on a pool thread (with the caller's session and local
+    * properties) while this thread renders, embeds and writes the
+    * vectors, whose commit waits for the tokens'. A refresh's retry
+    * delta is derived from embedding staleness, so vectors committed
+    * without their tokens would leave those rows unsearchable by text
+    * forever; tokens committed without their vectors are re-written by
+    * the retry. If the tokens MERGE fails, the vectors commit nothing
+    * and its error is rethrown. Either way this returns only once both
+    * writes have finished.
     *
     * `rows` are source rows with at most one row per key; the caller
     * owns their persistence. With an index, the embedded rows are
     * persisted here so that the index upsert, which reads them after
     * the vector MERGE, does not repeat the provider calls; without
     * one, the MERGE reads them once (a compacting MERGE persists its
-    * input itself).
+    * input itself). Rows on the driver (a local relation) are embedded
+    * there ([[Pipeline.embed]]).
     */
   private[graft] def upsertRows(job: VectorizeJob, rows: DataFrame,
       indexPath: Option[String] = None): Unit = writing(job) {
-    mergeTokens(job, rows)
-    val inputs = Pipeline.renderInputs(rows, job.primaryKey, job.srcColumns)
-    val embedded0 = Pipeline.embed(inputs, provider(job), job.model.apiName)
-    val embedded =
-      if (indexPath.isEmpty) embedded0
-      else embedded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tokens = GraftColumnBridge.async(rows.sparkSession)(mergeTokens(job, rows))
     try {
-      // an empty batch commits no vectors and leaves the index as it is
-      if (mergeVectors(job, rows, embedded))
-        indexPath.foreach(p =>
-          upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
-    } finally if (indexPath.nonEmpty) embedded.unpersist()
+      val inputs = Pipeline.renderInputs(rows, job.primaryKey, job.srcColumns)
+      val embedded0 = Pipeline.embed(inputs, provider(job), job.model.apiName)
+      val embedded =
+        if (indexPath.isEmpty) embedded0
+        else embedded0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // an empty batch commits no vectors and leaves the index as it is
+        if (mergeVectors(job, rows, embedded, () => GraftColumnBridge.await(tokens)))
+          indexPath.foreach(p =>
+            upsertVectorIndex(job.jobName, p, embedded.select(col("pkey"), col("embeddings"))))
+      } finally if (indexPath.nonEmpty) embedded.unpersist()
+    } catch {
+      case e: Throwable =>
+        // no write may outlive the call: wait for the tokens MERGE
+        scala.util.Try(GraftColumnBridge.await(tokens)).failed.foreach(t => if (t ne e) e.addSuppressed(t))
+        throw e
+    }
+    GraftColumnBridge.await(tokens)
   }
 
   private def mergeTokens(job: VectorizeJob, rows: DataFrame): Unit =
@@ -461,14 +476,15 @@ final class VectorizeEngine(
     * embeddings without a join — the method's point. The vectors are
     * joined back to their `rows` (a superset of their keys is fine).
     */
-  private def mergeVectors(job: VectorizeJob, rows: DataFrame, vectors: DataFrame): Boolean = {
+  private def mergeVectors(job: VectorizeJob, rows: DataFrame, vectors: DataFrame,
+      ready: () => Unit = () => ()): Boolean = {
     val served = job.tableMethod match {
       case TableMethod.Append =>
         rows.withColumn("pkey", col(job.primaryKey).cast("string"))
           .join(vectors.withColumnRenamed("updated_at", "__emb_updated_at"), Seq("pkey"))
       case _ => vectors
     }
-    store.merge(servedTable(job), served, "pkey")
+    store.merge(servedTable(job), served, "pkey", ready = ready)
   }
 
   /** `vectorize.import_embeddings` (extension/src/api.rs:250-326):

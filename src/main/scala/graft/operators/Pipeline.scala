@@ -5,7 +5,9 @@ import graft.providers.EmbeddingProvider
 import graft.types._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row}
+
+import scala.jdk.CollectionConverters._
 
 /** The embedding-maintenance pipeline: delta detection → input
   * rendering → token batching → provider calls → upsert rows.
@@ -14,10 +16,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * (SURVEY §2.9, §3.1) as declarative DataFrame transforms + one
   * `mapPartitions` at the genuine imperative boundary (the provider
   * HTTP call). Every step is shuffle-bounded on the job's primary key
-  * and contains no driver-side collection, so the same plan runs at
+  * and collects nothing to the driver, so the same plan runs at
   * 100 TB: delta scan is a pkey equi-join (AQE-skew-safe), rendering
   * and embedding are narrow per-partition maps, and the final upsert
-  * is a single key-shuffle MERGE.
+  * is a single key-shuffle MERGE. A batch that is on the driver
+  * already (a local relation) stays there: [[embed]] runs its body on
+  * the driver.
   */
 object Pipeline {
 
@@ -128,21 +132,38 @@ object Pipeline {
     * each partition and the provider applying its own 2048-input
     * request chunking. Positional zip of inputs↔outputs mirrors
     * merge_input_output (core/src/transformers/http_handler.rs:22-31).
+    * Inputs whose plan is a local relation (a small batch collected to
+    * the driver) and that make one provider request are embedded on
+    * the driver by the same body, now, into a frame over a local
+    * relation: no Spark job. Split into tasks, one request's inputs
+    * would cost one request's latency in each task, so the driver
+    * loses no parallelism; local inputs that make several requests
+    * are embedded in tasks, which send them side by side.
     */
   def embed(inputs: DataFrame, provider: EmbeddingProvider, model: String,
       tokenBudget: Int = 10000): DataFrame = {
     val spark = inputs.sparkSession
-    val rdd = inputs.select("record_id", "text", "token_estimate").rdd
-      .mapPartitions { it =>
-        val rows = it.map(r => EmbedInput(r.getString(0), r.getString(1), r.getInt(2)))
-        val now = new java.sql.Timestamp(System.currentTimeMillis())
-        createBatchesIter(rows, tokenBudget).flatMap { batch =>
-          val vecs = provider.generateEmbeddings(model, batch.map(_.text))
-          require(vecs.size == batch.size, "provider output size mismatch")
-          batch.zip(vecs).map { case (in, v) => Row(in.recordId, v.toSeq, now) }
-        }
-      }
-    spark.createDataFrame(rdd, embeddingSchema)
+    val rendered = inputs.select("record_id", "text", "token_estimate")
+    GraftColumnBridge.localRelation(rendered).map(_ => rendered.collect()) match {
+      case Some(rows) if rows.length <= 1 || rows.map(_.getInt(2).toLong).sum <= tokenBudget =>
+        spark.createDataFrame(
+          embedRows(rows.iterator, provider, model, tokenBudget).toSeq.asJava, embeddingSchema)
+      case _ => spark.createDataFrame(
+        rendered.rdd.mapPartitions(embedRows(_, provider, model, tokenBudget)), embeddingSchema)
+    }
+  }
+
+  /** One partition's embedding rows: its inputs in token-budget batches,
+    * one provider call per batch. */
+  private def embedRows(it: Iterator[Row], provider: EmbeddingProvider, model: String,
+      tokenBudget: Int): Iterator[Row] = {
+    val rows = it.map(r => EmbedInput(r.getString(0), r.getString(1), r.getInt(2)))
+    val now = new java.sql.Timestamp(System.currentTimeMillis())
+    createBatchesIter(rows, tokenBudget).flatMap { batch =>
+      val vecs = provider.generateEmbeddings(model, batch.map(_.text))
+      require(vecs.size == batch.size, "provider output size mismatch")
+      batch.zip(vecs).map { case (in, v) => Row(in.recordId, v.toSeq, now) }
+    }
   }
 
   /** S7 — search-tokens maintenance (core/src/init.rs:244-266 +

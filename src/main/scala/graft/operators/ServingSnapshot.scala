@@ -292,12 +292,15 @@ object ServingSnapshot {
 
   /** Collect the job's source (keyed by `cast(pk as string)`), vectors
     * (`pkey`, `embeddings`) and search tokens (`pkey`, `search_tokens`,
-    * optional `search_token_counts`) — three Spark jobs.
+    * optional `search_token_counts`) — three Spark jobs, run side by
+    * side.
     */
   def build(spark: SparkSession, src: DataFrame, pk: String, emb: DataFrame,
-      tokens: DataFrame): ServingSnapshot =
-    new ServingSnapshot(spark, Source(src, pk), Vectors(vectorRows(emb)),
-      Tokens(tokenRows(tokens), hasCounts(tokens), new java.util.HashMap[UTF8String, Integer]()))
+      tokens: DataFrame): ServingSnapshot = {
+    val (source, vr, tr) = together(spark)(Source(src, pk), vectorRows(emb), tokenRows(tokens))
+    new ServingSnapshot(spark, source, Vectors(vr),
+      Tokens(tr, hasCounts(tokens), new java.util.HashMap[UTF8String, Integer]()))
+  }
 
   /** `old` brought forward to a later commit of its store tables that
     * kept their bases and only moved their deltas. `src`, when given,
@@ -306,23 +309,30 @@ object ServingSnapshot {
     * changed since the base, last writer per `pkey` — the old rows
     * whose key the delta carries (a null key included) are removed and
     * the delta's rows appended; a null vector removes its key's row and
-    * adds none. One Spark job per frame given; the parts not given are
-    * shared with `old`. The answers are those of a [[build]] over the
-    * later commit: the delta holds every key an earlier delta over the
-    * same base held, so every row `old` took from one is replaced.
+    * adds none. One Spark job per frame given, run side by side; the
+    * parts not given are shared with `old`. The answers are those of a
+    * [[build]] over the later commit: the delta holds every key an
+    * earlier delta over the same base held, so every row `old` took
+    * from one is replaced.
     */
   def patch(old: ServingSnapshot, src: Option[DataFrame], pk: String, emb: Option[DataFrame],
-      tokens: Option[DataFrame]): ServingSnapshot =
-    new ServingSnapshot(old.spark, src.fold(old.source)(Source(_, pk)),
-      emb.fold(old.vectors) { d =>
-        val rows = vectorRows(d)
-        Vectors.concat(old.vectors, kept(old.vectors.keys, rows), Vectors(rows))
-      },
-      tokens.fold(old.tokens) { d =>
-        val rows = tokenRows(d)
-        Tokens.concat(old.tokens, kept(old.tokens.keys, rows),
-          Tokens(rows, hasCounts(d), new java.util.HashMap(old.tokens.ids)))
-      })
+      tokens: Option[DataFrame]): ServingSnapshot = {
+    val (source, vr, tr) = together(old.spark)(src.map(Source(_, pk)), emb.map(vectorRows),
+      tokens.map(d => (tokenRows(d), hasCounts(d))))
+    new ServingSnapshot(old.spark, source.getOrElse(old.source),
+      vr.fold(old.vectors)(rows => Vectors.concat(old.vectors, kept(old.vectors.keys, rows), Vectors(rows))),
+      tr.fold(old.tokens) { case (rows, counts) => Tokens.concat(old.tokens, kept(old.tokens.keys, rows),
+        Tokens(rows, counts, new java.util.HashMap(old.tokens.ids))) })
+  }
+
+  /** `a`, `b` and `c`, with `b` and `c` on pool threads while this one
+    * runs `a`; returns once all three have finished. */
+  private def together[A, B, C](spark: SparkSession)(a: => A, b: => B, c: => C): (A, B, C) = {
+    val (fb, fc) = (GraftColumnBridge.async(spark)(b), GraftColumnBridge.async(spark)(c))
+    val ra = scala.util.Try(a)
+    val (rb, rc) = (scala.util.Try(GraftColumnBridge.await(fb)), scala.util.Try(GraftColumnBridge.await(fc)))
+    (ra.get, rb.get, rc.get)
+  }
 
   /** The indices of `keys` that no collected row carries as its first
     * column, null alike. */

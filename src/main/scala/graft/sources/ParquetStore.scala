@@ -1,11 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, col, count, hash, lit, max, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Observation, SaveMode, SparkSession}
 
 /** Snapshot-versioned Parquet table with key-hash-bucketed upsert
   * (MERGE) semantics.
@@ -117,7 +119,7 @@ import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Observation, SaveMode
   */
 final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     extends Serializable {
-  import ParquetStore.{BucketsFile, Delta, DeltaRows, Handle, newBase}
+  import ParquetStore.{BucketsFile, Delta, DeltaRows, Handle, Ready, newBase}
 
   /** The session this store reads/writes with — for helpers that
     * build driver-side frames destined for this store (review r19:
@@ -372,9 +374,12 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     }
   }
 
-  /** Publishes `next` — the table's one commit point — then GCs; `prev`
-    * keeps its grace (see [[cleanOld]]). */
-  private def commit(table: String, next: BucketsFile, prev: Set[Long]): Unit = {
+  /** Publishes `next` — the table's one commit point — once `ready`
+    * returns, then GCs; `prev` keeps its grace (see [[cleanOld]]). A
+    * throwing `ready` publishes nothing. */
+  private def commit(table: String, next: BucketsFile, prev: Set[Long],
+      ready: () => Unit = Ready): Unit = {
+    ready()
     atomicWrite(bucketsPath(table), next.render)
     cleanOld(table, next.version, next.versions, prev)
   }
@@ -412,13 +417,17 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * runs instead where the class doc says. `props`, when given,
     * become the table properties, committed with the merged rows (see
     * [[getMeta]]). Returns whether it committed a version: an empty
-    * `updates` commits none, and so records no `props`.
+    * `updates` commits none, and so records no `props`. Each commit
+    * publishes only once `ready` returns: a caller that must order this
+    * table's commit after another write waits for it there, while the
+    * data is already written. A throwing `ready` commits nothing and
+    * the MERGE rethrows.
     */
   def merge(table: String, updates: DataFrame, key: String,
-      props: Map[String, String] = Map.empty): Boolean = {
+      props: Map[String, String] = Map.empty, ready: () => Unit = Ready): Boolean = {
     validateProps(props)
     def recording(f: BucketsFile) = if (props.isEmpty) f else f.copy(tprops = props)
-    val f0 = state(table).getOrElse(return firstMerge(table, updates, key, props))
+    val f0 = state(table).getOrElse(return firstMerge(table, updates, key, props, ready))
     val f = recording(f0)
     val schema = f.schema
     // additive schema evolution: updates carrying a column the table
@@ -432,7 +441,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         .forall(w => !DataTypeUtils.equalsIgnoreNullability(w, c.dataType))))
     if (!(f.map.contains(-1) || evolving || compactionBound(f) <= 0 ||
         f.delta.exists(_.key != key)))
-      return appendDelta(table, f, updates, key)
+      return appendDelta(table, f, updates, key, ready)
     // copy-on-write: several actions over `updates` (the touched-bucket
     // collect, the anti-join probe, the union write) — persisted, so
     // callers need not pre-persist to avoid repeated upstream I/O
@@ -443,7 +452,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       // first, under the properties it was committed with
       if (g.delta.exists(d => evolving || d.key != key)) {
         if (upd.isEmpty) return false
-        compact(table, f0)
+        compact(table, f0, ready)
         g = recording(state(table).get)
       }
       // the pre-merge versions keep their one-commit grace across both
@@ -458,13 +467,13 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
             upd.select(schema.fieldNames.map(col).toIndexedSeq: _*), key)
       }
       rewrite(table, g, rows, Some(rows), key, g.version + 1L,
-        full = g.map.contains(-1) || evolving, prev)
+        full = g.map.contains(-1) || evolving, prev, ready)
     } finally upd.unpersist()
   }
 
   /** First write: bucketed from the start. */
   private def firstMerge(table: String, updates: DataFrame, key: String,
-      props: Map[String, String]): Boolean = {
+      props: Map[String, String], ready: () => Unit): Boolean = {
     requireNoOldLayout(table)
     bucketedWrite(updates.withColumn("__bucket", bucketOf(key, nBuckets)), versionDir(table, 0L))
     val written = writtenBuckets(table, 0L)
@@ -476,7 +485,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       return false
     }
     commit(table, BucketsFile(0L, nBuckets, updates.schema, written.map { case (b, _) => b -> 0L },
-      written, newBase, None, props, Map.empty), Set.empty)
+      written, newBase, None, props, Map.empty), Set.empty, ready)
     true
   }
 
@@ -489,14 +498,21 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
   /** Writes the table's next delta — the old delta's rows whose key
     * `upd` does not carry, plus `upd` — and commits it beside the
     * unchanged bucket map, or compacts it when it passes the bound.
-    * `upd` is read once, by the delta write, so it is not persisted. An
-    * empty `upd` commits nothing: the write counts `upd`'s rows as an
-    * observed metric, so telling costs no job.
+    * `upd` is read once, by the delta write, so it is not persisted.
+    * An empty `upd` commits nothing.
+    *
+    * A batch whose optimized plan is a local relation is on the driver
+    * already: its key set filters the old delta's rows (null-safe: a
+    * null key in the batch removes the old null-key row), and the kept
+    * rows and the batch are written as one partition — one 1-task job,
+    * and no job at all to tell an empty batch. Any other batch takes
+    * [[lastWriter]]'s shuffle, and the write counts its rows as an
+    * observed metric, so telling costs no job either.
     */
-  private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String): Boolean = {
+  private def appendDelta(table: String, f: BucketsFile, upd: DataFrame, key: String,
+      ready: () => Unit): Boolean = {
     val v = f.version + 1L
     val dir = new Path(versionDir(table, v))
-    val counted = Observation()
     // in the table's column order and types (a narrower column is cast
     // up); a missing column fails here, loudly. In the store's session,
     // as the old delta's read is: an observation completes only in the
@@ -507,13 +523,24 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
         if (upd.schema.find(_.name == c.name)
             .forall(u => DataTypeUtils.equalsIgnoreNullability(u.dataType, c.dataType))) col(c.name)
         else col(c.name).cast(c.dataType).as(c.name)
-      }.toIndexedSeq: _*))).observe(counted, count(lit(1)).as("rows"))
-    // a shuffle either way, whose partitions adaptive execution sizes:
-    // one file for a small delta
-    val next = f.delta.fold(batch.hint("rebalance"))(d =>
-      lastWriter(deltaRows(table, d, f.schema), batch, key))
+      }.toIndexedSeq: _*)))
+    val (next, empty) = GraftColumnBridge.localRelation(batch) match {
+      case Some(local) =>
+        if (local.data.isEmpty) return false
+        val rows = GraftColumnBridge.dataFrame(spark, local)
+        (f.delta.fold(rows)(d => deltaRows(table, d, f.schema)
+          .filter(notIn(key, local)).unionByName(rows)).coalesce(1), () => false)
+      case None =>
+        val counted = Observation()
+        val observed = batch.observe(counted, count(lit(1)).as("rows"))
+        // a shuffle either way, whose partitions adaptive execution
+        // sizes: one file for a small delta
+        (f.delta.fold(observed.hint("rebalance"))(d =>
+          lastWriter(deltaRows(table, d, f.schema), observed, key)),
+          () => counted.get("rows") == 0L)
+    }
     next.write.mode(SaveMode.Overwrite).parquet(dir.toString)
-    if (counted.get("rows") == 0L) {
+    if (empty()) {
       fs.delete(dir, true)
       return false
     }
@@ -521,9 +548,20 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     val written = Delta(v, key)
     if (files.map(_.getLen).sum > compactionBound(f)) {
       val rows = deltaRows(table, written, f.schema)
-      rewrite(table, f, rows, Some(rows), key, v + 1L, full = false, f.versions)
-    } else commit(table, f.copy(version = v, delta = Some(written), sprops = Map.empty), f.versions)
+      rewrite(table, f, rows, Some(rows), key, v + 1L, full = false, f.versions, ready)
+    } else commit(table, f.copy(version = v, delta = Some(written), sprops = Map.empty), f.versions, ready)
     true
+  }
+
+  /** Rows whose `key` none of `local`'s rows carries, null-safe: a
+    * null key is kept unless some row has a null key. */
+  private def notIn(key: String, local: LocalRelation): Column = {
+    val i = local.output.indexWhere(_.name == key)
+    val dt = local.output(i).dataType
+    val (nulls, keys) = local.data.map(r => if (r.isNullAt(i)) null else r.get(i, dt)).partition(_ == null)
+    val carried = if (keys.isEmpty) lit(false)
+      else GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col(key)), keys.toSet))
+    if (nulls.nonEmpty) col(key).isNotNull && !carried else col(key).isNull || !carried
   }
 
   /** `old` rows whose key `batch` does not carry (null keys alike),
@@ -534,10 +572,10 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
       .filter(col("__o") === col("__last")).drop("__o", "__last")
 
   /** Folds the table's delta into its buckets. */
-  private def compact(table: String, f: BucketsFile): Unit = {
+  private def compact(table: String, f: BucketsFile, ready: () => Unit = Ready): Unit = {
     val d = f.delta.get
     val rows = deltaRows(table, d, f.schema)
-    rewrite(table, f, rows, Some(rows), d.key, f.version + 1L, full = false, f.versions)
+    rewrite(table, f, rows, Some(rows), d.key, f.version + 1L, full = false, f.versions, ready)
   }
 
   /** The copy-on-write body, written at version `v` and committed with
@@ -550,10 +588,10 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     * `prev` keeps its grace (see [[cleanOld]]). A result with no row
     * left drops the table. Returns false, and commits nothing, when
     * `keys` is empty or, with no rows to add, none of the buckets it
-    * hashes into holds data.
+    * hashes into holds data. The commit publishes once `ready` returns.
     */
   private def rewrite(table: String, f: BucketsFile, keys: DataFrame, rows: Option[DataFrame],
-      key: String, v: Long, full: Boolean, prev: Set[Long]): Boolean = {
+      key: String, v: Long, full: Boolean, prev: Set[Long], ready: () => Unit = Ready): Boolean = {
     val keyed = keys.select(col(key)).withColumn("__bucket", bucketOf(key, f.nb))
     val touched = keyed.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
     if (touched.isEmpty) return false
@@ -591,7 +629,7 @@ final class ParquetStore(spark: SparkSession, root: String, nBuckets: Int = 16)
     // empty bucket map would make exists() true while read() throws
     if (map.isEmpty) drop(table)
     else commit(table, BucketsFile(v, f.nb, next.schema, map, baseBytes ++ written, newBase, None,
-      f.tprops, Map.empty), prev)
+      f.tprops, Map.empty), prev, ready)
     true
   }
 
@@ -675,6 +713,9 @@ object ParquetStore {
   /** A delta's rows, committed at `version`; they replace base rows
     * with the same `key`, null keys alike. */
   final case class DeltaRows(version: Long, key: String, rows: DataFrame)
+
+  /** The `ready` of a commit that waits for nothing. */
+  private val Ready: () => Unit = () => ()
 
   /** A fresh base identity, for a commit that writes buckets or a flat
     * snapshot. */

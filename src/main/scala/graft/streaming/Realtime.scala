@@ -4,7 +4,7 @@ import graft.VectorizeEngine
 import graft.types.VectorizeJob
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** Realtime (incremental) embedding maintenance.
   *
@@ -29,6 +29,13 @@ object Realtime {
     * queue, cron and manual refreshes alike. An empty batch commits
     * nothing and calls no provider: each MERGE returns on an empty
     * update, and the embedder has no rows to batch.
+    *
+    * A deduped batch small enough that the distributed path would run
+    * it as one partition anyway ([[onDriver]]) is collected to the
+    * driver once, as a local relation: it is then embedded on the
+    * driver and each store MERGE writes its delta in one 1-task job.
+    * A larger batch, or any batch with broadcasts or adaptive
+    * coalescing off, is persisted and takes the distributed path.
     */
   def processBatch(engine: VectorizeEngine, job: VectorizeJob, batch: DataFrame,
       indexPath: Option[String] = None): Unit = {
@@ -52,14 +59,35 @@ object Realtime {
         // should declare update_time_col.
         batch.dropDuplicates(job.primaryKey)
     }
-    // persisted like refreshJob's delta: the tokens MERGE and the embed
-    // both read the rows, and each would otherwise re-run the dedup
-    // shuffle. The index upsert stays idempotent under at-least-once
-    // redelivery: it rebuilds only touched graph partitions, and a
-    // replay reproduces byte-identical partitions
-    deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try engine.upsertRows(job, deduped, indexPath)
-    finally deduped.unpersist()
+    // read once: the tokens MERGE and the embed both read the rows, and
+    // each would otherwise re-run the dedup shuffle. A small batch is
+    // collected to the driver, so both MERGEs take their local paths;
+    // a larger one is persisted, like refreshJob's delta. The index
+    // upsert stays idempotent under at-least-once redelivery: it
+    // rebuilds only touched graph partitions, and a replay reproduces
+    // byte-identical partitions
+    if (onDriver(deduped))
+      engine.upsertRows(job, GraftColumnBridge.collectLocal(deduped), indexPath)
+    else {
+      deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try engine.upsertRows(job, deduped, indexPath)
+      finally deduped.unpersist()
+    }
+  }
+
+  /** Whether [[processBatch]] collects `deduped` to the driver: when its
+    * size estimate is within both the serving tier's gate
+    * (`spark.sql.autoBroadcastJoinThreshold`) and the size that
+    * adaptive execution coalesces into one partition
+    * (`spark.sql.adaptive.coalescePartitions.minPartitionSize`). The
+    * persisted path would then embed and write the batch in one task
+    * as well, so collecting it gives up no parallelism.
+    */
+  private def onDriver(deduped: DataFrame): Boolean = {
+    val spark = deduped.sparkSession
+    val bound = math.min(GraftColumnBridge.broadcastThreshold(spark),
+      GraftColumnBridge.onePartitionBytes(spark))
+    bound >= 0 && GraftColumnBridge.sizeInBytes(deduped) <= bound
   }
 
   /** Start the realtime pipeline from a streaming DataFrame of source

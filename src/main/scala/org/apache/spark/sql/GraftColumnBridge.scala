@@ -61,9 +61,52 @@ object GraftColumnBridge {
       qe.executedPlan.executeCollect())
   }
 
+  /** `df` collected once ([[collectInternal]]) into a frame over a
+    * `LocalRelation` of the same schema: later reads of it run no Spark
+    * job, and timestamps and arrays keep their exact Catalyst values.
+    */
+  def collectLocal(df: DataFrame): DataFrame =
+    dataFrame(df.sparkSession, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema), collectInternal(df)))
+
+  /** The `LocalRelation` `df`'s optimized plan is, if it is one: its
+    * rows are on the driver already. */
+  def localRelation(df: DataFrame): Option[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l)
+      case _ => None
+    }
+
+  private lazy val asyncPool = org.apache.spark.util.ThreadUtils.newDaemonCachedThreadPool("graft-async", 16)
+
+  /** Runs `body` on a pool thread with the caller's active session and
+    * local properties (job group and tags, the streaming query id), as
+    * Spark's own subquery and broadcast threads do. [[await]] it. */
+  def async[T](spark: SparkSession)(body: => T): java.util.concurrent.CompletableFuture[T] =
+    org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], asyncPool)(body)
+
+  /** `f`'s value once it completes; a failed body rethrows its own
+    * exception, unwrapped. */
+  def await[T](f: java.util.concurrent.CompletableFuture[T]): T =
+    try f.join() catch {
+      case e: java.util.concurrent.CompletionException if e.getCause != null => throw e.getCause
+    }
+
   /** `spark.sql.autoBroadcastJoinThreshold` in bytes (-1 = off). */
   def broadcastThreshold(spark: SparkSession): Long =
     spark.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** The shuffle output size in bytes that adaptive execution always
+    * coalesces into one partition,
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (-1 when
+    * adaptive execution or its coalescing is off). */
+  def onePartitionBytes(spark: SparkSession): Long = {
+    val conf = spark.sessionState.conf
+    if (conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    else -1L
+  }
 
   /** The type a union of columns typed `a` and `b` takes under the
     * session's coercion rules (ANSI or not), or None when they do not

@@ -2,6 +2,7 @@ package graft
 
 import graft.sources.ParquetStore
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bucketed-merge store semantics: upsert correctness AND the scale
@@ -16,8 +17,17 @@ class ParquetStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def rows(ids: Range, tag: String) =
+  /** `ids` as rows Spark reads from an RDD: a delta MERGE of them takes
+    * the shuffle path. */
+  private def rows(ids: Range, tag: String) = distributed(localRows(ids, tag))
+
+  /** The same rows as a local relation: a delta MERGE of them takes the
+    * local path (on the driver, no shuffle). */
+  private def localRows(ids: Range, tag: String) =
     ids.map(i => (i.toString, s"$tag-$i")).toDF("pkey", "payload")
+
+  /** `df`'s rows read from an RDD instead of a local relation. */
+  private def distributed(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
 
   /** Runs `body` with broadcasts off, which makes every MERGE take the
     * copy-on-write compaction path (a delta read needs its broadcast);
@@ -410,7 +420,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     val withNull = rows(1 to 3, "v1")
       .union(Seq((null.asInstanceOf[String], "n-1")).toDF("pkey", "payload"))
     store.merge("t", withNull, "pkey")
-    store.merge("t", Seq((null.asInstanceOf[String], "n-2")).toDF("pkey", "payload"), "pkey")
+    store.merge("t", distributed(Seq((null.asInstanceOf[String], "n-2")).toDF("pkey", "payload")), "pkey")
     val got = store.read("t").collect()
     assert(got.length == 4, "null key must replace, not append")
     assert(got.filter(_.isNullAt(0)).map(_.getString(1)).toSeq == Seq("n-2"))
@@ -550,6 +560,41 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(contents(store).size == 2000 && contents(store)(Some("20")) == "v4-20")
   }
 
+  test("a local batch's delta MERGE: one 1-task job, null keys null-safe, empty commits nothing") {
+    val dir = TestSpark.tempDir("graft_ps_localdelta_")
+    val store = new ParquetStore(spark, dir)
+    def local(kv: (String, String)*) = kv.toDF("pkey", "payload")
+    store.merge("t", rows(1 to 2000, "v1"), "pkey", Map("owner" -> "a"))
+    val map0 = bucketsFile(dir)._2
+    // hide every base bucket file: a MERGE that read, listed or
+    // rewrote a bucket would fail or change the map
+    val base = java.nio.file.Paths.get(dir, "t", "v_0")
+    val hidden = java.nio.file.Paths.get(dir, "hidden_v_0")
+    def hidingBase[T](body: => T): T = {
+      java.nio.file.Files.move(base, hidden)
+      try body finally java.nio.file.Files.move(hidden, base)
+    }
+    assert(hidingBase(store.merge("t", local("1" -> "d1", (null, "n1")), "pkey")))
+    // no null key in the batch: the delta's null-key row is kept
+    val jobs = hidingBase(jobsOf(assert(store.merge("t", local("2" -> "d2"), "pkey"))))
+    assert(jobs.size == 1, s"one write job: $jobs")
+    assert(bucketsFile(dir)._2 == map0, "the bucket map is unchanged")
+    val v = store.currentVersion("t").get
+    assert(new java.io.File(s"$dir/t/v_$v").listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    var got = contents(store)
+    assert(got(None) == "n1" && got(Some("1")) == "d1" && got(Some("2")) == "d2" && got.size == 2001)
+    // a null key in the batch replaces it
+    assert(store.merge("t", local((null, "n2"), "3" -> "d3"), "pkey"))
+    got = contents(store)
+    assert(got(None) == "n2" && got(Some("1")) == "d1" && got(Some("3")) == "d3" && got.size == 2001)
+    // an empty batch: no job, and `_BUCKETS`, the version, the
+    // properties and the version dirs are as they were
+    def state = (bucketsFile(dir), store.currentVersion("t"), store.getMeta("t"), versionDirs(dir))
+    val before = state
+    assert(jobsOf(assert(!store.merge("t", local(), "pkey", Map("owner" -> "b")))).isEmpty)
+    assert(state == before && before._3 == Map("owner" -> "a"))
+  }
+
   test("a handle's base identity: a delta commit carries it, every base-writing commit mints one") {
     val dir = TestSpark.tempDir("graft_ps_base_")
     val store = new ParquetStore(spark, dir)
@@ -650,11 +695,17 @@ class ParquetStoreSpec extends AnyFunSuite {
     // an int batch into a long column: the union keeps long, so a delta
     store.merge("t", longs(1 to 2000, 1L), "pkey")
     val map0 = bucketsFile(dir)._2
-    store.merge("t", ints(1 to 10, -1), "pkey")
+    store.merge("t", distributed(ints(1 to 10, -1)), "pkey")
     val (header, map1) = bucketsFile(dir)
     assert(map1 == map0 && header.exists(_.startsWith("#delta ")), header)
     assert(store.read("t").schema("n").dataType == LongType)
     assert(value("t", "3") == -3L && value("t", "30") == 30L)
+    // the same through the local path, which casts on the driver
+    store.merge("t", ints(11 to 20, -1), "pkey")
+    val (headerLocal, mapLocal) = bucketsFile(dir)
+    assert(mapLocal == map0 && headerLocal.exists(_.startsWith("#delta ")), headerLocal)
+    assert(store.read("t").schema("n").dataType == LongType)
+    assert(value("t", "3") == -3L && value("t", "13") == -13L && value("t", "30") == 30L)
     // a long batch into an int column widens it: every bucket rewritten
     store.merge("u", ints(1 to 2000, 1), "pkey")
     val before = bucketsFile(dir, "u")._2
@@ -670,21 +721,33 @@ class ParquetStoreSpec extends AnyFunSuite {
   test("model: seeded interleavings of merge, delete, overwrite, compaction and reopening " +
       "read as an eager upsert") {
     val ops = Seq("small", "small", "small", "small", "large", "delete", "overwrite",
-      "compact", "reopen")
+      "compact", "reopen", "empty")
     Seq(11L, 23L, 37L).foreach { seed =>
       val rnd = new scala.util.Random(seed)
+      // a twin store takes every batch through a shuffle; this one takes
+      // it as a local relation, so its delta MERGEs take the local path
       val dir = TestSpark.tempDir("graft_ps_model_")
+      val twinDir = TestSpark.tempDir("graft_ps_model_twin_")
       var store = new ParquetStore(spark, dir)
+      var twin = new ParquetStore(spark, twinDir)
       var model = Map.empty[Option[String], String]
       var deltas, compactions = 0
       def keys(n: Int): Seq[Option[String]] =
         Seq.fill(n)(if (rnd.nextInt(40) == 0) None else Some(s"k${rnd.nextInt(1500)}")).distinct
       def frame(kv: Seq[(Option[String], String)]) =
         kv.map { case (k, v) => (k.orNull, v) }.toDF("pkey", "payload")
+      /** MERGEs `kv` into both stores; returns whether it committed. */
+      def merge(kv: Seq[(Option[String], String)], props: Map[String, String]): Boolean = {
+        val local = frame(kv)
+        assert(org.apache.spark.sql.GraftColumnBridge.localRelation(local).nonEmpty)
+        val committed = store.merge("t", local, "pkey", props)
+        assert(twin.merge("t", local.repartition(2), "pkey", props) == committed, s"seed $seed")
+        committed
+      }
       def upsert(n: Int, step: Int): Unit = {
         val batch = keys(n).map(k => k -> s"s$seed-$step-${k.getOrElse("null")}")
         val mapBefore = if (store.exists("t")) bucketsFile(dir)._2 else Nil
-        store.merge("t", frame(batch), "pkey")
+        merge(batch, if (rnd.nextInt(4) == 0) Map("step" -> step.toString) else Map.empty)
         model ++= batch
         if (bucketsFile(dir)._1.exists(_.startsWith("#delta "))) deltas += 1
         else if (mapBefore.nonEmpty && bucketsFile(dir)._2 != mapBefore) compactions += 1
@@ -696,17 +759,26 @@ class ParquetStoreSpec extends AnyFunSuite {
           case "large" => upsert(150 + rnd.nextInt(150), step)
           case "delete" =>
             val gone = keys(1 + rnd.nextInt(20)) ++ rnd.shuffle(model.keys.toSeq).take(3)
-            store.delete("t", gone.map(_.orNull).toDF("pkey"), "pkey")
+            Seq(store, twin).foreach(_.delete("t", gone.map(_.orNull).toDF("pkey"), "pkey"))
             model --= gone
           case "overwrite" if rnd.nextInt(3) == 0 =>
             val kept = rnd.shuffle(model.toSeq).take(model.size * 9 / 10)
-            store.overwrite("t", frame(kept))
+            Seq(store, twin).foreach(_.overwrite("t", frame(kept)))
             model = kept.toMap
           case "overwrite" => upsert(4, step)
           case "compact" => copyOnWrite(upsert(1 + rnd.nextInt(5), step))
-          case "reopen" => store = new ParquetStore(spark, dir)
+          case "reopen" =>
+            store = new ParquetStore(spark, dir)
+            twin = new ParquetStore(spark, twinDir)
+          case "empty" =>
+            val before = bucketsFile(dir)
+            assert(!merge(Nil, Map("step" -> step.toString)), s"seed $seed step $step: an empty MERGE")
+            assert(bucketsFile(dir) == before, s"seed $seed step $step: an empty MERGE commits nothing")
         }
         assert(contents(store) == model, s"seed $seed step $step")
+        assert(contents(twin) == model, s"seed $seed step $step: the twin")
+        assert(twin.currentVersion("t") == store.currentVersion("t") &&
+          twin.getMeta("t") == store.getMeta("t"), s"seed $seed step $step: the twin's version and meta")
         // one control file: the table dir holds `_BUCKETS` and version
         // dirs only, and the version is the header's
         val entries = new java.io.File(s"$dir/t").listFiles().map(_.getName)

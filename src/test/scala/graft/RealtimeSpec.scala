@@ -16,6 +16,14 @@ class RealtimeSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withThreshold[T](v: String)(body: => T): T = {
+    val old = spark.conf.get(Threshold)
+    spark.conf.set(Threshold, v)
+    try body finally spark.conf.set(Threshold, old)
+  }
+
   private def writeBatch(dir: String, name: String, rows: Seq[(Int, String, Long)]): Unit = {
     import spark.implicits._
     rows.map { case (id, c, sec) => (id, c, Fixtures.ts(sec)) }
@@ -237,20 +245,31 @@ class RealtimeSpec extends AnyFunSuite {
       .toDF("id", "content", "updated_at")
     val after = Fixtures.contentTable(spark, base.filterNot(_._1 == 1))
       .unionByName(delta.filter(!(col("id") === 5 && col("content").contains("draft"))))
-    Seq(TableMethod.Join, TableMethod.Append).foreach { method =>
+    // the batch is collected to the driver and embedded there under the
+    // broadcast gate, and persisted and embedded in tasks with
+    // broadcasts off
+    val gates = Seq(spark.conf.get(Threshold), "-1")
+    for (method <- Seq(TableMethod.Join, TableMethod.Append); threshold <- gates)
+    withThreshold(threshold) {
+      val path = s"$method threshold=$threshold"
       val job = VectorizeJob("eq_job", "content", Seq("content"), "id",
         Some("updated_at"), Model.parseUnsafe("deterministic/hash-64"),
         tableMethod = method)
-      def newEngine(): VectorizeEngine = {
+      def newEngine(provider: providers.EmbeddingProvider): VectorizeEngine = {
         val e = new VectorizeEngine(spark, TestSpark.tempDir("graft_rteq_wh_"),
-          embeddingProviderOverride = Some(new providers.DeterministicHashProvider(64)))
+          embeddingProviderOverride = Some(provider))
         e.registerSource("content", Fixtures.contentTable(spark, base))
         e.createJob(job)
         e
       }
-      val streamed = newEngine()
+      val streamed = newEngine(new SiteRecordingProvider(64, path))
+      val (driver0, tasks0) = (SiteRecordingProvider.onDriver(path), SiteRecordingProvider.inTasks(path))
       Realtime.processBatch(streamed, job, delta)
-      val batched = newEngine()
+      val (driver, tasks) =
+        (SiteRecordingProvider.onDriver(path) - driver0, SiteRecordingProvider.inTasks(path) - tasks0)
+      assert(if (threshold == "-1") driver == 0 && tasks > 0 else driver > 0 && tasks == 0,
+        s"$path: $driver provider calls on the driver, $tasks in tasks")
+      val batched = newEngine(new providers.DeterministicHashProvider(64))
       batched.registerSource("content", after)
       batched.refreshJob(job.jobName)
 
@@ -262,12 +281,12 @@ class RealtimeSpec extends AnyFunSuite {
         .collect().map(r => r.getAs[String]("pkey") ->
           (r.getAs[scala.collection.Seq[String]]("search_tokens").toSeq,
             r.getAs[scala.collection.Seq[Int]]("search_token_counts").toSeq)).toMap
-      assert(served(streamed).keySet == Set("1", "2", "3", "4", "5"), s"$method")
-      assert(served(streamed) == served(batched), s"$method: served vectors differ")
-      assert(tokens(streamed) == tokens(batched), s"$method: search tokens differ")
+      assert(served(streamed).keySet == Set("1", "2", "3", "4", "5"), path)
+      assert(served(streamed) == served(batched), s"$path: served vectors differ")
+      assert(tokens(streamed) == tokens(batched), s"$path: search tokens differ")
       assert(tokens(streamed)("5")._1.contains("latest") &&
         !tokens(streamed)("5")._1.contains("draft"),
-        s"$method: the last writer of key 5 must win")
+        s"$path: the last writer of key 5 must win")
 
       if (method == TableMethod.Append) {
         streamed.registerSource("content", after)
@@ -276,6 +295,92 @@ class RealtimeSpec extends AnyFunSuite {
           "the FTS leg must find the streamed append-job row")
       }
     }
+  }
+
+  test("embed: local inputs of one provider request are embedded on the driver, " +
+      "more in tasks, with the same vectors") {
+    import spark.implicits._
+    val inputs = (1 to 40).map(i => (s"k$i", s"text number $i about pizza", 4))
+      .toDF("record_id", "text", "token_estimate")
+    /** The vectors by key, whether they are a local relation, and the
+      * provider calls made on the driver and in tasks. */
+    def run(df: org.apache.spark.sql.DataFrame, budget: Int, tag: String) = {
+      val out = graft.operators.Pipeline.embed(df, new SiteRecordingProvider(64, tag), "hash-64", budget)
+      val vectors = out.collect().map(r => r.getString(0) -> r.getSeq[Float](1).toList).toMap
+      (vectors, org.apache.spark.sql.GraftColumnBridge.localRelation(out).nonEmpty,
+        SiteRecordingProvider.onDriver(tag), SiteRecordingProvider.inTasks(tag))
+    }
+    val (spread, spreadLocal, spreadDriver, spreadTasks) =
+      run(spark.createDataFrame(inputs.rdd, inputs.schema), 160, "embed-rdd")
+    assert(!spreadLocal && spreadDriver == 0 && spreadTasks > 0)
+    // 40 inputs of 4 tokens: one request under a 160-token budget
+    val (one, oneLocal, oneDriver, oneTasks) = run(inputs, 160, "embed-one")
+    assert(oneLocal && oneDriver == 1 && oneTasks == 0, (oneLocal, oneDriver, oneTasks))
+    // and 8 under a 20-token budget
+    val (many, manyLocal, manyDriver, manyTasks) = run(inputs, 20, "embed-many")
+    assert(!manyLocal && manyDriver == 0 && manyTasks >= 8, (manyLocal, manyDriver, manyTasks))
+    assert(spread.size == 40 && one == spread && many == spread)
+  }
+
+  test("processBatch commits the tokens first: a failed tokens write commits no vectors") {
+    import spark.implicits._
+    val n = 2000
+    val wh = TestSpark.tempDir("graft_rt_order_")
+    val engine = new VectorizeEngine(spark, wh, embeddingProviderOverride = Some(new PoisonProvider))
+    val job = VectorizeJob("order_job", "content", Seq("content"), "id",
+      Some("updated_at"), Model.parseUnsafe("deterministic/hash-64"))
+    val (emb, tok) = (engine.embTable(job.jobName), engine.tokTable(job.jobName))
+    def source(changed: Map[Int, String]) = (1 to n).map { i =>
+      changed.get(i).fold((i, s"row $i about pizza", Fixtures.ts(i)))(t => (i, t, Fixtures.futureTs(i)))
+    }.toDF("id", "content", "updated_at")
+    def batch(changed: Map[Int, String]) = source(changed).filter(col("id").isin(changed.keys.toSeq: _*))
+    def bucketsFile(t: String) =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(wh, t, "_BUCKETS")), "UTF-8")
+    def tableFiles(t: String) = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(wh, t)).iterator().asScala.map(_.toString).toSet
+    }
+    def tokensOf(key: String) = engine.store.read(tok).filter(col("pkey") === key)
+      .collect().flatMap(_.getAs[scala.collection.Seq[String]]("search_tokens")).toSet
+    engine.registerSource("content", source(Map.empty))
+    engine.createJob(job)
+    // a first batch: both tables get a delta, which later batches rewrite
+    Realtime.processBatch(engine, job, batch((1 to 10).map(i => i -> s"zebra $i").toMap))
+    assert(Seq(emb, tok).forall(engine.store.readHandle(_).get.delta.nonEmpty))
+
+    // the tokens write fails while reading its old delta: the vectors,
+    // already embedded and written, must not commit
+    val tokDelta = new java.io.File(s"$wh/$tok/v_${engine.store.readHandle(tok).get.delta.get.version}")
+    val part = tokDelta.listFiles().find(_.getName.endsWith(".parquet")).get
+    val good = java.nio.file.Files.readAllBytes(part.toPath)
+    java.nio.file.Files.write(part.toPath, Array.fill[Byte](good.length)(7))
+    val (embVersion, committed) = (engine.store.currentVersion(emb), Seq(emb, tok).map(bucketsFile))
+    val quokka0 = PoisonProvider.embedded("quokka")
+    intercept[Exception](Realtime.processBatch(engine, job, batch(Map(7 -> "quokka seven"))))
+    assert(PoisonProvider.embedded("quokka") > quokka0, "the vectors were embedded alongside")
+    assert(engine.store.currentVersion(emb) == embVersion, "the vectors must not commit")
+    assert(Seq(emb, tok).map(bucketsFile) == committed, "no _BUCKETS may move")
+    val files = Seq(emb, tok).map(tableFiles)
+    Thread.sleep(300)
+    assert(Seq(emb, tok).map(tableFiles) == files, "no write may run on after the call")
+    java.nio.file.Files.write(part.toPath, good)
+    // the refresh finds the row stale, and embeds and tokenizes it again
+    engine.registerSource("content", source(Map(7 -> "quokka seven")))
+    assert(engine.refreshJob(job.jobName) == 1L)
+    assert(PoisonProvider.embedded("quokka") > quokka0 + 1)
+    assert(tokensOf("7").contains("quokka"), tokensOf("7"))
+    assert(engine.hybridSearch(job.jobName, "quokka", 3).collect()
+      .exists(r => r.getAs[Int]("id") == 7 && !r.isNullAt(r.fieldIndex("fts_rank"))))
+
+    // a failed embed: the tokens may commit, and have finished on return
+    val tokVersion = engine.store.currentVersion(tok).get
+    val embCommit = bucketsFile(emb)
+    intercept[Exception](Realtime.processBatch(engine, job, batch(Map(9 -> "poison nine"))))
+    assert(engine.store.currentVersion(tok).contains(tokVersion + 1), "the tokens commit")
+    assert(bucketsFile(emb) == embCommit, "the vectors do not")
+    val after = Seq(emb, tok).map(tableFiles)
+    Thread.sleep(300)
+    assert(Seq(emb, tok).map(tableFiles) == after, "no write may run on after the call")
   }
 
   test("append-method job: streamed rows land in the wide table and are searchable") {
@@ -2055,6 +2160,45 @@ class RealtimeSpec extends AnyFunSuite {
       Thread.sleep(100)
     assert(!persisted(cLive),
       "caches must release when OUR run terminates")
+  }
+}
+
+/** Embeds like [[providers.DeterministicHashProvider]], counts the inputs
+  * that mention each word, and fails a call whose inputs mention
+  * "poison". */
+object PoisonProvider {
+  private val seen = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  def embedded(word: String): Long = seen.getOrDefault(word, 0L)
+  private[graft] def count(inputs: Seq[String]): Unit =
+    inputs.flatMap(_.split("\\W+").distinct).foreach(w => seen.merge(w, 1L, (a, b) => a + b))
+}
+final class PoisonProvider extends providers.EmbeddingProvider {
+  private val inner = new providers.DeterministicHashProvider(64)
+  override def modelDim(model: String): Int = inner.modelDim(model)
+  override def generateEmbeddings(model: String, inputs: Seq[String]): Seq[Array[Float]] = {
+    PoisonProvider.count(inputs)
+    if (inputs.exists(_.contains("poison"))) throw new IllegalStateException("poisoned input")
+    inner.generateEmbeddings(model, inputs)
+  }
+}
+
+/** Embeds like [[providers.DeterministicHashProvider]] and counts, under
+  * its `tag`, the calls made on the driver and those made inside a Spark
+  * task. Tasks embed with deserialized copies, so the counts are
+  * JVM-wide. */
+object SiteRecordingProvider {
+  private val counts = new java.util.concurrent.ConcurrentHashMap[(String, Boolean), java.lang.Long]()
+  def onDriver(tag: String): Long = counts.getOrDefault((tag, false), 0L)
+  def inTasks(tag: String): Long = counts.getOrDefault((tag, true), 0L)
+  private[graft] def record(tag: String): Unit =
+    counts.merge((tag, org.apache.spark.TaskContext.get() != null), 1L, (a, b) => a + b)
+}
+final class SiteRecordingProvider(dim: Int, tag: String) extends providers.EmbeddingProvider {
+  private val inner = new providers.DeterministicHashProvider(dim)
+  override def modelDim(model: String): Int = inner.modelDim(model)
+  override def generateEmbeddings(model: String, inputs: Seq[String]): Seq[Array[Float]] = {
+    SiteRecordingProvider.record(tag)
+    inner.generateEmbeddings(model, inputs)
   }
 }
 

@@ -16,10 +16,12 @@ import scala.jdk.CollectionConverters._
   * cycle re-registers the source (a new parquet snapshot of the
   * corpus) before its batch. Each cycle prints its `processBatch` time,
   * marked `rewrite=1` when the batch rewrote base buckets of the vector
-  * or token table (their `_BUCKETS` bucket lines changed), and its
-  * first read's time and Spark jobs, with `snapshot=patched` when that
-  * read patched the serving snapshot from the store deltas, `built`
-  * when it built one whole, and `none` when it took the Spark plan.
+  * or token table (their `_BUCKETS` bucket lines changed), with its
+  * Spark jobs and `local=1` when it embedded the batch on the driver
+  * (the batch's local path), and its first read's time and Spark jobs,
+  * with `snapshot=patched` when that read patched the serving snapshot
+  * from the store deltas, `built` when it built one whole, and `none`
+  * when it took the Spark plan.
   * Each mode ends with the median, mean and max batch time over all
   * cycles.
   *
@@ -104,7 +106,7 @@ object ServingGateProbe {
     (0 until n).foreach(i => docs(i.toLong) = (text(rnd), Seq("en", "fr", "de")(i % 3), 1000L * i))
     var version = 0
     val engine = new VectorizeEngine(spark, s"$dir/warehouse",
-      embeddingProviderOverride = Some(new providers.DeterministicHashProvider(64)))
+      embeddingProviderOverride = Some(new SiteRecordingProvider(64, s"probe-$n")))
     def register(): DataFrame = {
       val rows = docs.toSeq.sortBy(_._1).map { case (id, (t, l, ts)) =>
         Row(id, t, l, new java.sql.Timestamp(ts)) }
@@ -180,11 +182,14 @@ object ServingGateProbe {
             Row(id, t, l, new java.sql.Timestamp(ts))
           }.asJava, schema)
           val before = bucketMaps()
-          val (_, b) = timed(Realtime.processBatch(engine, job, batch))
+          val driver0 = SiteRecordingProvider.onDriver(s"probe-$n")
+          val (b, batchJobs, _) = traced(Realtime.processBatch(engine, job, batch))
+          val local = if (SiteRecordingProvider.onDriver(s"probe-$n") > driver0) 1 else 0
           val rewrite = bucketMaps() != before
           batchMs += b
           if (rewrite) rewrites += 1
-          println(f"n=$n tier=$mode cycle=$c batch_ms=$b%.0f rewrite=${if (rewrite) 1 else 0}")
+          println(f"n=$n tier=$mode cycle=$c batch_ms=$b%.0f batch_jobs=$batchJobs local=$local " +
+            s"rewrite=${if (rewrite) 1 else 0}")
           var cycle = b
           (0 until reads).foreach { r =>
             val q = queries((c * reads + r) % queries.size)

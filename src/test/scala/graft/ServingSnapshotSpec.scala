@@ -375,6 +375,50 @@ class ServingSnapshotSpec extends AnyFunSuite {
     agrees("rebuilt after a compaction")
   }
 
+  test("engine: a 50-row processBatch into tables with deltas runs 4 Spark jobs; " +
+      "with broadcasts off it keeps the old path and writes the same rows") {
+    val n = 3000
+    def newEngine(tag: String) = {
+      val e = new VectorizeEngine(spark, TestSpark.tempDir("graft_serve_local_"),
+        embeddingProviderOverride = Some(new SiteRecordingProvider(32, tag)))
+      e.registerSource("docs_src", onDisk(docs(n)))
+      e.createJob(job(TableMethod.Join))
+      e
+    }
+    def batch(from: Int) = onDisk(docs(n, tag = " zebra").filter(s"n >= $from and n < ${from + 50}").coalesce(1))
+    val (first, second) = (batch(0), batch(50))
+    /** The batch's Spark jobs and whether it was embedded on the driver
+      * (the batch collected there) rather than in tasks. */
+    def process(e: VectorizeEngine, tag: String, b: DataFrame): (Int, Boolean) = {
+      val (driver0, tasks0) = (SiteRecordingProvider.onDriver(tag), SiteRecordingProvider.inTasks(tag))
+      val jobs = jobsIn(streaming.Realtime.processBatch(e, e.job("docs").get, b))
+      val (driver, tasks) =
+        (SiteRecordingProvider.onDriver(tag) - driver0, SiteRecordingProvider.inTasks(tag) - tasks0)
+      assert((driver == 0) != (tasks == 0), s"$tag: $driver provider calls on the driver, $tasks in tasks")
+      (jobs, driver > 0)
+    }
+    def stored(e: VectorizeEngine) = Seq(e.embTable("docs"), e.tokTable("docs")).map { t =>
+      e.store.read(t).drop("updated_at").collect().map(_.toSeq.map {
+        case s: scala.collection.Seq[_] => s.toList
+        case v => v
+      }).toSet
+    }
+    val local = newEngine("local")
+    process(local, "local", first)
+    assert(Seq(local.embTable("docs"), local.tokTable("docs"))
+      .forall(local.store.readHandle(_).get.delta.nonEmpty), "both tables hold a delta")
+    // the dedup collect (a shuffle map stage and its result) and one
+    // 1-task delta write per table
+    assert(process(local, "local", second) == (4, true))
+    val shuffled = withThreshold("-1") {
+      val e = newEngine("shuffled")
+      Seq(first, second).foreach(b =>
+        assert(!process(e, "shuffled", b)._2, "broadcasts off: the batch is persisted"))
+      e
+    }
+    assert(stored(local) == stored(shuffled))
+  }
+
   test("property: after random commits the patched snapshot answers like a fresh build and the plans") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
