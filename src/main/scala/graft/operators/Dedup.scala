@@ -1695,9 +1695,12 @@ object Dedup {
       idCol: String, textCol: String, fpp: Double): DataFrame = {
     val b = batch.select(col(idCol).as("id"), normHash(col(textCol)).as("h"))
     // two actions over the SMALL (batch) side only: count sizes the
-    // filter, bloomFilter builds it; the corpus side stays lazy
-    val expected = math.max(1L, b.count())
-    val bloom = b.stat.bloomFilter("h", expected, fpp)
+    // filter, bloomFilter builds it (an empty batch gets an empty
+    // filter: Spark's bloomFilter aggregate fails on no rows); the
+    // corpus side stays lazy
+    val n = b.count()
+    val bloom = if (n == 0) org.apache.spark.util.sketch.BloomFilter.create(1, fpp)
+      else b.stat.bloomFilter("h", n, fpp)
     val bc = batch.sparkSession.sparkContext.broadcast(bloom)
     val mightContain =
       udf((h: String) => h != null && bc.value.mightContainString(h))

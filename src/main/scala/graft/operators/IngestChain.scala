@@ -20,14 +20,18 @@ import org.apache.spark.sql.{Column, DataFrame}
   *  - `__s2q` raw quality gate, `2q_quality` ([[quality]], stream only)
   *  - `__s3` shingle decontamination, `3_decontam` ([[decontam]])
   *  - `__s3s` semantic decontamination, `3s_semantic` ([[semantic]])
-  *  - near-dup last ([[nearDup]]): `__s4` / `4_near_dedup`, or
-  *    `__s3` / `3_near_dedup` in the chain without decontamination
+  *  - near-dup ([[nearDup]]), optional and always last: `__s4` /
+  *    `4_near_dedup`, or `__s3` / `3_near_dedup` in the batch chain
+  *    without decontamination
   *
+  * A chain is any non-empty run of these in this order, so a one-stage
+  * list (exact dedup alone, or the clean alone) is a chain too.
   * [[Chain.tagged]] evaluates the list over one batch: every per-doc
   * set ([[Pass]] / [[Drop]]) materializes in ONE kind-tagged union, one
-  * broadcast pivot of it tags the batch rows, each flag ANDs its stage
-  * onto the flag before, and near-dup runs over the last gate's
-  * survivors. The survivors ([[Chain.survivors]]), the funnel
+  * broadcast pivot of it tags the batch rows (a chain without sets
+  * skips both), each flag ANDs its stage onto the flag before, and
+  * near-dup, when present, runs over the last gate's survivors. The
+  * survivors ([[Chain.survivors]]), the funnel
   * ([[Chain.funnel]]) and the per-language stats ([[Chain.stats]]) all
   * read that one tagged frame, so none of them can disagree about what
   * a stage means. Exact dedup runs over the whole batch in either
@@ -50,19 +54,24 @@ private[graft] object IngestChain {
     * when a concurrent job completes its checkpoint; once nothing else
     * holds the source plan, its SQL metrics are garbage-collected and
     * those tasks' metric updates fail ("Failed to update accumulator
-    * ... (Unknown class)"). */
+    * ... (Unknown class)"). The source is let go as soon as the RDD is
+    * collected (a cleaner thread, not the next call), so a chain of
+    * truncations, each source holding the RDD before it, releases
+    * within a few collections of its last use. */
   def truncate(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(false)
     cp.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        truncated.synchronized(truncated.put(r.rdd, df))
+        val token = new Object
+        sources.put(token, df)
+        cleaner.register(r.rdd, () => { sources.remove(token); () })
       case _ =>
     }
     cp
   }
 
-  private val truncated =
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], DataFrame]()
+  private val sources = new java.util.concurrent.ConcurrentHashMap[Object, DataFrame]()
+  private val cleaner = java.lang.ref.Cleaner.create()
 
   /** MinHash geometry of the chain's signing stages. */
   final case class Geometry(shingleN: Int, numHashes: Int, bands: Int,
@@ -137,9 +146,8 @@ private[graft] object IngestChain {
 
   final case class Chain(id: String, text: String, geometry: Geometry,
       stages: Seq[Stage], route: Option[Route] = None) {
-    require(stages.nonEmpty && stages.last.rule.isInstanceOf[NearDup] &&
-        stages.init.forall(!_.rule.isInstanceOf[NearDup]),
-      "IngestChain: near-dup must be the last stage, and the only one")
+    require(stages.nonEmpty && stages.init.forall(!_.rule.isInstanceOf[NearDup]),
+      "IngestChain: a chain has stages, and a near-dup stage is the last one")
 
     /** The flag of the last stage: a survivor has it set. */
     def last: String = stages.last.flag
@@ -172,16 +180,18 @@ private[graft] object IngestChain {
       // delta-sized (bounded by the batch), so the pivot broadcasts at
       // any corpus scale. Each set lists a doc at most once, so a lone
       // set is its own pivot and needs no aggregate.
-      val flags = sets.map { case (s, ids) =>
-          ids.select(col(id), lit(s.flag).as("__kind")) }
-        .reduce(_ unionByName _).transform(truncate)
-      val marks = sets.map { case (s, _) =>
-        max(col("__kind") === s.flag).as(marker(s)) }
-      val pivot =
+      def pivot = {
+        val flags = sets.map { case (s, ids) =>
+            ids.select(col(id), lit(s.flag).as("__kind")) }
+          .reduce(_ unionByName _).transform(truncate)
+        val marks = sets.map { case (s, _) =>
+          max(col("__kind") === s.flag).as(marker(s)) }
         if (sets.size == 1)
           flags.select(col(id), lit(true).as(marker(sets.head._1)))
         else flags.groupBy(col(id)).agg(marks.head, marks.tail: _*)
-      val joined = v.batch.join(broadcast(pivot), Seq(id), "left")
+      }
+      val joined = if (sets.isEmpty) v.batch
+        else v.batch.join(broadcast(pivot), Seq(id), "left")
       var t = v.cleaned.fold(joined)(c => joined.join(
         c.select(col(id), col("clean_text").as("__ct"),
           (col("n_kept") > 0).as("__mb")), Seq(id), "left"))

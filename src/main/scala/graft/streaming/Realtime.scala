@@ -116,191 +116,59 @@ object Realtime {
       checkpointDir: String, indexPath: Option[String] = None): StreamingQuery =
     start(engine, jobName, stream, checkpointDir, Trigger.AvailableNow(), indexPath)
 
-  /** Streaming incremental INGESTION: each micro-batch is deduped
-    * against the ACCUMULATED store (exact normalized-text hash, via
-    * [[graft.operators.Dedup.incrementalExact]]) and within itself,
-    * and the survivors MERGE in keyed by `idCol` — the streaming form
-    * of the snapshot-delta dedup, with the "seen" state living in the
-    * STORE rather than Spark state. Complements [[streamDedup]]:
-    * dropDuplicatesWithinWatermark bounds its in-memory state by the
-    * watermark horizon (duplicates beyond it pass), while this form's
-    * history is unbounded at store cost — re-crawls from months ago
-    * still drop, the contract an ingestion pipeline actually needs.
-    *
-    * Replay-safe by construction, twice over: a re-delivered row
-    * whose first copy already MERGEd is now in the store, so the
-    * dedup itself drops it; and if a crash lands between dedup and
-    * MERGE, the keyed MERGE of the replayed batch rewrites the same
-    * rows — either way restart + replay reaches the same store state
-    * (RealtimeSpec proves it across a checkpoint restart).
+  /** One stage of [[streamIngestPipeline]]'s chain, evaluated by
+    * [[graft.operators.IngestChain]]. A list runs in the chain's one
+    * fixed order, the order of the stages' funnel labels —
+    * [[ExactDedup]], [[Blocklist]], [[BoilerplateGate]],
+    * [[PercentileGate]], [[QualityGate]], [[DecontamGate]],
+    * [[SemanticGate]], [[NearDedup]] — and names each stage at most
+    * once; the stream's START rejects any other list.
     */
-  def streamIncrementalIngest(store: graft.sources.ParquetStore, table: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val schema = docs.schema
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // persisted: the body runs several actions (the bloom build's
-        // count + filter inside incrementalExact, the isEmpty probes,
-        // and merge's touched-bucket collect + write) — without the
-        // persists each would re-run the batch source plan, and the
-        // survivors' plan would re-scan the ever-growing store twice
-        val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (!b.isEmpty) {
-            val existing = store.readOrEmpty(table, schema)
-            val kept = graft.operators.Dedup
-              .incrementalExact(existing, b, idCol, textCol)
-              .withColumnRenamed("id", idCol)
-            val rows = b.join(kept, Seq(idCol), "left_semi")
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (!rows.isEmpty) store.merge(table, rows, idCol): Unit
-            } finally rows.unpersist()
-          }
-        } finally b.unpersist()
-      }
-      .start()
-  }
+  sealed trait IngestStage
 
-  /** Streaming BOILERPLATE cleaning — the store-backed
-    * [[graft.operators.Dedup.boilerplateRemoveStored]] applied per
-    * micro-batch: each delivery's documents are cleaned against the
-    * FROZEN span-df store (built on calibration cadence by
-    * [[graft.operators.Dedup.buildSpanDfStore]]) and the cleaned rows
-    * MERGE into `outTable` keyed by doc id. Replay-safe by
-    * construction: clean_text is a pure function of (row, store,
-    * spanTokens, minDocs) — the store never changes under the stream
-    * — so an at-least-once redelivery MERGEs byte-identical rows (a
-    * no-op), the CurriculumExport purity argument. The span grain is
-    * require-matched against the store's properties at stream START
-    * (cheap-config-checks-first: a drifted store must fail the start,
-    * not wedge every checkpoint restart inside the first
-    * micro-batch) and again by every probe.
-    *
-    * Ordering note: this is the standalone cleaning stream (C4 cleans
-    * then dedups). The composition INTO [[streamIngestPipeline]] —
-    * which changes every gate's input text — exists as
-    * [[BoilerplateGate]] (r18), oracled by the batch twin
-    * `pipeline_ingest_boil`.
-    */
-  def streamBoilerplateClean(store: graft.sources.ParquetStore,
-      outTable: String, dfTable: String, docs: DataFrame, idCol: String,
-      textCol: String, checkpointDir: String, spanTokens: Int = 3,
-      minDocs: Int = 2,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // EVERY config check before start (review r17): a bad knob or a
-    // misspelled column must fail .start(), not the first micro-batch
-    // — which would wedge every checkpoint restart on the same throw
-    require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
-    require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    Seq(idCol, textCol).foreach(c => require(docs.columns.contains(c),
-      s"streamBoilerplateClean: stream schema has no column '$c' " +
-        s"(columns: ${docs.columns.mkString(", ")})"))
-    graft.operators.Dedup.requireSpanDfGeometry(store, dfTable, spanTokens,
-      "streamBoilerplateClean", strict = true)
-    // the boilerplate hash set is FROZEN under the stream (the
-    // replay-safety contract), so load it once for the query's
-    // lifetime instead of re-reading the store per micro-batch; the
-    // startReleasing listener unpersists it at termination
-    val boil = graft.operators.Dedup
-      .boilerplateHashes(store, dfTable, minDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    startReleasing(docs.sparkSession, Seq(boil)) {
-      docs.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", checkpointDir)
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // persisted: the probe's rebuild join reads the batch twice
-          // (occurrence rows + doc side), and merge adds its own
-          // touched-bucket actions
-          val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (!b.isEmpty) {
-              val cleaned = graft.operators.Dedup.boilerplateRemoveAgainst(
-                boil, b, idCol, textCol, spanTokens)
-              store.merge(outTable, cleaned, idCol): Unit
-            }
-          } finally b.unpersist()
-        }
-        .start()
-    }
-  }
+  /** Exact dedup: drops a row whose normalized text the signature
+    * index's `norm_hash` column holds or an earlier row of the batch
+    * carries (keep-first), via
+    * [[graft.operators.Dedup.incrementalExactStored]]. */
+  case object ExactDedup extends IngestStage
 
-  /** Streaming form of the FULL ingestion chain (the batch
-    * `pipeline_ingest` stages, in the same cost order): each
-    * micro-batch runs exact dedup against the accumulated store and
-    * within itself → the C4 blocklist gate
-    * ([[graft.functions.GraftFunctions.blocklistClean]] — the SAME
-    * expression the batch chain uses, so the two can never drift) →
-    * an optional quality gate (`minQuality`, scored by the shared
-    * [[graft.functions.GraftFunctions.qualityScore]] — per-row, so it
-    * prunes BEFORE the near-dup shuffles, mirroring `pipeline_c4`'s
-    * composition) → an optional DECONTAMINATION gate (`benchSigTable`:
-    * rows near-duplicating a persisted benchmark signature index are
-    * dropped at ingest — [[graft.operators.Dedup.contaminatedBatchNearDup]],
-    * same geometry as the corpus index; the benchmark table is static,
-    * so the stage is stateless and replay-safe. The gate matches at
-    * `decontamThreshold` when set, else at `threshold` — a missed
-    * contaminated doc is the expensive error, so the gate is typically
-    * set STRICTER (lower) than the dedup threshold, matching the batch
-    * API where [[graft.operators.Dedup.contaminatedBatchNearDup]] has
-    * its own parameter)
-    * → an optional SEMANTIC decontamination rung ([[SemanticGate]]:
-    * exact-cosine hits against a persisted benchmark vector table
-    * dropped next, adjacent to the shingle rung — the full
-    * decontamination ladder applied AT INGEST)
-    * → near-dup against the PERSISTED MinHash signature index
-    * ([[graft.operators.Dedup.incrementalNearDupStored]]) and within
-    * itself. Survivors MERGE into the docs table AND their signatures
-    * MERGE into the index, so the next micro-batch probes them.
-    *
-    * `auditTable`, when set, persists a per-micro-batch funnel — one
-    * (batch_id, stage, n_docs) row per enabled stage, the streaming
-    * sibling of the batch `ingest_audit_decontam` query — so an
-    * always-on pipeline's drop rates are queryable without replaying
-    * anything. Keyed by (batch, stage); see the inline contract for
-    * replay semantics.
-    *
-    * Each micro-batch runs the SAME [[graft.operators.IngestChain]]
-    * the batch chain entries run: the stage list is built once at
-    * START from the options above, every micro-batch evaluates it as
-    * one tagged frame, takes the funnel from ONE aggregate over it,
-    * and MERGEs the survivors. A single micro-batch is EXACTLY the
-    * batch chain over (store, batch) — RealtimeSpec pins the stream
-    * against the batch configurations (Queries.ingestSpecs) stage by
-    * stage. Across micro-batches the near-dup history
-    * is the SURVIVOR set (a dropped row's signature never enters the
-    * index), i.e. sequential-greedy semantics — the batch form's
-    * pair-greedy in-batch rule sees dropped rows too, which an
-    * incremental pass by definition cannot; RealtimeSpec pins the
-    * chunked run against the sequential snapshot-by-snapshot batch
-    * chain, which is the contract an always-on pipeline actually has.
-    *
-    * Both dedup stages probe the SIGNATURE index, not the docs table:
-    * exact dedup reads its narrow norm_hash column
-    * ([[graft.operators.Dedup.incrementalExactStored]]), so a
-    * micro-batch never scans the accumulated corpus TEXT at all — the
-    * docs-table MERGE is the only thing that touches it, and MERGE
-    * I/O is bounded by the touched key-hash buckets.
-    *
-    * Crash-replay safety: the docs table MERGEs BEFORE the signature
-    * index, and the near-dup core ignores self-pairs. Crash between
-    * the merges → the redelivered rows still pass both dedup gates
-    * (their signatures are absent), the docs MERGE rewrites the same
-    * rows, and the signature MERGE completes; crash after both →
-    * the exact gate drops the redelivery outright. Either order of
-    * partial completion converges to the same store state.
-    */
-  /** Config for the SEMANTIC rung of the at-ingest decontamination
-    * ladder: batch rows whose embedding's exact cosine against ANY
-    * vector of the persisted benchmark table reaches `threshold` are
-    * dropped before they reach the corpus —
+  /** The C4 blocklist over the RAW text
+    * ([[graft.functions.GraftFunctions.blocklistClean]], the SAME
+    * expression the batch chain uses). Without terms it keeps every
+    * row, and the funnel still counts it. */
+  final case class Blocklist(terms: Seq[String] = Nil) extends IngestStage
+
+  /** The raw quality gate: keeps a row whose
+    * [[graft.functions.GraftFunctions.qualityScore]] of the text as it
+    * would ship reaches `min`. Per row, so it prunes before the
+    * near-dup shuffles; [[PercentileGate]] is its per-language
+    * calibrated form. */
+  final case class QualityGate(min: Double) extends IngestStage
+
+  /** At-ingest shingle decontamination: drops the rows that
+    * near-duplicate a doc of the persisted benchmark signature index
+    * `benchSigTable` ([[graft.operators.Dedup.contaminatedBatchNearDup]]),
+    * which must carry the pipeline's geometry. It matches at
+    * `threshold`, by default the pipeline's: a missed contaminated doc
+    * is the expensive error, so a gate is typically set stricter than
+    * the dedup. The benchmark is static, so the stage is stateless and
+    * replay-safe. */
+  final case class DecontamGate(benchSigTable: String,
+      threshold: Option[Double] = None) extends IngestStage
+
+  /** Near-dup against the persisted MinHash signature index
+    * ([[graft.operators.Dedup.incrementalNearDupStored]]) and, by the
+    * smaller-id rule, within the survivors. Always the last stage. */
+  case object NearDedup extends IngestStage
+
+  /** The default chain, the batch `pipeline_ingest` stages: exact dedup
+    * → blocklist (no terms) → near-dup. */
+  val defaultStages: Seq[IngestStage] = Seq(ExactDedup, Blocklist(), NearDedup)
+
+  /** The SEMANTIC rung of the at-ingest decontamination ladder: batch
+    * rows whose embedding's exact cosine against ANY vector of the
+    * persisted benchmark table reaches `threshold` are dropped before
+    * they reach the corpus —
     * [[graft.operators.Dedup.contaminatedDocsSemantic]] per
     * micro-batch, catching the meaning-preserving rewrites the
     * shingle-Jaccard gate's surface overlap misses. The stream's rows
@@ -317,18 +185,20 @@ object Realtime {
     */
   final case class SemanticGate(benchVecTable: String, vecCol: String,
       dim: Int, threshold: Double = 0.95, bits: Int = 4, bands: Int = 8)
+      extends IngestStage
 
-  /** Config for the percentile-calibrated quality gate (r15): keep a
-    * row iff its per-LANGUAGE quality percentile — looked up against
-    * the persisted CDF snapshot `cdfTable`, built on calibration
-    * cadence by [[graft.operators.QualityCal.buildPercentileStore]] —
-    * reaches `minPct`. Rank-based, so one knob means the same thing
-    * in every language; the raw `minQuality` knob is the
-    * cross-language miscalibration this gate replaces (a raw cutoff
-    * keeps 60% of English and 5% of German). The snapshot's scorer
-    * version is require-matched at stream START (a CDF from an older
-    * scorer fails loudly — [[graft.operators.QualityCal.requireCdf]]),
-    * and `expectSnapshot` optionally pins the calibration release the
+  /** The percentile-calibrated quality gate (r15): keep a row iff its
+    * per-LANGUAGE quality percentile — looked up by the pipeline's
+    * `langCol` against the persisted CDF snapshot `cdfTable`, built on
+    * calibration cadence by
+    * [[graft.operators.QualityCal.buildPercentileStore]] — reaches
+    * `minPct`. Rank-based, so one knob means the same thing in every
+    * language; the raw [[QualityGate]] is the cross-language
+    * miscalibration this gate replaces (a raw cutoff keeps 60% of
+    * English and 5% of German). The snapshot's scorer version is
+    * require-matched at stream START (a CDF from an older scorer fails
+    * loudly — [[graft.operators.QualityCal.requireCdf]]), and
+    * `expectSnapshot` optionally pins the calibration release the
     * pipeline must run against (the staleness guard). Rows of a
     * language ABSENT from the snapshot get a NULL percentile and the
     * gate ABSTAINS (keeps them): an uncalibrated language carries no
@@ -337,35 +207,30 @@ object Realtime {
     * makes the abstention volume observable.
     */
   final case class PercentileGate(cdfTable: String, minPct: Double,
-      langCol: String = "lang", expectSnapshot: Option[String] = None)
+      expectSnapshot: Option[String] = None) extends IngestStage
 
-  /** Config for the boilerplate-clean STAGE of the ingest pipeline
-    * (r18 — the composition [[streamBoilerplateClean]]'s scaladoc
-    * deliberately left to "a pipeline that re-oracles it"; the batch
-    * twin `pipeline_ingest_boil` now does): each micro-batch's
-    * blocklist survivors are cleaned against the FROZEN span-df store
-    * `dfTable` (built on calibration cadence by
-    * [[graft.operators.Dedup.buildSpanDfStore]]), docs whose every
-    * span was boilerplate DROP, and survivors' `textCol` is swapped
-    * for the cleaned form — so the percentile gate scores, the
+  /** The boilerplate-clean stage (r18, the RefinedWeb order: clean
+    * before quality and dedup, because the cleaned text changes every
+    * downstream signal): each micro-batch's rows are cleaned against
+    * the FROZEN span-df store `dfTable` (built on calibration cadence
+    * by [[graft.operators.Dedup.buildSpanDfStore]]), docs whose every
+    * span was boilerplate DROP, and the survivors' text is swapped for
+    * the cleaned form — so the percentile gate scores, the
     * decontamination gates sign, the near-dup stage shingles, and the
-    * docs-table MERGE ships the CLEANED text (the RefinedWeb order:
-    * clean before quality/dedup, because the cleaned text changes
-    * every downstream signal). Replay-safe like the standalone clean:
-    * clean_text is a pure function of (row, store, spanTokens,
-    * minDocs) and the store is frozen under the stream. The hash set
-    * loads ONCE per query lifetime (the streamBoilerplateClean
-    * convention) and the span grain is require-matched at START.
+    * docs-table MERGE ships the CLEANED text. Replay-safe by purity:
+    * the clean is a function of (row, store, spanTokens, minDocs) and
+    * the store is frozen under the stream. The hash set loads ONCE per
+    * query lifetime and the span grain is require-matched at START.
+    * Alone in a list, the stage is the cleaning stream.
     */
   final case class BoilerplateGate(dfTable: String, spanTokens: Int = 3,
-      minDocs: Int = 2)
+      minDocs: Int = 2) extends IngestStage
 
-  /** Config for the language-ID ROUTING stage (r19, the r18 verdict's
-    * #4): production corpora don't arrive labeled, but the percentile
-    * gate and the curriculum export key their per-language CDF
-    * lookups on a language column. With this gate on, each
-    * micro-batch's `langCol` is DETECTED by the persisted trained
-    * model (`modelTable`, written by
+  /** Config for the language-ID ROUTING stage (r19): production corpora
+    * don't arrive labeled, but the percentile gate and the curriculum
+    * export key their per-language CDF lookups on the pipeline's
+    * `langCol`. With this gate on, each micro-batch's `langCol` is
+    * DETECTED by the persisted trained model (`modelTable`, written by
     * [[graft.operators.LangId.saveModel]]) over the text the later
     * stages actually consume — the CLEANED text when the boilerplate
     * stage is on — producing (or overwriting) the column every
@@ -383,7 +248,7 @@ object Realtime {
     * shuffles and ZERO state to the micro-batch plan, so it is
     * replay-safe exactly like the blocklist filter.
     */
-  final case class LangIdGate(modelTable: String, langCol: String = "lang")
+  final case class LangIdGate(modelTable: String)
 
   /** Planned banding geometry for [[streamIngestPipeline]] (r18, the
     * r17 verdict's #6 — the served default): instead of hand-picking
@@ -407,16 +272,19 @@ object Realtime {
     * micro-batch's SURVIVORS additionally MERGE one row per doc into
     * `table` — (id, shard, level, sort_key), the per-row halves of
     * the curriculum order: shard = the deterministic md5 bucket,
-    * level = the per-language quality percentile against the
-    * persisted `cdfTable` snapshot (the streaming calibration
-    * convention — NULL abstains and sorts last, like the batch
-    * window's asc_nulls_last), sort_key = the epoch-seeded md5
-    * tiebreak. All three are pure functions of (row, snapshot, seed),
-    * so a crash-replayed batch MERGEs byte-identical rows
-    * (last-delivery-wins like the audit table; a restart under a
+    * level = the per-language (the pipeline's `langCol`) quality
+    * percentile against the persisted `cdfTable` snapshot (the
+    * streaming calibration convention — NULL abstains and sorts last,
+    * like the batch window's asc_nulls_last), sort_key = the
+    * epoch-seeded md5 tiebreak. All three are pure functions of (row,
+    * snapshot, seed), so a crash-replayed batch MERGEs byte-identical
+    * rows (last-delivery-wins like the audit table; a restart under a
     * REFRESHED snapshot re-levels only redelivered rows — converging
     * to the newest calibration per delivery, the at-least-once
-    * analogue of rebuilding the batch export).
+    * analogue of rebuilding the batch export). An export naming the
+    * percentile gate's (cdfTable, expectSnapshot) levels against the
+    * gate's loaded frame: two loads could straddle a calibration
+    * refresh and gate on one snapshot while leveling with another.
     *
     * What is deliberately NOT incremental: `seq`. Dense per-shard
     * numbering is inherently global — a newly ingested mid-level doc
@@ -431,24 +299,92 @@ object Realtime {
     * with the same snapshot percentile.
     */
   final case class CurriculumExport(table: String, cdfTable: String,
-      nShards: Int, seed: String, langCol: String = "lang",
-      expectSnapshot: Option[String] = None)
+      nShards: Int, seed: String, expectSnapshot: Option[String] = None)
 
+  /** Streaming ingestion, the one streaming ingest entry: each
+    * micro-batch of `docs` runs the chain `stages` ([[IngestStage]]; by
+    * default [[defaultStages]]) and its survivors MERGE into `table`
+    * keyed by `idCol`. With a dedup stage ([[ExactDedup]],
+    * [[NearDedup]]) the survivors' signatures MERGE into the index
+    * `sigTable` too, so the next micro-batch probes them; a list
+    * without one never builds or writes `sigTable`. One body serves
+    * every delivery, an empty one included, as [[processBatch]] serves
+    * every refresh.
+    *
+    * Each micro-batch runs the SAME [[graft.operators.IngestChain]] the
+    * batch chain entries run: the stage list is built once at START,
+    * every micro-batch evaluates it as one tagged frame, takes the
+    * funnel from ONE aggregate over it, and MERGEs the survivors. A
+    * single micro-batch is EXACTLY the batch chain over (store, batch)
+    * — RealtimeSpec pins the stream against the batch configurations
+    * (Queries.ingestSpecs) stage by stage. Across micro-batches the
+    * near-dup history is the SURVIVOR set (a dropped row's signature
+    * never enters the index), i.e. sequential-greedy semantics — the
+    * batch form's pair-greedy in-batch rule sees dropped rows too,
+    * which an incremental pass by definition cannot; RealtimeSpec pins
+    * the chunked run against the sequential snapshot-by-snapshot batch
+    * chain, which is the contract an always-on pipeline actually has.
+    * Where [[streamDedup]]'s watermark bounds its history, the index's
+    * history is unbounded at store cost: a re-crawl from months ago
+    * still drops.
+    *
+    * Both dedup stages probe the SIGNATURE index, not the docs table:
+    * exact dedup reads its narrow norm_hash column
+    * ([[graft.operators.Dedup.incrementalExactStored]]), so a
+    * micro-batch never scans the accumulated corpus TEXT at all.
+    *
+    * `langCol` is the language column the percentile gate and the
+    * curriculum export key on: carried by the stream, or written by
+    * the `langIdGate` route. `auditTable`, when set, persists a
+    * per-micro-batch funnel — one (batch_id, stage, n_docs) row for
+    * `0_batch` and each stage, the streaming sibling of the batch
+    * `ingest_audit*` entries — so an always-on pipeline's drop rates
+    * are queryable without replaying anything. Every misconfiguration
+    * fails `.start()`, never the first micro-batch, which would wedge
+    * every checkpoint restart on the same throw.
+    *
+    * Crash-replay safety: the docs table MERGEs BEFORE the signature
+    * index, and the near-dup core ignores self-pairs. Crash between
+    * the merges → the redelivered rows still pass both dedup gates
+    * (their signatures are absent), the docs MERGE rewrites the same
+    * rows, and the signature MERGE completes; crash after both →
+    * the exact gate drops the redelivery outright. Either order of
+    * partial completion converges to the same store state. A chain
+    * without dedup is replay-safe by purity: a redelivery MERGEs the
+    * same rows.
+    */
   def streamIngestPipeline(store: graft.sources.ParquetStore, table: String,
       sigTable: String, docs: DataFrame, idCol: String, textCol: String,
-      checkpointDir: String, blocklist: Seq[String] = Nil,
-      shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, minQuality: Option[Double] = None,
-      benchSigTable: Option[String] = None,
-      decontamThreshold: Option[Double] = None,
-      semanticGate: Option[SemanticGate] = None,
-      percentileGate: Option[PercentileGate] = None,
-      boilerplateGate: Option[BoilerplateGate] = None,
+      checkpointDir: String, stages: Seq[IngestStage] = defaultStages,
+      langCol: String = "lang", shingleN: Int = 3, numHashes: Int = 64,
+      bands: Int = 16, threshold: Double = 0.5,
       langIdGate: Option[LangIdGate] = None,
       auditTable: Option[String] = None,
       curriculumExport: Option[CurriculumExport] = None,
       plannedGeometry: Option[PlannedGeometry] = None,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    import graft.operators.{Dedup, LangId, QualityCal}
+    val ic = graft.operators.IngestChain
+    // cheap config checks FIRST, before any store read
+    val semantic = stages.collectFirst { case g: SemanticGate => g }
+    val keyed = curriculumExport.isDefined ||
+      stages.exists(_.isInstanceOf[PercentileGate])
+    // the columns the chain reads and writes are distinct: a route
+    // over the id, text or vector column would overwrite it in every
+    // survivor, and a vector column naming the id or text would be
+    // read as an embedding inside the first micro-batch
+    val named = Seq(idCol, textCol) ++
+      Some(langCol).filter(_ => keyed || langIdGate.isDefined) ++
+      semantic.map(_.vecCol)
+    require(named.distinct == named,
+      "streamIngestPipeline: the id, text, language and vector columns " +
+        s"must be distinct, got ${named.mkString(", ")}")
+    (Seq(idCol, textCol) ++ semantic.map(_.vecCol) ++
+        Some(langCol).filter(_ => keyed && langIdGate.isEmpty))
+      .foreach(c => require(docs.columns.contains(c),
+        s"streamIngestPipeline: the stream carries no '$c' column (" +
+          docs.columns.mkString(", ") + "): the encode step must run " +
+          "upstream; the language comes from the stream or langIdGate"))
     // Geometry resolution (r18): with `plannedGeometry` set, the
     // explicit (numHashes, bands) are ignored in favour of — in
     // order — the EXISTING index's recorded geometry (serving
@@ -456,11 +392,11 @@ object Realtime {
     // re-planning is a rebuild) or the BandPlanner's cheapest
     // feasible choice for the stated operating point, whose
     // provenance the self-heal build below records. Resolved before
-    // any other check so every geometry-taking stage sees one truth.
+    // the stage checks so every geometry-taking stage sees one truth.
     val (resolvedPlan, nHashes, nBands) = plannedGeometry match {
       case None => (None, numHashes, bands)
       case Some(pg) =>
-        graft.operators.Dedup.storedGeometry(store, sigTable) match {
+        Dedup.storedGeometry(store, sigTable) match {
           case Some((_, h, b)) => (None, h, b)
           case None =>
             val p = graft.operators.BandPlanner.plan(pg.threshold,
@@ -475,288 +411,147 @@ object Realtime {
             (Some(p), p.numHashes, p.bands)
         }
     }
-    // cheap config checks FIRST: a typo'd benchmark table name — or a
-    // benchmark index banded with a different geometry than this
-    // pipeline's, which would silently match near-nothing (the exact
-    // leakage the gate exists to stop) — must fail before the
-    // potentially corpus-sized self-heal below runs
-    benchSigTable.foreach { bt =>
-      require(store.exists(bt),
-        s"streamIngestPipeline: benchmark signature table '$bt' does not " +
-          "exist — build it once per benchmark release with " +
-          "Dedup.buildNearDupStore(store, benchSigTable, benchmarkDocs, ...) " +
-          "using the same (shingleN, numHashes, bands) as this pipeline")
-      graft.operators.Dedup.requireStoreGeometry(store, bt, shingleN,
-        nHashes, nBands, "streamIngestPipeline", strict = true)
+    val geometry = ic.Geometry(shingleN, nHashes, nBands, threshold)
+    // the stream-LIFETIME frames (frozen store reads each stage probes
+    // every micro-batch): persisted once every check has passed, and
+    // released when the query terminates (startReleasing)
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df; df }
+    // one validated load per (cdfTable, snapshot pin), shared by the
+    // percentile gate and the curriculum export (see CurriculumExport)
+    val cdfs =
+      scala.collection.mutable.Map.empty[(String, Option[String]), DataFrame]
+    def cdf(cdfTable: String, pin: Option[String]): DataFrame =
+      cdfs.getOrElseUpdate((cdfTable, pin), hold(
+        QualityCal.loadCdf(store, cdfTable, "streamIngestPipeline", pin)))
+    // detection over the text that ships (the cleaned text with the
+    // boil stage on); a pure per-row map over the stream-lifetime
+    // scorer closure, truncated because the percentile lookup and the
+    // tag join both read it
+    val route = langIdGate.map { g =>
+      val scorer = LangId.scorer(LangId.loadModel(store, g.modelTable,
+        "streamIngestPipeline(langIdGate)"))
+      ic.Route(langCol, v => v.texts
+        .select(col(idCol), scorer(col(textCol)).as("__dl"))
+        .transform(ic.truncate))
     }
-    semanticGate.foreach { g =>
-      // the symmetric collision to the langIdGate check below (review
-      // r19): vecCol naming the pipeline's text/id column passes the
-      // presence checks (the column EXISTS) and then the first
-      // micro-batch's cosine probe reads a string as an embedding —
-      // the in-batch-wedge class every start-time check here prevents
-      require(g.vecCol != idCol && g.vecCol != textCol,
-        s"streamIngestPipeline(semanticGate): vecCol '${g.vecCol}' collides " +
-          "with the pipeline's id/text column — the gate would read it as " +
-          "an embedding; name the vector column distinctly")
-      require(store.exists(g.benchVecTable),
-        s"streamIngestPipeline: benchmark vector table '${g.benchVecTable}' " +
-          "does not exist — build it once per benchmark release with " +
-          s"store.merge('${g.benchVecTable}', benchDf.select($idCol, " +
-          s"${g.vecCol}), '$idCol')")
-      require(docs.columns.contains(g.vecCol),
-        s"streamIngestPipeline: the stream carries no '${g.vecCol}' column " +
-          "for the semantic gate — the encode step must run upstream")
-    }
-    // the boilerplate stage's span-df store must exist with a
-    // matching span grain — a drifted grain silently removes (almost)
-    // nothing, so it fails the START like every frozen-geometry index
-    // (the streamBoilerplateClean discipline)
-    boilerplateGate.foreach { g =>
-      require(g.spanTokens >= 1,
-        s"streamIngestPipeline(boilerplateGate): spanTokens must be >= 1, " +
-          s"got ${g.spanTokens}")
-      require(g.minDocs >= 2,
-        s"streamIngestPipeline(boilerplateGate): minDocs must be >= 2, " +
-          s"got ${g.minDocs}")
-      graft.operators.Dedup.requireSpanDfGeometry(store, g.dfTable,
-        g.spanTokens, "streamIngestPipeline(boilerplateGate)", strict = true)
-    }
-    // the language-ID routing stage's model loads ONCE at START with
-    // its full geometry require-matched (LangIdGate's scaladoc) — the
-    // scorer closure built here is frozen for the stream's lifetime,
-    // and scorer() construction re-enforces the integer-score bound,
-    // so a pathological artifact fails the .start() too. Resolved
-    // BEFORE the CDF checks so those can accept a langCol this stage
-    // will produce.
-    val langIdScorer = langIdGate.map { g =>
-      // the routed column must not collide with the chain's working
-      // columns (review r19): langCol == textCol would OVERWRITE every
-      // survivor's text with its language code before scoring/
-      // shingling/MERGE, langCol == idCol would collapse each
-      // language onto one merge key — silent corruption, so both fail
-      // the start; and the reserved-name check must cover the column
-      // this stage PRODUCES, not just the stream's own schema
-      // (see the pct lookup's requireNoReservedColumns below)
-      require(g.langCol != idCol && g.langCol != textCol,
-        s"streamIngestPipeline(langIdGate): langCol '${g.langCol}' collides " +
-          "with the pipeline's id/text column — the detector would " +
-          "overwrite it; route to a different column name")
-      // ...and with the semantic gate's vector column (review r19):
-      // overwriting a STORED lang column is the documented intent, but
-      // overwriting the embedding column with a language string passes
-      // the schema checks and then throws inside the first
-      // micro-batch's cosine probe — the in-batch-wedge failure class
-      // every other start-time check here exists to prevent
-      semanticGate.foreach(s => require(g.langCol != s.vecCol,
-        s"streamIngestPipeline(langIdGate): langCol '${g.langCol}' collides " +
-          "with the semantic gate's vector column — the detector would " +
-          "overwrite the embeddings; route to a different column name"))
-      percentileGate.foreach(p => require(p.langCol == g.langCol,
-        s"streamIngestPipeline: the percentile gate keys on " +
-          s"'${p.langCol}' but the language-ID stage routes to " +
-          s"'${g.langCol}' — the gate would read a column the router " +
-          "never wrote; align the two langCol knobs"))
-      curriculumExport.foreach(c => require(c.langCol == g.langCol,
-        s"streamIngestPipeline: the curriculum export keys on " +
-          s"'${c.langCol}' but the language-ID stage routes to " +
-          s"'${g.langCol}' — align the two langCol knobs"))
-      graft.operators.LangId.scorer(graft.operators.LangId.loadModel(
-        store, g.modelTable, "streamIngestPipeline(langIdGate)"))
-    }
-    // the percentile gate's CDF snapshot must exist, carry the CURRENT
-    // scorer's version, and (when pinned) be the expected calibration
-    // release — all checked before any corpus-sized work, like the
-    // signature geometry above. loadCdf validates and READS as one
-    // consistent pair (r16): a calibration refresh landing between a
-    // separate check and read could otherwise serve cells the cleared
-    // label never described — the returned frame is cached below as
-    // the stream-lifetime CDF.
-    val pctCdfRaw = percentileGate.map { g =>
-      // free in-memory schema checks BEFORE the store reads (the
-      // cheap-config-checks-first discipline): a schema already
-      // carrying the gate's working names must fail HERE, not inside
-      // the first micro-batch — an in-batch throw wedges every
-      // checkpoint restart on the same error (review r16)
-      require(docs.columns.contains(g.langCol) ||
-          langIdGate.exists(_.langCol == g.langCol),
-        s"streamIngestPipeline: the stream carries no '${g.langCol}' column " +
-          "for the percentile gate — per-language calibration needs the " +
-          "language id on every row (carry it on the stream, or detect it " +
-          "with langIdGate)")
-      // the gate's input schema includes the column the language-ID
-      // stage PRODUCES (review r19: LangIdGate(langCol = "pct") passed
-      // the schema check here — docs carries no "pct" — then threw
-      // inside the first micro-batch's withPercentile, wedging every
-      // checkpoint restart on the same error)
-      graft.operators.QualityCal.requireNoReservedColumns(
-        (docs.columns.toSeq ++ langIdGate.map(_.langCol)).distinct,
-        "pct", "streamIngestPipeline(percentileGate)")
-      graft.operators.QualityCal.loadCdf(store, g.cdfTable,
-        "streamIngestPipeline", g.expectSnapshot)
-    }
-    // the curriculum export levels against its own snapshot pin; when
-    // it names the SAME (cdfTable, expectSnapshot) as the gate, the
-    // gate's loaded frame is REUSED — two separate loads could
-    // straddle a calibration refresh and bind different snapshots for
-    // the stream's whole life, gating on one while leveling with the
-    // other (review r16). Different pins load separately (two pins
-    // naming different releases is an intentional configuration).
-    val curCdfRaw = curriculumExport.map { c =>
-      require(docs.columns.contains(c.langCol) ||
-          langIdGate.exists(_.langCol == c.langCol),
-        s"streamIngestPipeline: the stream carries no '${c.langCol}' column " +
-          "for the curriculum export — per-language leveling needs the " +
-          "language id on every row (carry it on the stream, or detect it " +
-          "with langIdGate)")
-      // the staging projection is (idCol, langCol, textCol) with
-      // pctCol "level": none of the three may collide with the
-      // lookup's working names NOR with the staging output columns
-      // shard/sort_key (a collision would surface as an ambiguous-
-      // reference AnalysisException inside the first micro-batch,
-      // wedging every checkpoint restart — review r16)
-      graft.operators.QualityCal.requireNoReservedColumns(
-        Seq(idCol, c.langCol, textCol).distinct, "level",
+    // the stage list, built ONCE for the stream's lifetime: each stage's
+    // checks and frozen loads run here, its rule reads the micro-batch
+    // through the view it is given
+    val chain = ic.Chain(idCol, textCol, geometry, stages.map {
+      case ExactDedup => ic.exact(store, sigTable)
+      case Blocklist(terms) => ic.blocklist(terms)
+      case g: BoilerplateGate =>
+        require(g.spanTokens >= 1, "streamIngestPipeline(boilerplateGate): " +
+          s"spanTokens must be >= 1, got ${g.spanTokens}")
+        require(g.minDocs >= 2, "streamIngestPipeline(boilerplateGate): " +
+          s"minDocs must be >= 2, got ${g.minDocs}")
+        // a drifted span grain silently removes (almost) nothing
+        Dedup.requireSpanDfGeometry(store, g.dfTable, g.spanTokens,
+          "streamIngestPipeline(boilerplateGate)", strict = true)
+        val boil = hold(Dedup.boilerplateHashes(store, g.dfTable, g.minDocs))
+        // truncated: the view's texts, the tag join and (routed) the
+        // detection all read the clean
+        ic.boilerplate(v => Dedup.boilerplateRemoveAgainst(boil, v.rows,
+          idCol, textCol, g.spanTokens).transform(ic.truncate))
+      case g: PercentileGate =>
+        // the lookup's working names must not collide with the stream's
+        // columns or the one the route produces
+        QualityCal.requireNoReservedColumns(
+          (docs.columns.toSeq :+ langCol).distinct, "pct",
+          "streamIngestPipeline(percentileGate)")
+        val c = cdf(g.cdfTable, g.expectSnapshot)
+        // per-language rank lookup, keyed on the detected language when
+        // the router is on; a language the snapshot lacks gets a NULL
+        // pct and the gate abstains (see PercentileGate)
+        ic.percentile({ v =>
+          val lang = v.detected.getOrElse(
+            v.rows.select(col(idCol), col(langCol).as("__dl")))
+          // scored once and truncated: the lookup reads its rows twice
+          val scored = v.texts.join(lang, Seq(idCol))
+            .select(col(idCol), col("__dl"), graft.functions.GraftFunctions
+              .qualityScore(col(textCol)).as("__q"))
+            .transform(ic.truncate)
+          QualityCal.withPercentile(scored, c, "__dl", col("__q"))
+            .select(col(idCol), col("pct"))
+        }, g.minPct, abstain = true)
+      case QualityGate(min) => ic.quality(min)
+      case DecontamGate(bt, t) =>
+        // a benchmark index banded unlike this pipeline would silently
+        // match near-nothing: the leakage the gate exists to stop
+        require(store.exists(bt),
+          s"streamIngestPipeline: benchmark signature table '$bt' does not " +
+            "exist — build it once per benchmark release with " +
+            "Dedup.buildNearDupStore(store, benchSigTable, benchmarkDocs, ...) " +
+            "using the same (shingleN, numHashes, bands) as this pipeline")
+        Dedup.requireStoreGeometry(store, bt, shingleN, nHashes, nBands,
+          "streamIngestPipeline", strict = true)
+        ic.decontam(store, bt, geometry, t.getOrElse(threshold))
+      case g: SemanticGate =>
+        require(store.exists(g.benchVecTable),
+          s"streamIngestPipeline: benchmark vector table '${g.benchVecTable}' " +
+            "does not exist — build it once per benchmark release with " +
+            s"store.merge('${g.benchVecTable}', benchDf.select($idCol, " +
+            s"${g.vecCol}), '$idCol')")
+        // the benchmark side is static: banded once for the stream's
+        // lifetime, not once per micro-batch
+        val bench = hold(Dedup.semanticBenchBanded(
+          store.read(g.benchVecTable), idCol, g.vecCol, g.dim, g.bits, g.bands))
+        ic.semantic(v => Dedup.contaminatedDocsSemanticBanded(v.rows, bench,
+            idCol, g.vecCol, g.dim, g.threshold, g.bits, g.bands)
+          .select(col("id").as(idCol)))
+      // reads the view's signatures, which the decontamination gate and
+      // the signature MERGE share
+      case NearDedup => ic.nearDup(4, store, sigTable, geometry, shareSig = true)
+    }, route)
+    // the funnel labels sort in the chain's order
+    val labels = chain.stages.map(_.label)
+    require(labels == labels.distinct.sorted, s"streamIngestPipeline: " +
+      s"stages ${stages.mkString(", ")} are not a chain — name each at " +
+      "most once, in the order exact → blocklist → boilerplate → " +
+      "percentile → quality → decontam → semantic → near-dup")
+    // the staging projection is (idCol, langCol, textCol) with pctCol
+    // "level": none may collide with the lookup's working names nor with
+    // the staging outputs shard/sort_key (an ambiguous reference inside
+    // the first micro-batch otherwise)
+    val curriculum = curriculumExport.map { c =>
+      val staged = Seq(idCol, langCol, textCol)
+      QualityCal.requireNoReservedColumns(staged, "level",
         "streamIngestPipeline(curriculumExport)")
-      val stagedClash = Seq("shard", "sort_key")
-        .filter(Seq(idCol, c.langCol, textCol).contains)
-      require(stagedClash.isEmpty,
-        s"streamIngestPipeline(curriculumExport): column name(s) " +
-          s"${stagedClash.mkString(", ")} collide with the staging " +
-          "table's shard/sort_key outputs — rename them upstream")
-      val sharedWithGate = percentileGate.exists(g =>
-        g.cdfTable == c.cdfTable && g.expectSnapshot == c.expectSnapshot)
-      if (sharedWithGate) pctCdfRaw.get
-      else graft.operators.QualityCal.loadCdf(store, c.cdfTable,
-        "streamIngestPipeline(curriculum)", c.expectSnapshot)
+      require(!staged.exists(Set("shard", "sort_key")),
+        s"streamIngestPipeline(curriculumExport): columns " +
+          s"${staged.mkString(", ")} collide with the staging table's " +
+          "shard/sort_key outputs — rename them upstream")
+      c -> cdf(c.cdfTable, c.expectSnapshot)
     }
-    // the dedup gates probe ONLY the signature index: a docs table
-    // without one would make the first micro-batch dedup within
-    // itself alone and silently ingest duplicates of the whole
-    // existing corpus. Restore the invariant at stream START by
-    // building the index FROM the docs table — self-healing rather
-    // than a require(), because the state also arises from OUR OWN
-    // crash window (docs MERGE committed, signature MERGE not — the
-    // documented replay order), where erroring would wedge every
-    // restart of a first micro-batch that crashed mid-commit. For a
-    // large pre-seeded corpus this is the one-time CREATE INDEX cost
-    // the pipeline needs anyway. The docs table holds the SHIPPED text,
-    // so with the boilerplate gate on a healed index hashes the cleaned
-    // text where the stream's own MERGEs hash the raw delivery: a
-    // redelivered pre-heal row whose clean changed its text passes
-    // exact dedup again (near-dup skips the row's own id) and re-MERGEs
-    // the same row under its key — a wasted chain pass, never a
+    val indexed = stages.exists(s => s == ExactDedup || s == NearDedup)
+    // an EXISTING corpus index with drifted geometry fails here. A docs
+    // table without one would make the first micro-batch dedup within
+    // itself alone and silently ingest duplicates of the whole existing
+    // corpus, so the index is built FROM the docs table — self-healing
+    // rather than a require(), because the state also arises from OUR
+    // OWN crash window (docs MERGE committed, signature MERGE not),
+    // where erroring would wedge every restart. For a large pre-seeded
+    // corpus this is the one-time CREATE INDEX cost the pipeline needs
+    // anyway. The docs table holds the SHIPPED text, so with the
+    // boilerplate gate on a healed index hashes the cleaned text where
+    // the stream's own MERGEs hash the raw delivery: a redelivered
+    // pre-heal row whose clean changed its text passes exact dedup
+    // again and re-MERGEs the same row — a wasted chain pass, never a
     // duplicate.
-    // an EXISTING corpus index with drifted geometry must also fail
-    // here, not inside the first micro-batch after the (potentially
-    // corpus-sized) exact stage already ran
-    if (store.exists(sigTable))
-      graft.operators.Dedup.requireStoreGeometry(store, sigTable, shingleN,
-        nHashes, nBands, "streamIngestPipeline", strict = true)
-    if (store.exists(table) && !store.exists(sigTable))
-      resolvedPlan match {
+    if (indexed) {
+      if (store.exists(sigTable))
+        Dedup.requireStoreGeometry(store, sigTable, shingleN, nHashes,
+          nBands, "streamIngestPipeline", strict = true)
+      else if (store.exists(table)) resolvedPlan match {
         // planner-chosen geometry records its planner.* provenance
-        // alongside the frozen parameters (the planned-build overload)
-        case Some(p) => graft.operators.Dedup.buildNearDupStore(store,
-          sigTable, store.read(table), idCol, textCol, p, shingleN)
-        case None => graft.operators.Dedup.buildNearDupStore(store, sigTable,
+        case Some(p) => Dedup.buildNearDupStore(store, sigTable,
+          store.read(table), idCol, textCol, p, shingleN)
+        case None => Dedup.buildNearDupStore(store, sigTable,
           store.read(table), idCol, textCol, shingleN, nHashes, nBands)
       }
-    // the semantic gate's benchmark side is STATIC: band it with the
-    // frozen planes and persist ONE copy for the stream's lifetime —
-    // the single-shot operator's internal persist would leak one
-    // cached benchmark per micro-batch on an always-on stream (the
-    // same unbounded-cache hazard the shared bSig frame exists to
-    // avoid)
-    val semanticBench = semanticGate.map { g =>
-      graft.operators.Dedup.semanticBenchBanded(store.read(g.benchVecTable),
-          idCol, g.vecCol, g.dim, g.bits, g.bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    // the boilerplate hash set is FROZEN under the stream (the
-    // replay-safety contract): load it once for the query's lifetime
-    // (the streamBoilerplateClean convention), released at
-    // termination with the other stream-lifetime caches
-    val boilHashes = boilerplateGate.map(g =>
-      graft.operators.Dedup.boilerplateHashes(store, g.dfTable, g.minDocs)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // the CDF snapshot is likewise static for the stream's lifetime:
-    // cache ONE copy (≤10001 cells per language — broadcast-sized) of
-    // the validated frame from the start-time consistent read above,
-    // instead of re-reading the store table every micro-batch
-    val pctCdf = pctCdfRaw.map(
-      _.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // a frame shared with the gate is already persisted above —
-    // persist() on it again would only log a warning, but keeping the
-    // reference identity makes the release list below exact
-    val curCdf = curCdfRaw.map { c =>
-      if (pctCdfRaw.exists(_ eq c)) pctCdf.get
-      else c.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
-    // one MERGE into the audit table, shared by the counted and the
-    // empty-delivery paths
-    def writeAudit(at: String, sess: org.apache.spark.sql.SparkSession,
-        batchId: Long, counts: Seq[(String, Long)]): Unit = {
-      import sess.implicits._
-      store.merge(at,
-        counts.map { case (st, c) => (s"$batchId/$st", batchId, st, c) }
-          .toDF("audit_key", "batch_id", "stage", "n_docs"),
-        "audit_key")
-    }
-    // the stage list, built ONCE for the stream's lifetime from the
-    // options above: the same IngestChain the batch chain entries run,
-    // each rule reading the micro-batch through the view it is given.
-    // Every stage after exact dedup and the blocklist reads only their
-    // survivors (view.rows), as the filter cascade did: a replayed
-    // batch that exact dedup drops costs the later stages nothing
-    val ic = graft.operators.IngestChain
-    val geometry = ic.Geometry(shingleN, nHashes, nBands, threshold)
-    val chain = ic.Chain(idCol, textCol, geometry, Seq(
-      Some(ic.exact(store, sigTable)),
-      Some(ic.blocklist(blocklist)),
-      // truncated: the view's texts, the tag join and (routed) the
-      // detection all read the clean
-      boilerplateGate.map(g => ic.boilerplate(v =>
-        graft.operators.Dedup.boilerplateRemoveAgainst(boilHashes.get, v.rows,
-          idCol, textCol, g.spanTokens).transform(ic.truncate))),
-      // per-language rank lookup against the stream-lifetime CDF
-      // snapshot, keyed on the detected language when the router is on;
-      // a language the snapshot lacks gets a NULL pct and the gate
-      // abstains (see PercentileGate)
-      percentileGate.map(g => ic.percentile({ v =>
-        val lang = v.detected.getOrElse(
-          v.rows.select(col(idCol), col(g.langCol).as("__dl")))
-        // scored once and truncated: the lookup reads its rows twice
-        val scored = v.texts.join(lang, Seq(idCol))
-          .select(col(idCol), col("__dl"), graft.functions.GraftFunctions
-            .qualityScore(col(textCol)).as("__q"))
-          .transform(ic.truncate)
-        graft.operators.QualityCal.withPercentile(scored, pctCdf.get,
-          "__dl", col("__q")).select(col(idCol), col("pct"))
-      }, g.minPct, abstain = true)),
-      minQuality.map(ic.quality),
-      // the decontamination gate has its own threshold knob (default:
-      // the dedup threshold): a missed contaminated doc is the
-      // EXPENSIVE error, so pipelines typically gate stricter than
-      // they dedup
-      benchSigTable.map(bt => ic.decontam(store, bt, geometry,
-        decontamThreshold.getOrElse(threshold))),
-      semanticGate.map(g => ic.semantic(v =>
-        graft.operators.Dedup.contaminatedDocsSemanticBanded(v.rows,
-            semanticBench.get, idCol, g.vecCol, g.dim, g.threshold, g.bits,
-            g.bands)
-          .select(col("id").as(idCol)))),
-      // the near-dup stage reads the view's signatures, which the
-      // decontamination gate and the signature MERGE below share
-      Some(ic.nearDup(4, store, sigTable, geometry,
-        shareSig = true))).flatten,
-      // detection over the text that ships (the cleaned text with the
-      // boil stage on); a pure per-row map over the stream-lifetime
-      // scorer closure, truncated because the percentile lookup and the
-      // tag join both read it
-      langIdGate.map(g => ic.Route(g.langCol, v =>
-        v.texts.select(col(idCol), langIdScorer.get(col(textCol)).as("__dl"))
-          .transform(ic.truncate))))
+    held.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val writer = docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -770,99 +565,65 @@ object Realtime {
         // drop — delta-sized frames, bounded by one batch in flight. A
         // lost checkpoint block fails the batch for a clean redelivery
         // instead of silently recomputing against the post-MERGE store.
-        val b = ic.truncate(batch)
-        try {
-          if (!b.isEmpty) {
-            val view = chain.view(b)
-            // the tagged frame lazily reads the store's CURRENT version
-            // and the MERGEs below commit new ones, so it is truncated
-            // and fully materialized by the ONE funnel aggregate
-            // collected here, before the store mutates (a recompute
-            // after the merges would see this batch's own rows)
-            val tagged = ic.truncate(chain.tagged(view))
-            val counts = chain.funnel(tagged).collect()
-              .map(r => r.getString(0) -> r.getLong(1)).toSeq
-            if (counts.exists { case (st, n) =>
-                st == chain.stages.last.label && n > 0 }) {
-              val rows = chain.survivors(tagged)
-              // curriculum staging (r16) MERGEs FIRST, before the
-              // docs/sig merges: the per-row halves of the export
-              // order — shard, snapshot-percentile level, epoch sort
-              // key — keyed by doc id. All pure functions of (row,
-              // snapshot, seed), so a replay rewrites identical rows
-              // (seq is assigned at export time by curriculumOrder —
-              // see CurriculumExport's scaladoc for why seq cannot
-              // stream). The ORDER is the crash-replay contract:
-              // staged-then-docs heals (a crash after staging
-              // redelivers the batch, which re-stages and commits),
-              // whereas docs-then-staged would let the exact gate drop
-              // the redelivery BEFORE re-staging — a committed doc
-              // permanently missing from the curriculum. An orphan
-              // staged row (crash before the docs MERGE) lasts only
-              // until the at-least-once redelivery commits its doc.
-              curriculumExport.foreach { c =>
-                store.merge(c.table,
-                  curriculumStaged(rows, idCol, textCol, curCdf.get, c),
-                  idCol)
-              }
-              store.merge(table, rows, idCol)
-              // survivors' signatures MERGE from the view's shared
-              // frame (a superset of the rows' signatures; the join
-              // restricts) — the text path would re-shingle +
-              // re-MinHash the very rows the batch already signed.
-              // The index's norm hash is of the RAW delivered text, the
-              // text the exact stage hashes (the batch twin's index is
-              // built from raw documents too), so a redelivered row
-              // whose clean changed its text is dropped by exact dedup
-              graft.operators.Dedup.buildNearDupStoreFromSig(store,
-                sigTable, tagged.filter(col(chain.last)).select(idCol, textCol),
-                idCol, textCol, view.sig, shingleN,
-                nHashes, nBands,
-                // planner provenance on a freshly-planned geometry
-                // (ADVICE r18): a brand-new store has no self-heal build
-                // to record it, so the first delivery's build stamps
-                // it; identical re-assertion on later deliveries, empty
-                // when the geometry came from the store or explicit
-                // knobs
-                extraProps = resolvedPlan.fold(Map.empty[String, String])(
-                  graft.operators.Dedup.plannerProps))
-            }
-            // per-micro-batch funnel audit (the streaming sibling of the
-            // batch ingest_audit_* entries): one row per (batch, stage)
-            // MERGEd on a composite key, so a crash-replayed batch
-            // OVERWRITES its own rows — last-delivery-wins, matching
-            // at-least-once semantics (a replay that finds its rows
-            // already ingested legitimately records 0 exact-stage
-            // survivors while 0_batch keeps the delivery size). Stage
-            // ids are pipeline-positional and CONSTANT across gate
-            // configurations (a disabled gate emits no row) so
-            // dashboards never re-key when a gate toggles. The counts
-            // were collected BEFORE the merges; only this write runs
-            // after them, so a crash mid-merge never records a funnel
-            // for an uncommitted batch.
-            auditTable.foreach(at =>
-              writeAudit(at, b.sparkSession, batchId, counts))
-          } else auditTable.foreach { at =>
-            // an EMPTY delivery still writes its funnel rows (all
-            // zeros), so a dashboard can tell "batch never ran" from
-            // "batch was empty" and batch ids stay gap-free
-            writeAudit(at, b.sparkSession, batchId,
-              ("0_batch" +: chain.stages.map(_.label)).map(_ -> 0L))
+        val view = chain.view(ic.truncate(batch))
+        // the tagged frame lazily reads the store's CURRENT version
+        // and the MERGEs below commit new ones, so it is truncated
+        // and fully materialized by the ONE funnel aggregate
+        // collected here, before the store mutates (a recompute
+        // after the merges would see this batch's own rows). An empty
+        // delivery runs it too: its funnel reads all zeros
+        val tagged = ic.truncate(chain.tagged(view))
+        val counts = chain.funnel(tagged).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toSeq
+        if (counts.exists { case (st, n) =>
+            st == chain.stages.last.label && n > 0 }) {
+          val rows = chain.survivors(tagged)
+          // curriculum staging (r16) MERGEs FIRST, before the
+          // docs/sig merges. The ORDER is the crash-replay contract:
+          // staged-then-docs heals (a crash after staging redelivers
+          // the batch, which re-stages and commits), whereas
+          // docs-then-staged would let the exact gate drop the
+          // redelivery BEFORE re-staging — a committed doc permanently
+          // missing from the curriculum. An orphan staged row (crash
+          // before the docs MERGE) lasts only until the at-least-once
+          // redelivery commits its doc.
+          curriculum.foreach { case (c, levels) =>
+            store.merge(c.table,
+              curriculumStaged(rows, idCol, textCol, langCol, levels, c), idCol)
           }
-        } finally b.unpersist() // no-op on the checkpointed frame
-        // (its blocks release via the ContextCleaner); kept so the
-        // try shape matches the other foreachBatch bodies
+          store.merge(table, rows, idCol)
+          // survivors' signatures MERGE from the view's shared frame
+          // (a superset of the rows' signatures; the join restricts).
+          // The index's norm hash is of the RAW delivered text, the
+          // text the exact stage hashes (the batch twin's index is
+          // built from raw documents too), so a redelivered row whose
+          // clean changed its text is dropped by exact dedup
+          if (indexed) Dedup.buildNearDupStoreFromSig(store, sigTable,
+            tagged.filter(col(chain.last)).select(idCol, textCol),
+            idCol, textCol, view.sig, shingleN, nHashes, nBands,
+            // planner provenance on a freshly-planned geometry
+            // (ADVICE r18): a brand-new store has no self-heal build
+            // to record it, so the first delivery's build stamps it
+            extraProps = resolvedPlan.fold(Map.empty[String, String])(
+              Dedup.plannerProps))
+        }
+        // per-micro-batch funnel audit: one row per (batch, stage)
+        // MERGEd on a composite key, so a crash-replayed batch
+        // OVERWRITES its own rows — last-delivery-wins, matching
+        // at-least-once semantics (a replay that finds its rows
+        // already ingested legitimately records 0 exact-stage
+        // survivors while 0_batch keeps the delivery size). Stage ids
+        // are pipeline-positional and CONSTANT across configurations
+        // (an absent stage emits no row), so dashboards never re-key
+        // when a gate toggles, and an empty delivery still writes its
+        // rows, so "batch never ran" differs from "batch was empty".
+        // Only this write runs after the merges, so a crash mid-merge
+        // never records a funnel for an uncommitted batch.
+        auditTable.foreach(at => store.merge(at, batch.sparkSession
+          .createDataFrame(counts.map { case (st, n) => (s"$batchId/$st", batchId, st, n) })
+          .toDF("audit_key", "batch_id", "stage", "n_docs"), "audit_key"))
       }
-    // release the stream-LIFETIME caches when this query terminates
-    // (ADVICE r14): semanticBench and the CDF snapshot are persisted
-    // once per pipeline call, so a long-lived process that starts/
-    // stops many gated streams would otherwise accumulate one cached
-    // copy per stream — the same unbounded-cache hazard the
-    // per-micro-batch banding fix closed, recurring at stream
-    // granularity.
-    startReleasing(docs.sparkSession,
-      semanticBench.toSeq ++ pctCdf.toSeq ++ boilHashes.toSeq ++
-        curCdf.filterNot(c => pctCdf.exists(_ eq c)).toSeq)(writer.start())
+    startReleasing(docs.sparkSession, held.toSeq)(writer.start())
   }
 
   /** The staged curriculum projection of a survivors frame — the ONE
@@ -871,10 +632,11 @@ object Realtime {
     * or key differently.
     */
   private def curriculumStaged(rows: DataFrame, idCol: String,
-      textCol: String, cdf: DataFrame, c: CurriculumExport): DataFrame =
+      textCol: String, langCol: String, cdf: DataFrame,
+      c: CurriculumExport): DataFrame =
     graft.operators.QualityCal.withPercentile(
-        rows.select(col(idCol), col(c.langCol), col(textCol)),
-        cdf, c.langCol,
+        rows.select(col(idCol), col(langCol), col(textCol)),
+        cdf, langCol,
         graft.functions.GraftFunctions.qualityScore(col(textCol)),
         pctCol = "level")
       .select(col(idCol),
@@ -892,10 +654,11 @@ object Realtime {
     */
   def curriculumBackfill(store: graft.sources.ParquetStore,
       c: CurriculumExport, rows: DataFrame, idCol: String,
-      textCol: String): Unit = {
+      textCol: String, langCol: String = "lang"): Unit = {
     val cdf = graft.operators.QualityCal.loadCdf(store, c.cdfTable,
       "curriculumBackfill", c.expectSnapshot)
-    store.merge(c.table, curriculumStaged(rows, idCol, textCol, cdf, c), idCol)
+    store.merge(c.table,
+      curriculumStaged(rows, idCol, textCol, langCol, cdf, c), idCol)
   }
 
   /** Maintenance COMPACTION of a curriculum staging table (r17 — the
@@ -921,12 +684,12 @@ object Realtime {
     * ParquetStore.overwrite contract).
     *
     * `rows` is the current corpus view (typically
-    * `store.read(docsTable)`); pass the same (idCol, textCol) the
-    * stream stages with.
+    * `store.read(docsTable)`); pass the same (idCol, textCol, langCol)
+    * the stream stages with.
     */
   def compactStaged(store: graft.sources.ParquetStore,
       c: CurriculumExport, rows: DataFrame, idCol: String,
-      textCol: String): Unit = {
+      textCol: String, langCol: String = "lang"): Unit = {
     val cdf = graft.operators.QualityCal.loadCdf(store, c.cdfTable,
       "compactStaged", c.expectSnapshot)
     // delete-orphans + MERGE, not a flat overwrite (review r17): a
@@ -942,7 +705,8 @@ object Realtime {
         .join(rows.select(col(idCol)), Seq(idCol), "left_anti")
       store.delete(c.table, orphans, idCol)
     }
-    store.merge(c.table, curriculumStaged(rows, idCol, textCol, cdf, c), idCol)
+    store.merge(c.table,
+      curriculumStaged(rows, idCol, textCol, langCol, cdf, c), idCol)
   }
 
   /** Export-time numbering of a streamed curriculum staging table

@@ -69,19 +69,21 @@ object EverythingOnStream {
         .schema("doc_id LONG, text STRING, embedding ARRAY<FLOAT>")
         .parquet(src),
       "doc_id", "text", cp,
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(streaming.Realtime.ExactDedup,
+        streaming.Realtime.Blocklist(Queries.blocklistTerms),
+        streaming.Realtime.BoilerplateGate("span_df",
+          spanTokens = Queries.spanDedupTokens,
+          minDocs = Queries.boilerplateMinDocs),
+        streaming.Realtime.PercentileGate("quality_cdf",
+          Queries.ingestGatePct, expectSnapshot = Some("corpus-v1")),
+        streaming.Realtime.DecontamGate("bench_sigs"),
+        streaming.Realtime.SemanticGate("bench_vecs",
+          "embedding", dim = 64, threshold = Queries.decontamSemThreshold,
+          bits = Queries.decontamSemBits, bands = Queries.decontamSemBands),
+        streaming.Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
-      semanticGate = Some(streaming.Realtime.SemanticGate("bench_vecs",
-        "embedding", dim = 64, threshold = Queries.decontamSemThreshold,
-        bits = Queries.decontamSemBits, bands = Queries.decontamSemBands)),
-      percentileGate = Some(streaming.Realtime.PercentileGate("quality_cdf",
-        Queries.ingestGatePct, expectSnapshot = Some("corpus-v1"))),
-      boilerplateGate = Some(streaming.Realtime.BoilerplateGate("span_df",
-        spanTokens = Queries.spanDedupTokens,
-        minDocs = Queries.boilerplateMinDocs)),
       langIdGate = Some(streaming.Realtime.LangIdGate("langid_model")),
       auditTable = Some("audit"))
 }

@@ -499,6 +499,8 @@ class RealtimeSpec extends AnyFunSuite {
   }
 
   test("streaming incremental ingest dedups against the store, replay-safe") {
+    // the exact-dedup stream: the one-stage list [exact], whose history
+    // is the signature index's norm_hash column
     import spark.implicits._
     val dir = TestSpark.tempDir("graft_sii_")
     val cp = TestSpark.tempDir("graft_sii_cp_")
@@ -507,35 +509,94 @@ class RealtimeSpec extends AnyFunSuite {
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text")
         .coalesce(1).write.mode("append").parquet(s"$dir/docs")
-    def runOnce(): Unit = {
-      val q = graft.streaming.Realtime.streamIncrementalIngest(
-        store, "docs", spark.readStream.schema("doc_id LONG, text STRING")
-          .parquet(s"$dir/docs"), "doc_id", "text", cp)
-      q.awaitTermination(60000)
-    }
-    def stored(): Seq[Long] = store.read("docs")
+    def runOnce(store: graft.sources.ParquetStore, cp: String): Unit =
+      assert(Realtime.streamIngestPipeline(store, "docs", "sigs",
+          spark.readStream.schema("doc_id LONG, text STRING")
+            .parquet(s"$dir/docs"), "doc_id", "text", cp,
+          stages = Seq(Realtime.ExactDedup))
+        .awaitTermination(60000), "exact stream did not finish in time")
+    def stored(store: graft.sources.ParquetStore): Seq[Long] = store.read("docs")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     // run 1: 5 distinct docs + an in-batch duplicate (id 20 = doc 0)
     write((0L until 5L).map(i => i -> s"doc text $i") :+ (20L -> "doc text 0"))
-    runOnce()
-    assert(stored() == (0L until 5L), "in-batch duplicate must not ingest")
+    runOnce(store, cp)
+    assert(stored(store) == (0L until 5L), "in-batch duplicate must not ingest")
+    assert(store.exists("sigs"), "the survivors must seed the signature index")
     // run 2 restarts from the checkpoint: a cross-RUN duplicate (id 21
     // = doc 1's text, folded case/whitespace) and one new doc — the
     // store, not watermarked state, carries the history
     write(Seq(21L -> "  DOC   text 1 ", 22L -> "doc text NEW"))
-    runOnce()
-    assert(stored() == ((0L until 5L) :+ 22L),
+    runOnce(store, cp)
+    assert(stored(store) == ((0L until 5L) :+ 22L),
       "store history must drop the re-crawl, keep the new doc")
     // replay the WHOLE input against a FRESH checkpoint (the
     // crash-after-merge worst case: everything redelivered): dedup
     // against the store drops every already-ingested row
-    val cp2 = TestSpark.tempDir("graft_sii_cp2_")
-    val q = graft.streaming.Realtime.streamIncrementalIngest(
-      store, "docs", spark.readStream.schema("doc_id LONG, text STRING")
-        .parquet(s"$dir/docs"), "doc_id", "text", cp2)
-    q.awaitTermination(60000)
-    assert(stored() == ((0L until 5L) :+ 22L),
+    runOnce(store, TestSpark.tempDir("graft_sii_cp2_"))
+    assert(stored(store) == ((0L until 5L) :+ 22L),
       "full redelivery must be a no-op against the accumulated store")
+    // a docs table without an index self-heals at START: the index is
+    // built from it, so the whole delivery dedups against it
+    val bare = new graft.sources.ParquetStore(
+      spark, TestSpark.tempDir("graft_sii_bare_"))
+    bare.merge("docs", store.read("docs"), "doc_id")
+    runOnce(bare, TestSpark.tempDir("graft_sii_cp3_"))
+    assert(bare.exists("sigs") && stored(bare) == stored(store),
+      "a self-healed index must drop every already-held row")
+  }
+
+  test("streaming ingest: an empty delivery audits an all-zero funnel and commits no table") {
+    // one body serves every delivery: an empty one runs the chain, its
+    // funnel reads all zeros, and the last-stage count of 0 guards the
+    // docs and signature MERGEs
+    import spark.implicits._
+    val store = new graft.sources.ParquetStore(
+      spark, TestSpark.tempDir("graft_sie_store_"))
+    val corpus = Seq(1L -> "alpha beta gamma delta epsilon zeta",
+      2L -> "volcanic basalt columns rise over the bay").toDF("doc_id", "text")
+    store.merge("docs", corpus, "doc_id")
+    graft.operators.Dedup.buildNearDupStore(store, "sigs", corpus,
+      "doc_id", "text")
+    val versions = Seq("docs", "sigs").map(store.currentVersion)
+    val src = TestSpark.tempDir("graft_sie_src_")
+    Seq.empty[(Long, String)].toDF("doc_id", "text")
+      .coalesce(1).write.mode("append").parquet(src)
+    val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
+      spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
+      "doc_id", "text", TestSpark.tempDir("graft_sie_cp_"),
+      auditTable = Some("audit"))
+    assert(q.awaitTermination(120000), "empty delivery did not finish")
+    assert(q.recentProgress.exists(p => p.batchId == 0 && p.numInputRows == 0),
+      "the empty file must be delivered as a micro-batch")
+    val audit = store.read("audit").collect()
+      .map(r => (r.getAs[Long]("batch_id"), r.getAs[String]("stage"),
+        r.getAs[Long]("n_docs"))).toSet
+    assert(audit == Set((0L, "0_batch", 0L), (0L, "1_exact_dedup", 0L),
+      (0L, "2_blocklist", 0L), (0L, "4_near_dedup", 0L)),
+      s"an empty delivery audits 0_batch and every stage at 0: $audit")
+    assert(Seq("docs", "sigs").map(store.currentVersion) == versions,
+      "an empty delivery must commit no docs or signature version")
+  }
+
+  test("streaming ingest: a stage list out of chain order, or with a repeat, fails the START") {
+    import Realtime._
+    val store = new graft.sources.ParquetStore(
+      spark, TestSpark.tempDir("graft_sio_store_"))
+    def startWith(stages: Seq[IngestStage]) = Realtime.streamIngestPipeline(
+      store, "docs", "sigs", spark.readStream.schema("doc_id LONG, text STRING")
+        .parquet(TestSpark.tempDir("graft_sio_src_")), "doc_id", "text",
+      TestSpark.tempDir("graft_sio_cp_"), stages = stages)
+    for (bad <- Seq(Seq(Blocklist(), ExactDedup),
+        Seq(ExactDedup, ExactDedup, NearDedup),
+        Seq(ExactDedup, QualityGate(0.1), Blocklist(Seq("x"))))) {
+      val e = intercept[IllegalArgumentException](startWith(bad))
+      assert(e.getMessage.contains("are not a chain"), e.getMessage)
+    }
+    // near-dup first, or no stage at all, is not a chain either
+    intercept[IllegalArgumentException](startWith(Seq(NearDedup, ExactDedup)))
+    intercept[IllegalArgumentException](startWith(Nil))
+    assert(!store.exists("docs") && !store.exists("sigs"),
+      "a rejected list must write nothing")
   }
 
   test("streaming ingest pipeline equals the batch ingestion chain; restart + replay safe") {
@@ -575,7 +636,10 @@ class RealtimeSpec extends AnyFunSuite {
       val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
           .parquet(src),
-        "doc_id", "text", cp, blocklist = Queries.blocklistTerms,
+        "doc_id", "text", cp,
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(Queries.blocklistTerms),
+          Realtime.NearDedup),
         shingleN = Queries.minHashShingleN,
         numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
         threshold = Queries.minHashThreshold)
@@ -701,10 +765,14 @@ class RealtimeSpec extends AnyFunSuite {
       val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
           .parquet(src),
-        "doc_id", "text", cp, blocklist = Queries.blocklistTerms,
+        "doc_id", "text", cp,
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(Queries.blocklistTerms),
+          Realtime.QualityGate(minQ),
+          Realtime.NearDedup),
         shingleN = Queries.minHashShingleN,
         numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
-        threshold = Queries.minHashThreshold, minQuality = Some(minQ))
+        threshold = Queries.minHashThreshold)
       q.awaitTermination(120000)
     }
     runOnce(TestSpark.tempDir("graft_sipq_cp1_"))
@@ -728,10 +796,13 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_sipq_cpbare_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.QualityGate(minQ),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
-      threshold = Queries.minHashThreshold, minQuality = Some(minQ))
+      threshold = Queries.minHashThreshold)
     q2.awaitTermination(120000)
     assert(bare.exists("sigs"), "stream start must bootstrap the index")
     val bareIds = ids(bare.read("docs")
@@ -791,11 +862,13 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_sid_cp_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.DecontamGate("bench_sigs"),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
       auditTable = Some("audit"))
     q.awaitTermination(120000)
     val streamed = ids(store.read("docs")
@@ -827,11 +900,13 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_sid_cp1b_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.DecontamGate("bench_sigs"),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
       auditTable = Some("audit"))
     q1b.awaitTermination(120000)
     assert(ids(store.read("docs")
@@ -874,12 +949,13 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_sid_cp2_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.DecontamGate("bench_sigs", Some(looseT)),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
-      threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
-      decontamThreshold = Some(looseT))
+      threshold = Queries.minHashThreshold)
     qLoose.awaitTermination(120000)
     val streamedLoose = ids(storeLoose.read("docs")
       .filter(col("doc_id") >= Queries.incrementalSplit))
@@ -894,7 +970,10 @@ class RealtimeSpec extends AnyFunSuite {
         spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
           .parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_sid_cpbad_"),
-        benchSigTable = Some("missing_sigs"))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.DecontamGate("missing_sigs"),
+          Realtime.NearDedup))
     }
     assert(e.getMessage.contains("benchmark signature table"),
       s"must name the missing benchmark index: ${e.getMessage}")
@@ -909,9 +988,12 @@ class RealtimeSpec extends AnyFunSuite {
         spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
           .parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_sid_cpgeo_"),
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.DecontamGate("bench_sigs_g8"),
+          Realtime.NearDedup),
         shingleN = Queries.minHashShingleN,
-        numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
-        benchSigTable = Some("bench_sigs_g8"))
+        numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands)
     }
     assert(eg.getMessage.contains("bands"),
       s"must name the drifted geometry parameter: ${eg.getMessage}")
@@ -956,8 +1038,11 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, vec ARRAY<FLOAT>")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_sem_cp_"),
-      semanticGate = Some(Realtime.SemanticGate("bench_vecs", "vec",
-        dim = 4, threshold = 0.9)),
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(),
+        Realtime.SemanticGate("bench_vecs", "vec",
+          dim = 4, threshold = 0.9),
+        Realtime.NearDedup),
       auditTable = Some("audit"))
     q.awaitTermination(120000)
     val streamed = store.read("docs")
@@ -979,8 +1064,11 @@ class RealtimeSpec extends AnyFunSuite {
         spark.readStream.schema("doc_id LONG, text STRING, vec ARRAY<FLOAT>")
           .parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_sem_cpbad_"),
-        semanticGate = Some(Realtime.SemanticGate("no_such_vecs", "vec",
-          dim = 4, threshold = 0.9)))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.SemanticGate("no_such_vecs", "vec",
+            dim = 4, threshold = 0.9),
+          Realtime.NearDedup))
     }
     assert(e.getMessage.contains("benchmark vector table"), e.getMessage)
     // a stream without the embedding column fails at stream start
@@ -989,8 +1077,11 @@ class RealtimeSpec extends AnyFunSuite {
         spark.readStream.schema("doc_id LONG, text STRING")
           .parquet(TestSpark.tempDir("graft_sem_novec_")),
         "doc_id", "text", TestSpark.tempDir("graft_sem_cpbad2_"),
-        semanticGate = Some(Realtime.SemanticGate("bench_vecs", "vec",
-          dim = 4, threshold = 0.9)))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.SemanticGate("bench_vecs", "vec",
+            dim = 4, threshold = 0.9),
+          Realtime.NearDedup))
     }
     assert(e2.getMessage.contains("no 'vec' column"), e2.getMessage)
   }
@@ -1037,11 +1128,14 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream.schema("doc_id LONG, text STRING, lang STRING")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_spg_cp_"),
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(),
+        Realtime.PercentileGate("quality_cdf",
+          Queries.percentileGate, expectSnapshot = Some("corpus-v1")),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-        Queries.percentileGate, expectSnapshot = Some("corpus-v1"))),
       auditTable = Some("audit"))
     q.awaitTermination(120000)
     val streamed = ids(store.read("docs")
@@ -1066,7 +1160,10 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema(schema).parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_spg_cpbad_"),
-        percentileGate = Some(g))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          g,
+          Realtime.NearDedup))
     val e1 = intercept[IllegalArgumentException] {
       startWith(Realtime.PercentileGate("no_such_cdf", 0.8))
     }
@@ -1165,17 +1262,19 @@ class RealtimeSpec extends AnyFunSuite {
         .schema("doc_id LONG, text STRING, lang STRING, embedding ARRAY<FLOAT>")
         .parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_all_cp_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.PercentileGate("quality_cdf",
+          gateP, expectSnapshot = Some("corpus-v1")),
+        Realtime.QualityGate(0.0), // present (funnel row) but never pruning
+        Realtime.DecontamGate("bench_sigs"),
+        Realtime.SemanticGate("bench_vecs", "embedding",
+          dim = 64, threshold = Queries.decontamSemThreshold,
+          bits = Queries.decontamSemBits, bands = Queries.decontamSemBands),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      minQuality = Some(0.0), // present (funnel row) but never pruning
-      benchSigTable = Some("bench_sigs"),
-      semanticGate = Some(Realtime.SemanticGate("bench_vecs", "embedding",
-        dim = 64, threshold = Queries.decontamSemThreshold,
-        bits = Queries.decontamSemBits, bands = Queries.decontamSemBands)),
-      percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-        gateP, expectSnapshot = Some("corpus-v1"))),
       auditTable = Some("audit"))
     // the heaviest streaming test in the suite: under a full
     // parallel `sbt test` the every-gate batch has blown a 180 s
@@ -1255,16 +1354,18 @@ class RealtimeSpec extends AnyFunSuite {
       spark.readStream
         .schema("doc_id LONG, text STRING, lang STRING").parquet(src),
       "doc_id", "text", cp,
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.BoilerplateGate("span_df",
+          spanTokens = Queries.spanDedupTokens,
+          minDocs = Queries.boilerplateMinDocs),
+        Realtime.PercentileGate("quality_cdf",
+          Queries.ingestGatePct, expectSnapshot = Some("corpus-v1")),
+        Realtime.DecontamGate("bench_sigs"),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
-      percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-        Queries.ingestGatePct, expectSnapshot = Some("corpus-v1"))),
-      boilerplateGate = Some(Realtime.BoilerplateGate("span_df",
-        spanTokens = Queries.spanDedupTokens,
-        minDocs = Queries.boilerplateMinDocs)),
       auditTable = Some("audit"))
     assert(start().awaitTermination(360000),
       "boil-gated stream did not finish in time")
@@ -1377,12 +1478,14 @@ class RealtimeSpec extends AnyFunSuite {
     val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
       spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.PercentileGate("quality_cdf",
+          Queries.ingestGatePct, expectSnapshot = Some("corpus-v1")),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-        Queries.ingestGatePct, expectSnapshot = Some("corpus-v1"))),
       langIdGate = Some(Realtime.LangIdGate("langid_model")),
       auditTable = Some("audit"))
     assert(q.awaitTermination(360000),
@@ -1416,8 +1519,11 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp2_"),
-        percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-          Queries.ingestGatePct)),
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.PercentileGate("quality_cdf",
+            Queries.ingestGatePct),
+          Realtime.NearDedup),
         langIdGate = Some(Realtime.LangIdGate("langid_bad")))
     }
     assert(e.getMessage.contains("geometry drift"),
@@ -1427,21 +1533,14 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp3_"),
-        percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-          Queries.ingestGatePct)),
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.PercentileGate("quality_cdf",
+            Queries.ingestGatePct),
+          Realtime.NearDedup),
         langIdGate = Some(Realtime.LangIdGate("langid_absent")))
     }
     assert(e2.getMessage.contains("does not exist"))
-    // misaligned langCol knobs fail the START before any store read
-    val e3 = intercept[IllegalArgumentException] {
-      Realtime.streamIngestPipeline(store, "docs", "sigs",
-        spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
-        "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp4_"),
-        percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-          Queries.ingestGatePct, langCol = "language")),
-        langIdGate = Some(Realtime.LangIdGate("langid_model")))
-    }
-    assert(e3.getMessage.contains("align the two langCol knobs"))
     // langCol colliding with the pipeline's text column would silently
     // overwrite every survivor's text with its language code (review
     // r19) — fails the START
@@ -1449,10 +1548,9 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp5_"),
-        langIdGate = Some(Realtime.LangIdGate("langid_model",
-          langCol = "text")))
+        langCol = "text", langIdGate = Some(Realtime.LangIdGate("langid_model")))
     }
-    assert(e4.getMessage.contains("id/text column"))
+    assert(e4.getMessage.contains("must be distinct"), e4.getMessage)
     // langCol colliding with the semantic gate's VECTOR column would
     // overwrite the embeddings with a language string and throw inside
     // the first micro-batch's cosine probe (review r19) — fails the
@@ -1466,12 +1564,14 @@ class RealtimeSpec extends AnyFunSuite {
         spark.readStream
           .schema("doc_id LONG, text STRING, emb ARRAY<FLOAT>").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp5b_"),
-        semanticGate = Some(Realtime.SemanticGate("bench_vecs", "emb",
-          dim = 64)),
-        langIdGate = Some(Realtime.LangIdGate("langid_model",
-          langCol = "emb")))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.SemanticGate("bench_vecs", "emb",
+            dim = 64),
+          Realtime.NearDedup),
+        langCol = "emb", langIdGate = Some(Realtime.LangIdGate("langid_model")))
     }
-    assert(e4b.getMessage.contains("vector column"))
+    assert(e4b.getMessage.contains("must be distinct"), e4b.getMessage)
     // the symmetric collision (review r19): the semantic gate's vecCol
     // naming the pipeline's TEXT column passes the presence checks and
     // would read a string as an embedding in the first micro-batch —
@@ -1480,10 +1580,13 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp5c_"),
-        semanticGate = Some(Realtime.SemanticGate("bench_vecs", "text",
-          dim = 64)))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.SemanticGate("bench_vecs", "text",
+            dim = 64),
+          Realtime.NearDedup))
     }
-    assert(e4c.getMessage.contains("read it as an embedding"))
+    assert(e4c.getMessage.contains("must be distinct"), e4c.getMessage)
     // langCol == the percentile lookup's reserved output (produced
     // column, absent from the stream schema) — fails the START, not
     // the first micro-batch (review r19)
@@ -1491,10 +1594,12 @@ class RealtimeSpec extends AnyFunSuite {
       Realtime.streamIngestPipeline(store, "docs", "sigs",
         spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
         "doc_id", "text", TestSpark.tempDir("graft_lidgate_cp6_"),
-        percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-          Queries.ingestGatePct, langCol = "pct")),
-        langIdGate = Some(Realtime.LangIdGate("langid_model",
-          langCol = "pct")))
+        stages = Seq(Realtime.ExactDedup,
+          Realtime.Blocklist(),
+          Realtime.PercentileGate("quality_cdf",
+            Queries.ingestGatePct),
+          Realtime.NearDedup),
+        langCol = "pct", langIdGate = Some(Realtime.LangIdGate("langid_model")))
     }
     assert(e5.getMessage.toLowerCase.contains("pct"))
     // a one-language artifact is rejected by the loader (review r19:
@@ -1584,16 +1689,18 @@ class RealtimeSpec extends AnyFunSuite {
     val q = Realtime.streamIngestPipeline(store, "docs", "sigs",
       spark.readStream.schema("doc_id LONG, text STRING").parquet(src),
       "doc_id", "text", TestSpark.tempDir("graft_rbgate_cp_"),
-      blocklist = Queries.blocklistTerms,
+      stages = Seq(Realtime.ExactDedup,
+        Realtime.Blocklist(Queries.blocklistTerms),
+        Realtime.BoilerplateGate("span_df",
+          spanTokens = Queries.spanDedupTokens,
+          minDocs = Queries.boilerplateMinDocs),
+        Realtime.PercentileGate("quality_cdf",
+          Queries.ingestGatePct, expectSnapshot = Some("corpus-v1")),
+        Realtime.DecontamGate("bench_sigs"),
+        Realtime.NearDedup),
       shingleN = Queries.minHashShingleN,
       numHashes = Queries.minHashNumHashes, bands = Queries.minHashBands,
       threshold = Queries.minHashThreshold,
-      benchSigTable = Some("bench_sigs"),
-      boilerplateGate = Some(Realtime.BoilerplateGate("span_df",
-        spanTokens = Queries.spanDedupTokens,
-        minDocs = Queries.boilerplateMinDocs)),
-      percentileGate = Some(Realtime.PercentileGate("quality_cdf",
-        Queries.ingestGatePct, expectSnapshot = Some("corpus-v1"))),
       langIdGate = Some(Realtime.LangIdGate("langid_model")),
       curriculumExport = Some(Realtime.CurriculumExport("staged",
         "quality_cdf", nShards = 4, seed = "ep0",
@@ -1647,6 +1754,25 @@ class RealtimeSpec extends AnyFunSuite {
         "DETECTED language")
   }
 
+  /** Runs `body`, which runs streams to termination, and asserts that
+    * the session's CacheManager and persisted RDDs then hold nothing the
+    * streams persisted: the stream-lifetime frames are released when a
+    * query terminates (on the listener bus, so the check polls). */
+  private def leavesNothingPersisted(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    body
+    def left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val deadline = System.currentTimeMillis() + 30000
+    while ((!cache.isEmpty || left.nonEmpty) &&
+        System.currentTimeMillis() < deadline) { System.gc(); Thread.sleep(200) }
+    assert(cache.isEmpty, "a terminated stream left a frame in the CacheManager")
+    assert(left.isEmpty, s"a terminated stream left persisted RDDs: ${left.keySet}")
+  }
+
   /** The everything-on fixture ([[EverythingOnStream.fixture]]). */
   private def everythingOnFixture(prefix: String)
       : (graft.sources.ParquetStore, org.apache.spark.sql.DataFrame) =
@@ -1692,11 +1818,11 @@ class RealtimeSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     val jobs = byQuery.asScala.count(_ == q.id.toString)
     assert(store.read("audit").count() == 8, "the funnel must be written")
-    // 79, the same in every run measured (83 while every store MERGE
-    // rewrote its touched buckets; a MERGE now writes one delta); the
-    // filter cascade with a count() per audited stage ran 97 for this
-    // batch
-    assert(jobs == 79, s"everything-on micro-batch ran $jobs Spark jobs")
+    // 78, the same in every run measured (79 while an isEmpty probe
+    // ran before the chain, 83 while every store MERGE rewrote its
+    // touched buckets; a MERGE now writes one delta); the filter
+    // cascade with a count() per audited stage ran 97 for this batch
+    assert(jobs == 78, s"everything-on micro-batch ran $jobs Spark jobs")
   }
 
   test("EVERYTHING-ON stream (boil + routed + percentile + shingle " +
@@ -1732,9 +1858,10 @@ class RealtimeSpec extends AnyFunSuite {
     assert(tagged.filter(col("__s4") && col("__ct") =!= col("text"))
       .limit(1).count() == 1,
       "at least one survivor's text must differ from raw after cleaning")
-    val q = everythingOnStream(store, batch, "graft_allrb_")
-    assert(q.awaitTermination(360000),
-      "everything-on stream did not finish in time")
+    leavesNothingPersisted {
+      assert(everythingOnStream(store, batch, "graft_allrb_")
+        .awaitTermination(360000), "everything-on stream did not finish in time")
+    }
     // survivors ship the CLEANED text AND its detection — doc-for-doc
     val streamed = store.read("docs")
       .filter(col("doc_id") >= Queries.incrementalSplit)
@@ -1762,6 +1889,10 @@ class RealtimeSpec extends AnyFunSuite {
 
   test("streaming boilerplate clean equals the batch stored probe; replay no-op; " +
       "grain drift fails the START") {
+    // the cleaning stream: the one-stage list [boilerplate]. Its table
+    // holds the chain's survivors — the batch columns with the cleaned
+    // text, docs the clean left empty dropped — and with no dedup stage
+    // no signature index is read, built or written
     import graft.operators.Dedup
     val store = new graft.sources.ParquetStore(
       spark, TestSpark.tempDir("graft_sbc_wh_"))
@@ -1776,56 +1907,63 @@ class RealtimeSpec extends AnyFunSuite {
     def delivery(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(srcDir)
-    def stream = spark.readStream
-      .schema("doc_id LONG, text STRING").parquet(srcDir)
+    def start(cp: String, textCol: String = "text",
+        gate: Realtime.BoilerplateGate = Realtime.BoilerplateGate("span_df", 3, 3)) =
+      Realtime.streamIngestPipeline(store, "clean", "sigs",
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir),
+        "doc_id", textCol, cp, stages = Seq(gate), auditTable = Some("audit"))
+    // 103 is boilerplate alone: the clean empties it, so it drops
     val d1 = Seq((100L, "alpha beta gamma fresh content one"),
-      (101L, "no boiler here at all"))
+      (101L, "no boiler here at all"), (103L, "alpha beta gamma"))
     val d2 = Seq((102L, "alpha beta gamma fresh content two"))
     delivery(d1)
     val cp = TestSpark.tempDir("graft_sbc_cp_")
-    assert(Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", cp, 3, 3)
-      .awaitTermination(120000), "stream did not finish in time")
-    delivery(d2)
-    assert(Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", cp, 3, 3)
-      .awaitTermination(120000), "second pass did not finish in time")
+    leavesNothingPersisted {
+      assert(start(cp).awaitTermination(120000), "stream did not finish in time")
+      delivery(d2)
+      assert(start(cp).awaitTermination(120000), "second pass did not finish in time")
+    }
     def snap(t: String) = store.read(t).collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("clean_text"),
-        r.getAs[Long]("n_kept"), r.getAs[Long]("n_removed"))).toSet
-    // streaming ≡ the batch stored probe over the union of deliveries
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text"))).toSet
+    // streaming ≡ the batch stored probe over the union of deliveries,
+    // projected to the survivors
     val batch = Dedup.boilerplateRemoveStored(store, "span_df",
         (d1 ++ d2).toDF("doc_id", "text"), "doc_id", "text", 3, 3)
-      .collect()
-      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("clean_text"),
-        r.getAs[Long]("n_kept"), r.getAs[Long]("n_removed"))).toSet
+      .filter(col("n_kept") > 0).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("clean_text"))).toSet
     val streamed = snap("clean")
     assert(streamed == batch,
       s"streamed clean table must equal the batch probe: $streamed vs $batch")
-    // the store-frequent prefix dropped, fresh content survived
-    assert(streamed.exists(_._2 == "fresh content one"))
+    // the store-frequent prefix dropped, fresh content survived, and
+    // the all-boilerplate doc is gone
+    assert(streamed.contains(100L -> "fresh content one") &&
+      !streamed.exists(_._1 == 103L))
+    assert(store.read("clean").columns.toSeq == Seq("doc_id", "text"),
+      "the table holds the batch columns")
+    // the funnel counts the drop at the boilerplate stage
+    val audit = store.read("audit").collect()
+      .map(r => (r.getAs[Long]("batch_id"), r.getAs[String]("stage"),
+        r.getAs[Long]("n_docs"))).toSet
+    assert(audit == Set((0L, "0_batch", 3L), (0L, "2b_boilerplate", 2L),
+      (1L, "0_batch", 1L), (1L, "2b_boilerplate", 1L)), s"clean funnel: $audit")
+    assert(!store.exists("sigs"), "a chain without dedup keeps no signature index")
     // full redelivery (fresh checkpoint) MERGEs byte-identical rows
-    val cp2 = TestSpark.tempDir("graft_sbc_cp2_")
-    assert(Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", cp2, 3, 3)
-      .awaitTermination(120000), "replay did not finish in time")
+    assert(start(TestSpark.tempDir("graft_sbc_cp2_")).awaitTermination(120000),
+      "replay did not finish in time")
     assert(snap("clean") == streamed, "redelivery must be a MERGE no-op")
     // drifted span grain fails the START, not the first micro-batch
     intercept[IllegalArgumentException] {
-      Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", TestSpark.tempDir("graft_sbc_cp3_"),
-        spanTokens = 5, minDocs = 3)
+      start(TestSpark.tempDir("graft_sbc_cp3_"),
+        gate = Realtime.BoilerplateGate("span_df", spanTokens = 5, minDocs = 3))
     }
     // so do a misspelled column and a bad threshold (review r17: the
     // cheap-config-checks-first contract covers EVERY knob)
     intercept[IllegalArgumentException] {
-      Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "body", TestSpark.tempDir("graft_sbc_cp4_"), 3, 3)
+      start(TestSpark.tempDir("graft_sbc_cp4_"), textCol = "body")
     }
     intercept[IllegalArgumentException] {
-      Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", TestSpark.tempDir("graft_sbc_cp5_"),
-        3, minDocs = 1)
+      start(TestSpark.tempDir("graft_sbc_cp5_"),
+        gate = Realtime.BoilerplateGate("span_df", 3, minDocs = 1))
     }
   }
 
@@ -1852,16 +1990,17 @@ class RealtimeSpec extends AnyFunSuite {
     def delivery(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(srcDir)
-    def stream = spark.readStream
-      .schema("doc_id LONG, text STRING").parquet(srcDir)
+    // the cleaning stream, [boilerplate]
+    def clean(cp: String) = Realtime.streamIngestPipeline(store, "clean",
+      "sigs", spark.readStream.schema("doc_id LONG, text STRING").parquet(srcDir),
+      "doc_id", "text", cp,
+      stages = Seq(Realtime.BoilerplateGate("span_df", 3, 3)))
     val cp = TestSpark.tempDir("graft_sdr_cp_")
     // run 1: "delta epsilon zeta" SURVIVES (one vote in the v1 store)
     delivery(Seq((100L, "delta epsilon zeta fresh content one")))
-    assert(Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", cp, 3, 3)
-      .awaitTermination(120000), "run 1 did not finish")
+    assert(clean(cp).awaitTermination(120000), "run 1 did not finish")
     def cleanOf(id: Long): String = store.read("clean")
-      .filter($"doc_id" === id).collect().head.getAs[String]("clean_text")
+      .filter($"doc_id" === id).collect().head.getAs[String]("text")
     assert(cleanOf(100L) == "delta epsilon zeta fresh content one",
       "under the v1 counts the rare span must survive")
     // corpus grows: "delta epsilon zeta" now fronts >= 3 docs — the
@@ -1873,9 +2012,7 @@ class RealtimeSpec extends AnyFunSuite {
     // restart (same checkpoint): the new run's lifetime hash set is
     // the NEW store — the same span must now be removed
     delivery(Seq((101L, "delta epsilon zeta fresh content two")))
-    assert(Realtime.streamBoilerplateClean(store, "clean", "span_df",
-        stream, "doc_id", "text", cp, 3, 3)
-      .awaitTermination(120000), "run 2 did not finish")
+    assert(clean(cp).awaitTermination(120000), "run 2 did not finish")
     assert(cleanOf(101L) == "fresh content two",
       "the restarted run must clean against the REFRESHED counts")
     // the old run's committed row stands — refresh never rewrites what
